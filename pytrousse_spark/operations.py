@@ -17,7 +17,7 @@ from typing import Any
 from .exceptions import MultipleOperationsFoundError
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, eq=False)
 class OpRecord:
     """One applied operation.
 
@@ -25,6 +25,10 @@ class OpRecord:
     history entries (feature_operations.py:15-38): which columns were read,
     which were produced, and operator-specific details (e.g. encoding maps,
     bin ranges) needed to reproduce or audit the transform.
+
+    Two records are equal when their JSON forms are: JSON has no tuples and
+    no integer keys, so a record read back from a dataset sidecar holds
+    lists and string keys where the written one held tuples and ints.
     """
 
     name: str
@@ -39,6 +43,17 @@ class OpRecord:
             "derived_columns": list(self.derived_columns),
             "details": _jsonable(self.details),
         }
+
+    def _json_key(self) -> str:
+        return json.dumps(self.to_json_dict(), sort_keys=True)
+
+    def __eq__(self, other: object) -> bool:
+        if not isinstance(other, OpRecord):
+            return NotImplemented
+        return self._json_key() == other._json_key()
+
+    def __hash__(self) -> int:
+        return hash(self._json_key())
 
     @staticmethod
     def from_json_dict(d: dict[str, Any]) -> "OpRecord":

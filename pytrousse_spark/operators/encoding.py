@@ -17,8 +17,11 @@ def _is_numerical_column(dataset: Dataset, col_name: str) -> bool:
     """The profiler's ``numerical_cols`` classification for ONE column.
 
     The skip-if-numeric gate only needs a single column's class; computing
-    ``dataset.profile`` here would run the full-width profile aggregation per
-    encode call — O(width²) total for ``encode_multi_categorical_columns``.
+    ``dataset.profile`` here would stack and aggregate every column of the
+    table per encode call (the profile pass plus, for low-cardinality
+    columns, its exact distinct re-check) — O(width²) total for
+    ``encode_multi_categorical_columns``, since each encode step yields a
+    new dataset without a cached profile.
     A cached profile is reused when present; otherwise a numeric/bool/interval
     type answers from the schema alone, and only a string column costs one
     narrow parse-ratio aggregation.

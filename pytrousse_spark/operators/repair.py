@@ -33,22 +33,31 @@ def check_numeric_cols(
     threshold: float = NOT_NA_STRING_COL_THRESHOLD,
 ) -> list[str]:
     """String columns whose non-null values parse to numbers at a ratio above
-    ``threshold`` (0.4, settings.py:18). One aggregation for ALL candidates.
+    ``threshold`` (0.4, settings.py:18).
+
+    A cached profile already holds every string column's parse ratio (the
+    same ``try_cast`` average); the other candidates share one aggregation.
     """
     if col_list is None:
         col_list = tuple(sorted(dataset.profile.str_cols))
-    if not col_list:
-        return []
-    exprs = []
-    for c in col_list:
-        col = F.col(c)
-        exprs.append(
-            F.avg(
-                F.when(col.isNotNull(), col.try_cast("double").isNotNull().cast("double"))
-            ).alias(c)
-        )
-    row = dataset.df.agg(*exprs).collect()[0].asDict()
-    return [c for c in col_list if (row[c] or 0.0) > threshold]
+    ratios: dict[str, float | None] = {}
+    if dataset._profile is not None:
+        for c in col_list:
+            s = dataset._profile.stats.get(c)
+            if s is not None and s.spark_type == "string":
+                ratios[c] = s.parse_ratio
+    rest = [c for c in col_list if c not in ratios]
+    if rest:
+        exprs = []
+        for c in rest:
+            col = F.col(c)
+            exprs.append(
+                F.avg(
+                    F.when(col.isNotNull(), col.try_cast("double").isNotNull().cast("double"))
+                ).alias(c)
+            )
+        ratios.update(dataset.df.agg(*exprs).collect()[0].asDict())
+    return [c for c in col_list if (ratios[c] or 0.0) > threshold]
 
 
 # ---------------------------------------------------------------------------

@@ -87,6 +87,32 @@ def test_persistence_roundtrip(spark, tmp_path):
     assert sorted(r["v2"] for r in back.df.collect()) == ["y", "z"]
 
 
+def test_persistence_roundtrip_history_equal(spark, tmp_path):
+    """Binning and combine records hold tuples and int keys, which JSON
+    stores as lists and strings; the history read back still compares
+    equal to the one written."""
+    from pytrousse_spark.operators.binning import (
+        combine_categorical_columns_to_one,
+        split_continuous_column_into_bins,
+    )
+
+    ds = from_df(
+        spark.createDataFrame(
+            [(1.0, "a", "x"), (5.0, "b", "y"), (9.0, "a", None)], ["n", "c1", "c2"]
+        )
+    )
+    ds = split_continuous_column_into_bins(ds, "n", [3, 6])
+    ds, _ = combine_categorical_columns_to_one(ds, ("c1", "c2"), include_nan=True)
+    path = os.path.join(tmp_path, "ds")
+    write_dataset(ds, path)
+    back = read_dataset(spark, path)
+    assert isinstance(ds.history[1].details["encoded_values_map"][0], tuple)
+    assert isinstance(back.history[1].details["encoded_values_map"]["0"], list)
+    assert back.history == ds.history
+    assert hash(back.history[0]) == hash(ds.history[0])
+    assert back.history[1] != ds.history[0]
+
+
 def test_persistence_sidecar_errors(spark, tmp_path):
     with pytest.raises(DatasetSidecarError):
         read_dataset(spark, str(tmp_path))

@@ -1033,3 +1033,188 @@ def test_kuiper_two_sample_laws(spark):
     assert same["v_stat"] == 0.0 and same["p_value"] == 1.0
     nullrow = run(xs, [])
     assert nullrow["v_stat"] is None and nullrow["reject"] is None
+
+
+def _typed_frame(spark):
+    """One column per Spark type family the profiler must accept, incl.
+    MAPs, nested or not, which ``xxhash64`` rejects as such."""
+    from pyspark.sql import functions as F
+
+    from pytrousse_spark.operators.binning import interval_expr
+
+    i = F.col("id")
+    # two maps with equal entries in different insertion order: one value
+    ab = F.create_map(F.lit("a"), F.lit(1), F.lit("b"), F.lit(2))
+    ba = F.create_map(F.lit("b"), F.lit(2), F.lit("a"), F.lit(1))
+    return spark.range(12).select(
+        i,
+        F.when(i % 3 == 0, ab).when(i % 3 == 1, ba).alias("m"),
+        F.array(i % 4, F.lit(0)).alias("arr"),
+        F.array(F.create_map(F.lit("k"), i % 2)).alias("arr_of_maps"),
+        F.create_map(F.lit("o"), F.create_map(F.lit("k"), i % 5)).alias("map_of_maps"),
+        F.struct((i % 2).alias("x"), F.create_map(F.lit("k"), i % 3).alias("y"))
+        .alias("st_map"),
+        interval_expr(i % 3, i % 3 + 1).alias("iv"),
+        (i % 5 / 4).cast("decimal(10,2)").alias("dec"),
+        (i % 2 == 0).alias("flag"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (i % 6).cast("int")).alias("day"),
+        F.when(i < 6, F.lit(b"\x00\x01")).otherwise(F.lit(b"\x02")).alias("bin"),
+        F.lit(None).cast("string").alias("null_str"),
+        F.lit(None).cast("double").alias("null_dbl"),
+    )
+
+
+def test_profile_type_coverage(spark):
+    from pytrousse_spark.profiling import profile
+
+    prof = profile(_typed_frame(spark))
+    s = prof.stats
+    assert all(st.total == 12 for st in s.values())
+    # exact distincts (all ≤ 10, so re-checked), NULL excluded; the two
+    # maps with the same entries in different order are one value
+    want = {
+        "m": 1, "arr": 4, "arr_of_maps": 2, "map_of_maps": 5, "st_map": 6, "iv": 3, "dec": 5,
+        "flag": 2, "day": 6, "bin": 2, "null_str": 0, "null_dbl": 0,
+    }
+    assert {c: s[c].distinct for c in want} == want
+    assert s["m"].count == 8 and s["m"].nulls == 4
+    assert s["dec"].is_numeric and s["dec"].min_num == 0.0 and s["dec"].max_num == 1.0
+    assert s["dec"].non_integer
+    assert s["null_str"].parse_ratio is None and s["null_dbl"].min_num is None
+    assert prof.bool_cols == {"flag"}
+    assert {"id", "dec", "flag", "iv", "null_dbl"} <= prof.numerical_cols
+    assert prof.other_type_cols == {
+        "m", "arr", "arr_of_maps", "map_of_maps", "st_map", "day", "bin"
+    }
+    assert prof.str_cols == {"null_str"}
+    # "m" holds one map value plus NULLs: two values counting NULL
+    assert prof.constant_cols == {"null_str", "null_dbl"}
+    assert {"null_str", "null_dbl"} <= prof.trivial_cols
+
+
+def test_profile_empty_and_columnless_frames(spark):
+    from pytrousse_spark.profiling import profile
+
+    prof = profile(spark.createDataFrame([], "a double, s string"))
+    assert prof.stats["a"].total == 0 and prof.stats["s"].distinct == 0
+    assert prof.constant_cols == {"a", "s"}
+    assert profile(spark.range(3).select()).stats == {}
+
+
+def _dirty_csv_frame(spark, n=1_200):
+    """The wrangle flow's CSV shape, all strings: an id, two small
+    categoricals, a numeric-string, two mixed numeric/typo columns, a
+    mid-cardinality owner and a sparse notes column."""
+    import random
+
+    rnd = random.Random(5)
+    rows = []
+    for i in range(n):
+        temp = f"{37 + rnd.random() * 3:.1f}"
+        weight = f"{2 + rnd.random() * 40:.2f}"
+        if i % 9 == 0:
+            temp = temp.replace(".", ",")
+        if i % 13 == 0:
+            weight = rnd.choice(["---", "NV", f">{weight}"])
+        rows.append((
+            str(i),
+            rnd.choice(["MONGREL", "POODLE", "BEAGLE", "BOXER", "PUG"]),
+            rnd.choice(["M", "F", None]),
+            str(rnd.randrange(15)),
+            temp,
+            weight,
+            f"owner_{rnd.randrange(250)}",
+            f"note {rnd.randrange(100)}" if i % 10 == 0 else None,
+        ))
+    return spark.createDataFrame(
+        rows, "id string, breed string, sex string, age string, temp string, "
+        "weight string, owner string, notes string",
+    )
+
+
+def test_profile_classes_match_exact_distinct_reference(spark):
+    """Every class equals the one an exact-distinct profile gives: the
+    reference re-aggregates each column with ``count(DISTINCT …)`` and the
+    same count / parse-ratio expressions, side by side in one row."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from pytrousse_spark.profiling import ColumnProfile, profile
+
+    df = _dirty_csv_frame(spark)
+    prof = profile(df, frozenset({"id", "notes"}))
+    exprs = []
+    for c in df.columns:
+        col = F.col(c)
+        exprs += [
+            F.count(col).alias(f"{c}__cnt"),
+            F.countDistinct(col).alias(f"{c}__dst"),
+            F.avg(
+                F.when(col.isNotNull(), col.try_cast("double").isNotNull().cast("double"))
+            ).alias(f"{c}__pr"),
+        ]
+    row = df.agg(*exprs).collect()[0]
+    for c in df.columns:
+        assert prof.stats[c].count == row[f"{c}__cnt"]
+        assert prof.stats[c].parse_ratio == pytest.approx(row[f"{c}__pr"])
+        # HLL within 4 sigma of rsd 0.02
+        assert abs(prof.stats[c].distinct - row[f"{c}__dst"]) <= 0.08 * row[f"{c}__dst"]
+    exact = ColumnProfile(
+        stats={
+            c: replace(s, distinct=row[f"{c}__dst"]) for c, s in prof.stats.items()
+        },
+        metadata_cols=prof.metadata_cols,
+    )
+    for attr in (
+        "bool_cols", "mixed_type_cols", "numerical_cols", "str_cols",
+        "other_type_cols", "constant_cols", "trivial_cols",
+        "str_categorical_cols", "num_categorical_cols", "med_exam_col_list",
+        "to_be_fixed_cols",
+    ):
+        assert getattr(prof, attr) == getattr(exact, attr), attr
+    assert prof.mixed_type_cols == {"temp", "weight"}
+    assert prof.str_categorical_cols == {"breed", "sex"}
+
+
+def _records_read(spark, group: str) -> int:
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            st = store.lastStageAttempt(sid)
+            if st.status().toString() != "SKIPPED":
+                total += st.inputRecords()
+    return total
+
+
+def test_profile_scans_source_once(spark, tmp_path):
+    """Tripwire: with no column near a categorical boundary the profile is
+    ONE pass over its source — the parquet scan reads each row once. A
+    low-cardinality column adds the exact re-check, which reads it again."""
+    from pyspark.sql import functions as F
+
+    from pytrousse_spark.profiling import profile
+
+    n = 3_000
+    path = str(tmp_path / "src")
+    spark.range(n).select(
+        "id",
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") * 0.5).alias("x"),
+        (F.col("id") % 3).alias("small"),
+    ).write.parquet(path)
+    src = spark.read.parquet(path)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("profile-one-pass", "profile tripwire")
+        prof = profile(src.select("id", "s", "x"))
+        sc.setJobGroup("profile-recheck", "profile tripwire")
+        profile(src)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert prof.stats["s"].distinct > 10
+    assert _records_read(spark, "profile-one-pass") == n
+    assert _records_read(spark, "profile-recheck") == 2 * n

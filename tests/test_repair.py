@@ -58,6 +58,35 @@ def test_check_numeric_cols_threshold(spark):
     assert check_numeric_cols(ds, ("mostly_num", "mostly_str")) == ["mostly_num"]
 
 
+def test_check_numeric_cols_reads_cached_profile(spark):
+    """With a cached profile the ratios come from it, with no Spark job,
+    and the answer equals the aggregation path's."""
+    df = spark.createDataFrame(
+        [
+            ("1", None, "a", "1", 1),
+            ("2.5", None, "2", "x", 2),
+            ("3e2", None, "b", "3", 3),
+            (None, None, "c", "4", 4),
+        ],
+        "num string, nulls string, mixed_low string, mixed_high string, n int",
+    )
+    cols = ("num", "nulls", "mixed_low", "mixed_high")
+    aggregated = check_numeric_cols(from_df(df), cols)
+    ds = from_df(df)
+    ds.profile  # noqa: B018 — caches the profile
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("check-numeric-cached", "check_numeric_cols")
+        cached = check_numeric_cols(ds, cols)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert cached == aggregated == ["num", "mixed_high"]
+    assert sc.statusTracker().getJobIdsForGroup("check-numeric-cached") == []
+    # a non-string column has no profile ratio: it still aggregates
+    assert check_numeric_cols(ds, ("n", "mixed_low")) == ["n"]
+
+
 def test_error_census(spark):
     df = spark.createDataFrame(
         [("1",), ("oops",), ("zap",), ("oops",), ("NV",), ("2,5",)], "c string"

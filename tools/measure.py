@@ -7,7 +7,12 @@ Usage:
         [--plans plans/r12 --suffix before]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
-Prints one line per query: name, per-rep walls. Warm-up: q04 noop once.
+Prints one line per query: name, per-rep walls, and per rep the split of
+each wall into ``build_s``/``build_jobs`` (the query function returning
+its DataFrame, including any jobs it runs on the way: eager checkpoints,
+bounded collects) and ``action_s``/``action_jobs`` (the noop write). Jobs
+are counted per phase through its own Spark job group. Warm-up: q04 noop
+once.
 """
 
 from __future__ import annotations
@@ -24,6 +29,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pytrousse_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+
+
+def _phase(spark, group: str, fn):
+    """Run ``fn`` under its own job group; return its result, wall and
+    the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.perf_counter()
+        out = fn()
+        wall = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return out, wall, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def main() -> None:
@@ -72,14 +92,25 @@ def main() -> None:
             ) as f:
                 f.write(buf.getvalue())
         walls = []
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"measure:{name}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
+        ledger: dict[str, list] = {
+            "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": []
+        }
+        for rep in range(reps):
+            df, build_s, build_jobs = _phase(
+                spark, f"measure:{name}:{rep}:build", lambda: fn(spark, sf_dir)
+            )
+            _, action_s, action_jobs = _phase(
+                spark,
+                f"measure:{name}:{rep}:action",
+                lambda: df.write.format("noop").mode("overwrite").save(),
+            )
+            walls.append(round(build_s + action_s, 3))
+            ledger["build_s"].append(round(build_s, 3))
+            ledger["build_jobs"].append(build_jobs)
+            ledger["action_s"].append(round(action_s, 3))
+            ledger["action_jobs"].append(action_jobs)
         results[name] = walls
-        print(json.dumps({"query": name, "walls": walls}), flush=True)
+        print(json.dumps({"query": name, "walls": walls, **ledger}), flush=True)
     print(json.dumps({"all": results}))
 
 
