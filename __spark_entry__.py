@@ -33,6 +33,7 @@ from pytrousse_spark.operators.transforms import (
     ReplaceStrings,
     ReplaceSubstrings,
 )
+from pytrousse_spark.staging import stage
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -2047,7 +2048,7 @@ def q103_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # register-store: the grouped build feeds BOTH the per-source collect
     # and the DataFrame merge; checkpoint the (tiny, groups x 2^p) register
     # table so the md5/shingle scan runs once (signature-store pattern)
-    regs = hll_registers_grouped(keyed, "source", "k", p=12).localCheckpoint()
+    regs = stage(hll_registers_grouped(keyed, "source", "k", p=12))
     by_grp: dict[str, list[tuple[int, int]]] = {}
     for r in regs.collect():  # bounded: sources x 2^12 rows
         by_grp.setdefault(r["grp"], []).append((r["bucket"], r["r"]))
@@ -2558,14 +2559,13 @@ def q117_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two union directions read it once instead of re-running the
     # join+distinct per branch
     l = rebalance_undersplit(_t(spark, sf_dir, "lineitem"))
-    pairs = (
+    pairs = stage(
         l.join(o, l["l_orderkey"] == o["o_orderkey"])
         .select(
             F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("a"),
             F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     edges = pairs.unionByName(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -7942,9 +7942,9 @@ def q269_ndcg_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # tokenized once for all three relevance oracles (r12: was one
     # tokenize pass per query)
-    staged = d.select(
+    staged = stage(d.select(
         "doc_id", tokens(F.col("text")).alias("__tk")
-    ).localCheckpoint(eager=False)
+    ))
     rank_parts, rel_parts = [], []
     for qname, terms in _Q269_QUERIES.items():
         w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -9086,9 +9086,9 @@ def q303_mrr_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pytrousse_spark.operators.classifier import mrr_at_k
 
     d = _t(spark, sf_dir, "documents")
-    staged = d.select(
+    staged = stage(d.select(
         "doc_id", tokens(F.col("text")).alias("__tk")
-    ).localCheckpoint(eager=False)  # one tokenize for all 3 oracles
+    ))  # one tokenize for all 3 oracles
     rank_parts, rel_parts = [], []
     for qname, terms in _Q269_QUERIES.items():
         w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())

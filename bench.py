@@ -953,9 +953,9 @@ def main() -> None:
         # per-query timer; the intra-query memo (one training shared by
         # several consumers inside one query) is untouched.
         _probe_cache.clear()
-        # ... and drop cached staging relations (io.stage_unbounded
-        # persists) deterministically instead of waiting for the 2-min
-        # cleaner GC — storage blocks from earlier queries must not
+        # ... and drop cached staging relations (staging.stage_unbounded
+        # persists, which no cleaner GC releases) — storage blocks from
+        # earlier queries must not
         # squeeze this query's execution memory (r12's in-bench vs
         # isolated inflation class). Also outside the timer.
         spark.catalog.clearCache()

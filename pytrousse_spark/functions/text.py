@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from .hashing import h60, h60_sql
 
 from pytrousse_spark.functions.sqlutil import sql_quote
-from pytrousse_spark.io import stage_unbounded
+from pytrousse_spark.staging import stage, stage_unbounded
 
 #: tiny per-language stopword lists for the n-gram/stopword language heuristic.
 #: Ordered dict — ties resolve to the earlier language (deterministic).
@@ -1048,9 +1048,9 @@ def bigram_nll(df, text_col: str, id_col: str):
     # conditional-probability join reads it back — ONE unigram pass
     # (the pre-r13 plan re-tokenized the corpus for uni, for the
     # v_size count, and twice through bi: 4 tokenize passes total)
-    unigrams = uni.groupBy("w").agg(
+    unigrams = stage(uni.groupBy("w").agg(
         F.count(F.lit(1)).alias("c1")
-    ).localCheckpoint(eager=False)
+    ))
     v_size = unigrams.count()
     # per-bigram rows feed the count agg AND the final per-doc join:
     # recomputable persist (corpus-sized; r12 VERDICT item 6 class)
@@ -1142,12 +1142,11 @@ def zipf_fit(df, text_col: str, id_col: str, top_r: int = 1000):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    freq = (
+    freq = stage(
         df.select(tokens(F.col(text_col)).alias("__tk"))
         .select(F.explode("__tk").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
     )
     totals = freq.agg(
         F.count(F.lit(1)).cast("long").alias("n_types"),
@@ -1248,7 +1247,7 @@ def search_docs(df, text_col: str, id_col: str, terms: list[str], k: int = 20):
     # checkpoint the (id, matched-tokens) rows — the posting subtree
     # otherwise re-tokenizes the corpus for each consumer (df census +
     # scoring), and the n_docs count rides the same materialization
-    staged = (
+    staged = stage(
         df.where(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("__id"),
@@ -1260,15 +1259,13 @@ def search_docs(df, text_col: str, id_col: str, terms: list[str], k: int = 20):
         # doc survive): a REDUCED frame, not token-granularity — the r13
         # persist experiment cost q269/q303 ~30% (columnar cache encode
         # of array cells vs the checkpoint's raw-row store), so the
-        # cheaper localCheckpoint stays (measured trade, OPTIMIZATION_r13)
-        .localCheckpoint(eager=False)
+        # cheaper bounded stage() stays (measured trade, OPTIMIZATION_r13)
     )
     n_docs = staged.count()
-    post = (
+    post = stage(
         staged.select("__id", F.explode("__qt").alias("__t"))
         .groupBy("__id", "__t")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .localCheckpoint(eager=False)
     )
     dfreq = post.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
     scored = (
@@ -1359,23 +1356,22 @@ def bm25_search(
     base = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__tk")
     )
-    staged = base.select(
+    staged = stage(base.select(
         "__id",
         F.size("__tk").cast("long").alias("__dl"),
         F.filter("__tk", lambda t: t.isin(uniq)).alias("__qt"),
         # query-filtered arrays -> reduced frame; persist measured ~30%
         # slower here (see search_docs note), checkpoint stays
-    ).localCheckpoint(eager=False)
+    ))
     lens = staged.select("__id", "__dl")
     stats = staged.agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__dl").cast("long").alias("__sdl"),
     )
-    post = (
+    post = stage(
         staged.select("__id", F.explode("__qt").alias("__t"))
         .groupBy("__id", "__t")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .localCheckpoint(eager=False)
     )
     dfreq = post.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
     nd = F.col("__n").cast("double")
@@ -1493,19 +1489,18 @@ def dirichlet_ql_search(
     base = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__tk")
     )
-    staged = base.select(
+    staged = stage(base.select(
         "__id",
         F.size("__tk").cast("long").alias("__dl"),
         F.filter("__tk", lambda t: t.isin(uniq)).alias("__qt"),
         # query-filtered arrays -> reduced frame; persist measured ~30%
         # slower here (see search_docs note), checkpoint stays
-    ).localCheckpoint(eager=False)
+    ))
     lens = staged.select("__id", "__dl")
-    post = (
+    post = stage(
         staged.select("__id", F.explode("__qt").alias("__t"))
         .groupBy("__id", "__t")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .localCheckpoint(eager=False)
     )
     cf = post.groupBy("__t").agg(F.sum("__tf").cast("long").alias("__cf"))
     ctot = lens.agg(F.sum("__dl").cast("long").alias("__c"))
@@ -1722,7 +1717,7 @@ def js_divergence(
             .agg(F.count(F.lit(1)).alias(f"__c{side}"))
         )
     ca, cb = counts(df_a, "a"), counts(df_b, "b")
-    j = (
+    j = stage(
         ca.join(cb, "token", "full")
         .select(
             "token",
@@ -1732,7 +1727,6 @@ def js_divergence(
         .where(
             (F.col("__ca") >= min_count) | (F.col("__cb") >= min_count)
         )
-        .localCheckpoint(eager=False)
     )
     tot = j.agg(
         F.sum("__ca").alias("__na"),
@@ -1840,13 +1834,13 @@ def smoothed_sampling_weights(
     from pyspark.sql import functions as F
 
     c = F.col(count_col).cast("double")
-    base = df.where(F.col(count_col) > 0).select(
+    base = stage(df.where(F.col(count_col) > 0).select(
         F.col(key_col).alias("key"),
         F.col(count_col).cast("bigint").alias("count"),
         F.round(F.pow(c, F.lit(float(alpha))) * F.lit(1e6), 0)
         .cast("bigint")
         .alias("__m"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = base.agg(
         F.sum("__m").alias("__tm"), F.sum("count").alias("__tc")
     )

@@ -128,34 +128,6 @@ def rebalance_undersplit(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def stage_unbounded(df: DataFrame) -> DataFrame:
-    """Multi-consumer staging for frames whose size SCALES WITH THE INPUT
-    (per-token/per-occurrence/per-residual rows): spill-safe, RECOMPUTABLE
-    persist instead of ``localCheckpoint`` (r12 VERDICT item 6 / ADVICE
-    item 1). Both materialize once and serve every consumer from storage,
-    but a localCheckpoint block is non-recomputable — losing an executor
-    (or evicting under pressure) fails the job, and the pinned working
-    set grows with the corpus. ``persist(MEMORY_AND_DISK)`` keeps the
-    lineage: blocks spill, evict and recompute, so the job survives a
-    lost executor and memory pressure stays bounded at 100 TB. Bounded
-    reduced frames (vocab/levels/groups-sized) keep the cheaper lazy
-    localCheckpoint — that convention is unchanged.
-
-    Release is the caller's job. ``persist`` registers the plan with the
-    session's CacheManager, which holds a strong reference to it, so the
-    ContextCleaner never sees the blocks as unreachable (that GC-driven
-    release applies only to localCheckpoint blocks): they stay stored —
-    in memory, or on disk once evicted — until ``unpersist()`` on the
-    returned frame or ``spark.catalog.clearCache()``. The operators that
-    stage through here do not hand the staged frame back, so a
-    long-lived session that calls them accumulates their cached
-    relations until it clears the cache.
-    """
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
 def read_parquet(
     spark: SparkSession, path: str, metadata_cols: tuple[str, ...] = ()
 ) -> Dataset:

@@ -47,6 +47,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..staging import stage
+
 #: levels per bucket = 2^20 — the single-sort-task budget used across
 #: the skew-immune operators (rolling_time_window's convention).
 _SHIFT = 20
@@ -125,16 +127,14 @@ def exclusive_prefix_sums(
     re-scanning the source (the round-11 plan audit caught the
     sibling-branch version scanning the input 6x).
 
-    ``materialize=True`` (default) additionally lazy-localCheckpoints
-    the level frame: Catalyst's ReuseExchange fires inconsistently on
-    the diamond (the same audit saw one caller reuse cleanly and
+    ``materialize=True`` (default) additionally stages the level frame
+    (``staging.stage``): Catalyst's ReuseExchange fires inconsistently
+    on the diamond (the same audit saw one caller reuse cleanly and
     another re-scan its source once per tier because column pruning
     rewrote each branch's agg chain differently), and at 100 TB the
-    source scan is the dominant cost — the checkpoint makes ONE scan a
-    structural guarantee rather than optimizer luck. The checkpointed
-    frame is the (small) level frame, never the raw data; the graph.py
-    iterative operators established the lazy-localCheckpoint
-    convention.
+    source scan is the dominant cost — staging makes ONE scan a
+    structural guarantee rather than optimizer luck. The staged frame
+    is the (small) level frame, never the raw data.
 
     ``strategy``: ``"auto"`` (default) counts the checkpointed level
     frame (the largest group's level count when grouped) and picks
@@ -145,7 +145,7 @@ def exclusive_prefix_sums(
     the router only trades plan shape, never values."""
     gc = list(group_cols)
     if materialize:
-        lv = lv.localCheckpoint(eager=False)
+        lv = stage(lv)
     if _route(lv, strategy, gc) == "window":
         wbase = Window.partitionBy(*gc) if gc else Window
         w = wbase.orderBy(order_col).rowsBetween(
@@ -298,7 +298,7 @@ def next_level(
     """
     gc = list(group_cols)
     if materialize:
-        lv = lv.localCheckpoint(eager=False)
+        lv = stage(lv)
     if _route(lv, strategy, gc) == "window":
         wbase = Window.partitionBy(*gc) if gc else Window
         w = wbase.orderBy(order_col)

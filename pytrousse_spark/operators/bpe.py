@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..staging import stage
+
 #: symbol sentinel — never appears in [0-9a-z]+ words
 SENT = "|"
 
@@ -91,16 +93,16 @@ def bpe_train(
     """
     if num_merges < 1:
         raise ValueError("bpe_train: num_merges must be >= 1")
-    vocab = _word_vocab(df, text_col).localCheckpoint(eager=False)
+    vocab = stage(_word_vocab(df, text_col))
     # segmentation maintained INCREMENTALLY: applying merge k to the
     # (checkpointed) result of merges 1..k-1 IS the chained greedy
     # application, so each step's job applies ONE replace instead of
     # re-wrapping and replaying the whole growing chain from the raw
     # vocabulary (r12 optimization round; bit-identical by definition
     # of _seg_with_merges' left-to-right chain)
-    seg = vocab.select(
+    seg = stage(vocab.select(
         _wrap_chars(F.col("__w")).alias("__seg"), "__f"
-    ).localCheckpoint(eager=False)
+    ))
     merges: list[tuple[str, str]] = []
     out: list[tuple[int, str, str, str, int]] = []
     for step in range(1, num_merges + 1):
@@ -140,14 +142,14 @@ def bpe_train(
             (step, r["lhs"], r["rhs"], r["lhs"] + r["rhs"], int(r["cnt"]))
         )
         if step < num_merges:
-            seg = seg.select(
+            seg = stage(seg.select(
                 F.replace(
                     F.col("__seg"),
                     F.lit(f"{SENT}{r['lhs']}{SENT}{SENT}{r['rhs']}{SENT}"),
                     F.lit(f"{SENT}{r['lhs']}{r['rhs']}{SENT}"),
                 ).alias("__seg"),
                 "__f",
-            ).localCheckpoint(eager=False)
+            ))
     return out
 
 

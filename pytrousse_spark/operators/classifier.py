@@ -18,7 +18,7 @@ CTE pipeline and lands on bit-identical weights.
 
 Scale: per iteration, one scan + one 5-value aggregate (no shuffle of
 rows at all — partial aggs combine on the driver side of the exchange);
-the feature frame is computed once and localCheckpoint'ed. T iterations =
+the feature frame is computed once and staged. T iterations =
 T scans of a cached columnar frame.
 """
 
@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import round_half_away
 from ..functions.text import LANG_STOPWORDS, tokens, tokens_sql
-from ..io import rebalance_undersplit, stage_unbounded
+from ..io import rebalance_undersplit
+from ..staging import stage, stage_unbounded
 
 #: feature scaling constants (shared by both engines).
 _LEN_DIV = 100.0
@@ -192,7 +193,7 @@ def logreg_quality_sql(
     # MATERIALIZED: the chain references feat once per iteration; without
     # it DuckDB inlines the scan T times (T parquet opens + T regexp
     # passes — file-handle exhaustion at T=20). Mirrors the Spark side's
-    # localCheckpoint of the feature frame.
+    # staging of the feature frame.
     ctes = [
         f"feat AS MATERIALIZED ({feat})",
         "w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d)",
@@ -536,7 +537,7 @@ def ols_grouped(
     n = F.col("n").cast("double")
     d = {k: F.col(k).cast("double") for k in
          ("s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y", "syy")}
-    # The covariance terms stage through a localCheckpoint barrier:
+    # The covariance terms stage through a checkpoint barrier:
     # CollapseProject would otherwise inline each c-term into every
     # consumer (b0 embeds b1 embeds det embeds four c-terms — the
     # duplicated tree is ~10x the staged one in codegen size). Warm cost
@@ -544,7 +545,7 @@ def ols_grouped(
     # cold 7s is first-query-in-session warm-up, not this projection),
     # but the checkpointed frame is groups x 11 doubles, so the barrier
     # is free and the generated code stays readable in explain output.
-    c = s.select(
+    c = stage(s.select(
         "grp",
         "n",
         (n * d["s11"] - d["s1"] * d["s1"]).alias("c11"),
@@ -556,7 +557,7 @@ def ols_grouped(
         d["s1"].alias("s1d"),
         d["s2"].alias("s2d"),
         d["sy"].alias("syd"),
-    ).localCheckpoint(eager=False)
+    ))
     det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
     ok = det != 0
     b1 = F.when(
@@ -1227,10 +1228,10 @@ def conformal_interval(
             F.abs(a - p).alias("__r")
         )
     )  # per-row residuals: recomputable persist (r12 VERDICT item 6)
-    stats = nn.agg(
+    stats = stage(nn.agg(
         F.max("__r").alias("__hi"),
         F.count(F.lit(1)).cast("bigint").alias("__n"),
-    ).localCheckpoint(eager=False)
+    ))
     # residuals are >= 0: bin over [0, hi]
     binned = nn.crossJoin(F.broadcast(stats)).select(
         F.when(F.col("__hi") == 0, F.lit(0))
@@ -1433,9 +1434,9 @@ def naive_bayes_confusion(
     # audit measured cls/vocab as two further full tokenize passes of
     # the corpus (identical values: per-class token mass is the sum of
     # its pair counts; V is the distinct token count of the pair frame)
-    pair = doc_tok.groupBy("__y", "__tok").agg(
+    pair = stage(doc_tok.groupBy("__y", "__tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("__nct")
-    ).localCheckpoint(eager=False)
+    ))
     cls = pair.groupBy("__y").agg(
         F.sum("__nct").cast("bigint").alias("__nc")
     )
@@ -1448,7 +1449,7 @@ def naive_bayes_confusion(
     tot = staged.agg(
         F.count(F.lit(1)).cast("bigint").alias("__dt")
     )
-    classes = (
+    classes = stage(
         cls.join(priors, "__y")
         .crossJoin(F.broadcast(vocab))
         .crossJoin(F.broadcast(tot))
@@ -1476,7 +1477,7 @@ def naive_bayes_confusion(
             .cast("bigint")
             .alias("__w0_nano"),
         )
-    ).localCheckpoint(eager=False)
+    )
     pair_w = (
         pair.join(F.broadcast(classes.select("__y", "__nc", "__w0_nano")), "__y")
         .crossJoin(F.broadcast(vocab))
@@ -1714,12 +1715,12 @@ def decision_stump(
     # one row; feeds the binning pass, the candidate costs AND the
     # output projection — checkpoint so the stats scan runs once (the
     # audited plan re-ran it per consumer: 8 raw scans total)
-    st = nn.agg(
+    st = stage(nn.agg(
         F.min("__v").alias("__lo"),
         F.max("__v").alias("__hi"),
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum("__y").cast("bigint").alias("__pos"),
-    ).localCheckpoint(eager=False)
+    ))
     binned = nn.crossJoin(F.broadcast(st)).select(
         F.when(
             F.col("__hi") == F.col("__lo"), F.lit(0)
@@ -1737,10 +1738,10 @@ def decision_stump(
         .alias("__b"),
         "__y",
     )
-    hist = binned.groupBy("__b").agg(
+    hist = stage(binned.groupBy("__b").agg(
         F.count(F.lit(1)).cast("bigint").alias("__nb"),
         F.sum("__y").cast("bigint").alias("__pb"),
-    ).localCheckpoint(eager=False)  # <= num_bins rows
+    ))  # <= num_bins rows
     spark = df.sparkSession
     dense = (
         spark.range(B)
@@ -1970,16 +1971,16 @@ def isotonic_calibration(
     """
     v = F.col(score_col)
     nn = df.where(v.isNotNull() & F.col(label_col).isNotNull())
-    stats = nn.agg(
+    stats = stage(nn.agg(
         F.min(v).cast("double").alias("__lo"),
         F.max(v).cast("double").alias("__hi"),
-    ).localCheckpoint(eager=False)  # one row
+    ))  # one row
     pos = (
         (v.cast("double") - F.col("__lo"))
         / (F.col("__hi") - F.col("__lo"))
         * num_bins
     )
-    binned = (
+    binned = stage(
         nn.join(F.broadcast(stats), how="cross")
         .select(
             F.when(
@@ -2003,7 +2004,6 @@ def isotonic_calibration(
         # <= num_bins rows; feeds the prefix frame (twice, via the
         # lo/hi projections) AND the output join — checkpoint so the
         # raw binning scan runs once, not 3x
-        .localCheckpoint(eager=False)
     )
     word = Window.orderBy("bin")
     pref = binned.select(
@@ -2321,10 +2321,10 @@ def optimal_threshold(
     # totals agg below reads the same materialized frame — totals off
     # the pre-checkpoint lineage would run the raw-table agg twice
     # (the cramer_von_mises pattern)
-    dist = staged.groupBy("__s").agg(
+    dist = stage(staged.groupBy("__s").agg(
         F.sum("__y").cast("bigint").alias("__p"),
         F.sum(1 - F.col("__y")).cast("bigint").alias("__q"),
-    ).localCheckpoint(eager=False)
+    ))
     # reverse-inclusive cumulatives over score LEVELS without a global
     # descending sort: TP(s) = n_pos - strictly-below(s), with the
     # strictly-below sums from the bounded prefix hierarchy (_prefix,
@@ -2983,9 +2983,10 @@ def bradley_terry(
     # oversized table must never materialize on the driver just to be
     # rejected (the guard exists precisely because the MM loop is
     # driver-side; pre-filter low-count pairs or shrink the item
-    # universe to get under it). Persist so the guard count and the
-    # collect share one computation of the aggregation.
-    comp = comp.persist()
+    # universe to get under it). Stage (recomputable: the pair table is
+    # only guarded, not bounded) so the guard count and the collect share
+    # one computation of the aggregation.
+    comp = stage_unbounded(comp)
     try:
         n_pairs = comp.count()
         if n_pairs > 2_000_000:
@@ -3285,18 +3286,17 @@ def split_conformal(
     # cal+test AND the n_train readout), and n_train is derived from
     # the model itself (sum of the per-group counts == the train row
     # count, exactly) instead of a second raw-table aggregate
-    model = (
+    model = stage(
         train.groupBy("__g")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("__nt"),
             F.sum("__y").cast("bigint").alias("__st"),
         )
-        .localCheckpoint(eager=False)
     )
     # prediction = integer-rounded train group mean in cents
     pred = F.round(F.col("__st") / F.col("__nt"), 0).cast("bigint")
     # scored feeds BOTH the calibration levels and the test coverage agg;
-    # lazily checkpoint the (bucket, residual) projection so the base
+    # stage the (bucket, residual) projection so the base
     # scan + model join execute once, not once per consumer
     scored = stage_unbounded(
         base.where(F.col("__b") >= 6)
@@ -3311,10 +3311,9 @@ def split_conformal(
     # per-level counts == the calibration row count): aggregating the
     # pre-checkpoint cal lineage would run the scored join a second
     # time for one scalar (the optimal_threshold fix's class)
-    levels = (
+    levels = stage(
         cal.groupBy("__r")
         .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
-        .localCheckpoint(eager=False)
     )
     n_cal_row = levels.agg(
         F.coalesce(F.sum("__c").cast("bigint"), F.lit(0).cast("bigint"))
@@ -3463,7 +3462,7 @@ def krippendorff_alpha(
     # needs to run — checkpoint it, and the pairable frame c too: c
     # otherwise re-executes the whole build for each of its three
     # consumers (both self-join sides and the meta agg)
-    cnt = (
+    cnt = stage(
         ratings.where(
             F.col(unit_col).isNotNull() & F.col(value_col).isNotNull()
         )
@@ -3473,13 +3472,11 @@ def krippendorff_alpha(
         )
         .groupBy("__u", "__v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-        .localCheckpoint(eager=False)
     )
     mu = cnt.groupBy("__u").agg(F.sum("__n").alias("__m"))
-    c = (
+    c = stage(
         cnt.join(mu, "__u")
         .where(F.col("__m") >= 2)
-        .localCheckpoint(eager=False)
     )
     a = c.select("__u", F.col("__v").alias("__c"), F.col("__n").alias("__nc"), "__m")
     b = c.select("__u", F.col("__v").alias("__k"), F.col("__n").alias("__nk"))
@@ -3915,14 +3912,13 @@ def mann_whitney_by_group(
             F.lit(1).alias("__b"),
         )
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__g", "__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from ._prefix import exclusive_prefix_sums
 
@@ -4761,7 +4757,7 @@ def fleiss_kappa(
     """
     if raters < 2:
         raise ValueError("fleiss_kappa: raters must be >= 2")
-    cnt = (
+    cnt = stage(
         ratings.where(
             F.col(unit_col).isNotNull() & F.col(value_col).isNotNull()
         )
@@ -4773,13 +4769,11 @@ def fleiss_kappa(
         .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
         # unit x value bounded; the caller's ratings build (often a
         # multi-annotator union over raw text) must run only once
-        .localCheckpoint(eager=False)
     )
     mu = cnt.groupBy("__u").agg(F.sum("__n").cast("bigint").alias("__m"))
     keep = mu.where(F.col("__m") == raters)
-    ok = cnt.join(keep.select("__u"), "__u").localCheckpoint(
-        eager=False
-    )  # feeds the category margins AND the square fold
+    # feeds the category margins AND the square fold
+    ok = stage(cnt.join(keep.select("__u"), "__u"))
     # n_units reads off the per-unit frame (already one row per unit) —
     # a count_distinct alongside the regular sum would plan an Expand
     # over the whole (unit, value) frame (the q20 multi-distinct lesson)

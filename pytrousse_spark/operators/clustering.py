@@ -38,6 +38,7 @@ from ..functions.hashing import h60, h60_sql
 from ..functions.rounding import round_half_away
 from ..functions.vectors import cosine, cosine_sql, lit_doubles
 from ..io import rebalance_undersplit
+from ..staging import stage
 
 
 # ---------------------------------------------------------------------------
@@ -498,11 +499,11 @@ def cluster_quality(
     # the k-row frame feeds the sj broadcast, the rij main side and the
     # final join — checkpoint it so the full-corpus distance pass runs
     # once, not once per consumer
-    per = staged.groupBy("cluster").agg(
+    per = stage(staged.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("__sm").cast("bigint").alias("__ssm"),
         F.sum("__am").cast("bigint").alias("__sam"),
-    ).localCheckpoint(eager=False)
+    ))
     # centroid-pair distances computed IN-ENGINE with the same
     # _sqdist fold the per-point distances use (proven fold-equal to
     # the twin's list_sum by the q78 gate), then the knife-edge-safe

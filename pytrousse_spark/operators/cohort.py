@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
 from ..io import rebalance_undersplit
+from ..staging import stage
 
 from pytrousse_spark.functions.sqlutil import sql_quote
 
@@ -122,9 +123,8 @@ def _funnel_step_frames(
 ) -> list[DataFrame]:
     """Per-step (``__u``, ``__t``) conversion frames: step k's earliest
     qualifying event at-or-after the user's step k-1 time. Each frame is
-    an EAGER checkpoint — two consumers each (the next step's broadcast
-    build and the caller's aggregate) whose jobs launch concurrently and
-    would race a lazy cache (the q112 lesson, PLANS.md round-4)."""
+    staged: it has two consumers (the next step's broadcast build and
+    the caller's aggregate)."""
     frames: list[DataFrame] = []
     prev: DataFrame | None = None
     for step in steps:
@@ -140,7 +140,7 @@ def _funnel_step_frames(
                 .groupBy("__u")
                 .agg(F.min("__ts").alias("__t"))
             )
-        cur = cur.localCheckpoint(eager=True)
+        cur = stage(cur)
         frames.append(cur)
         prev = cur
     return frames
@@ -1199,13 +1199,11 @@ def linear_attribution_scalable(
     # touches of users with no conversion at all contribute to no count
     # and no remainder — drop them before any window machinery
     t = t.join(p.select("__u").distinct(), "__u", "semi")
-    # the staged frames feed ~6 union/window branches each — without a
-    # checkpoint the touch scan + semi filter re-executes per branch
-    # (measured in the physical plan: 12+ repeats). Eager localCheckpoint
-    # is this repo's multi-consumer convention (the q112 race lesson); a
-    # real deployment would persist() the staged projections instead.
-    p = p.localCheckpoint(eager=True)
-    t = t.localCheckpoint(eager=True)
+    # the staged frames feed ~6 union/window branches each — unstaged,
+    # the touch scan + semi filter re-executes per branch (measured in
+    # the physical plan: 12+ repeats)
+    p = stage(p)
+    t = stage(t)
 
     # probe only the (user, channel) combinations that exist in touches
     # (a cross join against ALL channels cost 12x on benign data); the
@@ -2230,8 +2228,8 @@ def position_attribution_scalable(
         F.col(channel_col).alias("__ch"),
     )
     t = t.join(p.select("__u").distinct(), "__u", "semi")
-    p = p.localCheckpoint(eager=True)
-    t = t.localCheckpoint(eager=True)
+    p = stage(p)
+    t = stage(t)
 
     user_channels = t.select("__u", "__ch").distinct()
     pc = p.join(user_channels, "__u", "inner")
@@ -2251,12 +2249,11 @@ def position_attribution_scalable(
         F.col("l___ch").alias("__lch"),
     )
 
-    base = (
+    base = stage(
         p.join(nt, "__pid", "left")
         .withColumn("__nt", F.coalesce(F.col("__nt"), F.lit(0)))
         .join(fl, "__pid", "left")
         .select("__pid", "__vm", "__nt", "__fch", "__lch")
-        .localCheckpoint(eager=True)
     )
     first40 = F.expr("(__vm * 4) div 10")
     mid_pool = F.col("__vm") - F.lit(2) * first40
@@ -2396,13 +2393,13 @@ def rfm_segments(
     # plan audit measured 400 source scans in the q195 plan). Checkpoint
     # the per-user frame and each pass's output — always the reduced
     # per-purchaser frame, never the event table.
-    metrics = metrics.localCheckpoint(eager=False)
-    r1 = percent_rank_transform_approx(
+    metrics = stage(metrics)
+    r1 = stage(percent_rank_transform_approx(
         metrics, "__one", "recency_days", "__rr", num_bins
-    ).localCheckpoint(eager=False)
-    r2 = percent_rank_transform_approx(
+    ))
+    r2 = stage(percent_rank_transform_approx(
         r1, "__one", "freq", "__fr", num_bins
-    ).localCheckpoint(eager=False)
+    ))
     r3 = percent_rank_transform_approx(r2, "__one", "mon", "__mr", num_bins)
 
     def q(c: str):
@@ -3362,7 +3359,7 @@ def ipw_ate(
     # the single-row-group bench inputs land the whole staged frame in
     # ONE scan partition, serializing every iterative training aggregate
     # on one core; spread it before checkpointing (no-op at real scale)
-    feat = rebalance_undersplit(feat).localCheckpoint(eager=False)
+    feat = stage(rebalance_undersplit(feat))
     w = logreg_train(feat, iters=iters, lr=lr)
     z = (
         F.lit(w[0])
@@ -3628,7 +3625,7 @@ def propensity_matching(
     # the single-row-group bench inputs land the whole staged frame in
     # ONE scan partition, serializing every iterative training aggregate
     # on one core; spread it before checkpointing (no-op at real scale)
-    feat = rebalance_undersplit(feat).localCheckpoint(eager=False)
+    feat = stage(rebalance_undersplit(feat))
     w = logreg_train(feat, iters=iters, lr=lr)
     z = (
         F.lit(w[0])
@@ -4002,7 +3999,7 @@ def aipw_ate(
     # the single-row-group bench inputs land the whole staged frame in
     # ONE scan partition, serializing every iterative training aggregate
     # on one core; spread it before checkpointing (no-op at real scale)
-    feat = rebalance_undersplit(feat).localCheckpoint(eager=False)
+    feat = stage(rebalance_undersplit(feat))
     w = logreg_train(feat, iters=iters, lr=lr)
 
     # features enter the OLS folds as EXACT micro-unit integers (a
@@ -5296,12 +5293,12 @@ def quantile_treatment_effects(
     wn = Window.partitionBy("__t")
     # distinct-value-bounded; feeds the decile targets AND the rank
     # probe join — checkpoint so the raw agg + windows run once
-    frame = dist.select(
+    frame = stage(dist.select(
         "__t",
         "__c",
         F.sum("__k").over(w).cast("bigint").alias("__cum"),
         F.sum("__k").over(wn).cast("bigint").alias("__n"),
-    ).localCheckpoint(eager=False)
+    ))
     deciles = (
         frame.select("__t", "__n")
         .distinct()
@@ -5321,13 +5318,12 @@ def quantile_treatment_effects(
             .alias("__r"),
         )
     )
-    picked = (
+    picked = stage(
         frame.join(F.broadcast(deciles), ["__t", "__n"])
         .where(F.col("__cum") >= F.col("__r"))
         .groupBy("__t", "__n", "decile")
         .agg(F.min("__c").alias("__v"))
         # <= 2 x (n_bands - 1) rows; feeds both arm projections
-        .localCheckpoint(eager=False)
     )
     t_ = picked.where(F.col("__t") == 1).select(
         "decile",
@@ -5690,11 +5686,11 @@ def theil_index(
     ).cast(d38)
     # groups-bounded; feeds the total fold AND the decomposition join —
     # checkpoint so the fact-side agg runs once
-    per = pos.groupBy("__g").agg(
+    per = stage(pos.groupBy("__g").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum("__x").cast(d38).alias("__sx"),
         F.sum(xlx).cast(d38).alias("__sxl"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = per.agg(
         F.sum("__n").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("n_groups"),

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
-from ..io import stage_unbounded
+from ..staging import stage, stage_unbounded
 from . import dedup as dd
 
 from pytrousse_spark.functions.sqlutil import sql_quote
@@ -91,19 +91,15 @@ def clean_corpus(
         min_tokens=min_tokens, max_tokens=max_tokens, shingle_n=shingle_n,
     )
     exact = dd.exact_dedup(kept, ["__fp"], id_col)
-    # The near-dedup stage consumes `exact` three times (signatures,
-    # shingle sets, survivor anti-join) with different column prunings, so
-    # the exchanges are not canonically equal and AQE cannot reuse them —
-    # without persistence the full gate+dedup aggregation would execute
-    # three times. Spill-safe persist, released below: the survivors are
-    # eagerly materialized via localCheckpoint (they are the filtered,
-    # deduped corpus — far smaller than the input) so the cached
-    # exact-dedup partitions can be unpersisted before returning, and
-    # repeated clean_corpus calls in one long session do not accumulate
-    # cached partitions.
-    from pyspark import StorageLevel
-
-    exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
+    # The near-dedup stage reads `exact` for its shingle frame and for the
+    # survivor anti-join with different column prunings, so the exchanges
+    # are not canonically equal and AQE cannot reuse them — without staging
+    # the full gate+dedup aggregation would execute twice. Both `exact` and
+    # the shingle frame grow with the input, so they stage as recomputable
+    # persists, released below so repeated calls in one long session do
+    # not accumulate cached partitions.
+    exact = stage_unbounded(exact)
+    sh = stage_unbounded(dd.shingle_frame(exact, text_col, id_col, shingle_n))
     survivors = dd.near_dedup(
         exact,
         text_col,
@@ -113,10 +109,17 @@ def clean_corpus(
         shingle_n=shingle_n,
         threshold=threshold,
         hash_fn=hash_fn,
+        shingles=sh,
     )
-    out = survivors.select(id_col, "n_tokens", "quality").localCheckpoint(
-        eager=True
-    )
+    # Materialize-then-release: the survivors (the filtered, deduped
+    # corpus, far smaller than the input) must be computed from the
+    # cached frames BEFORE they are unpersisted. A staged frame left for
+    # the caller's action would recompute the whole gate+dedup lineage
+    # after the release, so one explicit action stores it here (a noop
+    # write: one job, where a count would add an aggregate's shuffle).
+    out = stage(survivors.select(id_col, "n_tokens", "quality"))
+    out.write.format("noop").mode("overwrite").save()
+    sh.unpersist()
     exact.unpersist()
     return out
 
@@ -216,9 +219,9 @@ def heaps_law_fit(
     )
     # one row (id range); column pruning keeps its scan tokenize-free,
     # and the checkpoint stops it re-running per consumer
-    st = nn.agg(
+    st = stage(nn.agg(
         F.min("__id").alias("__lo"), F.max("__id").alias("__hi")
-    ).localCheckpoint(eager=False)
+    ))
     # bucket index 0..C-1 by doc id position in [lo, hi]
     def bucket(idc):
         return (
@@ -243,11 +246,10 @@ def heaps_law_fit(
     # regrouping exactly), reduce to the vocab x C frame, checkpoint
     # it, and read both V(bucket) and token mass off that.
     doc_tok = nn.select("__id", F.explode("__toks").alias("__tok"))
-    tb = (
+    tb = stage(
         doc_tok.crossJoin(F.broadcast(st))
         .groupBy(F.col("__tok"), bucket(F.col("__id")).alias("__b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
-        .localCheckpoint(eager=False)
     )
     vper = (
         tb.groupBy("__tok")
@@ -728,9 +730,9 @@ def skipgram_pairs(
             "__doc", F.posexplode("__tk").alias("__pos", "__tok")
         )
     )  # per-occurrence rows: recomputable persist, not a checkpoint
-    freq = occ.groupBy("__tok").agg(
+    freq = stage(occ.groupBy("__tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("__cnt")
-    ).localCheckpoint(eager=False)
+    ))
     total = freq.agg(
         F.sum("__cnt").cast("bigint").alias("__total")
     )
@@ -911,9 +913,9 @@ def skipgram_negatives(
             "__doc", F.posexplode("__tk").alias("__pos", "__tok")
         )
     )  # per-occurrence rows: recomputable persist, not a checkpoint
-    freq = occ.groupBy("__tok").agg(
+    freq = stage(occ.groupBy("__tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("__cnt")
-    ).localCheckpoint(eager=False)
+    ))
     total = freq.agg(F.sum("__cnt").cast("bigint").alias("__total"))
     p = F.least(
         F.lit(1.0),

@@ -20,8 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60_sql, hash_expr
-from ..io import stage_unbounded
 from ..functions.text import tokens, word_shingles, word_shingles_sql
+from ..staging import stage, stage_unbounded
 
 
 # ---------------------------------------------------------------------------
@@ -350,16 +350,15 @@ def _df_ordered_shingle_docs(
     every prefix-filtered similarity join (:func:`prefix_jaccard_pairs`,
     :func:`containment_pairs_prefix`).
 
-    EAGER checkpoints, unlike the lazy signature-store in
-    near_dedup_pairs: the result feeds multiple branches, several of them
-    broadcast builds whose jobs launch concurrently — with a lazy
-    checkpoint they race cache population and each recomputes the
-    tokenize+df-join subtree (measured 2.5x the whole-operator wall at
-    sf0.1)."""
+    Both frames are staged: the shingle rows feed the df count and the
+    df join, and the result feeds several branches of the caller, some
+    of them broadcast builds whose jobs launch concurrently (measured at
+    sf0.1: q112/q161 walls equal to an eager checkpoint's within
+    run-to-run spread)."""
     from ..functions.text import shingles_from_tokens, tokens
     from ..io import rebalance_undersplit
 
-    shingled = (
+    shingled = stage(
         rebalance_undersplit(df)
         .select(F.col(id_col).alias("__id"), F.col(text_col))
         .withColumn("__tk", tokens(F.col(text_col)))
@@ -370,17 +369,15 @@ def _df_ordered_shingle_docs(
             ).alias("__sh"),
         )
         .where(F.col("__sh").isNotNull())
-        .localCheckpoint(eager=True)
     )
     dfc = shingled.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
-    return (
+    return stage(
         shingled.join(dfc, "__sh")
         .groupBy("__id")
         .agg(
             F.expr("transform(sort_array(collect_list(struct(__df, __sh))), x -> x.__sh)").alias("__arr"),
             F.count(F.lit(1)).alias("__sz"),
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -542,6 +539,22 @@ def prefix_jaccard_pairs_sql(
 # ---------------------------------------------------------------------------
 # composed production near-dedup: LSH candidates → exact Jaccard verify
 # ---------------------------------------------------------------------------
+def shingle_frame(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
+) -> DataFrame:
+    """Per-doc ``(id_col, __sh)`` word-shingle arrays — the shared input of
+    LSH banding and exact-Jaccard verification."""
+    from ..functions.text import shingles_from_tokens, tokens
+    from ..io import rebalance_undersplit
+
+    return (
+        rebalance_undersplit(df)
+        .select(F.col(id_col), F.col(text_col))
+        .withColumn("__tk", tokens(F.col(text_col)))
+        .select(id_col, shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"))
+    )
+
+
 def near_dedup_pairs(
     df: DataFrame,
     text_col: str,
@@ -551,6 +564,7 @@ def near_dedup_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     hash_fn: str = "md5",
+    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Verified near-duplicate pairs: MinHash-LSH candidate generation
     (:func:`minhash_lsh_pairs`) followed by exact n-gram Jaccard computed
@@ -563,25 +577,21 @@ def near_dedup_pairs(
     O(corpus + candidates·doc_len), never O(n²). Jaccard semantics are
     identical to :func:`ngram_jaccard_pairs` (distinct word n-grams,
     ``common / (|a| + |b| - common)``, rounded to 6).
-    """
-    from ..functions.text import shingles_from_tokens, tokens
-    from ..io import rebalance_undersplit
 
+    ``shingles`` optionally supplies the caller's staged
+    :func:`shingle_frame` of ``df``; without it the frame is built and
+    staged here (and stays cached until the caller clears the cache).
+    """
     # Signature-store pattern: the banding branch and BOTH verify sides
     # would otherwise re-tokenize the corpus (3 executions of the shingle
-    # subtree). One lazily-materialized (id, shingles) frame feeds all
-    # three; the text column itself is never materialized or shuffled.
+    # subtree). One staged (id, shingles) frame feeds all three; the text
+    # column itself is never materialized or shuffled. Per-doc shingle
+    # arrays are corpus-sized: recomputable persist.
     sh = (
-        rebalance_undersplit(df)
-        .select(F.col(id_col), F.col(text_col))
-        .withColumn("__tk", tokens(F.col(text_col)))
-        .select(
-            id_col,
-            shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"),
-        )
+        shingles
+        if shingles is not None
+        else stage_unbounded(shingle_frame(df, text_col, id_col, shingle_n))
     )
-    # per-doc shingle arrays (corpus-sized): recomputable persist
-    sh = stage_unbounded(sh)
     cands = minhash_lsh_pairs(
         df, text_col, id_col,
         num_perm=num_perm, bands=bands, shingle_n=shingle_n, hash_fn=hash_fn,
@@ -631,17 +641,20 @@ def near_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     hash_fn: str = "md5",
+    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Corpus with verified near-duplicates removed: a document is dropped
     when it has a verified near-duplicate with a SMALLER id (greedy min-id
     survivor — deterministic and single-pass, the standard large-scale
     approximation of transitive-closure clustering; documents only connected
     through a removed intermediate are both kept).
+
+    ``shingles``: as in :func:`near_dedup_pairs`.
     """
     pairs = near_dedup_pairs(
         df, text_col, id_col,
         num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        threshold=threshold, hash_fn=hash_fn,
+        threshold=threshold, hash_fn=hash_fn, shingles=shingles,
     )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, on=id_col, how="left_anti")
@@ -687,27 +700,15 @@ def cross_near_dedup_pairs(
     incoming = rebalance_undersplit(incoming)
     reference = rebalance_undersplit(reference)
 
-    def shingle_frame(df: DataFrame) -> DataFrame:
-        from ..functions.text import shingles_from_tokens, tokens
-
-        return (
-            df.select(F.col(id_col), F.col(text_col))
-            .withColumn("__tk", tokens(F.col(text_col)))
-            .select(
-                id_col,
-                shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"),
-            )
-        )
-
     inc_sh = (
         incoming_shingles
         if incoming_shingles is not None
-        else shingle_frame(incoming)
+        else shingle_frame(incoming, text_col, id_col, shingle_n)
     )
     ref_sh = (
         reference_shingles
         if reference_shingles is not None
-        else shingle_frame(reference)
+        else shingle_frame(reference, text_col, id_col, shingle_n)
     )
 
     def banded(sh_df: DataFrame, side: str) -> DataFrame:
@@ -823,7 +824,7 @@ def cross_dedup(
         )
 
     # Signature-store pattern: the reference corpus has THREE consumers
-    # (fingerprints, band keys, verify sets). One lazily-materialized
+    # (fingerprints, band keys, verify sets). One staged
     # shingle frame feeds all three, so the reference is tokenized once
     # instead of three times (measured ~2x on q75 at sf0.1). The frame
     # carries only (id, shingles) — the reference text itself still never
@@ -1604,7 +1605,7 @@ def connected_components(
     operator is NOT one lazy plan — by design, like every iterative graph
     algorithm on Spark.
     """
-    edges = (
+    edges = stage(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
@@ -1613,7 +1614,6 @@ def connected_components(
         # materialize ONCE: edges are re-joined every round, and without
         # this the whole upstream pair-generation pipeline (LSH + verify)
         # would re-execute per round
-        .localCheckpoint(eager=True)
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "component", F.col("id")
@@ -1641,7 +1641,7 @@ def connected_components(
                 .alias("__changed"),
             )
         )
-        updated = updated.localCheckpoint(eager=True)  # truncate the iterative lineage
+        updated = stage(updated)  # truncate the iterative lineage
         n_changed = updated.where("__changed").count()
         labels = updated.drop("__changed")
         if n_changed == 0:

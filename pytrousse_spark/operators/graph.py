@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..staging import stage
+
 _MICRO = 1_000_000
 
 
@@ -35,23 +37,20 @@ def pagerank(
     teleport mass; duplicate edges count once — callers pre-distinct).
 
     Returns ``(node, rank_micro)`` — rank in integer micro-units, summing
-    to ~N·1e6. One eager checkpoint per iteration truncates the lineage
+    to ~N·1e6. One staged rank frame per iteration truncates the lineage
     (the connected_components pattern); per-iteration cost is one
     src-keyed join + one dst-keyed aggregation, both bounded by |E|.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
+    e = stage(edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")))
+    nodes = stage(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    base = nodes.join(deg, nodes["node"] == deg["src"], "left").select(
+    base = stage(nodes.join(deg, nodes["node"] == deg["src"], "left").select(
         "node", F.coalesce(F.col("out_deg"), F.lit(0)).alias("out_deg")
-    ).localCheckpoint(eager=True)
+    ))
     teleport = int(round((1.0 - damping) * _MICRO))
     # the rank frame carries out_deg forward so each iteration is ONE
     # src-keyed join + ONE dst-keyed agg (no per-iteration degree lookup)
@@ -74,7 +73,7 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("in_sum"))
         )
-        ranks = (
+        ranks = stage(
             base.join(contrib, "node", "left")
             .select(
                 "node",
@@ -87,11 +86,6 @@ def pagerank(
                     ).cast("bigint")
                 ).alias("r"),
             )
-            # lazy: each rank frame has exactly ONE consumer (the next
-            # iteration's join), so the checkpoint can materialize
-            # inside that consumer's job instead of paying a blocking
-            # driver round-trip per iteration (the hits r9 lesson)
-            .localCheckpoint(eager=False)
         )
     return ranks.select("node", F.col("r").alias("rank_micro"))
 
@@ -165,20 +159,18 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     (v, w)-keyed closing join against the oriented edge list.
     """
     a, b = F.col(src_col), F.col(dst_col)
-    und = (
+    und = stage(
         edges.where(a != b)
         .select(
             F.least(a, b).alias("__a"), F.greatest(a, b).alias("__b")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    deg = (
+    deg = stage(
         und.select(F.col("__a").alias("__v"))
         .unionAll(und.select(F.col("__b").alias("__v")))
         .groupBy("__v")
         .agg(F.count(F.lit(1)).alias("__d"))
-        .localCheckpoint(eager=False)
     )
     withdeg = (
         und.join(deg.withColumnRenamed("__v", "__a").withColumnRenamed("__d", "__da"), "__a")
@@ -187,11 +179,11 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     lower_first = (F.col("__da") < F.col("__db")) | (
         (F.col("__da") == F.col("__db")) & (F.col("__a") < F.col("__b"))
     )
-    oriented = withdeg.select(
+    oriented = stage(withdeg.select(
         F.when(lower_first, F.col("__a")).otherwise(F.col("__b")).alias("u"),
         F.when(lower_first, F.col("__b")).otherwise(F.col("__a")).alias("v"),
         F.when(lower_first, F.col("__db")).otherwise(F.col("__da")).alias("dv"),
-    ).localCheckpoint(eager=False)
+    ))
     e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
     e2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
     wedges = e1.join(e2, "u").where(
@@ -304,15 +296,15 @@ def degree_assortativity(
     # self-join) and the degree table: und feeds both union branches of
     # sym, and deg feeds three consumers (two joins + the node census) —
     # the triangle_count discipline applied here
-    und = edges.select(
+    und = stage(edges.select(
         F.col(src_col).alias("__a"), F.col(dst_col).alias("__b")
-    ).localCheckpoint(eager=False)
+    ))
     sym = und.unionByName(
         und.select(F.col("__b").alias("__a"), F.col("__a").alias("__b"))
     )
-    deg = sym.groupBy(F.col("__a").alias("__v")).agg(
+    deg = stage(sym.groupBy(F.col("__a").alias("__v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__d")
-    ).localCheckpoint(eager=False)
+    ))
     j = (
         sym.join(deg.withColumnRenamed("__v", "__a"), "__a")
         .withColumnRenamed("__d", "__dj")
@@ -426,20 +418,19 @@ def k_core(
 
     Scale design: each round is one degree aggregation (shuffle
     bounded by surviving edges) + two semi-joins; lineage is cut per
-    round with an eager localCheckpoint, the q117 PageRank iteration
+    round by staging the edge frame, the q117 PageRank iteration
     discipline. No driver collect; the peel chain depth, not edge
     count, bounds the round cost.
 
     Returns one row ``(k, n_core_vertices, n_core_edges)``.
     """
     a, b = F.col(src_col), F.col(dst_col)
-    e = (
+    e = stage(
         edges.where(a != b)
         .select(
             F.least(a, b).alias("__u"), F.greatest(a, b).alias("__v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         deg = (
@@ -448,16 +439,11 @@ def k_core(
             .groupBy("__x")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        # keep feeds BOTH semi-joins; without its own checkpoint each
-        # broadcast build re-runs the degree agg, doubling every round
-        # (the wave-1 duplicate-subtree class). Lazy: it materializes
-        # inside the first build's job.
-        keep = (
-            deg.where(F.col("__c") >= k)
-            .select("__x")
-            .localCheckpoint(eager=False)
-        )
-        e = (
+        # keep feeds BOTH semi-joins; unstaged, each broadcast build
+        # re-runs the degree agg, doubling every round (the wave-1
+        # duplicate-subtree class)
+        keep = stage(deg.where(F.col("__c") >= k).select("__x"))
+        e = stage(
             e.join(
                 keep.withColumnRenamed("__x", "__u"), "__u", "left_semi"
             )
@@ -465,7 +451,6 @@ def k_core(
                 keep.withColumnRenamed("__x", "__v"), "__v", "left_semi"
             )
             .select("__u", "__v")
-            .localCheckpoint(eager=True)
         )
     verts = (
         e.select(F.col("__u").alias("__x"))
@@ -553,8 +538,8 @@ def label_propagation(
     vertex-keyed, adjacency is edge-keyed — shuffle bounded by 2|E|)
     + one (vertex, label) count + one per-vertex arg-max window whose
     partition is a vertex's neighbor-label set (bounded by max
-    degree, not |V|); lineage cut per round with an eager
-    localCheckpoint (q117 discipline). No driver collect.
+    degree, not |V|); lineage cut per round by staging the label
+    frame (q117 discipline). No driver collect.
     """
     from pyspark.sql import Window
 
@@ -566,14 +551,13 @@ def label_propagation(
         )
         .distinct()
     )
-    adj = (
+    adj = stage(
         e.select(F.col("__u").alias("__x"), F.col("__v").alias("__y"))
         .unionAll(
             e.select(
                 F.col("__v").alias("__x"), F.col("__u").alias("__y")
             )
         )
-        .localCheckpoint(eager=True)
     )
     labels = adj.select("__x").distinct().select(
         "__x", F.col("__x").cast("bigint").alias("__lab")
@@ -592,14 +576,10 @@ def label_propagation(
             .groupBy("__x", "__lab")
             .agg(F.count(F.lit(1)).alias("__cnt"))
         )
-        labels = (
+        labels = stage(
             votes.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .select("__x", "__lab")
-            # lazy: each round's frame is consumed exactly once (the
-            # next round's join), so the checkpoint materializes inside
-            # that job instead of paying a blocking job per round
-            .localCheckpoint(eager=False)
         )
     return (
         labels.groupBy(F.col("__lab").alias("community"))
@@ -692,25 +672,24 @@ def adamic_adar(
     Returns ``(x, y, common_neighbors, score)``.
     """
     a, b = F.col(src_col), F.col(dst_col)
-    und = (
+    und = stage(
         edges.where(a != b)
         .select(
             F.least(a, b).alias("__a"), F.greatest(a, b).alias("__b")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     nbrs = und.select(
         F.col("__a").alias("__z"), F.col("__b").alias("__n")
     ).unionAll(
         und.select(F.col("__b").alias("__z"), F.col("__a").alias("__n"))
     )
-    deg = nbrs.groupBy("__z").agg(
+    deg = stage(nbrs.groupBy("__z").agg(
         F.count(F.lit(1)).alias("__d")
-    ).localCheckpoint(eager=False)
+    ))
     # the wedge-input frame feeds BOTH sides of the apex self-join —
     # checkpoint it so the nbrs x deg join runs once, not twice
-    apex = (
+    apex = stage(
         nbrs.join(
             deg.where(
                 (F.col("__d") >= 2)
@@ -727,7 +706,6 @@ def adamic_adar(
                 0,
             ).cast("bigint").alias("__t"),
         )
-        .localCheckpoint(eager=False)
     )
     left = apex.select("__z", F.col("__n").alias("__x"), "__t")
     right = apex.select("__z", F.col("__n").alias("__y"))
@@ -821,22 +799,16 @@ def hits(
     positive rescale leaves the fixed point's direction unchanged) as
     one broadcast scalar: ``round(raw * 1e6 / max_raw)`` — a single
     IEEE multiply+divide+round per node, the q117 exact-replay recipe,
-    so the DuckDB twin reproduces every score bit-for-bit. LAZY
-    (eager=False) localCheckpoints per half-iteration truncate lineage
-    without a blocking job each — the checkpoint materializes inside
-    the next half-iteration's job (r9 self-advice follow-up: measured
-    14.3 -> 13.0 s best-of-3 on the q287 frame at sf0.1 vs eager).
+    so the DuckDB twin reproduces every score bit-for-bit. One staged
+    raw frame per half-iteration truncates lineage.
 
     Returns ``(node, hub_micro, auth_micro)`` for every node.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
+    e = stage(edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")))
+    nodes = stage(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     h = nodes.select("node", F.lit(_MICRO).cast("bigint").alias("h"))
     a = nodes.select("node", F.lit(0).cast("bigint").alias("a"))
@@ -846,13 +818,12 @@ def hits(
         # subtree re-executes the edge join + agg, doubling every half-
         # iteration (measured r12: 21.7 -> 9.6 s median at sf0.1). The
         # checkpointed frame is node-sized, never |E|.
-        a_raw = (
+        a_raw = stage(
             e.join(
                 h.select(F.col("node").alias("src"), "h"), "src"
             )
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("raw"))
-            .localCheckpoint(eager=False)
         )
         amax = a_raw.agg(F.max("raw").alias("mx"))
         a = (
@@ -878,13 +849,12 @@ def hits(
             # half-iteration (12 over the run); the expensive part
             # stays behind a_raw's checkpoint either way.
         )
-        h_raw = (
+        h_raw = stage(
             e.join(
                 a.select(F.col("node").alias("dst"), "a"), "dst"
             )
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("raw"))
-            .localCheckpoint(eager=False)
         )
         hmax = h_raw.agg(F.max("raw").alias("mx"))
         h = (

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..staging import stage
+
 
 def association_rules(
     df: DataFrame,
@@ -64,11 +66,10 @@ def association_rules(
         .distinct()
     )
     wb = Window.partitionBy("__b")
-    capped = (
+    capped = stage(
         items.withColumn("__sz", F.count(F.lit(1)).over(wb))
         .where(F.col("__sz") <= max_basket_size)
         .drop("__sz")
-        .localCheckpoint(eager=False)
     )
     n_baskets = capped.agg(
         F.countDistinct("__b").alias("n_baskets")
@@ -735,14 +736,14 @@ def markov_entropy_rate(
     """
     from ._collect import bounded_collect
 
-    trans = event_transitions(
+    trans = stage(event_transitions(
         df, entity_col, ts_col, state_col, order_col
     ).select(
         F.col("prev_state").alias("__s"),
         F.col("next_state").alias("__t"),
         F.col("n_transitions").cast("bigint").alias("__c"),
         F.col("n_from").cast("bigint").alias("__r"),
-    ).localCheckpoint(eager=True)
+    ))
     _CELL_CAP = 65_536
     cells = bounded_collect(trans.limit(_CELL_CAP + 1))
     pi = None
@@ -793,7 +794,7 @@ def markov_entropy_rate(
             # total's broadcast and the next pi — unmaterialized, the
             # broadcast subtree re-executed the join+agg, doubling
             # every iteration).
-            contrib = (
+            contrib = stage(
                 trans.join(pi.withColumnRenamed("__st", "__s"), "__s")
                 .join(
                     pi.select(F.col("__st").alias("__t")).distinct(),
@@ -806,7 +807,6 @@ def markov_entropy_rate(
                 )
                 .groupBy("__t")
                 .agg(F.sum("__x").cast("bigint").alias("__p1"))
-                .localCheckpoint(eager=False)
             )
             tot = contrib.agg(
                 F.sum("__p1").cast("bigint").alias("__tot")

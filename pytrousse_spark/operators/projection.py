@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import lit_doubles
+from ..staging import stage
 
 
 def _sign(salt: str, j: int, i: int) -> int:
@@ -165,7 +166,7 @@ def pca2(
         (ux0 < 0) | ((ux0 == 0) & (uy0 < 0)), F.lit(-1.0)
     ).otherwise(F.lit(1.0))
     # one row; checkpoint so the moment scan cannot re-run per consumer
-    stats = m.select(
+    stats = stage(m.select(
         "__n",
         (mx).alias("__mx"),
         (my).alias("__my"),
@@ -173,7 +174,7 @@ def pca2(
         (uy0 * flip).alias("__uy"),
         F.when(vx + vy > 0, l1 / (vx + vy)).alias("__evr"),
         F.when(l1 > 0, F.sqrt(l1)).alias("__sd1"),
-    ).localCheckpoint(eager=False)
+    ))
     scored = q.crossJoin(F.broadcast(stats)).select(
         F.when(
             F.col("__sd1").isNull(), F.lit(0)

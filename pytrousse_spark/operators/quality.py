@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..staging import stage
+
 
 def expect(
     df: DataFrame,
@@ -55,7 +57,7 @@ def expect(
         )
     # ONE row; checkpointed because every unpivot arm below consumes it —
     # without the barrier each rule re-runs the whole aggregation scan
-    one = df.agg(*aggs).localCheckpoint(eager=False)
+    one = stage(df.agg(*aggs))
     pieces = []
     for i, name in enumerate(rules):
         pieces.append(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..staging import stage
+
 
 def range_join(
     left: DataFrame,
@@ -48,14 +50,11 @@ def range_join(
         # row id so unmatched points re-attach exactly once per input row even
         # when the left side holds duplicate rows (a whole-row exceptAll would
         # be wrong on multiplicity and shuffles the full row width).
-        # localCheckpoint pins the ids: the joined and anti-join branches both
-        # re-read the checkpointed partitions instead of recomputing the left
+        # Staging pins the ids: the joined and anti-join branches both
+        # re-read the staged partitions instead of recomputing the left
         # plan, so a nondeterministic upstream (sample(), nondeterministic
         # UDF, AQE repartition) cannot hand the two branches different ids.
-        # Lazy (eager=False) so no extra job runs before the first action.
-        l_src = left.withColumn(
-            "__lid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        l_src = stage(left.withColumn("__lid", F.monotonically_increasing_id()))
     l_b = l_src.withColumn("__bucket", F.floor(F.col(point_col) / w).cast("long"))
     n_buckets = (
         F.floor(F.col(hi_col) / w) - F.floor(F.col(lo_col) / w) + 1
@@ -150,10 +149,8 @@ def interval_join(
     l_src = left
     if how == "left":
         # see range_join: row id so unmatched rows re-attach exactly once;
-        # localCheckpoint pins the ids across the joined/anti-join branches.
-        l_src = left.withColumn(
-            "__lid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        # staging pins the ids across the joined/anti-join branches.
+        l_src = stage(left.withColumn("__lid", F.monotonically_increasing_id()))
     l_narrow, l_wide, l_expl = bucketize(l_src, left_lo, left_hi)
     r_narrow, r_wide, r_expl = bucketize(right, right_lo, right_hi)
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
+from ..staging import stage
 
 from pytrousse_spark.functions.sqlutil import sql_quote
 
@@ -947,18 +948,17 @@ def rake_weights(
 
     Scale: two group-by aggs build the cell grid and the margin
     targets (rows x cols cells — a CATEGORY grid, never data-sized);
-    the sweeps iterate windows over that broadcast-small grid with a
-    per-sweep localCheckpoint.
+    the sweeps iterate windows over that broadcast-small grid, staging
+    the grid once per sweep.
     """
     from pyspark.sql import Window
 
-    cells = (
+    cells = stage(
         sample.groupBy(
             F.col(row_col).alias("__r"), F.col(col_col).alias("__c")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
         .withColumn("__w", F.lit(1_000_000).cast("bigint"))
-        .localCheckpoint(eager=True)
     )
     rowm = population.groupBy(F.col(row_col).alias("__r")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__nr")
@@ -991,7 +991,7 @@ def rake_weights(
                 .alias("__w"),
             )
         )
-        cells = (
+        cells = stage(
             cells.join(F.broadcast(colm), "__c")
             .withColumn(
                 "__t",
@@ -1012,7 +1012,6 @@ def rake_weights(
                 .cast("bigint")
                 .alias("__w"),
             )
-            .localCheckpoint(eager=True)
         )
     r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return cells.select(
@@ -1133,13 +1132,13 @@ def group_jackknife(
     # the G-row frame feeds FOUR chained broadcast-scalar subtrees (tot,
     # mean_loo, var, final) — without a checkpoint each broadcast
     # re-executes the full data-sized agg (measured r12: 16 source scans
-    # in the q283 plan, the staged quality_score expression 16x). Lazy
-    # localCheckpoint makes the data pass a one-scan guarantee; the
-    # checkpointed frame is G rows, never the raw data.
-    per_g = staged.groupBy("grp").agg(
+    # in the q283 plan, the staged quality_score expression 16x).
+    # Staging makes the data pass a one-scan guarantee; the staged
+    # frame is G rows, never the raw data.
+    per_g = stage(staged.groupBy("grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum("__vm").cast("bigint").alias("__s"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = per_g.agg(
         F.sum("__n").cast("bigint").alias("__nt"),
         F.sum("__s").cast("bigint").alias("__st"),

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_sql, lit_double_matrix, lit_doubles
+from ..staging import stage
 
 
 def _deterministic_planes(num_planes: int, dim: int, seed: int) -> list[list[float]]:
@@ -1019,23 +1020,21 @@ def item_item_cf(
     # self-join sides) and would re-run the caller's ratings build each
     # time; pairs feeds BOTH orientations of the union, which would
     # execute the per-user self-join + aggregation twice
-    ui = (
+    ui = stage(
         ratings.select(
             F.col(user_col).alias("__u"), F.col(item_col).alias("__i")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    ni = ui.groupBy("__i").agg(
+    ni = stage(ui.groupBy("__i").agg(
         F.count(F.lit(1)).alias("__n")
-    ).localCheckpoint(eager=False)
-    pairs = (
+    ))
+    pairs = stage(
         ui.join(ui.withColumnRenamed("__i", "__j"), "__u")
         .where(F.col("__i") < F.col("__j"))
         .groupBy("__i", "__j")
         .agg(F.count(F.lit(1)).alias("cooc"))
         .where(F.col("cooc") >= min_cooc)
-        .localCheckpoint(eager=False)
     )
     sym = pairs.unionByName(
         pairs.select(
@@ -1161,12 +1160,12 @@ def embedding_mmd_poly2(
             "__p",
             F.col("__x").cast("double").alias("__x"),
         )
-        firsts = ex.groupBy("__p").agg(
+        firsts = stage(ex.groupBy("__p").agg(
             F.sum(
                 F.round(F.col("__x") * F.lit(1e6), 0).cast("bigint")
             ).cast("bigint").alias(f"__s_{tag}"),
             F.count(F.lit(1)).cast("bigint").alias(f"__n_{tag}"),
-        ).localCheckpoint(eager=False)
+        ))
         # second moments WITHOUT the (id-keyed self-join -> n*d-row
         # shuffle -> n*d^2 join output -> second shuffle) the r12 plan
         # audit measured: the outer product is ROW-LOCAL, so a chain of
@@ -1200,10 +1199,9 @@ def embedding_mmd_poly2(
                 .alias("__xy"),
             )
         )
-        seconds = (
+        seconds = stage(
             cells.groupBy("__p", "__q")
             .agg(F.sum("__xy").cast("decimal(38,0)").alias(f"__m_{tag}"))
-            .localCheckpoint(eager=False)
         )
         return firsts, seconds
 

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.hashing import hash_expr
 from ..functions.rounding import round_half_away
+from ..staging import stage
 
 
 def _cell_cols(col: Column, w: int, d: int, hash_fn: str) -> Column:
@@ -116,7 +117,7 @@ def hll_registers(
     """
     w = 60 - p  # suffix width under the 60-bit portable hash
     h = hash_expr(F.col(col), "hll", hash_fn)
-    stage = df.where(F.col(col).isNotNull()).select(
+    keyed = df.where(F.col(col).isNotNull()).select(
         F.pmod(h, F.lit(1 << p)).alias("bucket"),
         F.shiftright(h, p).bitwiseAND(F.lit((1 << w) - 1)).alias("__rest"),
     )
@@ -128,7 +129,7 @@ def hll_registers(
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("c"))
     return (
-        stage.withColumn("r", (F.lit(w) - nbits) + 1)
+        keyed.withColumn("r", (F.lit(w) - nbits) + 1)
         .groupBy("bucket")
         .agg(*aggs)
     )
@@ -217,7 +218,7 @@ def hll_registers_grouped(
     """
     w = 60 - p
     h = hash_expr(F.col(col), "hll", hash_fn)
-    stage = df.where(F.col(col).isNotNull()).select(
+    keyed = df.where(F.col(col).isNotNull()).select(
         F.col(group_col).alias("grp"),
         F.pmod(h, F.lit(1 << p)).alias("bucket"),
         F.shiftright(h, p).bitwiseAND(F.lit((1 << w) - 1)).alias("__rest"),
@@ -227,7 +228,7 @@ def hll_registers_grouped(
         t = (F.col("__rest") >= F.lit(1 << i)).cast("int")
         nbits = t if nbits is None else nbits + t
     return (
-        stage.withColumn("r", (F.lit(w) - nbits) + 1)
+        keyed.withColumn("r", (F.lit(w) - nbits) + 1)
         .groupBy("grp", "bucket")
         .agg(F.max("r").alias("r"))
     )
@@ -728,11 +729,10 @@ def count_min_self_join_size(
     # a cell's count is the sum of its keys' row counts (integer sums
     # commute, bit-identical to hashing every raw row), so the d hash
     # evaluations run once per DISTINCT key instead of once per row
-    keyed = (
+    keyed = stage(
         df.where(F.col(col).isNotNull())
         .groupBy(col)
         .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)
     )
     cm = (
         keyed.select(
@@ -811,15 +811,13 @@ def hll_set_ops(
     # the union sketch and the labeled frame, and the dense grid below
     # has two consumers — without the barriers every consumer re-scans
     # and re-tokenizes the source (12 parquet scans measured; 2 after)
-    ra = (
+    ra = stage(
         hll_registers(df_a, col, p=p, hash_fn=hash_fn)
         .select(F.lit("a").alias("lbl"), "bucket", "r")
-        .localCheckpoint(eager=False)
     )
-    rb = (
+    rb = stage(
         hll_registers(df_b, col, p=p, hash_fn=hash_fn)
         .select(F.lit("b").alias("lbl"), "bucket", "r")
-        .localCheckpoint(eager=False)
     )
     ru = (
         ra.unionByName(rb)
@@ -836,12 +834,11 @@ def hll_set_ops(
             F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("bucket"),
         )
     )
-    dense = (
+    dense = stage(
         grid.join(regs, ["lbl", "bucket"], "left")
         .select(
             "lbl", "bucket", F.coalesce(F.col("r"), F.lit(0)).alias("r")
         )
-        .localCheckpoint(eager=False)
     )
     heads = dense.groupBy("lbl").agg(
         F.max("r").alias("__max_r"),

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..staging import stage
+
 
 def kaplan_meier(
     df: DataFrame,
@@ -292,10 +294,10 @@ def logrank_test(
     nn = df.where(d.isNotNull() & e.isNotNull() & g.isNotNull())
     # duration-level-bounded; feeds groups, times AND the grid join —
     # checkpoint so the raw subject reduction runs once, not 3x
-    lvl = nn.groupBy(g.alias("__g"), d.cast("double").alias("t")).agg(
+    lvl = stage(nn.groupBy(g.alias("__g"), d.cast("double").alias("t")).agg(
         F.sum(e.cast("int")).cast("bigint").alias("__d"),
         F.count(F.lit(1)).cast("bigint").alias("__all"),
-    ).localCheckpoint(eager=False)
+    ))
     groups = lvl.select("__g").distinct()
     times = lvl.select("t").distinct()
     grid = times.crossJoin(groups)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..staging import stage
+
 # fixed-length units where "N <unit>" flooring is well defined in epoch
 # seconds; month/year buckets are calendar-shaped and only support N == 1
 _UNIT_SECONDS = {
@@ -1202,7 +1204,7 @@ def _daily_cents(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     convention): one date-keyed map-side-combinable agg over the raw
     table, densified with 0 for missing days, global day index ``__i``
     (1-based) from the bounded spine window."""
-    daily = (
+    daily = stage(
         df.select(
             F.to_date(F.col(ts_col)).alias("__d"),
             F.round(F.col(value_col).cast("double") * 100, 0)
@@ -1214,7 +1216,6 @@ def _daily_cents(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
         .agg(F.sum("__c").alias("__c"))
         # days-bounded; feeds the range scalar AND the spine join —
         # without this the raw-table agg runs twice per spine build
-        .localCheckpoint(eager=False)
     )
     rng = daily.agg(
         F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
@@ -1231,9 +1232,9 @@ def _daily_cents(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     # every spine operator consumes the indexed frame several times
     # (pair sides, residual passes, tie folds) — checkpoint once here
     # so each caller pays exactly ONE raw-table aggregation
-    return dense.select(
+    return stage(dense.select(
         "__d", "__c", F.row_number().over(w).alias("__i")
-    ).localCheckpoint(eager=False)
+    ))
 
 
 _DAILY_CENTS_SQL = """
@@ -1663,9 +1664,9 @@ def mann_kendall(
     b = dense.select(
         F.col("__i").alias("__ib"), F.col("__c").alias("__cb")
     )
-    pairs = a.join(
+    pairs = stage(a.join(
         F.broadcast(b), F.col("__ib") > F.col("__ia"), "inner"
-    ).localCheckpoint(eager=False)
+    ))
     s_and_n = pairs.agg(
         F.sum(F.signum(F.col("__cb") - F.col("__ca")))
         .cast("bigint")
@@ -1886,9 +1887,9 @@ def cross_correlation(
     )
     # days x 2 rows; feeds the range scalar AND both pivot joins —
     # checkpoint so the raw agg runs once per call
-    daily = typed.groupBy("__d", "__t").agg(
+    daily = stage(typed.groupBy("__d", "__t").agg(
         F.sum("__c").alias("__c")
-    ).localCheckpoint(eager=False)
+    ))
     rng = daily.agg(
         F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
     )
@@ -1897,7 +1898,7 @@ def cross_correlation(
             F.expr("sequence(__lo, __hi, interval 1 day)")
         ).alias("__d")
     )
-    piv = (
+    piv = stage(
         spine.join(
             daily.where(F.col("__t") == "x").select(
                 "__d", F.col("__c").alias("__x")
@@ -1926,7 +1927,6 @@ def cross_correlation(
         )
         # calendar-bounded; feeds the moment agg AND both lag-join
         # sides — checkpoint so the spine build runs once
-        .localCheckpoint(eager=False)
     )
     tot = piv.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
@@ -2767,7 +2767,7 @@ def granger_lead_lag(
             "__d"
         )
     )
-    piv = (
+    piv = stage(
         spine.join(
             daily.where(F.col("__t") == "x").select(
                 "__d", F.col("__c").alias("__x")
@@ -2794,7 +2794,6 @@ def granger_lead_lag(
             .alias("__y"),
         )
         # calendar-bounded; feeds the current AND lagged projections
-        .localCheckpoint(eager=False)
     )
     cur = piv.where(F.col("__i") >= 2).select(
         "__i", F.col("__y").alias("__yt")
@@ -3343,10 +3342,10 @@ def gesd_outliers(
     integer argmax ride full-frame windows over the CALENDAR-BOUNDED
     spine (the huber/q251 single-task-window device: rows = spine
     days, never events), the flagged day re-enters as a literal
-    anti-filter, and the remaining set is lazily localCheckpoint'ed
-    per round so the k-round plan stays linear (r12 optimization
-    round: the broadcast-stats form paid ~3 AQE-split jobs per round
-    for identical arithmetic). k is a constant.
+    anti-filter, and the remaining set is staged per round so the
+    k-round plan stays linear (r12 optimization round: the
+    broadcast-stats form paid ~3 AQE-split jobs per round for identical
+    arithmetic). k is a constant.
     """
     import math
 
@@ -3370,7 +3369,7 @@ def gesd_outliers(
     )
     flag_frames = []
     for r in range(1, k + 1):
-        remaining = remaining.localCheckpoint(eager=False)
+        remaining = stage(remaining)
         row = bounded_first(
             remaining.select(
                 "__d",
@@ -3566,10 +3565,10 @@ def theil_sen_trend(
 
     # one row; feeds the residual pass AND the output — checkpoint so
     # the pair join + median sort run once, not twice
-    med_s = _median(pairs, "__s").select(
+    med_s = stage(_median(pairs, "__s").select(
         F.col("__med").alias("__slope"),
         F.col("__n").alias("__npairs"),
-    ).localCheckpoint(eager=False)
+    ))
     resid = dense.crossJoin(F.broadcast(med_s)).select(
         "__slope",
         "__npairs",
@@ -3890,9 +3889,9 @@ def distance_correlation(
     )
     # days x 2 rows; feeds the range scalar AND both pivot joins —
     # checkpoint so the raw agg runs once per call
-    daily = typed.groupBy("__d", "__t").agg(
+    daily = stage(typed.groupBy("__d", "__t").agg(
         F.sum("__c").alias("__c")
-    ).localCheckpoint(eager=False)
+    ))
     rng = daily.agg(
         F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
     )
@@ -3902,7 +3901,7 @@ def distance_correlation(
         ).alias("__d")
     )
     d38 = "decimal(38,0)"
-    piv = (
+    piv = stage(
         spine.join(
             daily.where(F.col("__t") == "x").select(
                 "__d", F.col("__c").alias("__x")
@@ -3925,7 +3924,6 @@ def distance_correlation(
             F.coalesce(F.col("__x"), F.lit(0)).cast(d38).alias("__x"),
             F.coalesce(F.col("__y"), F.lit(0)).cast(d38).alias("__y"),
         )
-        .localCheckpoint(eager=True)
     )
     guard = piv.agg(
         F.count(F.lit(1)).alias("__n"),
@@ -4220,9 +4218,9 @@ def huber_trend(
     from ._collect import bounded_first
 
     d38 = "decimal(38,0)"
-    dense = _daily_cents(df, ts_col, value_col).select(
+    dense = stage(_daily_cents(df, ts_col, value_col).select(
         "__i", "__c"
-    ).localCheckpoint(eager=False)
+    ))
 
     def folds(weighted: DataFrame) -> DataFrame:
         wm = F.col("__wm").cast(d38)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..dataset import Dataset
 from .base import FeatureOperation
+from ..staging import stage
 
 #: Collect-guard: encoders refuse to materialize vocabularies larger than
 #: this (the reference would happily OOM; at 100 TB a guard is mandatory).
@@ -332,11 +333,11 @@ def percent_rank_transform_approx(
     # groups-bounded; feeds the binned broadcast on BOTH executions of
     # binned (histogram build + final probe side) — checkpoint so the
     # stats scan runs once instead of once per consumer
-    stats = nn.groupBy(F.col(group_col).alias("__g")).agg(
+    stats = stage(nn.groupBy(F.col(group_col).alias("__g")).agg(
         F.min(value_col).cast("double").alias("__lo"),
         F.max(value_col).cast("double").alias("__hi"),
         F.count(F.lit(1)).alias("__n"),
-    ).localCheckpoint(eager=False)
+    ))
     span = F.col("__hi") - F.col("__lo")
     pos = (v.cast("double") - F.col("__lo")) / span * num_bins
     binned = nn.join(
@@ -485,11 +486,11 @@ def quantile_normalize(
     nn = df.where(v.isNotNull())
     # one row; feeds gbinned, the cdf-bucket expansion AND the final
     # projection — checkpoint so its scan runs once
-    gstats = nn.agg(
+    gstats = stage(nn.agg(
         F.min(value_col).cast("double").alias("__glo"),
         F.max(value_col).cast("double").alias("__ghi"),
         F.count(F.lit(1)).cast("bigint").alias("__gn"),
-    ).localCheckpoint(eager=False)
+    ))
     span = F.col("__ghi") - F.col("__glo")
     gpos = (v.cast("double") - F.col("__glo")) / span * value_bins
     gbinned = nn.crossJoin(F.broadcast(gstats)).select(
@@ -500,7 +501,7 @@ def quantile_normalize(
         .alias("__gb")
     )
     wb = Window.orderBy("__gb").rowsBetween(Window.unboundedPreceding, -1)
-    gcdf = (
+    gcdf = stage(
         gbinned.groupBy("__gb")
         .agg(F.count(F.lit(1)).alias("__gc"))
         .select(
@@ -509,7 +510,6 @@ def quantile_normalize(
             (F.coalesce(F.sum("__gc").over(wb), F.lit(0)) + F.col("__gc"))
             .alias("__cum_hi"),
         )
-        .localCheckpoint(eager=False)
     )
     m = F.col("__qr") * F.col("__gn")
     # mass-range lookup as a broadcast HASH join, not a nested loop: key

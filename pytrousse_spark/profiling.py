@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .staging import stage
+
 #: reference settings.py:9 — categorical when nunique < 7 or
 #: nunique < notna_count // CATEG_COL_THRESHOLD.
 CATEG_COL_THRESHOLD = 300
@@ -408,8 +410,8 @@ def correlation_matrix(df, cols: list[str]) -> "DataFrame":
     # one-pass guarantee: the K(K-1)/2 union arms below each reference this
     # single-row aggregate; without a barrier, each arm can re-run the whole
     # scan when exchange reuse doesn't kick in (same shape as quality.expect
-    # — lazy localCheckpoint pins the aggregate to ONE execution)
-    one = df.agg(*aggs).localCheckpoint(eager=False)
+    # — staging pins the aggregate to ONE execution)
+    one = stage(df.agg(*aggs))
     pieces = []
     for i, a in enumerate(cols):
         for b in cols[i + 1 :]:
@@ -537,14 +539,14 @@ def psi_drift(
     # both consume it — without the barrier each consumer re-melts and
     # re-bins both tables (8 scans measured; 4 after, the min/max pass
     # and the binning pass per side, which are inherently two passes)
-    counts = binned.groupBy("feature", "__bin").agg(
+    counts = stage(binned.groupBy("feature", "__bin").agg(
         F.sum(F.when(F.col("__side") == "ref", 1).otherwise(0))
         .cast("bigint")
         .alias("__cr"),
         F.sum(F.when(F.col("__side") == "cur", 1).otherwise(0))
         .cast("bigint")
         .alias("__cc"),
-    ).localCheckpoint(eager=False)
+    ))
     totals = counts.groupBy("feature").agg(
         F.sum("__cr").alias("__nr"), F.sum("__cc").alias("__nc")
     )
@@ -656,11 +658,10 @@ def contingency_chi2(df: "DataFrame", col_a: str, col_b: str) -> "DataFrame":
     """
     from pyspark.sql import functions as F
 
-    cells = (
+    cells = stage(
         df.where(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(F.col(col_a).alias("__a"), F.col(col_b).alias("__b"))
         .agg(F.count(F.lit(1)).alias("__o"))
-        .localCheckpoint(eager=False)
     )
     ra = cells.groupBy("__a").agg(F.sum("__o").alias("__ra"))
     cb = cells.groupBy("__b").agg(F.sum("__o").alias("__cb"))
@@ -1261,12 +1262,12 @@ def ks_two_sample(
     m = a.unionByName(b)
     # one row; feeds the binning pass, the cumulative join AND the
     # final D fold — checkpoint so its scan runs once
-    stats = m.agg(
+    stats = stage(m.agg(
         F.min("__v").alias("__lo"),
         F.max("__v").alias("__hi"),
         F.sum("__a").cast("bigint").alias("__na"),
         F.sum("__b").cast("bigint").alias("__nb"),
-    ).localCheckpoint(eager=False)
+    ))
     width_ok = F.col("__hi") > F.col("__lo")
     binned = m.crossJoin(F.broadcast(stats)).select(
         "__v",
@@ -1288,10 +1289,10 @@ def ks_two_sample(
     # value-level bounded (the decomposition's own working set); feeds
     # the bucket offsets AND the in-bucket cumulative — checkpoint so
     # the raw union + binning runs once, not twice
-    counts = binned.groupBy("__bk", "__v").agg(
+    counts = stage(binned.groupBy("__bk", "__v").agg(
         F.sum("__a").cast("bigint").alias("__ca"),
         F.sum("__b").cast("bigint").alias("__cb"),
-    ).localCheckpoint(eager=False)
+    ))
     # bucket-level exclusive prefix over the bounded grid (<= B rows)
     wb = (
         Window.orderBy("__bk")
@@ -1396,8 +1397,8 @@ def cramer_von_mises(
     Values quantize to integer CENTS (the mann_whitney/level-frame
     convention), cumulatives come from the bounded prefix hierarchy
     (operators/_prefix.py — no data-sized sort at any cardinality; the
-    level frame is lazy-localCheckpointed ONCE and shared with the
-    totals agg). Exactness: cumulative counts are exact BIGINTs; the
+    level frame is staged ONCE and shared with the totals agg).
+    Exactness: cumulative counts are exact BIGINTs; the
     per-level term is ONE double expression over identical integers,
     rounded once to pico-units into a DECIMAL(38) order-free fold
     (the anova_oneway between-term convention).
@@ -1414,14 +1415,13 @@ def cramer_von_mises(
     b = df_b.where(F.col(value_col).isNotNull()).select(
         cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import exclusive_prefix_sums
 
@@ -1486,8 +1486,8 @@ def wasserstein_1d(
     with cumulatives from the bounded prefix hierarchy and the
     adjacency from :func:`operators._prefix.next_level` (hierarchical
     lead — every window partition bounded, no global sort). The level
-    frame is lazy-localCheckpointed once and shared by the lead, the
-    prefix sums, and the totals agg. The per-level term is ONE double
+    frame is staged once and shared by the lead, the prefix sums, and
+    the totals agg. The per-level term is ONE double
     expression rounded to micro-cent units into a DECIMAL(38)
     order-free fold; the result divides back to value units.
 
@@ -1501,14 +1501,13 @@ def wasserstein_1d(
     b = df_b.where(F.col(value_col).isNotNull()).select(
         cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import (
         exclusive_prefix_sums,
@@ -1663,14 +1662,13 @@ def wasserstein_1d_by_group(
             F.lit(1).alias("__b"),
         )
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__g", "__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import (
         exclusive_prefix_sums,
@@ -1763,14 +1761,13 @@ def kuiper_two_sample(
     b = df_b.where(F.col(value_col).isNotNull()).select(
         cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import exclusive_prefix_sums
 
@@ -1928,8 +1925,8 @@ def anderson_darling_2s(
     with D_l = 2*B_l = doubled mid-rank pooled cumulative and
     Q_l = N*(2*cum_a - c_a) - n_a*(2*cum_pooled - t), both single
     double expressions over identical exact integers in both engines
-    (cumulatives from the bounded prefix hierarchy, level frame
-    lazy-localCheckpointed once and shared with the totals agg); the
+    (cumulatives from the bounded prefix hierarchy, level frame staged
+    once and shared with the totals agg); the
     per-level term rounds once to pico-units into a DECIMAL(38)
     order-free fold. E[A2] = 1 under H0; calibration tables are
     external (Scholz-Stephens table 1).
@@ -1944,14 +1941,13 @@ def anderson_darling_2s(
     b = df_b.where(F.col(value_col).isNotNull()).select(
         cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import exclusive_prefix_sums
 
@@ -2140,14 +2136,13 @@ def drift_by_group(
             F.lit(1).alias("__b"),
         )
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__g", "__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import (
         exclusive_prefix_sums,
@@ -2421,14 +2416,13 @@ def energy_distance(
     b = df_b.where(F.col(value_col).isNotNull()).select(
         cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
     )
-    lv = (
+    lv = stage(
         a.unionByName(b)
         .groupBy("__y")
         .agg(
             F.sum("__a").cast("bigint").alias("__c1"),
             F.sum("__b").cast("bigint").alias("__c2"),
         )
-        .localCheckpoint(eager=False)
     )
     from .operators._prefix import (
         exclusive_prefix_sums,
@@ -2756,9 +2750,9 @@ def categorical_association(
     )
     # distinct-pair bounded; feeds both marginals, the total AND the
     # scoring join — checkpoint so the raw scan runs once, not 4x
-    joint = m.groupBy("__x", "__y").agg(
+    joint = stage(m.groupBy("__x", "__y").agg(
         F.count(F.lit(1)).cast("bigint").alias("__nxy")
-    ).localCheckpoint(eager=False)
+    ))
     # marginal keys renamed + eqNullSafe joins: NULL is a category, and
     # a plain equality join would silently drop the NULL class (the
     # r5-ADVICE bug family; oracle uses IS NOT DISTINCT FROM)
@@ -3323,13 +3317,12 @@ def kendall_tau_b(
     """
     from pytrousse_spark.operators.cohort import _phi_tail_sql
 
-    cells = (
+    cells = stage(
         df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
         .groupBy(
             F.col(x_col).alias("__x"), F.col(y_col).alias("__y")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
-        .localCheckpoint(eager=True)
     )
     a = cells.select(
         F.col("__x").alias("__xa"),
@@ -3522,10 +3515,10 @@ def spearman_approx(
     # pass's two broadcast subtrees into ~9 re-executions of the source
     # scan (r12 plan audit: 50 scans); checkpoint the staged projection
     # and the first pass's output so the fact scan runs once
-    base = base.localCheckpoint(eager=False)
-    rx = percent_rank_transform_approx(
+    base = stage(base)
+    rx = stage(percent_rank_transform_approx(
         base, "__grp", "__vx", out_col="__rx", num_bins=num_bins
-    ).localCheckpoint(eager=False)
+    ))
     rxy = percent_rank_transform_approx(
         rx, "__grp", "__vy", out_col="__ry", num_bins=num_bins
     )
@@ -3842,9 +3835,9 @@ def wasserstein1_binned(
     pooled = r.unionByName(c)
     # one row; feeds both histogram passes AND the grid — checkpoint
     # so the pooled two-table scan runs once, not 3x
-    stats = pooled.agg(
+    stats = stage(pooled.agg(
         F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
-    ).localCheckpoint(eager=False)
+    ))
     def hist(df, name):
         b = F.when(F.col("__hi") == F.col("__lo"), F.lit(0)).otherwise(
             F.least(

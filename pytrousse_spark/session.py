@@ -27,13 +27,17 @@ def get_spark(
     - Arrow on, so the few pandas-UDF escape hatches batch via Arrow.
     - Session timezone pinned to UTC so results are reproducible and match
       external oracles (DuckDB) regardless of host timezone.
-    - ``spark.cleaner.periodicGC.interval`` defaults to 2min, which forces
-      a periodic driver ``System.gc()``. That is the right trade for
-      many-query batch drivers (it drains dead localCheckpoint storage
-      blocks between queries — the r12 finding), but it DOES impose
-      periodic GC pauses; a latency-sensitive caller should set
-      ``SPARK_GRAFT_PERIODIC_GC=30min`` to restore Spark's default
-      (r12 ADVICE item 3).
+    - ``spark.cleaner.periodicGC.interval`` is 2min, which forces a
+      periodic driver ``System.gc()``. That is the right trade for
+      many-query batch drivers (it drains dead ``staging.stage`` blocks
+      between queries — the r12 finding), but it DOES impose periodic GC
+      pauses; a latency-sensitive caller can pass
+      ``extra_conf={"spark.cleaner.periodicGC.interval": "30min"}`` to
+      restore Spark's default.
+
+    Environment: ``SPARK_GRAFT_CPUS`` (local core count, default 32),
+    ``SPARK_GRAFT_DRIVER_MEM`` (default 8g) and ``SPARK_GRAFT_NO_MASTER``
+    (leave the master to ``spark-submit``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -62,31 +66,16 @@ def get_spark(
         # managed-table warehouse outside the repo (bucketed-table support)
         .config("spark.sql.warehouse.dir", "/tmp/pytrousse_warehouse")
         # Long-lived sessions (the bench runs ~330 queries in one JVM)
-        # accumulate storage blocks from materialized localCheckpoints:
-        # the ContextCleaner only unpersists them after a JVM GC proves
-        # the RDDs unreachable, and the default periodic-GC interval
-        # (30min) exceeds the whole session, so blocks pile up and
-        # squeeze execution memory. A shorter interval lets the cleaner
-        # drain between queries; scale-neutral (production drivers with
-        # many-query sessions want exactly this) and env-overridable.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        # accumulate storage blocks from staged frames: the
+        # ContextCleaner only unpersists them after a JVM GC proves the
+        # RDDs unreachable, and the default periodic-GC interval (30min)
+        # exceeds the whole session, so blocks pile up and squeeze
+        # execution memory. A shorter interval lets the cleaner drain
+        # between queries; scale-neutral (production drivers with
+        # many-query sessions want exactly this).
+        .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
     )
-    # Streaming state-store partition count, decoupled from the batch
-    # shuffle parallelism when set (state partitions are pinned in the
-    # checkpoint for a stream's lifetime, so they should be sized to
-    # state volume/throughput, not to the session's core count —
-    # measured r13: the tiny-state alert stream pays ~2x overhead at 32
-    # state partitions vs 8 on local hosts). Default unchanged
-    # (= shuffle partitions) so benches stay comparable.
-    ssp = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if ssp:
-        builder = builder.config(
-            "spark.sql.streaming.internal.stateStore.partitions", ssp
-        )
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_GRAFT_NO_MASTER"):

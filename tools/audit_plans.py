@@ -5,6 +5,13 @@ loops, global Sorts, and Python-eval nodes. Build-only: queries that
 execute jobs at plan-build time still run them, so the audit doubles as
 a smoke test. Prints one JSON line per query plus a flagged summary.
 
+Counts come from :func:`plan_counts`, which reads only the numbered
+operator trees (the formatted plan prints every node twice: once in the
+tree, once in the details) and leaves out the subtree under each
+``InMemoryRelation`` (a cached plan, run once per cache fill rather than
+per read; its reads are counted as ``scan_cached``) and each AQE
+``== Initial Plan ==`` (a superseded copy of the final plan).
+
 Usage: python tools/audit_plans.py [out.json]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
@@ -14,18 +21,87 @@ from __future__ import annotations
 import io
 import json
 import os
+import re
 import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-from pytrousse_spark.session import get_spark  # noqa: E402
+# one operator line of a numbered tree: tree glyphs, an optional
+# whole-stage-codegen star, the operator text, then its "(id)"
+_NODE = re.compile(r"^[ :|+-]*(?:\* )?(?P<name>[A-Za-z][^()]*?)\s*\((?P<id>\d+)\)")
+_DETAIL = re.compile(r"^\((?P<id>\d+)\) (?P<name>\S+)")
+# a Sort's details end "Arguments: [order], <global>, <spill threshold>"
+_GLOBAL_SORT = re.compile(r"^Arguments: .*, true, \d+$")
 
-import __spark_entry__ as entrymod  # noqa: E402
+_COUNTS = {
+    "scan_parquet": lambda n: n.startswith("Scan parquet"),
+    "scan_rdd": lambda n: n.startswith("Scan ExistingRDD"),
+    "scan_cached": lambda n: n == "InMemoryTableScan",
+    "exchange": lambda n: n == "Exchange",
+    "bnlj": lambda n: n.startswith("BroadcastNestedLoopJoin"),
+    "pyeval": lambda n: n in ("BatchEvalPython", "ArrowEvalPython"),
+    "mapinpandas": lambda n: n == "MapInPandas",
+}
+
+
+def plan_counts(text: str) -> dict[str, int]:
+    """Count plan-shape signals in ``explain("formatted")`` output.
+
+    Reads the operator trees (the physical plan and each subquery's) and
+    counts each numbered node once. Skips the subtree below an
+    ``InMemoryRelation`` and below an AQE ``== Initial Plan ==`` marker.
+    ``global_sort`` counts tree Sorts whose details mark them global.
+    """
+    nodes: dict[int, str] = {}
+    global_sorts: set[int] = set()
+    in_tree = False
+    skip_col = None  # skip tree lines whose operator column is past this
+    detail_id = None
+    for line in text.splitlines():
+        if not line.strip():
+            in_tree, skip_col, detail_id = False, None, None
+            continue
+        if line == "== Physical Plan ==" or line.startswith("Subquery:"):
+            in_tree = True
+            continue
+        if not in_tree:
+            m = _DETAIL.match(line)
+            if m:
+                detail_id = int(m.group("id")) if m.group("name") == "Sort" else None
+            elif detail_id is not None and _GLOBAL_SORT.match(line):
+                global_sorts.add(detail_id)
+            continue
+        body = line.lstrip(" :|+-")
+        col = len(line) - len(body)
+        if skip_col is not None:
+            if col > skip_col:
+                continue
+            skip_col = None
+        if body.startswith("== Initial Plan =="):
+            skip_col = col - 1  # the initial plan's nodes sit at the marker's column
+            continue
+        m = _NODE.match(line)
+        if not m:
+            continue
+        name = m.group("name")
+        nodes[int(m.group("id"))] = name
+        if name == "InMemoryRelation":
+            skip_col = col
+    out = {k: sum(1 for n in nodes.values() if pred(n)) for k, pred in _COUNTS.items()}
+    out["global_sort"] = sum(
+        1 for i, n in nodes.items() if n == "Sort" and i in global_sorts
+    )
+    return out
 
 
 def main() -> None:
+    sys.path.insert(0, _ROOT)
+    from pytrousse_spark.session import get_spark
+
+    import __spark_entry__ as entrymod
+
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/plan_audit.json"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="pytrousse-plan-audit")
@@ -39,17 +115,8 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            p = buf.getvalue()
             rows[name] = {
-                "scan_parquet": p.count("Scan parquet"),
-                "scan_rdd": p.count("Scan ExistingRDD"),
-                "exchange": p.count("+- Exchange")
-                + p.count(":- Exchange"),
-                "bnlj": p.count("BroadcastNestedLoopJoin"),
-                "global_sort": p.count("Sort ["),
-                "pyeval": p.count("BatchEvalPython")
-                + p.count("ArrowEvalPython"),
-                "mapinpandas": p.count("MapInPandas"),
+                **plan_counts(buf.getvalue()),
                 "build_sec": round(time.perf_counter() - t0, 2),
             }
         except Exception as exc:  # noqa: BLE001

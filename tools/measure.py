@@ -9,10 +9,13 @@ Usage:
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Prints one line per query: name, per-rep walls, and per rep the split of
 each wall into ``build_s``/``build_jobs`` (the query function returning
-its DataFrame, including any jobs it runs on the way: eager checkpoints,
-bounded collects) and ``action_s``/``action_jobs`` (the noop write). Jobs
-are counted per phase through its own Spark job group. Warm-up: q04 noop
-once.
+its DataFrame, including any jobs it runs on the way: the map stages of
+staged frames, bounded collects) and ``action_s``/``action_jobs`` (the
+noop write). Jobs are counted per phase through its own Spark job group.
+Warm-up: q04 noop once. Before every rep, outside its timer, the
+``_probe`` memo and the session's cached relations are cleared (as
+``bench.py`` does), so each rep pays for its own probes and trained
+artifacts.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pytrousse_spark.operators import _probe  # noqa: E402
 from pytrousse_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -96,6 +100,8 @@ def main() -> None:
             "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": []
         }
         for rep in range(reps):
+            _probe.clear()
+            spark.catalog.clearCache()
             df, build_s, build_jobs = _phase(
                 spark, f"measure:{name}:{rep}:build", lambda: fn(spark, sf_dir)
             )
