@@ -38,13 +38,20 @@ window partitions by the group keys alone (<= 16 rows per group), and
 the <=16-row-per-group bucket frames attach by plain keyed joins —
 broadcast only in the ungrouped case, where the frame is globally
 tiny.
+
+:func:`pooled_levels` is the one two-sample kernel over these helpers:
+it builds the pooled cent-level frame, the per-group totals and the
+ECDF gap that the drift statistics fold (``profiling``'s
+cramer_von_mises, wasserstein_1d, wasserstein_1d_by_group,
+kuiper_two_sample, anderson_darling_2s, energy_distance and
+drift_by_group, and ``classifier.mann_whitney_by_group``).
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..staging import stage
@@ -348,3 +355,111 @@ def next_level(
         F.coalesce("__n1", "__nb1").alias("__next"),
     )
     return out
+
+
+class PooledLevels(NamedTuple):
+    """What :func:`pooled_levels` returns.
+
+    ``levels``: one row per (group, cent level) with ``__c1``/``__c2``
+    (the level's count in sample a / b), ``__below___c1`` and
+    ``__below___c2`` (the counts at strictly smaller levels of the same
+    group) and, with ``adjacency``, ``__next``. ``totals``: one row per
+    group (a single row when ungrouped) with ``n_a``/``n_b``.
+    """
+
+    levels: DataFrame
+    totals: DataFrame
+    grouped: bool
+
+    def with_totals(self) -> DataFrame:
+        """``levels`` with each row's ``n_a``/``n_b`` attached: a keyed
+        join by group (it rides the level frame's group-hash
+        partitioning), else a cross join with the broadcast one-row
+        totals."""
+        if self.grouped:
+            return self.levels.join(self.totals, "__g")
+        return self.levels.crossJoin(F.broadcast(self.totals))
+
+
+def both_sides() -> Column:
+    """True where the group has rows in both samples."""
+    return (F.col("n_a") > 0) & (F.col("n_b") > 0)
+
+
+def ecdf_gap() -> Column:
+    """``F_a(l) - F_b(l)`` at each level of :meth:`PooledLevels.with_totals`
+    (inclusive cumulatives over the totals); 0 where a side is empty, so
+    ANSI mode never divides by zero."""
+    return F.when(
+        both_sides(),
+        (F.col("__below___c1") + F.col("__c1")).cast("double")
+        / F.col("n_a").cast("double")
+        - (F.col("__below___c2") + F.col("__c2")).cast("double")
+        / F.col("n_b").cast("double"),
+    ).otherwise(F.lit(0.0))
+
+
+def pooled_levels(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    value_col: str,
+    group_col: str | None = None,
+    adjacency: bool = False,
+) -> PooledLevels:
+    """The pooled two-sample level frame shared by the drift statistics.
+
+    Each sample's non-NULL ``value_col`` (and, grouped, non-NULL
+    ``group_col``, as ``__g``) is quantized to integer cents ``__y``,
+    tagged with its side, and the union is folded by
+    ``groupBy([__g,] __y)`` into exact BIGINT counts ``__c1``/``__c2``.
+    That frame is staged once and routed once (``route_for``, on the
+    largest group's level count), and the routed strategy is passed to
+    :func:`next_level` (with ``adjacency``) and
+    :func:`exclusive_prefix_sums`, neither of which stages again. The
+    totals aggregate the staged frame directly.
+    """
+    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    keep = F.col(value_col).isNotNull()
+    key = []
+    if group_col is not None:
+        keep = keep & F.col(group_col).isNotNull()
+        key = [F.col(group_col).alias("__g")]
+    gc = ("__g",) if group_col is not None else ()
+
+    def tagged(df: DataFrame, a: int, b: int) -> DataFrame:
+        return df.where(keep).select(
+            *key,
+            cents.alias("__y"),
+            F.lit(a).alias("__a"),
+            F.lit(b).alias("__b"),
+        )
+
+    lv = stage(
+        tagged(df_a, 1, 0)
+        .unionByName(tagged(df_b, 0, 1))
+        .groupBy(*gc, "__y")
+        .agg(
+            F.sum("__a").cast("bigint").alias("__c1"),
+            F.sum("__b").cast("bigint").alias("__c2"),
+        )
+    )
+    # route ONCE against the staged frame: a per-call "auto" in
+    # exclusive_prefix_sums would count its input — next_level's output —
+    # running that plan a full extra time; neither helper stages again,
+    # as next_level's output derives cheaply from the staged frame (one
+    # window on the common route) and a second checkpoint costs a job
+    strat = route_for(lv, gc)
+    lv2 = lv
+    if adjacency:
+        lv2 = next_level(
+            lv2, "__y", materialize=False, strategy=strat, group_cols=gc
+        )
+    lv2 = exclusive_prefix_sums(
+        lv2, "__y", ("__c1", "__c2"), materialize=False, strategy=strat,
+        group_cols=gc,
+    )
+    tot = lv.groupBy(*gc).agg(
+        F.sum("__c1").cast("bigint").alias("n_a"),
+        F.sum("__c2").cast("bigint").alias("n_b"),
+    )
+    return PooledLevels(lv2, tot, bool(gc))

@@ -58,6 +58,18 @@ def row_fingerprint(cols: list[str]) -> Column:
     )
 
 
+def _side(
+    df: DataFrame, tag: str, key_cols: list[str], payload: list[str]
+) -> DataFrame:
+    """One snapshot side of a change join: key and payload columns
+    prefixed ``{tag}_`` plus the payload fingerprint ``{tag}_fp``."""
+    return df.select(
+        *[F.col(k).alias(f"{tag}_{k}") for k in key_cols],
+        row_fingerprint(payload).alias(f"{tag}_fp"),
+        *[F.col(c).alias(f"{tag}_{c}") for c in payload],
+    )
+
+
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -75,15 +87,8 @@ def snapshot_diff(
         compare_cols = [c for c in old.columns if c not in key_cols]
     payload = compare_cols
 
-    def _side(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            *[F.col(k).alias(f"{tag}_{k}") for k in key_cols],
-            row_fingerprint(payload).alias(f"{tag}_fp"),
-            *[F.col(c).alias(f"{tag}_{c}") for c in payload],
-        )
-
-    a = _side(old, "a")
-    b = _side(new, "b")
+    a = _side(old, "a", key_cols, payload)
+    b = _side(new, "b", key_cols, payload)
     cond = None
     for k in key_cols:
         eq = a[f"a_{k}"] == b[f"b_{k}"]
@@ -190,14 +195,8 @@ def scd2_history(
         compare_cols = [c for c in old.columns if c not in key_cols]
     payload = compare_cols
 
-    def _side(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            *[F.col(k).alias(f"{tag}_{k}") for k in key_cols],
-            row_fingerprint(payload).alias(f"{tag}_fp"),
-            *[F.col(c).alias(f"{tag}_{c}") for c in payload],
-        )
-
-    a, b = _side(old, "a"), _side(new, "b")
+    a = _side(old, "a", key_cols, payload)
+    b = _side(new, "b", key_cols, payload)
     cond = None
     for k in key_cols:
         eq = a[f"a_{k}"] == b[f"b_{k}"]

@@ -3876,8 +3876,8 @@ def mann_whitney_by_group(
     says whether the location shift clears noise, with the effect
     size): one plan for all groups, one pooled (group, cent-level)
     frame, below-level cumulatives from the GROUPED bounded prefix
-    hierarchy (operators/_prefix.py group_cols — every window
-    partitioned by (group, bucket)).
+    hierarchy (the ``_prefix.pooled_levels`` kernel the drift
+    statistics share — every window partitioned by (group, bucket)).
 
     Arithmetic per group is :func:`mann_whitney_u`'s exactly — exact
     integer wins/ties/losses folds in DECIMAL(38,0) (int64 passes at
@@ -3889,42 +3889,9 @@ def mann_whitney_by_group(
     ``(group, n_a, n_b, u1, z, cliffs_delta)`` — u1/delta NULL when a
     side is empty, z additionally NULL when the variance is 0.
     """
-    y = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = (
-        df_a.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            y.alias("__y"),
-            F.lit(1).alias("__a"),
-            F.lit(0).alias("__b"),
-        )
-    )
-    b = (
-        df_b.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            y.alias("__y"),
-            F.lit(0).alias("__a"),
-            F.lit(1).alias("__b"),
-        )
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__g", "__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from ._prefix import exclusive_prefix_sums
+    from ._prefix import pooled_levels
 
-    lv2 = exclusive_prefix_sums(
-        lv, "__y", ("__c1", "__c2"), materialize=False, group_cols=("__g",)
-    )
+    lv2 = pooled_levels(df_a, df_b, value_col, group_col).levels
     td = (F.col("__c1") + F.col("__c2")).cast("decimal(38,0)")
     c1d = F.col("__c1").cast("decimal(38,0)")
     c2d = F.col("__c2").cast("decimal(38,0)")

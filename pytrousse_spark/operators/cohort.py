@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
 from ..io import rebalance_undersplit
-from ..staging import stage
+from ..staging import stage, stage_unbounded
 
 from pytrousse_spark.functions.sqlutil import sql_quote
 
@@ -1201,9 +1201,10 @@ def linear_attribution_scalable(
     t = t.join(p.select("__u").distinct(), "__u", "semi")
     # the staged frames feed ~6 union/window branches each — unstaged,
     # the touch scan + semi filter re-executes per branch (measured in
-    # the physical plan: 12+ repeats)
-    p = stage(p)
-    t = stage(t)
+    # the physical plan: 12+ repeats); both grow with the event table,
+    # so they take the recomputable persist
+    p = stage_unbounded(p)
+    t = stage_unbounded(t)
 
     # probe only the (user, channel) combinations that exist in touches
     # (a cross join against ALL channels cost 12x on benign data); the
@@ -2228,8 +2229,8 @@ def position_attribution_scalable(
         F.col(channel_col).alias("__ch"),
     )
     t = t.join(p.select("__u").distinct(), "__u", "semi")
-    p = stage(p)
-    t = stage(t)
+    p = stage_unbounded(p)
+    t = stage_unbounded(t)
 
     user_channels = t.select("__u", "__ch").distinct()
     pc = p.join(user_channels, "__u", "inner")

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..dataset import Dataset
 from ..operations import OpRecord
-from ..profiling import NOT_NA_STRING_COL_THRESHOLD
+from ..profiling import NOT_NA_STRING_COL_THRESHOLD, profile_changed
 from ..functions.numeric_repair import (
     nonparseable_expr,
     repair_expr,
@@ -208,6 +208,12 @@ class RowFix:
         targets = tuple(sorted(p.mixed_type_cols | set(num_cols)))
         out = self.fix_typos(dataset, targets)
         if set_to_correct_dtype:
+            if out is not dataset:
+                # fix_typos rewrites only ``targets`` and keeps every row,
+                # so the other columns keep their stats from ``p``
+                out._profile = profile_changed(
+                    out.df, targets, p, out.metadata_cols
+                )
             out = self.cols_to_correct_dtype(out)
         return out
 

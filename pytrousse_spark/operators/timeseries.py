@@ -3507,6 +3507,28 @@ def gesd_outliers_sql(
     )
 
 
+def _two_middle_median(vals: DataFrame, col: str) -> DataFrame:
+    """One row ``(__n, __med)``: the row count of ``vals`` and the median
+    of ``col`` as the average of the two middle rows (one row when the
+    count is odd), ranked by one global window — the explicit form the
+    DuckDB twins replay."""
+    w = Window.orderBy(F.col(col).asc())
+    n = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    ranked = vals.select(
+        F.col(col),
+        F.row_number().over(w).alias("__rn"),
+        F.count(F.lit(1)).over(n).cast("bigint").alias("__n"),
+    )
+    return ranked.where(
+        (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
+        | (F.col("__rn") == F.floor(F.col("__n") / 2) + 1)
+    ).groupBy("__n").agg(
+        ((F.min(col) + F.max(col)) / F.lit(2.0)).alias("__med")
+    )
+
+
 def theil_sen_trend(
     df: DataFrame,
     ts_col: str,
@@ -3546,26 +3568,9 @@ def theil_sen_trend(
         ).alias("__s")
     )
 
-    def _median(vals: DataFrame, col: str) -> DataFrame:
-        w = Window.orderBy(F.col(col).asc())
-        n = Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        ranked = vals.select(
-            F.col(col),
-            F.row_number().over(w).alias("__rn"),
-            F.count(F.lit(1)).over(n).cast("bigint").alias("__n"),
-        )
-        return ranked.where(
-            (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-            | (F.col("__rn") == F.floor(F.col("__n") / 2) + 1)
-        ).groupBy("__n").agg(
-            ((F.min(col) + F.max(col)) / F.lit(2.0)).alias("__med")
-        )
-
     # one row; feeds the residual pass AND the output — checkpoint so
     # the pair join + median sort run once, not twice
-    med_s = stage(_median(pairs, "__s").select(
+    med_s = stage(_two_middle_median(pairs, "__s").select(
         F.col("__med").alias("__slope"),
         F.col("__n").alias("__npairs"),
     ))
@@ -3578,7 +3583,7 @@ def theil_sen_trend(
         ).alias("__r"),
     )
     med_r = (
-        _median(resid.select("__r"), "__r")
+        _two_middle_median(resid.select("__r"), "__r")
         .select(
             F.col("__n").alias("n_days"),
             F.col("__med").alias("__icept"),
@@ -3709,30 +3714,13 @@ def repeated_median_trend(
         )
     )
 
-    def _median(vals: DataFrame, col: str) -> DataFrame:
-        w = Window.orderBy(F.col(col).asc())
-        n = Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        ranked = vals.select(
-            F.col(col),
-            F.row_number().over(w).alias("__rn"),
-            F.count(F.lit(1)).over(n).cast("bigint").alias("__n"),
-        )
-        return ranked.where(
-            (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-            | (F.col("__rn") == F.floor(F.col("__n") / 2) + 1)
-        ).groupBy("__n").agg(
-            ((F.min(col) + F.max(col)) / F.lit(2.0)).alias("__med")
-        )
-
     # outer median over the T inner medians (calendar-bounded frame);
     # n_pairs folds from the per-day partition sizes
     npairs = inner.agg(
         F.sum("__npp").cast("bigint").alias("__npairs")
     )
     med_s = (
-        _median(inner.select("__mi"), "__mi")
+        _two_middle_median(inner.select("__mi"), "__mi")
         .crossJoin(F.broadcast(npairs))
         .select(
             F.col("__med").alias("__slope"),
@@ -3748,7 +3736,7 @@ def repeated_median_trend(
         ).alias("__r"),
     )
     med_r = (
-        _median(resid.select("__r"), "__r")
+        _two_middle_median(resid.select("__r"), "__r")
         .select(
             F.col("__n").alias("n_days"),
             F.col("__med").alias("__icept"),

@@ -30,16 +30,36 @@ Scale notes (100 TB):
   counts two equal maps built in different entry order as two values;
 - numeric-parsability of string columns uses `try_cast` ratios
   (row_fix.py:20-53 semantics) — JVM-side, no Python.
+
+Two-sample drift statistics: :func:`cramer_von_mises`,
+:func:`wasserstein_1d`, :func:`wasserstein_1d_by_group`,
+:func:`kuiper_two_sample`, :func:`anderson_darling_2s`,
+:func:`energy_distance` and :func:`drift_by_group` (and
+``operators.classifier.mann_whitney_by_group``) read one kernel,
+``operators._prefix.pooled_levels``: the pooled integer-cent level frame
+of both samples (NULL values and NULL groups excluded), staged and routed
+once, with exact below-level cumulatives, optional next-level adjacency,
+per-group totals and the ECDF gap ``F_a - F_b``. Each per-level term
+(CvM, AD, Kuiper D+/D-, W1, energy) is defined once below and shared by
+the standalone function and ``drift_by_group``; each function keeps only
+its own fold and output columns. :func:`ks_two_sample` (exact doubles,
+bucket decomposition) and :func:`mann_whitney_u` keep their own forms.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .operators._prefix import (
+    PooledLevels,
+    both_sides,
+    ecdf_gap,
+    pooled_levels,
+)
 from .staging import stage
 
 #: reference settings.py:9 — categorical when nunique < 7 or
@@ -378,6 +398,23 @@ def profile(df: DataFrame, metadata_cols: frozenset[str] = frozenset()) -> Colum
             parse_ratio=r["pr"],
         )
     return ColumnProfile(stats=stats, metadata_cols=metadata_cols)
+
+
+def profile_changed(
+    df: DataFrame,
+    changed: tuple[str, ...],
+    base: ColumnProfile,
+    metadata_cols: frozenset[str] = frozenset(),
+) -> ColumnProfile:
+    """The profile of ``df`` when it holds the same rows as the frame
+    ``base`` profiles and differs from it only in the ``changed``
+    columns: those are profiled afresh (one pass over them alone),
+    every other column keeps its ``base`` stats."""
+    fresh = profile(df.select(*[_quoted(c) for c in changed]), metadata_cols)
+    return ColumnProfile(
+        stats={c: fresh.stats.get(c) or base.stats[c] for c in df.columns},
+        metadata_cols=metadata_cols,
+    )
 
 
 def correlation_matrix(df, cols: list[str]) -> "DataFrame":
@@ -1378,6 +1415,160 @@ def ks_two_sample(
     )
 
 
+# Per-level terms and finishers of the pooled-level drift statistics.
+# Each term reads a row of operators._prefix.pooled_levels(...)
+# .with_totals(), is one double expression over exact integers, and is
+# rounded once into a DECIMAL(38) order-free fold; the standalone
+# functions below and drift_by_group share them.
+
+
+def _n_ab() -> tuple[Column, Column]:
+    return F.col("n_a").cast("double"), F.col("n_b").cast("double")
+
+
+def _counts() -> tuple[Column, Column]:
+    """``n_a``/``n_b`` of a one-row result, 0 for an empty input."""
+    return (
+        F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
+        F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
+    )
+
+
+def _round6(c: Column) -> Column:
+    return F.round(c * F.lit(1e6), 0) / F.lit(1e6)
+
+
+def _level_step() -> Column:
+    """Width ``next(l) - l`` of the stretch on which the ECDFs are
+    constant (NULL at each group's largest level)."""
+    return (F.col("__next") - F.col("__y")).cast("double")
+
+
+def _cvm_term() -> Column:
+    """Cramér-von Mises: ``(c_a + c_b) * d^2`` in pico-units."""
+    d = ecdf_gap()
+    return F.round(
+        (F.col("__c1") + F.col("__c2")).cast("double") * d * d * F.lit(1e12),
+        0,
+    ).cast("decimal(38,0)")
+
+
+def _cvm_stat(fold: str) -> Column:
+    na, nb = _n_ab()
+    return (
+        na * nb / ((na + nb) * (na + nb))
+        * F.col(fold).cast("double") / F.lit(1e12)
+    )
+
+
+def _ad_terms() -> tuple[Column, Column]:
+    """Anderson-Darling: the per-level term in pico-units and a 0/1 flag
+    for a positive denominator. Mid-rank cumulatives are carried
+    doubled, so they stay exact integers; the denominator is 0 only
+    when the pooled frame is one level (t = N), where the term is 0 so
+    the fold stays finite under ANSI."""
+    na, nb = _n_ab()
+    nn = na + nb
+    t = (F.col("__c1") + F.col("__c2")).cast("double")
+    d2 = (
+        F.lit(2.0)
+        * (
+            F.col("__below___c1")
+            + F.col("__below___c2")
+            + F.col("__c1")
+            + F.col("__c2")
+        ).cast("double")
+        - t
+    )
+    q = F.when(
+        both_sides(),
+        nn
+        * (
+            F.lit(2.0)
+            * (F.col("__below___c1") + F.col("__c1")).cast("double")
+            - F.col("__c1").cast("double")
+        )
+        - na * d2,
+    ).otherwise(F.lit(0.0))
+    den = d2 * (F.lit(2.0) * nn - d2) - nn * t
+    term = F.round(
+        F.when(den > 0, t / nn * q * q / den).otherwise(F.lit(0.0))
+        * F.lit(1e12),
+        0,
+    ).cast("decimal(38,0)")
+    return term, F.when(den > 0, F.lit(1)).otherwise(F.lit(0))
+
+
+def _ad_stat(fold: str) -> Column:
+    na, nb = _n_ab()
+    return (
+        (na + nb - F.lit(1.0)) / (na * nb)
+        * F.col(fold).cast("double") / F.lit(1e12)
+    )
+
+
+def _kuiper_folds() -> tuple[Column, Column]:
+    """Kuiper ``D+``/``D-``: the largest gap above and below, at least 0
+    (the sup also runs over the region outside the support)."""
+    d = ecdf_gap()
+    return (
+        F.greatest(F.max(d), F.lit(0.0)).alias("__dp"),
+        F.greatest(F.max(-d), F.lit(0.0)).alias("__dm"),
+    )
+
+
+def _w1_term() -> Column:
+    """Wasserstein-1: ``|d| * step`` in micro-cents."""
+    return F.round(
+        F.abs(ecdf_gap()) * _level_step() * F.lit(1e6), 0
+    ).cast("decimal(38,0)")
+
+
+def _energy_term() -> Column:
+    """Energy distance: ``2 * d^2 * step`` in micro-cents."""
+    d = ecdf_gap()
+    return F.round(
+        F.lit(2.0) * d * d * _level_step() * F.lit(1e6), 0
+    ).cast("decimal(38,0)")
+
+
+def _micro(fold: str) -> Column:
+    """A micro-cent fold in value units; 0 when no level has a
+    successor (a single distinct level)."""
+    return F.coalesce(F.col(fold).cast("double"), F.lit(0.0)) / F.lit(1e8)
+
+
+def _pooled_fold(
+    df_a: "DataFrame", df_b: "DataFrame", value_col: str, *folds
+) -> "DataFrame":
+    """One ungrouped aggregation over the pooled level frame: ``n_a``,
+    ``n_b`` and ``folds``."""
+    return (
+        pooled_levels(df_a, df_b, value_col)
+        .with_totals()
+        .agg(F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"), *folds)
+    )
+
+
+def _step_integral(
+    p: PooledLevels, term: Column, fold: str
+) -> "DataFrame":
+    """Sum ``term`` over the levels that have a successor, as ``fold``,
+    per group, next to the group's totals. The totals come from their
+    own frame, not off the levels with a successor: a group with one
+    distinct level has none, yet its counts are real and its integral
+    is a legitimate 0."""
+    f = (
+        p.with_totals()
+        .where(F.col("__next").isNotNull())
+        .groupBy(*(["__g"] if p.grouped else []))
+        .agg(F.sum(term).cast("decimal(38,0)").alias(fold))
+    )
+    if p.grouped:
+        return p.totals.join(f, "__g", "left")
+    return f.crossJoin(F.broadcast(p.totals))
+
+
 def cramer_von_mises(
     df_a: "DataFrame",
     df_b: "DataFrame",
@@ -1396,8 +1587,9 @@ def cramer_von_mises(
 
     Values quantize to integer CENTS (the mann_whitney/level-frame
     convention), cumulatives come from the bounded prefix hierarchy
-    (operators/_prefix.py — no data-sized sort at any cardinality; the
-    level frame is staged ONCE and shared with the totals agg).
+    (the shared kernel ``operators._prefix.pooled_levels`` — no
+    data-sized sort at any cardinality; the level frame is staged ONCE
+    and shared with the totals agg).
     Exactness: cumulative counts are exact BIGINTs; the
     per-level term is ONE double expression over identical integers,
     rounded once to pico-units into a DECIMAL(38) order-free fold
@@ -1408,61 +1600,17 @@ def cramer_von_mises(
     Anderson & Darling 1952's table); t_stat NULL when either sample
     is empty.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = df_a.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
+    agg = _pooled_fold(
+        df_a,
+        df_b,
+        value_col,
+        F.sum(_cvm_term()).cast("decimal(38,0)").alias("__t12"),
     )
-    b = df_b.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import exclusive_prefix_sums
-
-    lv2 = exclusive_prefix_sums(lv, "__y", ("__c1", "__c2"), materialize=False)
-    tot = lv.agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    # guard the divisions: an empty side yields t_stat NULL downstream,
-    # but ANSI mode would throw on the per-level x/0 before we get there
-    d = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        (F.col("__below___c1") + F.col("__c1")).cast("double") / na
-        - (F.col("__below___c2") + F.col("__c2")).cast("double") / nb,
-    ).otherwise(F.lit(0.0))
-    term12 = F.round(
-        (F.col("__c1") + F.col("__c2")).cast("double") * d * d * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
-    agg = (
-        lv2.crossJoin(F.broadcast(tot))
-        .agg(
-            F.max("n_a").alias("n_a"),
-            F.max("n_b").alias("n_b"),
-            F.sum(term12).cast("decimal(38,0)").alias("__t12"),
-        )
-    )
-    t = (
-        na * nb / ((na + nb) * (na + nb))
-        * F.col("__t12").cast("double") / F.lit(1e12)
-    )
+    t = _cvm_stat("__t12")
     return agg.select(
-        F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
-        F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0), F.round(t, 6)
-        ).alias("t_stat"),
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0), t > F.lit(float(crit))
-        ).alias("reject"),
+        *_counts(),
+        F.when(both_sides(), F.round(t, 6)).alias("t_stat"),
+        F.when(both_sides(), t > F.lit(float(crit))).alias("reject"),
     )
 
 
@@ -1485,79 +1633,20 @@ def wasserstein_1d(
 
     with cumulatives from the bounded prefix hierarchy and the
     adjacency from :func:`operators._prefix.next_level` (hierarchical
-    lead — every window partition bounded, no global sort). The level
-    frame is staged once and shared by the lead, the prefix sums, and
-    the totals agg. The per-level term is ONE double
-    expression rounded to micro-cent units into a DECIMAL(38)
-    order-free fold; the result divides back to value units.
+    lead — every window partition bounded, no global sort), both from
+    ``operators._prefix.pooled_levels``. The level frame is staged once
+    and shared by the lead, the prefix sums, and the totals agg. The
+    per-level term is ONE double expression rounded to micro-cent units
+    into a DECIMAL(38) order-free fold; the result divides back to
+    value units.
 
     Returns one row ``(n_a, n_b, w1)`` — NULL w1 when either sample is
     empty.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = df_a.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
-    )
-    b = df_b.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import (
-        exclusive_prefix_sums,
-        next_level,
-        route_for,
-    )
-
-    # route ONCE against the checkpointed level frame: per-call "auto"
-    # would have exclusive_prefix_sums count its input — next_level's
-    # lead-window/join output — executing that plan a full extra time
-    strat = route_for(lv)
-    nxt = next_level(lv, "__y", materialize=False, strategy=strat)
-    # materialize=False: nxt derives cheaply from the already-
-    # checkpointed lv (in the routed common case it is ONE window),
-    # so a second checkpoint job would cost more than it saves
-    lv2 = exclusive_prefix_sums(
-        nxt, "__y", ("__c1", "__c2"), materialize=False, strategy=strat
-    )
-    tot = lv.agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    d = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        (F.col("__below___c1") + F.col("__c1")).cast("double") / na
-        - (F.col("__below___c2") + F.col("__c2")).cast("double") / nb,
-    ).otherwise(F.lit(0.0))
-    gap = (F.col("__next") - F.col("__y")).cast("double")
-    term6 = F.round(F.abs(d) * gap * F.lit(1e6), 0).cast("decimal(38,0)")
-    # totals come from their OWN row, never max()-ed off the gap frame:
-    # a single-distinct-level input has no gaps at all, yet its counts
-    # are real and its W1 is a legitimate 0
-    w6 = (
-        lv2.crossJoin(F.broadcast(tot))
-        .where(F.col("__next").isNotNull())
-        .agg(F.sum(term6).cast("decimal(38,0)").alias("__w6"))
-    )
-    return w6.crossJoin(F.broadcast(tot)).select(
-        F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
-        F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            F.round(
-                F.coalesce(
-                    F.col("__w6").cast("double"), F.lit(0.0)
-                ) / F.lit(1e8),
-                6,
-            ),
-        ).alias("w1"),
+    p = pooled_levels(df_a, df_b, value_col, adjacency=True)
+    return _step_integral(p, _w1_term(), "__w6").select(
+        *_counts(),
+        F.when(both_sides(), F.round(_micro("__w6"), 6)).alias("w1"),
     )
 
 
@@ -1623,8 +1712,9 @@ def wasserstein_1d_by_group(
     ONE Spark plan for all groups instead of a driver-side loop over
     :func:`wasserstein_1d`.
 
-    Construction mirrors :func:`wasserstein_1d` exactly, with the
-    group key threaded through every tier: the pooled level frame is
+    Construction mirrors :func:`wasserstein_1d` exactly (the same
+    ``operators._prefix.pooled_levels`` kernel), with the group key
+    threaded through every tier: the pooled level frame is
     ``groupBy(group, cent)``; adjacency and cumulatives come from the
     grouped bounded prefix helpers (``operators/_prefix.py`` with
     ``group_cols`` — every window partitioned by (group, bucket), the
@@ -1639,89 +1729,12 @@ def wasserstein_1d_by_group(
     on either side, 0 when both sides coincide; the output group
     column is named ``group``.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = (
-        df_a.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            cents.alias("__y"),
-            F.lit(1).alias("__a"),
-            F.lit(0).alias("__b"),
-        )
-    )
-    b = (
-        df_b.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            cents.alias("__y"),
-            F.lit(0).alias("__a"),
-            F.lit(1).alias("__b"),
-        )
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__g", "__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import (
-        exclusive_prefix_sums,
-        next_level,
-        route_for,
-    )
-
-    gc = ("__g",)
-    strat = route_for(lv, gc)
-    nxt = next_level(lv, "__y", materialize=False, strategy=strat, group_cols=gc)
-    lv2 = exclusive_prefix_sums(
-        nxt,
-        "__y",
-        ("__c1", "__c2"),
-        materialize=False,
-        strategy=strat,
-        group_cols=gc,
-    )
-    tot = lv.groupBy("__g").agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    d = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        (F.col("__below___c1") + F.col("__c1")).cast("double") / na
-        - (F.col("__below___c2") + F.col("__c2")).cast("double") / nb,
-    ).otherwise(F.lit(0.0))
-    gap = (F.col("__next") - F.col("__y")).cast("double")
-    term6 = F.round(F.abs(d) * gap * F.lit(1e6), 0).cast("decimal(38,0)")
-    # per-group integral: totals join by group key (rides the level
-    # frame's group-hash partitioning — the groups frame is one row
-    # per group, never broadcast-assumed small); a group whose frame
-    # has a single distinct level contributes no gap rows, so the
-    # LEFT join back onto tot keeps it with a legitimate w1 = 0
-    w6 = (
-        lv2.join(tot, "__g")
-        .where(F.col("__next").isNotNull())
-        .groupBy("__g")
-        .agg(F.sum(term6).cast("decimal(38,0)").alias("__w6"))
-    )
-    return tot.join(w6, "__g", "left").select(
+    p = pooled_levels(df_a, df_b, value_col, group_col, adjacency=True)
+    return _step_integral(p, _w1_term(), "__w6").select(
         F.col("__g").alias("group"),
         "n_a",
         "n_b",
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            F.round(
-                F.coalesce(F.col("__w6").cast("double"), F.lit(0.0))
-                / F.lit(1e8),
-                6,
-            ),
-        ).alias("w1"),
+        F.when(both_sides(), F.round(_micro("__w6"), 6)).alias("w1"),
     )
 
 
@@ -1754,44 +1767,9 @@ def kuiper_two_sample(
     Returns one row ``(n_a, n_b, v_stat, p_value, reject)`` — NULLs
     when either sample is empty.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = df_a.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
-    )
-    b = df_b.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import exclusive_prefix_sums
-
-    lv2 = exclusive_prefix_sums(lv, "__y", ("__c1", "__c2"), materialize=False)
-    tot = lv.agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    d = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        (F.col("__below___c1") + F.col("__c1")).cast("double") / na
-        - (F.col("__below___c2") + F.col("__c2")).cast("double") / nb,
-    ).otherwise(F.lit(0.0))
-    agg = (
-        lv2.crossJoin(F.broadcast(tot))
-        .agg(
-            F.max("n_a").alias("n_a"),
-            F.max("n_b").alias("n_b"),
-            F.greatest(F.max(d), F.lit(0.0)).alias("__dp"),
-            F.greatest(F.max(-d), F.lit(0.0)).alias("__dm"),
-        )
-    )
+    agg = _pooled_fold(df_a, df_b, value_col, *_kuiper_folds())
     v = F.col("__dp") + F.col("__dm")
+    na, nb = _n_ab()
     ne = na * nb / (na + nb)
     lam = (
         F.sqrt(ne) + F.lit(0.155) + F.lit(0.24) / F.sqrt(ne)
@@ -1813,16 +1791,11 @@ def kuiper_two_sample(
             F.greatest(F.lit(0.0), F.lit(2.0) * series / F.lit(1e9)),
         )
     )
-    both = (F.col("n_a") > 0) & (F.col("n_b") > 0)
+    both = both_sides()
     return agg.select(
-        F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
-        F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
-        F.when(both, F.round(v * F.lit(1e6), 0) / F.lit(1e6)).alias(
-            "v_stat"
-        ),
-        F.when(both, F.round(p * F.lit(1e6), 0) / F.lit(1e6)).alias(
-            "p_value"
-        ),
+        *_counts(),
+        F.when(both, _round6(v)).alias("v_stat"),
+        F.when(both, _round6(p)).alias("p_value"),
         F.when(both, p < F.lit(float(alpha))).alias("reject"),
     )
 
@@ -1925,8 +1898,8 @@ def anderson_darling_2s(
     with D_l = 2*B_l = doubled mid-rank pooled cumulative and
     Q_l = N*(2*cum_a - c_a) - n_a*(2*cum_pooled - t), both single
     double expressions over identical exact integers in both engines
-    (cumulatives from the bounded prefix hierarchy, level frame staged
-    once and shared with the totals agg); the
+    (cumulatives from ``operators._prefix.pooled_levels``, level frame
+    staged once and shared with the totals agg); the
     per-level term rounds once to pico-units into a DECIMAL(38)
     order-free fold. E[A2] = 1 under H0; calibration tables are
     external (Scholz-Stephens table 1).
@@ -1934,83 +1907,18 @@ def anderson_darling_2s(
     Returns one row ``(n_a, n_b, a2)`` — a2 NULL when either sample is
     empty or the pooled sample is a single level (denominator 0).
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = df_a.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
-    )
-    b = df_b.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import exclusive_prefix_sums
-
-    lv2 = exclusive_prefix_sums(lv, "__y", ("__c1", "__c2"), materialize=False)
-    tot = lv.agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    nn = na + nb
-    t = (F.col("__c1") + F.col("__c2")).cast("double")
-    # doubled mid-rank cumulatives: exact integers, identical doubles
-    d2 = (
-        F.lit(2.0)
-        * (
-            F.col("__below___c1")
-            + F.col("__below___c2")
-            + F.col("__c1")
-            + F.col("__c2")
-        ).cast("double")
-        - t
-    )
-    q = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        nn
-        * (
-            F.lit(2.0)
-            * (F.col("__below___c1") + F.col("__c1")).cast("double")
-            - F.col("__c1").cast("double")
-        )
-        - na * d2,
-    ).otherwise(F.lit(0.0))
-    den = d2 * (F.lit(2.0) * nn - d2) - nn * t
-    # den = 0 only when the pooled frame is ONE level (t = N); the
-    # term is gated to 0 there so the fold stays finite under ANSI
-    term12 = F.round(
-        F.when(
-            den > 0, t / nn * q * q / den
-        ).otherwise(F.lit(0.0))
-        * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
-    agg = (
-        lv2.crossJoin(F.broadcast(tot))
-        .agg(
-            F.max("n_a").alias("n_a"),
-            F.max("n_b").alias("n_b"),
-            F.max(F.when(den > 0, F.lit(1)).otherwise(F.lit(0))).alias(
-                "__any"
-            ),
-            F.sum(term12).cast("decimal(38,0)").alias("__t12"),
-        )
-    )
-    a2 = (
-        (na + nb - F.lit(1.0)) / (na * nb)
-        * F.col("__t12").cast("double") / F.lit(1e12)
+    term, den_pos = _ad_terms()
+    agg = _pooled_fold(
+        df_a,
+        df_b,
+        value_col,
+        F.max(den_pos).alias("__any"),
+        F.sum(term).cast("decimal(38,0)").alias("__t12"),
     )
     return agg.select(
-        F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
-        F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
+        *_counts(),
         F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0) & (F.col("__any") == 1),
-            F.round(a2, 6),
+            both_sides() & (F.col("__any") == 1), F.round(_ad_stat("__t12"), 6)
         ).alias("a2"),
     )
 
@@ -2099,11 +2007,14 @@ def drift_by_group(
     :func:`wasserstein_1d`, :func:`energy_distance`) answer only for
     the whole corpus.
 
-    Exactness follows the corpus-level operators: cumulative counts
-    are exact BIGINTs off the grouped hierarchy; the CvM/AD/W1/energy
-    per-level terms round once into DECIMAL(38) order-free folds
-    (pico-, pico-, micro- and micro-unit respectively; AD carries
-    mid-rank halves as doubled exact integers); KS/Kuiper take plain
+    The frame comes from ``operators._prefix.pooled_levels`` (grouped,
+    with adjacency), and the Kuiper/CvM/AD/W1/energy per-level terms
+    are the corpus-level operators' own. Exactness follows those
+    operators: cumulative counts are exact BIGINTs off the grouped
+    hierarchy; the CvM/AD/W1/energy per-level terms round once into
+    DECIMAL(38) order-free folds (pico-, pico-, micro- and micro-unit
+    respectively; AD carries mid-rank halves as doubled exact
+    integers); KS/Kuiper take plain
     maxes of signed ECDF gaps over levels (identical IEEE doubles in
     both engines) rounded to 1e-6.
 
@@ -2113,168 +2024,42 @@ def drift_by_group(
     (AD additionally NULL when the group's pooled frame is one
     level).
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = (
-        df_a.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            cents.alias("__y"),
-            F.lit(1).alias("__a"),
-            F.lit(0).alias("__b"),
-        )
-    )
-    b = (
-        df_b.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            cents.alias("__y"),
-            F.lit(0).alias("__a"),
-            F.lit(1).alias("__b"),
-        )
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__g", "__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import (
-        exclusive_prefix_sums,
-        next_level,
-        route_for,
-    )
-
-    gc = ("__g",)
-    strat = route_for(lv, gc)
-    nxt = next_level(lv, "__y", materialize=False, strategy=strat, group_cols=gc)
-    lv2 = exclusive_prefix_sums(
-        nxt,
-        "__y",
-        ("__c1", "__c2"),
-        materialize=False,
-        strategy=strat,
-        group_cols=gc,
-    )
-    tot = lv.groupBy("__g").agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    d = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        (F.col("__below___c1") + F.col("__c1")).cast("double") / na
-        - (F.col("__below___c2") + F.col("__c2")).cast("double") / nb,
-    ).otherwise(F.lit(0.0))
-    gap = (F.col("__next") - F.col("__y")).cast("double")
-    term12 = F.round(
-        (F.col("__c1") + F.col("__c2")).cast("double") * d * d * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
-    term6 = F.round(F.abs(d) * gap * F.lit(1e6), 0).cast("decimal(38,0)")
-    # AD per-level term (anderson_darling_2s's doubled mid-rank form,
-    # per group): identical exact integers -> identical doubles
-    nn = na + nb
-    tl = (F.col("__c1") + F.col("__c2")).cast("double")
-    d2 = (
-        F.lit(2.0)
-        * (
-            F.col("__below___c1")
-            + F.col("__below___c2")
-            + F.col("__c1")
-            + F.col("__c2")
-        ).cast("double")
-        - tl
-    )
-    qn = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        nn
-        * (
-            F.lit(2.0)
-            * (F.col("__below___c1") + F.col("__c1")).cast("double")
-            - F.col("__c1").cast("double")
-        )
-        - na * d2,
-    ).otherwise(F.lit(0.0))
-    aden = d2 * (F.lit(2.0) * nn - d2) - nn * tl
-    aterm12 = F.round(
-        F.when(aden > 0, tl / nn * qn * qn / aden).otherwise(F.lit(0.0))
-        * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
-    eterm6 = F.round(
-        F.lit(2.0) * d * d * gap * F.lit(1e6), 0
-    ).cast("decimal(38,0)")
+    p = pooled_levels(df_a, df_b, value_col, group_col, adjacency=True)
+    d = ecdf_gap()
+    ad_term, ad_den_pos = _ad_terms()
     # one agg computes all six folds per group; the W1/energy terms
-    # gate on gap existence INSIDE the sum (each group's max level has
-    # no successor), so no second pass over the frame
+    # gate on a successor INSIDE the sum (each group's max level has
+    # none), so no second pass over the frame
+    has_next = F.col("__next").isNotNull()
     folds = (
-        lv2.join(tot, "__g")
+        p.with_totals()
         .groupBy("__g")
         .agg(
             F.max(F.abs(d)).alias("__ks"),
-            F.greatest(F.max(d), F.lit(0.0)).alias("__dp"),
-            F.greatest(F.max(-d), F.lit(0.0)).alias("__dm"),
-            F.sum(term12).cast("decimal(38,0)").alias("__t12"),
-            F.max(F.when(aden > 0, F.lit(1)).otherwise(F.lit(0))).alias(
-                "__anyden"
-            ),
-            F.sum(aterm12).cast("decimal(38,0)").alias("__a12"),
-            F.sum(
-                F.when(F.col("__next").isNotNull(), term6)
-            ).cast("decimal(38,0)").alias("__w6"),
-            F.sum(
-                F.when(F.col("__next").isNotNull(), eterm6)
-            ).cast("decimal(38,0)").alias("__e6"),
+            *_kuiper_folds(),
+            F.sum(_cvm_term()).cast("decimal(38,0)").alias("__t12"),
+            F.max(ad_den_pos).alias("__anyden"),
+            F.sum(ad_term).cast("decimal(38,0)").alias("__a12"),
+            F.sum(F.when(has_next, _w1_term()))
+            .cast("decimal(38,0)").alias("__w6"),
+            F.sum(F.when(has_next, _energy_term()))
+            .cast("decimal(38,0)").alias("__e6"),
         )
     )
-    both = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    t = (
-        na * nb / ((na + nb) * (na + nb))
-        * F.col("__t12").cast("double") / F.lit(1e12)
-    )
-    a2 = (
-        (na + nb - F.lit(1.0)) / (na * nb)
-        * F.col("__a12").cast("double") / F.lit(1e12)
-    )
-    return tot.join(folds, "__g", "left").select(
+    both = both_sides()
+    return p.totals.join(folds, "__g", "left").select(
         F.col("__g").alias("group"),
         "n_a",
         "n_b",
-        F.when(
-            both, F.round(F.col("__ks") * F.lit(1e6), 0) / F.lit(1e6)
-        ).alias("ks_d"),
-        F.when(
-            both,
-            F.round(
-                (F.col("__dp") + F.col("__dm")) * F.lit(1e6), 0
-            ) / F.lit(1e6),
-        ).alias("kuiper_v"),
-        F.when(both, F.round(t, 6)).alias("cvm_t"),
-        F.when(both & (F.col("__anyden") == 1), F.round(a2, 6)).alias(
-            "ad_a2"
+        F.when(both, _round6(F.col("__ks"))).alias("ks_d"),
+        F.when(both, _round6(F.col("__dp") + F.col("__dm"))).alias(
+            "kuiper_v"
         ),
-        F.when(
-            both,
-            F.round(
-                F.coalesce(F.col("__w6").cast("double"), F.lit(0.0))
-                / F.lit(1e8),
-                6,
-            ),
-        ).alias("w1"),
-        F.when(
-            both,
-            F.round(
-                F.coalesce(F.col("__e6").cast("double"), F.lit(0.0))
-                / F.lit(1e8),
-                6,
-            ),
-        ).alias("energy"),
+        F.when(both, F.round(_cvm_stat("__t12"), 6)).alias("cvm_t"),
+        F.when(both & (F.col("__anyden") == 1), F.round(_ad_stat("__a12"), 6))
+        .alias("ad_a2"),
+        F.when(both, F.round(_micro("__w6"), 6)).alias("w1"),
+        F.when(both, F.round(_micro("__e6"), 6)).alias("energy"),
     )
 
 
@@ -2409,63 +2194,14 @@ def energy_distance(
     either sample is empty; a point mass at a vs a point mass at b
     reads exactly 2*|a-b|.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
-    a = df_a.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(1).alias("__a"), F.lit(0).alias("__b")
-    )
-    b = df_b.where(F.col(value_col).isNotNull()).select(
-        cents.alias("__y"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
-    )
-    lv = stage(
-        a.unionByName(b)
-        .groupBy("__y")
-        .agg(
-            F.sum("__a").cast("bigint").alias("__c1"),
-            F.sum("__b").cast("bigint").alias("__c2"),
-        )
-    )
-    from .operators._prefix import (
-        exclusive_prefix_sums,
-        next_level,
-        route_for,
-    )
-
-    strat = route_for(lv)
-    nxt = next_level(lv, "__y", materialize=False, strategy=strat)
-    lv2 = exclusive_prefix_sums(
-        nxt, "__y", ("__c1", "__c2"), materialize=False, strategy=strat
-    )
-    tot = lv.agg(
-        F.sum("__c1").cast("bigint").alias("n_a"),
-        F.sum("__c2").cast("bigint").alias("n_b"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    d = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        (F.col("__below___c1") + F.col("__c1")).cast("double") / na
-        - (F.col("__below___c2") + F.col("__c2")).cast("double") / nb,
-    ).otherwise(F.lit(0.0))
-    gap = (F.col("__next") - F.col("__y")).cast("double")
-    term6 = F.round(
-        F.lit(2.0) * d * d * gap * F.lit(1e6), 0
-    ).cast("decimal(38,0)")
-    e6 = (
-        lv2.crossJoin(F.broadcast(tot))
-        .where(F.col("__next").isNotNull())
-        .agg(F.sum(term6).cast("decimal(38,0)").alias("__e6"))
-    )
-    energy = F.coalesce(F.col("__e6").cast("double"), F.lit(0.0)) / F.lit(
-        1e8
-    )
-    return e6.crossJoin(F.broadcast(tot)).select(
-        F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
-        F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
+    p = pooled_levels(df_a, df_b, value_col, adjacency=True)
+    energy = _micro("__e6")
+    na, nb = _n_ab()
+    return _step_integral(p, _energy_term(), "__e6").select(
+        *_counts(),
+        F.when(both_sides(), F.round(energy, 6)).alias("energy"),
         F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0), F.round(energy, 6)
-        ).alias("energy"),
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            F.round(na * nb / (na + nb) * energy, 6),
+            both_sides(), F.round(na * nb / (na + nb) * energy, 6)
         ).alias("t_stat"),
     )
 

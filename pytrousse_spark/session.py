@@ -9,7 +9,19 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath() -> str:
+    """The package's parent directory followed by any
+    ``spark.executorEnv.PYTHONPATH`` already configured (for example in
+    ``spark-defaults.conf``), without duplicates."""
+    prior = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
+    parts = [_PACKAGE_ROOT] + [p for p in prior.split(os.pathsep) if p]
+    return os.pathsep.join(dict.fromkeys(parts))
 
 
 def get_spark(
@@ -35,9 +47,17 @@ def get_spark(
       ``extra_conf={"spark.cleaner.periodicGC.interval": "30min"}`` to
       restore Spark's default.
 
+    - ``spark.executorEnv.PYTHONPATH`` gains the directory that holds
+      this package, merged with any value already configured, so Python
+      workers (``mapInPandas``, pandas UDFs) can import it whatever the
+      driver's working directory. That covers local mode and executors
+      that share the driver's filesystem; on a cluster, ship the package
+      with ``--py-files`` (or ``SparkContext.addPyFile``).
+
     Environment: ``SPARK_GRAFT_CPUS`` (local core count, default 32),
     ``SPARK_GRAFT_DRIVER_MEM`` (default 8g) and ``SPARK_GRAFT_NO_MASTER``
-    (leave the master to ``spark-submit``).
+    (leave the master to ``spark-submit``). ``extra_conf`` is applied
+    last and overrides every default above.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -75,6 +95,7 @@ def get_spark(
         # many-query sessions want exactly this).
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     if master is not None:
         builder = builder.master(master)

@@ -123,6 +123,43 @@ def test_fix_common_errors_end_to_end(spark):
     assert fix.count_errors()["errors_after"] == 0
 
 
+def test_fix_common_errors_profiles_only_repaired_columns(spark, monkeypatch):
+    """After the repair, only the repaired columns are profiled again;
+    the carried profile equals a fresh one and the result equals the
+    re-profiling path's (schema and rows)."""
+    from pytrousse_spark import profiling
+
+    dirty = [str(float(i)) for i in range(20)]
+    dirty[3], dirty[7] = "3,0", "---"
+    df = spark.createDataFrame(
+        [(dirty[i], i, float(i % 4), i % 2, f"s{i % 3}") for i in range(20)],
+        "num string, n int, whole double, b01 int, cat string",
+    )
+    ds = from_df(df)
+    p = ds.profile
+    seen = []
+    real = profiling.profile
+    monkeypatch.setattr(
+        profiling,
+        "profile",
+        lambda d, m=frozenset(): seen.append(d.columns) or real(d, m),
+    )
+    out = RowFix().fix_common_errors(ds)
+    assert seen == [["num"]]
+    monkeypatch.undo()
+
+    fix = RowFix()
+    fixed = fix.fix_typos(ds, ("num",))
+    carried = profiling.profile_changed(
+        fixed.df, ("num",), p, fixed.metadata_cols
+    )
+    assert carried == fixed.profile
+    ref = fix.cols_to_correct_dtype(fixed)
+    assert out.df.schema == ref.df.schema
+    by_n = lambda rows: sorted(rows, key=lambda r: r["n"])  # noqa: E731
+    assert by_n(out.df.collect()) == by_n(ref.df.collect())
+
+
 def test_cols_to_correct_dtype(spark):
     df = spark.createDataFrame(
         [(1.0, 0, 2.5), (2.0, 1, 3.5), (3.0, 0, 4.5)],

@@ -4,6 +4,9 @@ parquet scans (duplicate-subtree smell), exchanges, broadcast nested
 loops, global Sorts, and Python-eval nodes. Build-only: queries that
 execute jobs at plan-build time still run them, so the audit doubles as
 a smoke test. Prints one JSON line per query plus a flagged summary.
+Each row carries ``build_sec`` and ``build_jobs``: the wall and the Spark
+jobs of the query function returning its DataFrame, timed under its own
+job group by ``tools/measure.py``'s ``_phase`` (the explain is outside).
 
 Counts come from :func:`plan_counts`, which reads only the numbered
 operator trees (the formatted plan prints every node twice: once in the
@@ -23,7 +26,6 @@ import json
 import os
 import re
 import sys
-import time
 from contextlib import redirect_stdout
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -98,6 +100,8 @@ def plan_counts(text: str) -> dict[str, int]:
 
 def main() -> None:
     sys.path.insert(0, _ROOT)
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from measure import _phase
     from pytrousse_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -109,15 +113,17 @@ def main() -> None:
     qs = dict(entrymod.queries())
     rows = {}
     for name in sorted(qs):
-        t0 = time.perf_counter()
         try:
-            df = qs[name](spark, sf_dir)
+            df, build_sec, build_jobs = _phase(
+                spark, f"audit:{name}", lambda: qs[name](spark, sf_dir)
+            )
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
             rows[name] = {
                 **plan_counts(buf.getvalue()),
-                "build_sec": round(time.perf_counter() - t0, 2),
+                "build_sec": round(build_sec, 2),
+                "build_jobs": build_jobs,
             }
         except Exception as exc:  # noqa: BLE001
             rows[name] = {"error": str(exc)[:200]}

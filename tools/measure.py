@@ -71,11 +71,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="pytrousse-measure")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(entrymod.queries())
-    try:
-        qs.update(entrymod.bench_extras())
-    except AttributeError:
-        pass
+    qs = {**entrymod.queries(), **entrymod.bench_extras()}
 
     # warm the JVM + parquet footers
     entrymod.q04_filter_agg(spark, sf_dir).write.format("noop").mode(
