@@ -372,7 +372,7 @@ def _headroom_10x(spark, big_dir: str) -> dict:
             from pytrousse_spark.operators import _probe as _pc
 
             _pc.clear()  # self-contained rows (r12 VERDICT item 1)
-            spark.catalog.clearCache()  # drop staged persists
+            spark.catalog.clearCache()  # drop any cached relation (guard)
             t = _timed_noop(fn, spark, big_dir)
             band = _IDLE_BANDS_10X.get(name)
             if band is not None and t > 2 * band:
@@ -841,7 +841,7 @@ def _run_anchor_pass(spark, sf_dir: str, qs: dict, names: list) -> tuple:
     walls: dict[str, float] = {}
     for name in names:
         _pc.clear()  # each timed query self-contained (r12 VERDICT item 1)
-        spark.catalog.clearCache()  # drop staged persists, outside timer
+        spark.catalog.clearCache()  # drop any cached relation, outside timer
         t0 = time.perf_counter()
         try:
             qs[name](spark, sf_dir).write.format("noop").mode(
@@ -953,9 +953,8 @@ def main() -> None:
         # per-query timer; the intra-query memo (one training shared by
         # several consumers inside one query) is untouched.
         _probe_cache.clear()
-        # ... and drop cached staging relations (staging.stage_unbounded
-        # persists, which no cleaner GC releases) — storage blocks from
-        # earlier queries must not
+        # ... and drop any cached relation. The package caches none, so
+        # this is a guard: blocks cached by an earlier query would
         # squeeze this query's execution memory (r12's in-bench vs
         # isolated inflation class). Also outside the timer.
         spark.catalog.clearCache()

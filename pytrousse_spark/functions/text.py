@@ -1053,7 +1053,7 @@ def bigram_nll(df, text_col: str, id_col: str):
     ))
     v_size = unigrams.count()
     # per-bigram rows feed the count agg AND the final per-doc join:
-    # recomputable persist (corpus-sized; r12 VERDICT item 6 class)
+    # reliable checkpoint (corpus-sized; r12 VERDICT item 6 class)
     bi = stage_unbounded(
         base.select("__id", F.explode_outer(bigrams_arr).alias("b"))
         .where(F.col("b").isNotNull())

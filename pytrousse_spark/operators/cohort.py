@@ -1202,7 +1202,7 @@ def linear_attribution_scalable(
     # the staged frames feed ~6 union/window branches each — unstaged,
     # the touch scan + semi filter re-executes per branch (measured in
     # the physical plan: 12+ repeats); both grow with the event table,
-    # so they take the recomputable persist
+    # so they take the reliable checkpoint
     p = stage_unbounded(p)
     t = stage_unbounded(t)
 

@@ -94,12 +94,9 @@ def clean_corpus(
     # The near-dedup stage reads `exact` for its shingle frame and for the
     # survivor anti-join with different column prunings, so the exchanges
     # are not canonically equal and AQE cannot reuse them — without staging
-    # the full gate+dedup aggregation would execute twice. Both `exact` and
-    # the shingle frame grow with the input, so they stage as recomputable
-    # persists, released below so repeated calls in one long session do
-    # not accumulate cached partitions.
+    # the full gate+dedup aggregation would execute twice. `exact` grows
+    # with the input, so it stages as a reliable checkpoint.
     exact = stage_unbounded(exact)
-    sh = stage_unbounded(dd.shingle_frame(exact, text_col, id_col, shingle_n))
     survivors = dd.near_dedup(
         exact,
         text_col,
@@ -109,19 +106,8 @@ def clean_corpus(
         shingle_n=shingle_n,
         threshold=threshold,
         hash_fn=hash_fn,
-        shingles=sh,
     )
-    # Materialize-then-release: the survivors (the filtered, deduped
-    # corpus, far smaller than the input) must be computed from the
-    # cached frames BEFORE they are unpersisted. A staged frame left for
-    # the caller's action would recompute the whole gate+dedup lineage
-    # after the release, so one explicit action stores it here (a noop
-    # write: one job, where a count would add an aggregate's shuffle).
-    out = stage(survivors.select(id_col, "n_tokens", "quality"))
-    out.write.format("noop").mode("overwrite").save()
-    sh.unpersist()
-    exact.unpersist()
-    return out
+    return survivors.select(id_col, "n_tokens", "quality")
 
 
 def clean_corpus_sql(
@@ -729,7 +715,7 @@ def skipgram_pairs(
         staged.select(
             "__doc", F.posexplode("__tk").alias("__pos", "__tok")
         )
-    )  # per-occurrence rows: recomputable persist, not a checkpoint
+    )  # per-occurrence rows: reliable checkpoint, not executor blocks
     freq = stage(occ.groupBy("__tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("__cnt")
     ))
@@ -766,7 +752,7 @@ def skipgram_pairs(
         .select("__doc", "__pos", "__tok")
     )
     # feeds BOTH sides of the window self-join; per-occurrence rows ->
-    # recomputable persist (stage_unbounded), not a checkpoint
+    # reliable checkpoint (stage_unbounded), not executor blocks
     kept = stage_unbounded(kept)
     ctr = kept.select(
         "__doc", F.col("__pos").alias("__pa"), F.col("__tok").alias("__wa")
@@ -912,7 +898,7 @@ def skipgram_negatives(
         staged.select(
             "__doc", F.posexplode("__tk").alias("__pos", "__tok")
         )
-    )  # per-occurrence rows: recomputable persist, not a checkpoint
+    )  # per-occurrence rows: reliable checkpoint, not executor blocks
     freq = stage(occ.groupBy("__tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("__cnt")
     ))
@@ -952,7 +938,7 @@ def skipgram_negatives(
         .select("__doc", "__pos", "__tok")
     )
     # feeds BOTH sides of the window self-join; per-occurrence rows ->
-    # recomputable persist (stage_unbounded), not a checkpoint
+    # reliable checkpoint (stage_unbounded), not executor blocks
     kept = stage_unbounded(kept)
     ctr = kept.select(
         "__doc", F.col("__pos").alias("__pa"), F.col("__tok").alias("__wa")

@@ -286,7 +286,7 @@ def ngram_jaccard_pairs(
             ).alias("__sh"),
         )
     )
-    # per-shingle rows: recomputable persist (r12 VERDICT item 6)
+    # per-shingle rows: reliable checkpoint (r12 VERDICT item 6)
     shingled = stage_unbounded(shingled)
     sizes = shingled.groupBy("__id").agg(F.count(F.lit(1)).alias("__size"))
     l, r = shingled.alias("l"), shingled.alias("r")
@@ -564,7 +564,6 @@ def near_dedup_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     hash_fn: str = "md5",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Verified near-duplicate pairs: MinHash-LSH candidate generation
     (:func:`minhash_lsh_pairs`) followed by exact n-gram Jaccard computed
@@ -578,20 +577,16 @@ def near_dedup_pairs(
     identical to :func:`ngram_jaccard_pairs` (distinct word n-grams,
     ``common / (|a| + |b| - common)``, rounded to 6).
 
-    ``shingles`` optionally supplies the caller's staged
-    :func:`shingle_frame` of ``df``; without it the frame is built and
-    staged here (and stays cached until the caller clears the cache).
+    The :func:`shingle_frame` of ``df`` is staged here as a reliable
+    checkpoint; its files are deleted once the returned frame and its
+    descendants are garbage-collected on the driver.
     """
     # Signature-store pattern: the banding branch and BOTH verify sides
     # would otherwise re-tokenize the corpus (3 executions of the shingle
     # subtree). One staged (id, shingles) frame feeds all three; the text
     # column itself is never materialized or shuffled. Per-doc shingle
-    # arrays are corpus-sized: recomputable persist.
-    sh = (
-        shingles
-        if shingles is not None
-        else stage_unbounded(shingle_frame(df, text_col, id_col, shingle_n))
-    )
+    # arrays are corpus-sized: reliable checkpoint.
+    sh = stage_unbounded(shingle_frame(df, text_col, id_col, shingle_n))
     cands = minhash_lsh_pairs(
         df, text_col, id_col,
         num_perm=num_perm, bands=bands, shingle_n=shingle_n, hash_fn=hash_fn,
@@ -641,20 +636,17 @@ def near_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     hash_fn: str = "md5",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Corpus with verified near-duplicates removed: a document is dropped
     when it has a verified near-duplicate with a SMALLER id (greedy min-id
     survivor — deterministic and single-pass, the standard large-scale
     approximation of transitive-closure clustering; documents only connected
     through a removed intermediate are both kept).
-
-    ``shingles``: as in :func:`near_dedup_pairs`.
     """
     pairs = near_dedup_pairs(
         df, text_col, id_col,
         num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        threshold=threshold, hash_fn=hash_fn, shingles=shingles,
+        threshold=threshold, hash_fn=hash_fn,
     )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, on=id_col, how="left_anti")
@@ -835,7 +827,7 @@ def cross_dedup(
             id_col,
             shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"),
         )
-    )  # per-doc shingle arrays: recomputable persist
+    )  # per-doc shingle arrays: reliable checkpoint
     ref_fp = ref_sh.select(
         fingerprint_from_shingles(F.col("__sh")).alias("__fp")
     ).distinct()
@@ -843,8 +835,8 @@ def cross_dedup(
     # stage1 feeds three consumers (band keys, shingle sets, the final
     # anti-join) with different prunings — without materialization the whole
     # fingerprint anti-join subtree (including the reference fingerprint
-    # scan) executes three times. Recomputable persist: computed once at the
-    # first action, then read back; carries text, so it scales with input.
+    # scan) executes three times. Reliable checkpoint: computed once here,
+    # then read back; carries text, so it scales with input.
     stage1 = stage_unbounded(stage1)
     near = cross_near_dedup_pairs(
         stage1, reference, text_col, id_col,
@@ -2045,8 +2037,8 @@ def winnow_overlap_pairs(
     )
     # the winnowing pass (an md5 per k-gram of every document) feeds
     # THREE subtrees — the df census and both posting join sides; stage
-    # the compact per-fingerprint rows as a recomputable persist so it
-    # runs once without pinning a corpus-sized non-recomputable block
+    # the compact per-fingerprint rows as a reliable checkpoint so it
+    # runs once without pinning a corpus-sized block in executor memory
     fp = stage_unbounded(fp)
     dfc = fp.groupBy("__fp").agg(F.count(F.lit(1)).alias("__df"))
     posting = fp.join(

@@ -41,11 +41,19 @@ def get_spark(
       external oracles (DuckDB) regardless of host timezone.
     - ``spark.cleaner.periodicGC.interval`` is 2min, which forces a
       periodic driver ``System.gc()``. That is the right trade for
-      many-query batch drivers (it drains dead ``staging.stage`` blocks
-      between queries — the r12 finding), but it DOES impose periodic GC
-      pauses; a latency-sensitive caller can pass
+      many-query batch drivers (it lets the cleaner release the blocks
+      and checkpoint files of dead staged frames between queries — the
+      r12 finding), but it DOES impose periodic GC pauses; a
+      latency-sensitive caller can pass
       ``extra_conf={"spark.cleaner.periodicGC.interval": "30min"}`` to
       restore Spark's default.
+    - ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on, so the
+      checkpoint files behind ``staging.stage_unbounded`` frames are
+      deleted once the driver has garbage-collected the frames. Without
+      ``spark.checkpoint.dir`` they are written under a temporary
+      directory that Spark deletes at shutdown; on a cluster, set
+      ``spark.checkpoint.dir`` to shared storage (HDFS, S3, a shared
+      mount), as you ship the package with ``--py-files``.
 
     - ``spark.executorEnv.PYTHONPATH`` gains the directory that holds
       this package, merged with any value already configured, so Python
@@ -86,14 +94,16 @@ def get_spark(
         # managed-table warehouse outside the repo (bucketed-table support)
         .config("spark.sql.warehouse.dir", "/tmp/pytrousse_warehouse")
         # Long-lived sessions (the bench runs ~330 queries in one JVM)
-        # accumulate storage blocks from staged frames: the
-        # ContextCleaner only unpersists them after a JVM GC proves the
-        # RDDs unreachable, and the default periodic-GC interval (30min)
+        # accumulate staged frames: the ContextCleaner releases their
+        # blocks (staging.stage) and checkpoint files
+        # (staging.stage_unbounded) only after a JVM GC proves them
+        # unreachable, and the default periodic-GC interval (30min)
         # exceeds the whole session, so blocks pile up and squeeze
-        # execution memory. A shorter interval lets the cleaner drain
-        # between queries; scale-neutral (production drivers with
-        # many-query sessions want exactly this).
+        # execution memory, and files pile up on disk. A shorter interval
+        # lets the cleaner drain between queries; scale-neutral
+        # (production drivers with many-query sessions want exactly this).
         .config("spark.cleaner.periodicGC.interval", "2min")
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )

@@ -1,25 +1,31 @@
 """The staging module is the package's only way to materialize a frame:
 a source tripwire, the measured job behaviour ``stage``'s docstring
-states, and release of the recomputable persists that operators hold
-only for the length of one call."""
+states, and the one GC-driven lifecycle both helpers share — nothing
+enters the CacheManager, and ``stage_unbounded``'s checkpoint files are
+deleted once their frames are garbage-collected, or at shutdown."""
 
 from __future__ import annotations
 
+import gc
 import inspect
 import os
 import re
+import subprocess
+import sys
+import textwrap
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from pytrousse_spark.io import read_parquet_df
-from pytrousse_spark.staging import stage
+from pytrousse_spark.staging import stage, stage_unbounded
 
 from tests.conftest import SF_DIR
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _STAGING = os.path.join(_ROOT, "pytrousse_spark", "staging.py")
-_RAW = re.compile(r"\.(localCheckpoint|persist|cache|checkpoint)\(")
+_RAW = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+_CACHE = re.compile(r"persist\(|\.cache\(|cacheTable\(|CACHE TABLE|StorageLevel", re.I)
 
 
 def _sources():
@@ -30,20 +36,33 @@ def _sources():
                 yield os.path.join(dirpath, f)
 
 
-def test_no_raw_materialization_outside_staging_module():
-    hits = []
+def _hits(pattern, skip=()):
+    out = []
     for path in _sources():
-        if path == _STAGING:
+        if path in skip:
             continue
         with open(path) as fh:
             for i, line in enumerate(fh, 1):
-                if _RAW.search(line):
-                    hits.append(f"{os.path.relpath(path, _ROOT)}:{i}: {line.strip()}")
+                if pattern.search(line):
+                    out.append(f"{os.path.relpath(path, _ROOT)}:{i}: {line.strip()}")
+    return out
+
+
+def test_no_raw_materialization_outside_staging_module():
+    hits = _hits(_RAW, skip=(_STAGING,))
     assert not hits, "stage through pytrousse_spark.staging:\n" + "\n".join(hits)
 
 
-def test_stage_takes_only_the_frame():
-    assert list(inspect.signature(stage).parameters) == ["df"]
+def test_nothing_is_cached_anywhere():
+    """No persist, cache, unpersist or storage level — the staging module
+    included: its only materializers are the two checkpoints."""
+    hits = _hits(_CACHE)
+    assert not hits, "stage instead of caching:\n" + "\n".join(hits)
+
+
+@pytest.mark.parametrize("helper", [stage, stage_unbounded], ids=["stage", "stage_unbounded"])
+def test_stage_takes_only_the_frame(helper):
+    assert list(inspect.signature(helper).parameters) == ["df"]
 
 
 def _jobs(spark, group, fn):
@@ -78,23 +97,105 @@ def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_clean_corpus_releases_its_persist(spark):
-    from pytrousse_spark.operators import corpus as cp
+def _rdd_dirs(spark) -> set[str]:
+    """The per-RDD directories under the session's checkpoint dir."""
+    ckpt = spark.sparkContext.getCheckpointDir()
+    if ckpt is None:
+        return set()
+    path = ckpt[len("file:"):] if ckpt.startswith("file:") else ckpt
+    return set(os.listdir(path)) if os.path.isdir(path) else set()
 
-    docs = read_parquet_df(spark, f"{SF_DIR}/documents.parquet")
+
+# every registry query that reaches a stage_unbounded caller
+_UNBOUNDED_QUERIES = (
+    "q44 q54 q55 q59 q65 q75 q77 q93 q111 q163 q177 q183 q194 q252 q258 "
+    "q280 q289"
+).split()
+
+
+def test_stage_unbounded_lifecycle_over_registry(spark):
+    """Each query checkpoints at least one frame and leaves the
+    CacheManager empty after its action; once the frames are dropped and
+    the driver has run GC, the cleaner deletes every checkpoint."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    names = [n for n in qs if n.split("_")[0] in _UNBOUNDED_QUERIES]
+    assert len(names) == len(_UNBOUNDED_QUERIES)
     spark.catalog.clearCache()
-    out = cp.clean_corpus(docs)
-    assert _cache_empty(spark)
-    rows = out.collect()
-    assert rows and _cache_empty(spark)
+    before = _rdd_dirs(spark)
+    for name in names:
+        seen = _rdd_dirs(spark)
+        df = qs[name](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+        assert _cache_empty(spark), name
+        assert _rdd_dirs(spark) - seen, f"{name} wrote no checkpoint"
+    del df
+    left = _rdd_dirs(spark) - before
+    deadline = time.monotonic() + 120
+    while left and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(1)
+        left = _rdd_dirs(spark) - before
+    assert not left, f"checkpoints not released after GC: {sorted(left)}"
 
 
-def test_bradley_terry_releases_its_persist(spark):
-    from pytrousse_spark.operators.classifier import bradley_terry
+_PLAIN_SESSION = textwrap.dedent(
+    """
+    import sys
+    from pyspark.sql import SparkSession
+    from pytrousse_spark.operators.dedup import near_dedup_pairs
 
-    games = spark.createDataFrame(
-        [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "a")], "w string, l string"
+    builder = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false")
+    if len(sys.argv) > 1:
+        builder = builder.config("spark.checkpoint.dir", sys.argv[1])
+    spark = builder.getOrCreate()
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox jumps over the lazy dog"),
+         (3, "an entirely different sentence about nothing")],
+        "doc_id long, text string",
     )
-    spark.catalog.clearCache()
-    assert bradley_terry(games, "w", "l").collect()
-    assert _cache_empty(spark)
+    rows = near_dedup_pairs(docs, "text", "doc_id", threshold=0.3).collect()
+    print(spark.sparkContext.getCheckpointDir(), len(rows))
+    """
+)
+
+
+def _run_plain_session(tmp_path, *args) -> str:
+    """Run near_dedup_pairs in a plain ``SparkSession.builder`` session in
+    a child process; return the checkpoint dir (a local path) it used."""
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p
+        ),
+        "SPARK_LOCAL_DIRS": str(tmp_path / "local"),
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _PLAIN_SESSION, *args],
+        env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    ckpt, n_rows = out.stdout.split()[-2:]
+    assert int(n_rows) == 1
+    return ckpt[len("file:"):] if ckpt.startswith("file:") else ckpt
+
+
+def test_plain_session_leaves_no_checkpoint_files(tmp_path):
+    """A session not built by ``get_spark`` checkpoints under a directory
+    Spark deletes at shutdown, so nothing outlives the process."""
+    path = _run_plain_session(tmp_path)
+    assert path.startswith(str(tmp_path / "local")), path
+    # the JVM runs its shutdown hooks after the Python process has exited
+    deadline = time.monotonic() + 60
+    while os.path.exists(path) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not os.path.exists(path), f"checkpoint dir outlived the process: {path}"
+
+
+def test_configured_checkpoint_dir_is_kept(tmp_path):
+    """A deployment's ``spark.checkpoint.dir`` is used as set."""
+    path = _run_plain_session(tmp_path, str(tmp_path / "ckpt"))
+    assert path.startswith(str(tmp_path / "ckpt")), path

@@ -12,6 +12,10 @@ each wall into ``build_s``/``build_jobs`` (the query function returning
 its DataFrame, including any jobs it runs on the way: the map stages of
 staged frames, bounded collects) and ``action_s``/``action_jobs`` (the
 noop write). Jobs are counted per phase through its own Spark job group.
+``ckpt_mb`` is the size of the session's checkpoint directory after the
+action: the files ``staging.stage_unbounded`` wrote and the cleaner has
+not yet deleted (earlier reps' files count until the driver's GC lets
+the cleaner delete them).
 Warm-up: q04 noop once. Before every rep, outside its timer, the
 ``_probe`` memo and the session's cached relations are cleared (as
 ``bench.py`` does), so each rep pays for its own probes and trained
@@ -48,6 +52,20 @@ def _phase(spark, group: str, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
     return out, wall, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _checkpoint_mb(spark) -> float:
+    """Megabytes under the session's checkpoint directory (0 if unset)."""
+    ckpt = spark.sparkContext.getCheckpointDir()
+    if ckpt is None:
+        return 0.0
+    root = ckpt[len("file:"):] if ckpt.startswith("file:") else ckpt
+    size = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+    return round(size / 2**20, 3)
 
 
 def main() -> None:
@@ -93,7 +111,8 @@ def main() -> None:
                 f.write(buf.getvalue())
         walls = []
         ledger: dict[str, list] = {
-            "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": []
+            "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": [],
+            "ckpt_mb": [],
         }
         for rep in range(reps):
             _probe.clear()
@@ -111,6 +130,7 @@ def main() -> None:
             ledger["build_jobs"].append(build_jobs)
             ledger["action_s"].append(round(action_s, 3))
             ledger["action_jobs"].append(action_jobs)
+            ledger["ckpt_mb"].append(_checkpoint_mb(spark))
         results[name] = walls
         print(json.dumps({"query": name, "walls": walls, **ledger}), flush=True)
     print(json.dumps({"all": results}))
