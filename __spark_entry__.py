@@ -4029,7 +4029,8 @@ def q177_linear_attribution_scalable(
     is the densest (user, channel, window-bucket). The oracle is the
     SAME pairwise SQL as q167 — the decomposition must reproduce it
     bit-for-bit (integer micro-unit credits, remainder to the earliest
-    touch with native-type channel tie-break)."""
+    touch with native-type channel tie-break, read from the fused
+    first/last two-bucket as-of q194 shares)."""
     from pytrousse_spark.operators.cohort import linear_attribution_scalable
 
     ev = _t(spark, sf_dir, "events")
@@ -4601,7 +4602,7 @@ def q194_position_attribution_scalable(
     """q190's U-shaped attribution through the first/last/count
     decomposition (operators/cohort.position_attribution_scalable) —
     no pairwise purchase x touch materialization: per-channel windowed
-    counts + the first-build and (new) LAST-build two-bucket as-ofs.
+    counts + one fused first/last two-bucket as-of (q177's frames).
     The skew battery measured the pairwise form at 16.5x under 20%
     single-user skew; this path's max task is the densest (user,
     channel, bucket). The oracle is the SAME pairwise SQL as q190 —

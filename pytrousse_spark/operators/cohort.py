@@ -604,13 +604,17 @@ def unordered_funnel_sql(
     """
 
 
+# max per-user pair mass above which strategy="auto" leaves the pairwise
+# join for the scalable form (see _route_attribution)
+_AUTO_MAX_PAIR_MASS = 4_000_000
+
+
 def _route_attribution(
     purchases: "DataFrame",
     touches: "DataFrame",
     user_col: str,
     strategy: str,
     max_pair_mass: int,
-    density_hint: int | None = None,
 ) -> str:
     """Strategy router shared by :func:`linear_attribution` and
     :func:`position_attribution` (round-7 VERDICT item 2 — the
@@ -631,23 +635,13 @@ def _route_attribution(
     count-decomposition twin; below it the pairwise form is the
     cheaper plan (fewer exchanges). The routing rule is pinned on
     benign + zipfian frames in tests/test_cohort.py.
-
-    ``density_hint``: a precomputed max per-user pair mass. When given,
-    the probe is SKIPPED entirely — pipelines calling attribution
-    repeatedly on the same inputs pay for one probe (or carry the
-    number from their own profiling) instead of re-scanning both
-    inputs per call.
     """
-    from pyspark.sql import functions as F
-
     if strategy not in ("exact", "scalable", "auto"):
         raise ValueError(
             "attribution: strategy must be exact|scalable|auto"
         )
     if strategy != "auto":
         return strategy
-    if density_hint is not None:
-        return "scalable" if density_hint > max_pair_mass else "exact"
 
     def _max_pair_mass() -> int:
         tagged = touches.where(F.col(user_col).isNotNull()).select(
@@ -670,8 +664,7 @@ def _route_attribution(
 
     # memoized per semantic (purchases, touches) pair (r9 VERDICT item
     # 5): a pipeline running linear + position attribution over the
-    # same inputs pays ONE density probe, not two — the same saving
-    # auto_density_hint gives callers explicitly, made automatic.
+    # same inputs pays ONE density probe, not two
     from ._probe import cached_probe
 
     mass = cached_probe(
@@ -683,7 +676,16 @@ def _route_attribution(
     return "scalable" if mass > max_pair_mass else "exact"
 
 
-def linear_attribution(
+def _micro_units(value_col: str):
+    """``value_col`` in exact integer micro-units, as ``__vm``."""
+    return (
+        F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
+        .cast("bigint")
+        .alias("__vm")
+    )
+
+
+def _pairwise_attribution(
     purchases: "DataFrame",
     touches: "DataFrame",
     user_col: str,
@@ -692,65 +694,24 @@ def linear_attribution(
     value_col: str,
     touch_ts_col: str,
     channel_col: str,
-    window_seconds: int = 3 * 86400,
-    strategy: str = "auto",
-    auto_max_pair_mass: int = 4_000_000,
-    auto_density_hint: int | None = None,
+    window_seconds: int,
+    credit,
 ) -> "DataFrame":
-    """Multi-touch LINEAR attribution: every touch in the lookback
-    window before a conversion shares the conversion's value EQUALLY —
-    the equal-credit sibling of last-touch (q140). Credit is computed in
-    exact integer micro-units with INTEGER division, and the division
-    remainder goes to the EARLIEST touch (ties: smallest channel), so
-    per-conversion credit conserves exactly: sum of credits == value,
-    bit-for-bit, with no floating-point fold anywhere.
-
-    Unattributed conversions (no touch in the window) surface as
-    channel NULL with full credit instead of silently dropping —
-    total credited value always equals total conversion value (pinned
-    law in tests/test_cohort.py).
-
-    ``strategy`` routes between the two bit-identical physical forms
-    (round-7 VERDICT item 2 — a user reaching for the obvious name must
-    not get the quadratic-per-hot-user join on skewed data):
-
-    - ``"exact"`` — the pairwise user-keyed range join below: fewest
-      exchanges, but it materializes touches x purchases PER USER in
-      one join partition (measured 18-27x wall degradation when one
-      user owns ~20% of events, BENCH_r06/r07 skew batteries);
-    - ``"scalable"`` — delegate to :func:`linear_attribution_scalable`
-      (bucketed window counts, no pair materialization, max task =
-      densest (user, channel, bucket));
-    - ``"auto"`` (default) — :func:`_route_attribution` probes the
-      maximum per-user pair mass with ONE fused union-agg job and picks
-      ``scalable`` iff it exceeds ``auto_max_pair_mass``. Pass
-      ``auto_density_hint`` (a precomputed max pair mass) to skip the
-      probe when calling attribution repeatedly on the same inputs.
-
-    Returns ``(channel, n_conversions, n_touches, credit)`` where
-    ``credit`` is micro-units / 1e6 rounded 6.
+    """The ``"exact"`` form of both attribution rules: a user-keyed left
+    range join of each purchase to its touches in ``[pts - w, pts]``.
+    Every joined row carries the purchase's micro-unit value ``__vm``,
+    its in-window touch count ``__nt`` and the touch's position
+    ``__rn`` in ``(ts ASC, channel ASC NULLS LAST)`` order; a purchase
+    with no touch keeps one row with ``__nt = 0`` and channel NULL.
+    ``credit`` is the rule's integer credit of one row over those
+    columns; the rollup sums it per channel. Fewest exchanges, but the
+    join materializes touches x purchases per user in one partition.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    routed = _route_attribution(
-        purchases, touches, user_col, strategy, auto_max_pair_mass,
-        density_hint=auto_density_hint,
-    )
-    if routed == "scalable":
-        return linear_attribution_scalable(
-            purchases, touches, user_col, purchase_id_col,
-            purchase_ts_col, value_col, touch_ts_col, channel_col,
-            window_seconds,
-        )
-
     p = purchases.select(
         F.col(user_col).alias("__u"),
         F.col(purchase_id_col).alias("__pid"),
         F.col(purchase_ts_col).alias("__pts"),
-        F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
-        .cast("bigint")
-        .alias("__vm"),
+        _micro_units(value_col),
     )
     t = touches.select(
         F.col(user_col).alias("__u"),
@@ -779,14 +740,6 @@ def linear_attribution(
         F.count("__tts").over(wpid).alias("__nt"),
         F.row_number().over(worder).alias("__rn"),
     )
-    credit = F.when(
-        F.col("__nt") == 0, F.col("__vm")  # unattributed: full credit
-    ).otherwise(
-        F.expr("__vm div __nt")
-        + F.when(
-            F.col("__rn") == 1, F.col("__vm") % F.col("__nt")
-        ).otherwise(F.lit(0))
-    )
     return (
         staged.withColumn("__cr", credit.cast("bigint"))
         .groupBy(F.col("__ch").alias("channel"))
@@ -799,15 +752,14 @@ def linear_attribution(
     )
 
 
-def linear_attribution_sql(
+def _attribution_sql(
     purchases_sql: str,
     touches_sql: str,
-    window_seconds: int = 3 * 86400,
+    window_seconds: int,
+    credit_sql: str,
 ) -> str:
-    """DuckDB twin of :func:`linear_attribution`. The two input
-    subqueries must project the staged names ``__u, __pid, __pts, __vm``
-    and ``__u, __tts, __ch`` respectively (micro-unit staging included),
-    mirroring the operator's internal frames."""
+    """DuckDB twin of :func:`_pairwise_attribution`; ``credit_sql`` is
+    the rule's credit as a SQL expression over ``__vm, __nt, __rn``."""
     return f"""
     WITH p AS ({purchases_sql}), t AS ({touches_sql}), j AS (
         SELECT p.__pid, p.__vm, t.__ch, t.__tts
@@ -826,10 +778,7 @@ def linear_attribution_sql(
         FROM j
     ), credited AS (
         SELECT *,
-               CAST(CASE WHEN __nt = 0 THEN __vm
-                    ELSE __vm // __nt
-                         + CASE WHEN __rn = 1 THEN __vm % __nt ELSE 0 END
-               END AS BIGINT) AS __cr
+               CAST({credit_sql} AS BIGINT) AS __cr
         FROM staged
     )
     SELECT __ch AS channel,
@@ -840,6 +789,14 @@ def linear_attribution_sql(
     GROUP BY 1
     ORDER BY 1
     """
+
+
+def _null_ids(df: "DataFrame", types: dict[str, str]) -> "DataFrame":
+    """``df`` plus one typed NULL column per ``types`` entry: the probe
+    id columns a build branch carries so it unions with the probes."""
+    for c, t in types.items():
+        df = df.withColumn(c, F.lit(None).cast(t))
+    return df
 
 
 def _windowed_build_counts(
@@ -880,9 +837,6 @@ def _windowed_build_counts(
     ``id_cols`` must uniquely identify probe rows. Returns
     ``(*id_cols, __wn)``.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     b = builds.where(F.col(build_ts).isNotNull()).withColumn(
         "__bb", F.floor(F.col(build_ts) / F.lit(w_us)).cast("long")
     )
@@ -904,11 +858,6 @@ def _windowed_build_counts(
     # identified by __ch) — select each column once
     extra_ids = [c for c in id_cols if c not in key_cols]
     id_types = {c: dict(pr.dtypes)[c] for c in extra_ids}
-
-    def _null_ids(df):
-        for c, t in id_types.items():
-            df = df.withColumn(c, F.lit(None).cast(t))
-        return df
 
     # -- step 2: bucket-level as-of for the two prefix reads ------------
     probe_b = (
@@ -932,7 +881,8 @@ def _windowed_build_counts(
             F.col("__cuminc").alias("__cum"),
         )
         .withColumn("__sign", F.lit(0))
-        .withColumn("__tag", F.lit(1))
+        .withColumn("__tag", F.lit(1)),
+        id_types,
     )
     wb_asof = (
         Window.partitionBy(*key_cols)
@@ -973,7 +923,7 @@ def _windowed_build_counts(
         F.col(build_ts).alias("__ets"),
     ).withColumn("__cin", F.count(F.lit(1)).over(wb_in))
     bev_f = _null_ids(
-        bev.withColumn("__tag", F.lit(1))
+        bev.withColumn("__tag", F.lit(1)), id_types
     ).withColumn("__sign", F.lit(0))
     pev_t = (
         pr.select(
@@ -1019,7 +969,7 @@ def _windowed_build_counts(
     )
 
 
-def _windowed_first_build(
+def _windowed_first_last_build(
     probes: "DataFrame",
     builds: "DataFrame",
     key_cols: list[str],
@@ -1029,60 +979,57 @@ def _windowed_first_build(
     payload_cols: list[str],
     w_us: int,
 ) -> "DataFrame":
-    """EARLIEST build row in ``[probe_ts - w, probe_ts]`` per probe
-    (ties: lexicographically smallest payload, NULL payload last) —
-    again without pairs or per-key windows. The window spans at most
-    the two buckets ``bx = floor((t-w)/w)`` and ``bp = bx + 1``, so:
+    """EARLIEST and LATEST build row of the same key in
+    ``[probe_ts - w, probe_ts]`` per probe, in the pairwise ``(ts ASC,
+    payload ASC NULLS LAST)`` order: FIRST = min (ts, payload) with
+    NULL payload last, LAST = max with NULL payload first; builds at
+    the frame edges stay inside. No pairs and no per-key window: the
+    frame spans at most the buckets ``bx = bp - 1`` and
+    ``bp = floor(t / w)``, so each end has two candidates, and A wins
+    when it exists:
 
-    - candidate A: first build at or after ``x = t - w`` INSIDE bucket
-      ``bx`` (a descending union+window per (key, bucket): traversing
-      decreasing timestamps, the last build seen before the probe is
-      the smallest timestamp >= x);
-    - candidate B: bucket ``bp``'s overall first build (a tiny
-      per-(key, bucket) min-struct aggregate), valid if its ts <= t
-      (everything in bucket bp is >= x by construction).
+    - candidate A, from ONE event-level union+window pass (builds once,
+      probes twice, two window functions over one exchange): FIRST
+      reads bucket ``bx`` from ``x = t - w`` in descending order (the
+      last build seen is the smallest (ts, payload) >= x), LAST reads
+      bucket ``bp`` up to ``t`` in ascending order (the largest <= t);
+    - candidate B, from ONE per-(key, bucket) min/max-struct agg: FIRST
+      takes bucket ``bp``'s min if its ts <= t, LAST takes bucket
+      ``bx``'s max if its ts >= x.
 
-    A exists -> A wins (bucket bx < bucket bp). Returns
-    ``(*id_cols, __fts, *payload_cols)`` with NULLs when the window is
-    empty."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
+    Probe rows with NULL timestamp get no output row; a NULL key is a
+    real group. Equality with a brute force is pinned in
+    tests/test_cohort.py. Returns ``(*id_cols, f_<payload>...,
+    l_<payload>...)``, NULLs when the window is empty.
+    """
     b = builds.where(F.col(build_ts).isNotNull()).withColumn(
         "__bb", F.floor(F.col(build_ts) / F.lit(w_us)).cast("long")
     )
-    bs = b.select(
-        *key_cols, "__bb", F.col(build_ts).alias("__ets"), *payload_cols
-    )
-    # tie-break ordering: NULL payload LAST via an is-null flag before
-    # each NATIVE-typed payload field (a string sentinel would mis-order
-    # numeric channels: "10" < "2"), interleaved per column
+    # tie-break ordering: an is-null flag before each NATIVE-typed
+    # payload field (a string sentinel would mis-order numeric
+    # channels: "10" < "2")
     ord_fields = []
     for c in payload_cols:
         ord_fields.append(F.col(c).isNull().cast("int").alias(f"nf_{c}"))
         ord_fields.append(F.col(c).alias(f"pl_{c}"))
-    bs = bs.withColumn(
-        "__st", F.struct(F.col("__ets").alias("ts"), *ord_fields)
-    )
+    bs = b.select(
+        *key_cols, "__bb", F.col(build_ts).alias("__ets"), *payload_cols
+    ).withColumn("__st", F.struct(F.col("__ets").alias("ts"), *ord_fields))
 
     pr = probes.where(F.col(probe_ts).isNotNull()).withColumn(
         "__bp", F.floor(F.col(probe_ts) / F.lit(w_us)).cast("long")
     )
     id_types = {c: dict(pr.dtypes)[c] for c in id_cols}
-
-    def _null_ids(df):
-        for c, t in id_types.items():
-            df = df.withColumn(c, F.lit(None).cast(t))
-        return df
-
     st_type = bs.schema["__st"].dataType
 
-    # candidate A: descending as-of inside bucket bx
-    bA = _null_ids(
+    # shared union frame: builds once (role NULL), probes twice
+    bEv = _null_ids(
         bs.select(*key_cols, F.col("__bb").alias("__eb"), "__ets", "__st")
-        .withColumn("__tag", F.lit(0))  # builds before probe at tie ts==x
+        .withColumn("__tag", F.lit(0))
+        .withColumn("__role", F.lit(None).cast("int")),
+        id_types,
     )
-    pA = (
+    pF = (
         pr.select(
             *key_cols, *id_cols,
             (F.col("__bp") - 1).alias("__eb"),
@@ -1090,53 +1037,290 @@ def _windowed_first_build(
         )
         .withColumn("__st", F.lit(None).cast(st_type))
         .withColumn("__tag", F.lit(1))
+        .withColumn("__role", F.lit(0))
     )
-    wA = (
+    pL = (
+        pr.select(
+            *key_cols, *id_cols,
+            F.col("__bp").alias("__eb"),
+            F.col(probe_ts).alias("__ets"),
+        )
+        .withColumn("__st", F.lit(None).cast(st_type))
+        .withColumn("__tag", F.lit(1))
+        .withColumn("__role", F.lit(1))
+    )
+    ev = pF.unionByName(pL).unionByName(bEv.select(*pF.columns))
+    # FIRST as-of: decreasing ts, builds (tag 0) first / LARGER struct
+    # first at ties, so last() retains the smallest (ts, payload) >= x
+    wF = (
         Window.partitionBy(*key_cols, "__eb")
-        # decreasing ts; among equal ts, builds (tag 0) first and LARGER
-        # payload first, so last() retains the smallest payload
         .orderBy(
-            F.col("__ets").desc(), F.col("__tag").asc(),
-            F.col("__st").desc(),
+            F.col("__ets").desc(), F.col("__tag").asc(), F.col("__st").desc()
         )
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    candA = (
-        pA.unionByName(bA.select(*pA.columns))
-        .withColumn("__fa", F.last("__st", ignorenulls=True).over(wA))
+    # LAST as-of: increasing ts, builds first / SMALLER struct first at
+    # ties, so last() retains the largest (ts, payload) <= t
+    wL = (
+        Window.partitionBy(*key_cols, "__eb")
+        .orderBy(
+            F.col("__ets").asc(), F.col("__tag").asc(), F.col("__st").asc()
+        )
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cand_a = (
+        ev.withColumn("__fa", F.last("__st", ignorenulls=True).over(wF))
+        .withColumn("__la", F.last("__st", ignorenulls=True).over(wL))
         .where(F.col("__tag") == 1)
-        .select(*id_cols, "__fa")
+        .groupBy(*id_cols)
+        .agg(
+            F.max(F.when(F.col("__role") == 0, F.col("__fa"))).alias("__fa"),
+            F.max(F.when(F.col("__role") == 1, F.col("__la"))).alias("__la"),
+        )
     )
 
-    # candidate B: per-bucket first build, joined on (key, bucket bp)
-    fb = bs.groupBy(*key_cols, "__bb").agg(F.min("__st").alias("__fb"))
-    cond = pr["__bp"] == fb["__bb"]
-    for c in key_cols:
-        cond = cond & pr[c].eqNullSafe(fb[c])
-    candB = (
-        pr.join(fb, cond, "left")
-        .select(
-            *[pr[c] for c in id_cols],
-            F.col(probe_ts).alias("__pt_us"),
-            "__fb",
-        )
-        .withColumn(
-            "__fb",
-            F.when(
-                F.col("__fb.ts") <= F.col("__pt_us"), F.col("__fb")
-            ),
-        )
-        .select(*id_cols, "__fb")
+    # candidate B both sides from ONE per-bucket agg: probes exploded to
+    # their two read buckets, one equi-join, re-grouped per probe
+    mm = bs.groupBy(*key_cols, "__bb").agg(
+        F.min("__st").alias("__fb"), F.max("__st").alias("__lb")
     )
+    pq = pr.select(
+        *key_cols, *id_cols,
+        F.col(probe_ts).alias("__pt_us"),
+        F.explode(
+            F.array(
+                F.struct(F.col("__bp").alias("__qb"), F.lit(0).alias("__role")),
+                F.struct(
+                    (F.col("__bp") - 1).alias("__qb"), F.lit(1).alias("__role")
+                ),
+            )
+        ).alias("__q"),
+    ).select(
+        *key_cols, *id_cols, "__pt_us",
+        F.col("__q.__qb").alias("__qb"), F.col("__q.__role").alias("__role"),
+    )
+    jc = pq["__qb"] == mm["__bb"]
+    for c in key_cols:
+        jc = jc & pq[c].eqNullSafe(mm[c])
+    cand_b = (
+        pq.join(mm, jc, "left")
+        .select(
+            *[pq[c] for c in id_cols],
+            F.when(
+                (F.col("__role") == 0)
+                & (F.col("__fb.ts") <= F.col("__pt_us")),
+                F.col("__fb"),
+            ).alias("__fbv"),
+            F.when(
+                (F.col("__role") == 1)
+                & (F.col("__lb.ts") >= F.col("__pt_us") - F.lit(w_us)),
+                F.col("__lb"),
+            ).alias("__lbv"),
+        )
+        .groupBy(*id_cols)
+        .agg(F.max("__fbv").alias("__fb"), F.max("__lbv").alias("__lb"))
+    )
+
     jcond = None
     for c in id_cols:
-        term = candA[c].eqNullSafe(candB[c])
+        term = cand_a[c].eqNullSafe(cand_b[c])
         jcond = term if jcond is None else (jcond & term)
-    best = F.coalesce(candA["__fa"], candB["__fb"])
-    return candA.join(candB, jcond, "inner").select(
-        *[candA[c] for c in id_cols],
-        best.getField("ts").alias("__fts"),
-        *[best.getField(f"pl_{c}").alias(c) for c in payload_cols],
+    best_f = F.coalesce(cand_a["__fa"], cand_b["__fb"])
+    best_l = F.coalesce(cand_a["__la"], cand_b["__lb"])
+    return cand_a.join(cand_b, jcond, "inner").select(
+        *[cand_a[c] for c in id_cols],
+        *[best_f.getField(f"pl_{c}").alias(f"f_{c}") for c in payload_cols],
+        *[best_l.getField(f"pl_{c}").alias(f"l_{c}") for c in payload_cols],
+    )
+
+
+def _scalable_attribution_frames(
+    purchases: "DataFrame",
+    touches: "DataFrame",
+    user_col: str,
+    purchase_id_col: str,
+    purchase_ts_col: str,
+    value_col: str,
+    touch_ts_col: str,
+    channel_col: str,
+    window_seconds: int,
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """What both scalable credit rules read, with zero pair
+    materialization; max task = densest (user, channel, bucket):
+
+    - ``ntc`` = ``(__pid, __ch, __ntc)``, each purchase's in-window
+      touch count per channel (only channels it has, ``__ntc > 0``),
+      via :func:`_windowed_build_counts` keyed by (user, channel);
+    - ``p_nt`` = every purchase (``__pid, __vm`` among its columns)
+      with its total touch count ``__nt``, the sum of its ``ntc`` (0
+      when unattributed);
+    - ``fl`` = ``(__pid, __fch, __lch)``, the channels of each
+      purchase's first and last in-window touch in the pairwise order,
+      via :func:`_windowed_first_last_build`.
+
+    NULL-user rows behave exactly as the pairwise equi-join: touches
+    with NULL user are dropped, NULL-user purchases go unattributed.
+    """
+    w_us = window_seconds * 1_000_000
+    p = purchases.select(
+        F.col(user_col).alias("__u"),
+        F.col(purchase_id_col).alias("__pid"),
+        F.unix_micros(F.col(purchase_ts_col)).alias("__ptu"),
+        _micro_units(value_col),
+    )
+    t = touches.where(F.col(user_col).isNotNull()).select(
+        F.col(user_col).alias("__u"),
+        F.unix_micros(F.col(touch_ts_col)).alias("__ttu"),
+        F.col(channel_col).alias("__ch"),
+    )
+    # touches of users with no conversion at all contribute to no count
+    # and no first/last touch — drop them before any window machinery
+    t = t.join(p.select("__u").distinct(), "__u", "semi")
+    # the staged frames feed ~6 union/window branches each — unstaged,
+    # the touch scan + semi filter re-executes per branch (measured in
+    # the physical plan: 12+ repeats); both grow with the event table,
+    # so they take the reliable checkpoint
+    p = stage_unbounded(p)
+    t = stage_unbounded(t)
+
+    # probe only the (user, channel) combinations that exist in touches
+    # (a cross join against ALL channels cost 12x on benign data); the
+    # hot user contributes purchases x its-channel-count probe rows —
+    # linear, never quadratic. NULL-user purchases get no probes and
+    # fall through as unattributed, matching the pairwise equi-join's
+    # NULL rejection.
+    user_channels = t.select("__u", "__ch").distinct()
+    pc = p.join(user_channels, "__u", "inner")
+    ntc = _windowed_build_counts(
+        pc, t, ["__u", "__ch"], ["__pid", "__ch"], "__ptu", "__ttu", w_us
+    ).withColumnRenamed("__wn", "__ntc").where(F.col("__ntc") > 0)
+    # nt = sum of the per-channel counts (every touch carries exactly
+    # one channel value, NULL included) — no third windowed pass
+    nt = ntc.groupBy("__pid").agg(F.sum("__ntc").alias("__nt"))
+    p_nt = p.join(nt, "__pid", "left").withColumn(
+        "__nt", F.coalesce(F.col("__nt"), F.lit(0))
+    )
+    fl = _windowed_first_last_build(
+        p, t, ["__u"], ["__pid"], "__ptu", "__ttu", ["__ch"], w_us
+    ).select(
+        "__pid",
+        F.col("f___ch").alias("__fch"),
+        F.col("l___ch").alias("__lch"),
+    )
+    return ntc, p_nt, fl
+
+
+def _credit_rows(df: "DataFrame", channel, cru, touches=None) -> "DataFrame":
+    """One scalable credit frame ``(__pid, channel, __touches, __cru)``:
+    ``cru`` micro-units to ``channel`` per row of ``df``, counting
+    ``touches`` touches (none by default)."""
+    if touches is None:
+        touches = F.lit(0).cast("bigint")
+    return df.select(
+        "__pid",
+        channel.alias("channel"),
+        touches.alias("__touches"),
+        cru.alias("__cru"),
+    )
+
+
+def _channel_rollup(*frames: "DataFrame") -> "DataFrame":
+    """Sum the scalable credit frames per channel into the pairwise
+    rollup's ``(channel, n_conversions, n_touches, credit)``."""
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return (
+        out.groupBy("channel")
+        .agg(
+            F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
+            F.sum("__touches").cast("bigint").alias("n_touches"),
+            F.round(F.sum("__cru") / F.lit(1e6), 6).alias("credit"),
+        )
+        .orderBy("channel")
+    )
+
+
+def linear_attribution(
+    purchases: "DataFrame",
+    touches: "DataFrame",
+    user_col: str,
+    purchase_id_col: str,
+    purchase_ts_col: str,
+    value_col: str,
+    touch_ts_col: str,
+    channel_col: str,
+    window_seconds: int = 3 * 86400,
+    strategy: str = "auto",
+) -> "DataFrame":
+    """Multi-touch LINEAR attribution: every touch in the lookback
+    window before a conversion shares the conversion's value EQUALLY —
+    the equal-credit sibling of last-touch (q140). Credit is computed in
+    exact integer micro-units with INTEGER division, and the division
+    remainder goes to the EARLIEST touch (ties: smallest channel), so
+    per-conversion credit conserves exactly: sum of credits == value,
+    bit-for-bit, with no floating-point fold anywhere.
+
+    Unattributed conversions (no touch in the window) surface as
+    channel NULL with full credit instead of silently dropping —
+    total credited value always equals total conversion value (pinned
+    law in tests/test_cohort.py).
+
+    ``strategy`` routes between the two bit-identical physical forms
+    (round-7 VERDICT item 2 — a user reaching for the obvious name must
+    not get the quadratic-per-hot-user join on skewed data):
+
+    - ``"exact"`` — the pairwise user-keyed range join
+      (:func:`_pairwise_attribution`): fewest exchanges, but it
+      materializes touches x purchases PER USER in one join partition
+      (measured 18-27x wall degradation when one user owns ~20% of
+      events, BENCH_r06/r07 skew batteries);
+    - ``"scalable"`` — delegate to :func:`linear_attribution_scalable`
+      (bucketed window counts, no pair materialization, max task =
+      densest (user, channel, bucket));
+    - ``"auto"`` (default) — :func:`_route_attribution` probes the
+      maximum per-user pair mass with ONE fused union-agg job, memoized
+      per input pair, and picks ``scalable`` iff it exceeds
+      ``_AUTO_MAX_PAIR_MASS``.
+
+    Returns ``(channel, n_conversions, n_touches, credit)`` where
+    ``credit`` is micro-units / 1e6 rounded 6.
+    """
+    args = (
+        user_col, purchase_id_col, purchase_ts_col, value_col,
+        touch_ts_col, channel_col, window_seconds,
+    )
+    routed = _route_attribution(
+        purchases, touches, user_col, strategy, _AUTO_MAX_PAIR_MASS
+    )
+    if routed == "scalable":
+        return linear_attribution_scalable(purchases, touches, *args)
+    credit = F.when(
+        F.col("__nt") == 0, F.col("__vm")  # unattributed: full credit
+    ).otherwise(
+        F.expr("__vm div __nt")
+        + F.when(
+            F.col("__rn") == 1, F.col("__vm") % F.col("__nt")
+        ).otherwise(F.lit(0))
+    )
+    return _pairwise_attribution(purchases, touches, *args, credit)
+
+
+def linear_attribution_sql(
+    purchases_sql: str,
+    touches_sql: str,
+    window_seconds: int = 3 * 86400,
+) -> str:
+    """DuckDB twin of :func:`linear_attribution`. The two input
+    subqueries must project the staged names ``__u, __pid, __pts, __vm``
+    and ``__u, __tts, __ch`` respectively (micro-unit staging included),
+    mirroring the operator's internal frames."""
+    return _attribution_sql(
+        purchases_sql, touches_sql, window_seconds,
+        """CASE WHEN __nt = 0 THEN __vm
+                    ELSE __vm // __nt
+                         + CASE WHEN __rn = 1 THEN __vm % __nt ELSE 0 END
+               END""",
     )
 
 
@@ -1156,117 +1340,225 @@ def linear_attribution_scalable(
     measured the pairwise range join at **18-24x** wall degradation
     when one user owns ~20% of events: the per-user join partition
     materializes touches x purchases for the hot user in ONE task.
-    This variant never builds pairs at all:
-
-    - per-purchase in-window touch count ``nt`` via
-      :func:`_windowed_build_counts` keyed by user;
-    - per-(purchase, channel) counts ``nt_ch`` via the same machinery
-      keyed by (user, channel), probing purchases x the (small,
-      broadcast) distinct-channel frame — channels are the declared
-      low-cardinality axis of attribution;
-    - the remainder's target (earliest touch in window, ties by
-      smallest channel NULLs-last) via :func:`_windowed_first_build`;
-    - channel credit = ``nt_ch * (vm div nt)`` + remainder at the
-      earliest channel + full value at channel NULL for unattributed
-      conversions — bit-identical to the pairwise rollup, which
-      remains the DuckDB oracle (gate q177 shares q167's oracle).
+    This variant never builds pairs at all: from the frames of
+    :func:`_scalable_attribution_frames`, channel credit =
+    ``ntc * (vm div nt)`` + the remainder at the earliest touch's
+    channel + full value at channel NULL for unattributed conversions
+    — bit-identical to the pairwise rollup, which remains the DuckDB
+    oracle (gate q177 shares q167's oracle).
 
     Cost: a handful of (key, bucket)-partitioned passes over
-    touches + |channels| x purchases; max task = densest (user,
-    channel, 3-day-bucket); zero pair materialization. Equality with
-    the pairwise operator is pinned on adversarial frames (edge ties,
-    NULL user/ts/channel, empty buckets) in tests/test_cohort.py.
-    NULL-user rows behave exactly as the pairwise equi-join: touches
-    with NULL user are dropped, NULL-user purchases go unattributed.
+    touches + the (user, channel) pairs x purchases; max task =
+    densest (user, channel, 3-day-bucket); zero pair materialization.
+    Equality with the pairwise operator is pinned on adversarial frames
+    (edge ties, NULL user/ts/channel, empty buckets) in
+    tests/test_cohort.py.
     """
-    from pyspark.sql import functions as F
-
-    w_us = window_seconds * 1_000_000
-
-    p = purchases.select(
-        F.col(user_col).alias("__u"),
-        F.col(purchase_id_col).alias("__pid"),
-        F.unix_micros(F.col(purchase_ts_col)).alias("__ptu"),
-        F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
-        .cast("bigint")
-        .alias("__vm"),
+    ntc, p_nt, fl = _scalable_attribution_frames(
+        purchases, touches, user_col, purchase_id_col, purchase_ts_col,
+        value_col, touch_ts_col, channel_col, window_seconds,
     )
-    t = touches.where(F.col(user_col).isNotNull()).select(
-        F.col(user_col).alias("__u"),
-        F.unix_micros(F.col(touch_ts_col)).alias("__ttu"),
-        F.col(channel_col).alias("__ch"),
-    )
-    # touches of users with no conversion at all contribute to no count
-    # and no remainder — drop them before any window machinery
-    t = t.join(p.select("__u").distinct(), "__u", "semi")
-    # the staged frames feed ~6 union/window branches each — unstaged,
-    # the touch scan + semi filter re-executes per branch (measured in
-    # the physical plan: 12+ repeats); both grow with the event table,
-    # so they take the reliable checkpoint
-    p = stage_unbounded(p)
-    t = stage_unbounded(t)
-
-    # probe only the (user, channel) combinations that exist in touches
-    # (a cross join against ALL channels cost 12x on benign data); the
-    # hot user contributes purchases x its-channel-count probe rows —
-    # linear, never quadratic. NULL-user purchases get no probes and
-    # fall through to the unattributed frame, matching the pairwise
-    # equi-join's NULL rejection.
-    user_channels = t.select("__u", "__ch").distinct()
-    pc = p.join(user_channels, "__u", "inner")
-    ntc = _windowed_build_counts(
-        pc, t, ["__u", "__ch"], ["__pid", "__ch"], "__ptu", "__ttu", w_us
-    ).withColumnRenamed("__wn", "__ntc").where(F.col("__ntc") > 0)
-
-    # nt = sum of the per-channel counts (every touch carries exactly
-    # one channel value, NULL included) — no third windowed pass
-    nt = ntc.groupBy("__pid").agg(F.sum("__ntc").alias("__nt"))
-    p_nt = p.join(nt, "__pid", "left").withColumn(
-        "__nt", F.coalesce(F.col("__nt"), F.lit(0))
-    )
-
-    first = _windowed_first_build(
-        p, t, ["__u"], ["__pid"], "__ptu", "__ttu", ["__ch"], w_us
-    )
-
+    # not staged, unlike position's base: a stage here runs the windowed
+    # passes as build-time jobs, and q177 measured ~30 % slower at sf0.1
     base = p_nt.select("__pid", "__vm", "__nt")
-    # frame A: per-channel unit credits
-    a = (
-        ntc.join(base, "__pid", "inner")
-        .select(
-            "__pid",
-            F.col("__ch").alias("channel"),
-            F.col("__ntc").alias("__touches"),
-            (F.col("__ntc") * F.expr("__vm div __nt")).alias("__cru"),
+    return _channel_rollup(
+        # per-channel unit credits
+        _credit_rows(
+            ntc.join(base, "__pid", "inner"), F.col("__ch"),
+            F.col("__ntc") * F.expr("__vm div __nt"), F.col("__ntc"),
+        ),
+        # the division remainder at the earliest touch's channel
+        _credit_rows(
+            base.where(F.col("__nt") > 0).join(fl, "__pid", "inner"),
+            F.col("__fch"), F.col("__vm") % F.col("__nt"),
+        ),
+        # unattributed conversions: full value, channel NULL
+        _credit_rows(
+            base.where(F.col("__nt") == 0),
+            F.lit(None).cast(ntc.schema["__ch"].dataType), F.col("__vm"),
+        ),
+    )
+
+
+def position_attribution(
+    purchases: "DataFrame",
+    touches: "DataFrame",
+    user_col: str,
+    purchase_id_col: str,
+    purchase_ts_col: str,
+    value_col: str,
+    touch_ts_col: str,
+    channel_col: str,
+    window_seconds: int = 3 * 86400,
+    strategy: str = "auto",
+) -> "DataFrame":
+    """Multi-touch POSITION-BASED (U-shaped 40/20/40) attribution:
+    the first and last touch in the lookback window each take 40% of
+    the conversion value, the middle touches split the remaining 20%
+    equally — the standard position model between linear (q167) and
+    last-touch (q140). One touch takes 100%; two touches split 50/50.
+
+    Credit arithmetic is exact integer micro-units: the 40% shares are
+    ``(vm * 4) div 10`` (first and last), the middle pool is whatever
+    remains (so the three shares conserve ``vm`` bit-for-bit even when
+    vm is not divisible by 10), middle splits use integer division
+    with the remainder pinned to the FIRST touch (the
+    :func:`linear_attribution` convention — ties: smallest channel).
+    Unattributed conversions surface as channel NULL with full credit
+    — total credited value always equals total conversion value
+    (pinned law).
+
+    ``strategy`` = ``"exact"`` | ``"scalable"`` | ``"auto"`` (default),
+    exactly as :func:`linear_attribution`: the pairwise user-keyed join
+    measured 16-20x wall under 20% single-user skew (BENCH_r06/r07),
+    so ``"auto"`` probes the max per-user pair mass
+    (:func:`_route_attribution`) and routes to
+    :func:`position_attribution_scalable` above
+    ``_AUTO_MAX_PAIR_MASS`` — identical results bit-for-bit.
+
+    Returns ``(channel, n_conversions, n_touches, credit)``.
+    """
+    args = (
+        user_col, purchase_id_col, purchase_ts_col, value_col,
+        touch_ts_col, channel_col, window_seconds,
+    )
+    routed = _route_attribution(
+        purchases, touches, user_col, strategy, _AUTO_MAX_PAIR_MASS
+    )
+    if routed == "scalable":
+        return position_attribution_scalable(purchases, touches, *args)
+    first40 = F.expr("(__vm * 4) div 10")
+    mid_pool = F.col("__vm") - F.lit(2) * first40
+    mid_n = F.col("__nt") - F.lit(2)
+    credit = (
+        F.when(F.col("__nt") == 0, F.col("__vm"))
+        .when(F.col("__nt") == 1, F.col("__vm"))
+        .when(
+            F.col("__nt") == 2,
+            F.expr("__vm div 2")
+            + F.when(F.col("__rn") == 1, F.col("__vm") % 2).otherwise(
+                F.lit(0)
+            ),
+        )
+        .when(F.col("__rn") == 1, first40 + mid_pool % mid_n)
+        .when(F.col("__rn") == F.col("__nt"), first40)
+        .otherwise(
+            F.expr("((__vm - 2 * ((__vm * 4) div 10)) div (__nt - 2))")
         )
     )
-    # frame B: the division remainder at the earliest touch's channel
-    bframe = (
-        base.where(F.col("__nt") > 0)
-        .join(first, "__pid", "inner")
-        .select(
-            "__pid",
-            F.col("__ch").alias("channel"),
-            F.lit(0).cast("bigint").alias("__touches"),
-            (F.col("__vm") % F.col("__nt")).alias("__cru"),
-        )
+    return _pairwise_attribution(purchases, touches, *args, credit)
+
+
+def position_attribution_sql(
+    purchases_sql: str,
+    touches_sql: str,
+    window_seconds: int = 3 * 86400,
+) -> str:
+    """DuckDB twin of :func:`position_attribution` — same staged-name
+    contract as :func:`linear_attribution_sql`, identical integer
+    40/20/40 shares and remainder pinning."""
+    return _attribution_sql(
+        purchases_sql, touches_sql, window_seconds,
+        """CASE
+                   WHEN __nt = 0 THEN __vm
+                   WHEN __nt = 1 THEN __vm
+                   WHEN __nt = 2 THEN __vm // 2
+                        + CASE WHEN __rn = 1 THEN __vm % 2 ELSE 0 END
+                   WHEN __rn = 1 THEN (__vm * 4) // 10
+                        + (__vm - 2 * ((__vm * 4) // 10)) % (__nt - 2)
+                   WHEN __rn = __nt THEN (__vm * 4) // 10
+                   ELSE ((__vm - 2 * ((__vm * 4) // 10)) // (__nt - 2))
+               END""",
     )
-    # frame C: unattributed conversions — full value, channel NULL
-    cframe = base.where(F.col("__nt") == 0).select(
-        "__pid",
-        F.lit(None).cast(a.schema["channel"].dataType).alias("channel"),
-        F.lit(0).cast("bigint").alias("__touches"),
-        F.col("__vm").alias("__cru"),
+
+
+def position_attribution_scalable(
+    purchases: "DataFrame",
+    touches: "DataFrame",
+    user_col: str,
+    purchase_id_col: str,
+    purchase_ts_col: str,
+    value_col: str,
+    touch_ts_col: str,
+    channel_col: str,
+    window_seconds: int = 3 * 86400,
+) -> "DataFrame":
+    """:func:`position_attribution` WITHOUT the pairwise join — the
+    skew-immune / 100 TB form, exactly as q177 is to q167 (this
+    round's skew battery measured the pairwise position join at 16.5x
+    wall under 20% single-user skew). The U-shaped 40/20/40 credit of
+    a conversion depends only on (touch count, first touch, last
+    touch) plus per-channel in-window counts, all read from
+    :func:`_scalable_attribution_frames` with zero pair
+    materialization:
+
+    - the first touch takes 40% + the middle remainder (the
+      :func:`linear_attribution` remainder convention), the last touch
+      40%;
+    - per-channel middle credit = ``(ntc - [ch == first_ch] -
+      [ch == last_ch]) * mid_each`` with null-safe channel equality.
+
+    Bit-identical to the pairwise rollup — the gate shares q190's
+    pairwise oracle. Max task = densest (user, channel, bucket).
+    """
+    ntc, p_nt, fl = _scalable_attribution_frames(
+        purchases, touches, user_col, purchase_id_col, purchase_ts_col,
+        value_col, touch_ts_col, channel_col, window_seconds,
     )
-    return (
-        a.unionByName(bframe).unionByName(cframe)
-        .groupBy("channel")
-        .agg(
-            F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
-            F.sum("__touches").cast("bigint").alias("n_touches"),
-            F.round(F.sum("__cru") / F.lit(1e6), 6).alias("credit"),
-        )
-        .orderBy("channel")
+    base = stage(
+        p_nt.join(fl, "__pid", "left")
+        .select("__pid", "__vm", "__nt", "__fch", "__lch")
+    )
+    first40 = F.expr("(__vm * 4) div 10")
+    mid_pool = F.col("__vm") - F.lit(2) * first40
+    mid_n = F.col("__nt") - F.lit(2)
+    mid_each = F.expr(
+        "((__vm - 2 * ((__vm * 4) div 10)) div (__nt - 2))"
+    )
+    return _channel_rollup(
+        # channel touch counts + middle-unit credits
+        _credit_rows(
+            ntc.join(base, "__pid", "inner"),
+            F.col("__ch"),
+            F.when(
+                F.col("__nt") >= 3,
+                (
+                    F.col("__ntc")
+                    - F.col("__ch").eqNullSafe(F.col("__fch")).cast("int")
+                    - F.col("__ch").eqNullSafe(F.col("__lch")).cast("int")
+                )
+                * mid_each,
+            )
+            .otherwise(F.lit(0))
+            .cast("bigint"),
+            F.col("__ntc"),
+        ),
+        # the first touch's share (100% / 50%+rem / 40%+mid-rem)
+        _credit_rows(
+            base.where(F.col("__nt") >= 1),
+            F.col("__fch"),
+            F.when(F.col("__nt") == 1, F.col("__vm"))
+            .when(
+                F.col("__nt") == 2,
+                F.expr("__vm div 2") + F.col("__vm") % 2,
+            )
+            .otherwise(first40 + mid_pool % mid_n)
+            .cast("bigint"),
+        ),
+        # the last touch's share (50% / 40%)
+        _credit_rows(
+            base.where(F.col("__nt") >= 2),
+            F.col("__lch"),
+            F.when(F.col("__nt") == 2, F.expr("__vm div 2"))
+            .otherwise(first40)
+            .cast("bigint"),
+        ),
+        # unattributed conversions
+        _credit_rows(
+            base.where(F.col("__nt") == 0),
+            F.lit(None).cast(ntc.schema["__ch"].dataType),
+            F.col("__vm"),
+        ),
     )
 
 
@@ -1725,604 +2017,6 @@ def diff_in_diff_sql(
                END) > CAST({t_crit} AS DOUBLE) AS significant
     FROM agg
     """
-
-
-def position_attribution(
-    purchases: "DataFrame",
-    touches: "DataFrame",
-    user_col: str,
-    purchase_id_col: str,
-    purchase_ts_col: str,
-    value_col: str,
-    touch_ts_col: str,
-    channel_col: str,
-    window_seconds: int = 3 * 86400,
-    strategy: str = "auto",
-    auto_max_pair_mass: int = 4_000_000,
-    auto_density_hint: int | None = None,
-) -> "DataFrame":
-    """Multi-touch POSITION-BASED (U-shaped 40/20/40) attribution:
-    the first and last touch in the lookback window each take 40% of
-    the conversion value, the middle touches split the remaining 20%
-    equally — the standard position model between linear (q167) and
-    last-touch (q140). One touch takes 100%; two touches split 50/50.
-
-    Credit arithmetic is exact integer micro-units: the 40% shares are
-    ``(vm * 4) div 10`` (first and last), the middle pool is whatever
-    remains (so the three shares conserve ``vm`` bit-for-bit even when
-    vm is not divisible by 10), middle splits use integer division
-    with the remainder pinned to the FIRST touch (the
-    :func:`linear_attribution` convention — ties: smallest channel).
-    Unattributed conversions surface as channel NULL with full credit
-    — total credited value always equals total conversion value
-    (pinned law).
-
-    ``strategy`` = ``"exact"`` | ``"scalable"`` | ``"auto"`` (default),
-    exactly as :func:`linear_attribution`: the pairwise user-keyed join
-    measured 16-20x wall under 20% single-user skew (BENCH_r06/r07),
-    so ``"auto"`` probes the max per-user pair mass
-    (:func:`_route_attribution`) and routes to
-    :func:`position_attribution_scalable` above
-    ``auto_max_pair_mass`` — identical results bit-for-bit.
-
-    Returns ``(channel, n_conversions, n_touches, credit)``.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    routed = _route_attribution(
-        purchases, touches, user_col, strategy, auto_max_pair_mass,
-        density_hint=auto_density_hint,
-    )
-    if routed == "scalable":
-        return position_attribution_scalable(
-            purchases, touches, user_col, purchase_id_col,
-            purchase_ts_col, value_col, touch_ts_col, channel_col,
-            window_seconds,
-        )
-
-    p = purchases.select(
-        F.col(user_col).alias("__u"),
-        F.col(purchase_id_col).alias("__pid"),
-        F.col(purchase_ts_col).alias("__pts"),
-        F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
-        .cast("bigint")
-        .alias("__vm"),
-    )
-    t = touches.select(
-        F.col(user_col).alias("__u"),
-        F.col(touch_ts_col).alias("__tts"),
-        F.col(channel_col).alias("__ch"),
-    )
-    j = p.join(
-        t,
-        (p["__u"] == t["__u"])
-        & (t["__tts"] <= p["__pts"])
-        & (
-            t["__tts"]
-            >= p["__pts"] - F.expr(f"INTERVAL {window_seconds} SECOND")
-        ),
-        "left",
-    ).drop(t["__u"])
-    wpid = Window.partitionBy("__pid")
-    worder = wpid.orderBy(
-        F.col("__tts").asc_nulls_last(), F.col("__ch").asc_nulls_last()
-    )
-    staged = j.select(
-        "__pid",
-        "__vm",
-        "__ch",
-        "__tts",
-        F.count("__tts").over(wpid).alias("__nt"),
-        F.row_number().over(worder).alias("__rn"),
-    )
-    first40 = F.expr("(__vm * 4) div 10")
-    mid_pool = F.col("__vm") - F.lit(2) * first40
-    mid_n = F.col("__nt") - F.lit(2)
-    credit = (
-        F.when(F.col("__nt") == 0, F.col("__vm"))
-        .when(F.col("__nt") == 1, F.col("__vm"))
-        .when(
-            F.col("__nt") == 2,
-            F.expr("__vm div 2")
-            + F.when(F.col("__rn") == 1, F.col("__vm") % 2).otherwise(
-                F.lit(0)
-            ),
-        )
-        .when(F.col("__rn") == 1, first40 + mid_pool % mid_n)
-        .when(F.col("__rn") == F.col("__nt"), first40)
-        .otherwise(
-            F.expr("((__vm - 2 * ((__vm * 4) div 10)) div (__nt - 2))")
-        )
-    )
-    return (
-        staged.withColumn("__cr", credit.cast("bigint"))
-        .groupBy(F.col("__ch").alias("channel"))
-        .agg(
-            F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
-            F.count("__tts").cast("bigint").alias("n_touches"),
-            F.round(F.sum("__cr") / F.lit(1e6), 6).alias("credit"),
-        )
-        .orderBy("channel")
-    )
-
-
-def position_attribution_sql(
-    purchases_sql: str,
-    touches_sql: str,
-    window_seconds: int = 3 * 86400,
-) -> str:
-    """DuckDB twin of :func:`position_attribution` — same staged-name
-    contract as :func:`linear_attribution_sql`, identical integer
-    40/20/40 shares and remainder pinning."""
-    return f"""
-    WITH p AS ({purchases_sql}), t AS ({touches_sql}), j AS (
-        SELECT p.__pid, p.__vm, t.__ch, t.__tts
-        FROM p LEFT JOIN t
-          ON p.__u = t.__u
-         AND t.__tts <= p.__pts
-         AND t.__tts >= p.__pts - INTERVAL {window_seconds} SECOND
-    ), staged AS (
-        SELECT __pid, __vm, __ch, __tts,
-               CAST(count(__tts) OVER (PARTITION BY __pid) AS BIGINT)
-                   AS __nt,
-               row_number() OVER (
-                   PARTITION BY __pid
-                   ORDER BY __tts ASC NULLS LAST, __ch ASC NULLS LAST
-               ) AS __rn
-        FROM j
-    ), credited AS (
-        SELECT *,
-               CAST(CASE
-                   WHEN __nt = 0 THEN __vm
-                   WHEN __nt = 1 THEN __vm
-                   WHEN __nt = 2 THEN __vm // 2
-                        + CASE WHEN __rn = 1 THEN __vm % 2 ELSE 0 END
-                   WHEN __rn = 1 THEN (__vm * 4) // 10
-                        + (__vm - 2 * ((__vm * 4) // 10)) % (__nt - 2)
-                   WHEN __rn = __nt THEN (__vm * 4) // 10
-                   ELSE ((__vm - 2 * ((__vm * 4) // 10)) // (__nt - 2))
-               END AS BIGINT) AS __cr
-        FROM staged
-    )
-    SELECT __ch AS channel,
-           CAST(count(DISTINCT __pid) AS BIGINT) AS n_conversions,
-           CAST(count(__tts) AS BIGINT) AS n_touches,
-           round(CAST(sum(__cr) AS BIGINT) / 1e6, 6) AS credit
-    FROM credited
-    GROUP BY 1 ORDER BY 1
-    """
-
-
-def _windowed_last_build(
-    probes: "DataFrame",
-    builds: "DataFrame",
-    key_cols: list[str],
-    id_cols: list[str],
-    probe_ts: str,
-    build_ts: str,
-    payload_cols: list[str],
-    w_us: int,
-) -> "DataFrame":
-    """LATEST build row in ``[probe_ts - w, probe_ts]`` per probe —
-    the mirror of :func:`_windowed_first_build` for the rn == nt
-    element of the pairwise ``(ts ASC, payload ASC NULLS LAST)``
-    ordering: max timestamp; among timestamp ties NULL payload wins,
-    else the LARGEST payload. Same two-bucket decomposition:
-
-    - candidate A: last build at or before ``t`` INSIDE bucket ``bp``
-      (an ascending union+window per (key, bucket): the last build
-      seen before the probe is the largest (ts, payload-struct) <= t);
-    - candidate B: bucket ``bx = bp - 1``'s overall MAX build (a
-      per-(key, bucket) max-struct aggregate), valid if its
-      ts >= x = t - w (everything in bucket bx is <= t by
-      construction).
-
-    A exists -> A wins (bucket bp > bx). Returns
-    ``(*id_cols, __lts, *payload_cols)`` with NULLs when empty."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    b = builds.where(F.col(build_ts).isNotNull()).withColumn(
-        "__bb", F.floor(F.col(build_ts) / F.lit(w_us)).cast("long")
-    )
-    bs = b.select(
-        *key_cols, "__bb", F.col(build_ts).alias("__ets"), *payload_cols
-    )
-    # max-struct tie order: NULL payload FIRST (is-null flag 1 beats 0
-    # under max), then the native-typed payload (largest wins)
-    ord_fields = []
-    for c in payload_cols:
-        ord_fields.append(F.col(c).isNull().cast("int").alias(f"nf_{c}"))
-        ord_fields.append(F.col(c).alias(f"pl_{c}"))
-    bs = bs.withColumn(
-        "__st", F.struct(F.col("__ets").alias("ts"), *ord_fields)
-    )
-
-    pr = probes.where(F.col(probe_ts).isNotNull()).withColumn(
-        "__bp", F.floor(F.col(probe_ts) / F.lit(w_us)).cast("long")
-    )
-    id_types = {c: dict(pr.dtypes)[c] for c in id_cols}
-
-    def _null_ids(df):
-        for c, t in id_types.items():
-            df = df.withColumn(c, F.lit(None).cast(t))
-        return df
-
-    st_type = bs.schema["__st"].dataType
-
-    # candidate A: ascending as-of inside bucket bp
-    bA = _null_ids(
-        bs.select(*key_cols, F.col("__bb").alias("__eb"), "__ets", "__st")
-        .withColumn("__tag", F.lit(0))  # builds at ts == t stay inside
-    )
-    pA = (
-        pr.select(
-            *key_cols, *id_cols,
-            F.col("__bp").alias("__eb"),
-            F.col(probe_ts).alias("__ets"),
-        )
-        .withColumn("__st", F.lit(None).cast(st_type))
-        .withColumn("__tag", F.lit(1))
-    )
-    wA = (
-        Window.partitionBy(*key_cols, "__eb")
-        # increasing ts; among equal ts builds (tag 0) first and SMALLER
-        # struct first, so last() retains the LARGEST struct <= probe
-        .orderBy(
-            F.col("__ets").asc(), F.col("__tag").asc(),
-            F.col("__st").asc(),
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    candA = (
-        pA.unionByName(bA.select(*pA.columns))
-        .withColumn("__la", F.last("__st", ignorenulls=True).over(wA))
-        .where(F.col("__tag") == 1)
-        .select(*id_cols, "__la")
-    )
-
-    # candidate B: per-bucket MAX build, joined on (key, bucket bp - 1)
-    lb = bs.groupBy(*key_cols, "__bb").agg(F.max("__st").alias("__lb"))
-    cond = (pr["__bp"] - 1) == lb["__bb"]
-    for c in key_cols:
-        cond = cond & pr[c].eqNullSafe(lb[c])
-    candB = (
-        pr.join(lb, cond, "left")
-        .select(
-            *[pr[c] for c in id_cols],
-            (F.col(probe_ts) - F.lit(w_us)).alias("__x_us"),
-            "__lb",
-        )
-        .withColumn(
-            "__lb",
-            F.when(F.col("__lb.ts") >= F.col("__x_us"), F.col("__lb")),
-        )
-        .select(*id_cols, "__lb")
-    )
-    jcond = None
-    for c in id_cols:
-        term = candA[c].eqNullSafe(candB[c])
-        jcond = term if jcond is None else (jcond & term)
-    best = F.coalesce(candA["__la"], candB["__lb"])
-    return candA.join(candB, jcond, "inner").select(
-        *[candA[c] for c in id_cols],
-        best.getField("ts").alias("__lts"),
-        *[best.getField(f"pl_{c}").alias(c) for c in payload_cols],
-    )
-
-
-def _windowed_first_last_build(
-    probes: "DataFrame",
-    builds: "DataFrame",
-    key_cols: list[str],
-    id_cols: list[str],
-    probe_ts: str,
-    build_ts: str,
-    payload_cols: list[str],
-    w_us: int,
-) -> "DataFrame":
-    """:func:`_windowed_first_build` AND :func:`_windowed_last_build`
-    fused into ONE event-level union+window pass (r12 optimization
-    round, guide §2.4 "remove shuffles outright"): the two helpers
-    build the identical ``(ts, nf_payload, payload)`` struct and differ
-    only in window ordering and which bucket each probe reads, so one
-    union frame — builds once, probes twice (FIRST role at bucket
-    ``bp-1`` / ``ets = t-w``, LAST role at bucket ``bp`` / ``ets = t``)
-    — carries BOTH as-ofs as two window functions over one exchange,
-    and one per-(key, bucket) agg carries both candidate-B sides
-    (min-struct read at ``bp``, max-struct read at ``bp-1``).
-
-    Tie/NULL semantics are exactly the parents': FIRST = min (ts,
-    payload) with NULL payload last; LAST = max with NULL payload
-    first; builds at the frame edges stay inside. Equality with the
-    two-pass form is pinned in tests/test_cohort.py.
-
-    Returns ``(*id_cols, f_<payload>..., l_<payload>...)`` — payloads
-    only (the q194 consumer never reads the timestamps); NULLs when
-    the respective window is empty.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    b = builds.where(F.col(build_ts).isNotNull()).withColumn(
-        "__bb", F.floor(F.col(build_ts) / F.lit(w_us)).cast("long")
-    )
-    ord_fields = []
-    for c in payload_cols:
-        ord_fields.append(F.col(c).isNull().cast("int").alias(f"nf_{c}"))
-        ord_fields.append(F.col(c).alias(f"pl_{c}"))
-    bs = b.select(
-        *key_cols, "__bb", F.col(build_ts).alias("__ets"), *payload_cols
-    ).withColumn("__st", F.struct(F.col("__ets").alias("ts"), *ord_fields))
-
-    pr = probes.where(F.col(probe_ts).isNotNull()).withColumn(
-        "__bp", F.floor(F.col(probe_ts) / F.lit(w_us)).cast("long")
-    )
-    id_types = {c: dict(pr.dtypes)[c] for c in id_cols}
-
-    def _null_ids(df):
-        for c, t in id_types.items():
-            df = df.withColumn(c, F.lit(None).cast(t))
-        return df
-
-    st_type = bs.schema["__st"].dataType
-
-    # shared union frame: builds once (role NULL), probes twice
-    bEv = _null_ids(
-        bs.select(*key_cols, F.col("__bb").alias("__eb"), "__ets", "__st")
-        .withColumn("__tag", F.lit(0))
-        .withColumn("__role", F.lit(None).cast("int"))
-    )
-    pF = (
-        pr.select(
-            *key_cols, *id_cols,
-            (F.col("__bp") - 1).alias("__eb"),
-            (F.col(probe_ts) - F.lit(w_us)).alias("__ets"),
-        )
-        .withColumn("__st", F.lit(None).cast(st_type))
-        .withColumn("__tag", F.lit(1))
-        .withColumn("__role", F.lit(0))
-    )
-    pL = (
-        pr.select(
-            *key_cols, *id_cols,
-            F.col("__bp").alias("__eb"),
-            F.col(probe_ts).alias("__ets"),
-        )
-        .withColumn("__st", F.lit(None).cast(st_type))
-        .withColumn("__tag", F.lit(1))
-        .withColumn("__role", F.lit(1))
-    )
-    ev = pF.unionByName(pL).unionByName(bEv.select(*pF.columns))
-    # FIRST as-of: decreasing ts, builds (tag 0) first / LARGER struct
-    # first at ties, so last() retains the smallest (ts, payload) >= x
-    wF = (
-        Window.partitionBy(*key_cols, "__eb")
-        .orderBy(
-            F.col("__ets").desc(), F.col("__tag").asc(), F.col("__st").desc()
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # LAST as-of: increasing ts, builds first / SMALLER struct first at
-    # ties, so last() retains the largest (ts, payload) <= t
-    wL = (
-        Window.partitionBy(*key_cols, "__eb")
-        .orderBy(
-            F.col("__ets").asc(), F.col("__tag").asc(), F.col("__st").asc()
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cand_a = (
-        ev.withColumn("__fa", F.last("__st", ignorenulls=True).over(wF))
-        .withColumn("__la", F.last("__st", ignorenulls=True).over(wL))
-        .where(F.col("__tag") == 1)
-        .groupBy(*id_cols)
-        .agg(
-            F.max(F.when(F.col("__role") == 0, F.col("__fa"))).alias("__fa"),
-            F.max(F.when(F.col("__role") == 1, F.col("__la"))).alias("__la"),
-        )
-    )
-
-    # candidate B both sides from ONE per-bucket agg: probes exploded to
-    # their two read buckets, one equi-join, re-grouped per probe
-    mm = bs.groupBy(*key_cols, "__bb").agg(
-        F.min("__st").alias("__fb"), F.max("__st").alias("__lb")
-    )
-    pq = pr.select(
-        *key_cols, *id_cols,
-        F.col(probe_ts).alias("__pt_us"),
-        F.explode(
-            F.array(
-                F.struct(F.col("__bp").alias("__qb"), F.lit(0).alias("__role")),
-                F.struct(
-                    (F.col("__bp") - 1).alias("__qb"), F.lit(1).alias("__role")
-                ),
-            )
-        ).alias("__q"),
-    ).select(
-        *key_cols, *id_cols, "__pt_us",
-        F.col("__q.__qb").alias("__qb"), F.col("__q.__role").alias("__role"),
-    )
-    jc = pq["__qb"] == mm["__bb"]
-    for c in key_cols:
-        jc = jc & pq[c].eqNullSafe(mm[c])
-    cand_b = (
-        pq.join(mm, jc, "left")
-        .select(
-            *[pq[c] for c in id_cols],
-            F.when(
-                (F.col("__role") == 0)
-                & (F.col("__fb.ts") <= F.col("__pt_us")),
-                F.col("__fb"),
-            ).alias("__fbv"),
-            F.when(
-                (F.col("__role") == 1)
-                & (F.col("__lb.ts") >= F.col("__pt_us") - F.lit(w_us)),
-                F.col("__lb"),
-            ).alias("__lbv"),
-        )
-        .groupBy(*id_cols)
-        .agg(F.max("__fbv").alias("__fb"), F.max("__lbv").alias("__lb"))
-    )
-
-    jcond = None
-    for c in id_cols:
-        term = cand_a[c].eqNullSafe(cand_b[c])
-        jcond = term if jcond is None else (jcond & term)
-    best_f = F.coalesce(cand_a["__fa"], cand_b["__fb"])
-    best_l = F.coalesce(cand_a["__la"], cand_b["__lb"])
-    return cand_a.join(cand_b, jcond, "inner").select(
-        *[cand_a[c] for c in id_cols],
-        *[best_f.getField(f"pl_{c}").alias(f"f_{c}") for c in payload_cols],
-        *[best_l.getField(f"pl_{c}").alias(f"l_{c}") for c in payload_cols],
-    )
-
-
-def position_attribution_scalable(
-    purchases: "DataFrame",
-    touches: "DataFrame",
-    user_col: str,
-    purchase_id_col: str,
-    purchase_ts_col: str,
-    value_col: str,
-    touch_ts_col: str,
-    channel_col: str,
-    window_seconds: int = 3 * 86400,
-) -> "DataFrame":
-    """:func:`position_attribution` WITHOUT the pairwise join — the
-    skew-immune / 100 TB form, exactly as q177 is to q167 (this
-    round's skew battery measured the pairwise position join at 16.5x
-    wall under 20% single-user skew). The U-shaped 40/20/40 credit of
-    a conversion depends only on (touch count, first touch, last
-    touch) plus per-channel in-window counts, all computable from the
-    q177 windowed machinery with zero pair materialization:
-
-    - per-(purchase, channel) in-window counts ``ntc`` via
-      :func:`_windowed_build_counts`; ``nt`` is their sum;
-    - the first touch (40% + the middle remainder, the
-      :func:`linear_attribution` remainder convention) via
-      :func:`_windowed_first_build`;
-    - the last touch (40%) via :func:`_windowed_last_build` (its exact
-      mirror);
-    - per-channel middle credit = ``(ntc - [ch == first_ch] -
-      [ch == last_ch]) * mid_each`` with null-safe channel equality.
-
-    Bit-identical to the pairwise rollup — the gate shares q190's
-    pairwise oracle. Max task = densest (user, channel, bucket).
-    """
-    from pyspark.sql import functions as F
-
-    w_us = window_seconds * 1_000_000
-
-    p = purchases.select(
-        F.col(user_col).alias("__u"),
-        F.col(purchase_id_col).alias("__pid"),
-        F.unix_micros(F.col(purchase_ts_col)).alias("__ptu"),
-        F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
-        .cast("bigint")
-        .alias("__vm"),
-    )
-    t = touches.where(F.col(user_col).isNotNull()).select(
-        F.col(user_col).alias("__u"),
-        F.unix_micros(F.col(touch_ts_col)).alias("__ttu"),
-        F.col(channel_col).alias("__ch"),
-    )
-    t = t.join(p.select("__u").distinct(), "__u", "semi")
-    p = stage_unbounded(p)
-    t = stage_unbounded(t)
-
-    user_channels = t.select("__u", "__ch").distinct()
-    pc = p.join(user_channels, "__u", "inner")
-    ntc = _windowed_build_counts(
-        pc, t, ["__u", "__ch"], ["__pid", "__ch"], "__ptu", "__ttu", w_us
-    ).withColumnRenamed("__wn", "__ntc").where(F.col("__ntc") > 0)
-
-    nt = ntc.groupBy("__pid").agg(F.sum("__ntc").alias("__nt"))
-
-    # first+last in ONE fused union+window pass (was two passes over
-    # the touch frame; r12 optimization round — guide §2.4)
-    fl = _windowed_first_last_build(
-        p, t, ["__u"], ["__pid"], "__ptu", "__ttu", ["__ch"], w_us
-    ).select(
-        "__pid",
-        F.col("f___ch").alias("__fch"),
-        F.col("l___ch").alias("__lch"),
-    )
-
-    base = stage(
-        p.join(nt, "__pid", "left")
-        .withColumn("__nt", F.coalesce(F.col("__nt"), F.lit(0)))
-        .join(fl, "__pid", "left")
-        .select("__pid", "__vm", "__nt", "__fch", "__lch")
-    )
-    first40 = F.expr("(__vm * 4) div 10")
-    mid_pool = F.col("__vm") - F.lit(2) * first40
-    mid_n = F.col("__nt") - F.lit(2)
-    mid_each = F.expr(
-        "((__vm - 2 * ((__vm * 4) div 10)) div (__nt - 2))"
-    )
-
-    chtype = ntc.schema["__ch"].dataType
-    # frame A: channel touch counts + middle-unit credits
-    a = ntc.join(base, "__pid", "inner").select(
-        "__pid",
-        F.col("__ch").alias("channel"),
-        F.col("__ntc").alias("__touches"),
-        F.when(
-            F.col("__nt") >= 3,
-            (
-                F.col("__ntc")
-                - F.col("__ch").eqNullSafe(F.col("__fch")).cast("int")
-                - F.col("__ch").eqNullSafe(F.col("__lch")).cast("int")
-            )
-            * mid_each,
-        )
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("__cru"),
-    )
-    # frame B: the first touch's share (100% / 50%+rem / 40%+mid-rem)
-    bframe = base.where(F.col("__nt") >= 1).select(
-        "__pid",
-        F.col("__fch").alias("channel"),
-        F.lit(0).cast("bigint").alias("__touches"),
-        F.when(F.col("__nt") == 1, F.col("__vm"))
-        .when(
-            F.col("__nt") == 2,
-            F.expr("__vm div 2") + F.col("__vm") % 2,
-        )
-        .otherwise(first40 + mid_pool % mid_n)
-        .cast("bigint")
-        .alias("__cru"),
-    )
-    # frame C: the last touch's share (50% / 40%)
-    cframe = base.where(F.col("__nt") >= 2).select(
-        "__pid",
-        F.col("__lch").alias("channel"),
-        F.lit(0).cast("bigint").alias("__touches"),
-        F.when(F.col("__nt") == 2, F.expr("__vm div 2"))
-        .otherwise(first40)
-        .cast("bigint")
-        .alias("__cru"),
-    )
-    # frame D: unattributed conversions
-    dframe = base.where(F.col("__nt") == 0).select(
-        "__pid",
-        F.lit(None).cast(chtype).alias("channel"),
-        F.lit(0).cast("bigint").alias("__touches"),
-        F.col("__vm").alias("__cru"),
-    )
-    return (
-        a.unionByName(bframe).unionByName(cframe).unionByName(dframe)
-        .groupBy("channel")
-        .agg(
-            F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
-            F.sum("__touches").cast("bigint").alias("n_touches"),
-            F.round(F.sum("__cru") / F.lit(1e6), 6).alias("credit"),
-        )
-        .orderBy("channel")
-    )
 
 
 def rfm_segments(

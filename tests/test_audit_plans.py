@@ -1,24 +1,25 @@
-"""``tools/audit_plans.plan_counts`` over a captured formatted plan. The
-plan holds a staged frame read twice (once in a scalar subquery), a
-persisted frame whose cache was filled (so its AQE final and initial
-plans print under the ``InMemoryRelation``) and a global sort. No Spark
-session needed."""
+"""``tools/audit_plans.plan_counts`` and ``masked_plan`` over a captured
+formatted plan. The plan holds a staged frame read twice (once in a
+scalar subquery), a persisted frame whose cache was filled (so its AQE
+final and initial plans print under the ``InMemoryRelation``) and a
+global sort. No Spark session needed."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import re
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _plan_counts():
+def _audit_plans():
     spec = importlib.util.spec_from_file_location(
         "audit_plans", os.path.join(_ROOT, "tools", "audit_plans.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.plan_counts
+    return mod
 
 
 def _captured() -> str:
@@ -32,7 +33,7 @@ def test_counts_each_tree_node_once_outside_cached_plans():
     # under the cache), once more in the cache's initial plan, and twice
     # in the details
     assert text.count("Scan parquet") == 5
-    assert _plan_counts()(text) == {
+    assert _audit_plans().plan_counts(text) == {
         "scan_parquet": 1,
         "scan_rdd": 2,  # the staged frame, in the main plan and the subquery
         "scan_cached": 1,
@@ -61,5 +62,34 @@ def test_local_sort_is_not_global():
         "(3) Window\n"
         "Input [1]: [a#1]\n"
     )
-    counts = _plan_counts()(text)
+    counts = _audit_plans().plan_counts(text)
     assert counts["global_sort"] == 0 and counts["scan_parquet"] == 1
+
+
+def test_masked_plan_hides_build_ids_and_checkpoint_paths():
+    masked_plan = _audit_plans().masked_plan
+    text = _captured()
+    masked = masked_plan(text)
+    assert re.search(r"#\d|plan_id=\d|RDD\[\d", masked) is None
+    # a second build of the same plan numbers its ids afresh
+    rebuilt = re.sub(
+        r"(#|plan_id=|RDD\[)(\d+)",
+        lambda m: m.group(1) + str(int(m.group(2)) + 1000),
+        text,
+    )
+    assert rebuilt != text and masked_plan(rebuilt) == masked
+    # operator ids, data paths and expressions stay
+    assert "+- Scan parquet  (10)" in masked
+    assert "[file:/data/sf0.001/customer.parquet]" in masked
+    assert "hashpartitioning(c_nationkey#N, 4), ENSURE_REQUIREMENTS, [plan_id=N]" in masked
+    assert masked.count("\n") == text.count("\n")
+    # a different plan stays different
+    assert masked_plan(text.replace("Inner BuildRight", "Inner BuildLeft")) != masked
+    ckpt = (
+        "Arguments: [a#3L], ReliableCheckpointRDD[41] at file:/tmp/spark-"
+        "0e2b4f5a-1c2d-4e5f-8a9b-0c1d2e3f4a5b/checkpoints/"
+        "9d8c7b6a-5f4e-4d3c-8b2a-1f0e9d8c7b6a/rdd-41, ExistingRDD"
+    )
+    assert masked_plan(ckpt) == (
+        "Arguments: [a#NL], ReliableCheckpointRDD[N] at <checkpoint>, ExistingRDD"
+    )

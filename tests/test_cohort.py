@@ -1399,12 +1399,13 @@ def test_theil_decomposition_identity_and_limits(spark):
     assert abs(ac["theil"] - ac["theil_between"]) < 2e-6
 
 
-def test_attribution_strategy_router(spark):
+def test_attribution_strategy_router(spark, monkeypatch):
     """r7 VERDICT item 2: linear/position attribution default to
     strategy="auto", which probes the max per-user pair mass
     (touches_u * purchases_u) and routes to the scalable twin above the
     bound. Routing rule pinned on a benign and a zipfian frame; the
     routed results stay bit-identical to the pairwise form."""
+    from pytrousse_spark.operators import cohort
     from pytrousse_spark.operators.cohort import (
         _route_attribution,
         linear_attribution,
@@ -1437,16 +1438,11 @@ def test_attribution_strategy_router(spark):
     p, t = frame(hot_touches=40)
     assert _route_attribution(p, t, "u", "auto", 30) == "scalable"
 
-    # r8 VERDICT item 3: a precomputed density hint skips the probe
-    # entirely and routes on the hint alone (r9: probe is also fused
-    # into one union-tagged agg job)
-    assert _route_attribution(p, t, "u", "auto", 30, density_hint=10) == "exact"
-    assert _route_attribution(p, t, "u", "auto", 30, density_hint=31) == "scalable"
-
     kw = dict(
         user_col="u", purchase_id_col="pid", purchase_ts_col="ts",
         value_col="v", touch_ts_col="ts", channel_col="ch",
     )
+    monkeypatch.setattr(cohort, "_AUTO_MAX_PAIR_MASS", 30)
     for fn in (linear_attribution, position_attribution):
         exact = {
             (r["channel"],): (r["n_conversions"], r["n_touches"], r["credit"])
@@ -1454,8 +1450,7 @@ def test_attribution_strategy_router(spark):
         }
         routed = {
             (r["channel"],): (r["n_conversions"], r["n_touches"], r["credit"])
-            for r in fn(p, t, strategy="auto", auto_max_pair_mass=30,
-                        **kw).collect()
+            for r in fn(p, t, strategy="auto", **kw).collect()
         }
         assert exact == routed and exact
 
@@ -1544,81 +1539,67 @@ def test_tost_equivalence_laws(spark):
     assert (narrow["diff"], narrow["se"]) == (wide["diff"], wide["se"])
 
 
-def test_windowed_first_last_fused_equals_two_pass(spark):
-    """The fused single-pass first+last as-of (r12 optimization round)
-    must reproduce _windowed_first_build/_windowed_last_build payloads
-    row-for-row on the adversarial battery: bucket-boundary straddlers,
-    same-ts payload ties (NULL competing), empty windows, NULL keys."""
+def test_windowed_first_last_matches_brute_force(spark):
+    """The fused first+last as-of against a plain-Python brute force on
+    an adversarial battery: bucket-boundary straddlers, same-ts payload
+    ties (NULL competing), builds exactly at both frame edges, an empty
+    window and NULL keys (a real key: NULL-key probes read NULL-key
+    builds). FIRST = min (ts, channel) with NULL channels last, LAST =
+    max (ts, channel) with NULL channels first, over the same-key builds
+    in [t - w, t]."""
     import random
-    from datetime import datetime, timedelta
 
-    from pytrousse_spark.operators.cohort import (
-        _windowed_first_build,
-        _windowed_first_last_build,
-        _windowed_last_build,
-    )
-    from pyspark.sql import functions as F
+    from pytrousse_spark.operators.cohort import _windowed_first_last_build
 
     rng = random.Random(17)
-    base = datetime(2024, 3, 1)
+    base = 1_709_251_200_000_000  # 2024-03-01 in unix micros
+    minute = 60_000_000
     users = [1, 2, 3, None]
     chans = ["a", "b", "zz", None]
     builds = [
         (
             rng.choice(users),
-            base + timedelta(minutes=rng.randrange(0, 30000)),
+            base + minute * rng.randrange(0, 30000),
             rng.choice(chans),
         )
         for _ in range(500)
     ]
     probes = [
-        (
-            rng.choice(users),
-            i,
-            base + timedelta(minutes=rng.randrange(0, 30000)),
-        )
+        (rng.choice(users), i, base + minute * rng.randrange(0, 30000))
         for i in range(150)
     ]
-    w_sec = 6 * 3600
+    w_us = 6 * 60 * minute
     # exact-edge ties: two builds at x = t - w and two at t, NULL chan
-    pts = base + timedelta(minutes=40000)
+    pts = base + minute * 40000
     probes.append((7, 900, pts))
     builds += [
-        (7, pts - timedelta(seconds=w_sec), "q1"),
-        (7, pts - timedelta(seconds=w_sec), None),
+        (7, pts - w_us, "q1"),
+        (7, pts - w_us, None),
         (7, pts, "q9"),
         (7, pts, None),
     ]
     # empty-window probe
-    probes.append((8, 901, base + timedelta(days=60)))
+    probes.append((8, 901, base + minute * 60 * 24 * 60))
 
-    pdf = spark.createDataFrame(
-        probes, "u long, pid long, ts timestamp"
-    ).select("u", "pid", F.unix_micros("ts").alias("ptu"))
-    bdf = spark.createDataFrame(
-        builds, "u long, ts timestamp, ch string"
-    ).select("u", F.unix_micros("ts").alias("btu"), "ch")
-    w_us = w_sec * 1_000_000
+    def order(b):  # (ts, channel) with NULL channel above every value
+        return (b[1], b[2] is None, b[2] or "")
 
-    first = {
-        r["pid"]: r["ch"]
-        for r in _windowed_first_build(
-            pdf, bdf, ["u"], ["pid"], "ptu", "btu", ["ch"], w_us
-        ).collect()
-    }
-    last = {
-        r["pid"]: r["ch"]
-        for r in _windowed_last_build(
-            pdf, bdf, ["u"], ["pid"], "ptu", "btu", ["ch"], w_us
-        ).collect()
-    }
-    fused = {
+    expect = {}
+    for u, pid, t in probes:
+        inside = [b for b in builds if b[0] == u and t - w_us <= b[1] <= t]
+        expect[pid] = (
+            (min(inside, key=order)[2], max(inside, key=order)[2])
+            if inside else (None, None)
+        )
+    assert expect[900] == ("q1", None) and expect[901] == (None, None)
+    assert any(u is None and expect[pid] != (None, None) for u, pid, _ in probes)
+
+    pdf = spark.createDataFrame(probes, "u long, pid long, ptu long")
+    bdf = spark.createDataFrame(builds, "u long, btu long, ch string")
+    got = {
         r["pid"]: (r["f_ch"], r["l_ch"])
         for r in _windowed_first_last_build(
             pdf, bdf, ["u"], ["pid"], "ptu", "btu", ["ch"], w_us
         ).collect()
     }
-    assert set(fused) == set(first) == set(last)
-    for pid, (f, l) in fused.items():
-        assert f == first[pid], f"first mismatch pid={pid}"
-        assert l == last[pid], f"last mismatch pid={pid}"
+    assert got == expect

@@ -15,6 +15,9 @@ tree, once in the details) and leaves out the subtree under each
 per read; its reads are counted as ``scan_cached``) and each AQE
 ``== Initial Plan ==`` (a superseded copy of the final plan).
 
+:func:`masked_plan` masks the ids and paths that differ between two
+builds of one plan, for diffing a query's plan before and after a change.
+
 Usage: python tools/audit_plans.py [out.json]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
@@ -36,6 +39,21 @@ _NODE = re.compile(r"^[ :|+-]*(?:\* )?(?P<name>[A-Za-z][^()]*?)\s*\((?P<id>\d+)\
 _DETAIL = re.compile(r"^\((?P<id>\d+)\) (?P<name>\S+)")
 # a Sort's details end "Arguments: [order], <global>, <spill threshold>"
 _GLOBAL_SORT = re.compile(r"^Arguments: .*, true, \d+$")
+# what differs between two builds of one plan: expression ids (``a#12L``,
+# ``subquery#95``, ``[id=#202]``), exchange plan ids, RDD ids and
+# checkpoint paths (Spark names their directories by UUID and ``rdd-N``)
+_MASKS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (
+        re.compile(
+            r"[^\s,\[\]]*/(?:[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}|rdd-\d+)"
+            r"(?:/[^\s,\[\]]*)?"
+        ),
+        "<checkpoint>",
+    ),
+)
 
 _COUNTS = {
     "scan_parquet": lambda n: n.startswith("Scan parquet"),
@@ -96,6 +114,15 @@ def plan_counts(text: str) -> dict[str, int]:
         1 for i, n in nodes.items() if n == "Sort" and i in global_sorts
     )
     return out
+
+
+def masked_plan(text: str) -> str:
+    """``explain("formatted")`` output with the ids and paths that change
+    from one build of the same plan to the next masked, so two builds
+    compare equal exactly when their plans match."""
+    for pattern, repl in _MASKS:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def main() -> None:

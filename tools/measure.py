@@ -13,17 +13,18 @@ its DataFrame, including any jobs it runs on the way: the map stages of
 staged frames, bounded collects) and ``action_s``/``action_jobs`` (the
 noop write). Jobs are counted per phase through its own Spark job group.
 ``ckpt_mb`` is the size of the session's checkpoint directory after the
-action: the files ``staging.stage_unbounded`` wrote and the cleaner has
-not yet deleted (earlier reps' files count until the driver's GC lets
-the cleaner delete them).
+action: the files ``staging.stage_unbounded`` wrote during that rep.
 Warm-up: q04 noop once. Before every rep, outside its timer, the
 ``_probe`` memo and the session's cached relations are cleared (as
 ``bench.py`` does), so each rep pays for its own probes and trained
-artifacts.
+artifacts; then the previous rep's frame is dropped and the Python and
+JVM garbage collectors run until the ContextCleaner has deleted its
+checkpoint files (at most 120 s), so no rep counts an earlier rep's.
 """
 
 from __future__ import annotations
 
+import gc
 import io
 import json
 import os
@@ -66,6 +67,16 @@ def _checkpoint_mb(spark) -> float:
         for f in files
     )
     return round(size / 2**20, 3)
+
+
+def _drain_checkpoints(spark) -> None:
+    """Collect garbage on the driver until the ContextCleaner has deleted
+    the checkpoint files of every unreferenced frame (at most 120 s)."""
+    deadline = time.monotonic() + 120
+    while _checkpoint_mb(spark) > 0 and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.25)
 
 
 def main() -> None:
@@ -117,6 +128,8 @@ def main() -> None:
         for rep in range(reps):
             _probe.clear()
             spark.catalog.clearCache()
+            df = None
+            _drain_checkpoints(spark)
             df, build_s, build_jobs = _phase(
                 spark, f"measure:{name}:{rep}:build", lambda: fn(spark, sf_dir)
             )
