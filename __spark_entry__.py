@@ -1119,10 +1119,7 @@ def _sql_q43() -> str:
     WITH sigs AS (SELECT doc_id, {sig} AS s FROM documents),
     banded AS (
         SELECT doc_id, unnest([
-            '0_' || s[1] || '_' || s[2],
-            '1_' || s[3] || '_' || s[4],
-            '2_' || s[5] || '_' || s[6],
-            '3_' || s[7] || '_' || s[8]
+            {dd._band_keys_sql("s", 8, 4)}
         ]) AS band
         FROM sigs
     )
@@ -1775,10 +1772,7 @@ def _sql_q97() -> str:
     WITH sigs AS (SELECT doc_id, {sig} AS s FROM documents),
     banded AS (
         SELECT doc_id, unnest([
-            '0_' || s[1] || '_' || s[2],
-            '1_' || s[3] || '_' || s[4],
-            '2_' || s[5] || '_' || s[6],
-            '3_' || s[7] || '_' || s[8]
+            {dd._band_keys_sql("s", 8, 4)}
         ]) AS band
         FROM sigs
     ),

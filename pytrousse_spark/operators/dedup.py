@@ -12,6 +12,31 @@ Scale design:
 - every operator has a ``hash_fn`` switch: ``"md5"`` = portable 60-bit base
   (DuckDB-verifiable, used by the correctness gate), ``"xxhash64"`` = fast
   JVM path for production runs.
+
+The shingle-set pair operators are one candidate generator followed by one
+exact verify score, built from four private helpers: :func:`shingle_frame`
+(the only text → word-shingle chain), :func:`_lsh_bands` (shingles →
+``(id, band)`` rows), :func:`_prefix_postings` (prefix-filter postings) and
+:func:`_verify_pairs` (candidate pairs scored with ``array_intersect``).
+Each public pair operator, as candidate generator → verify score:
+
+- :func:`minhash_lsh_pairs`: LSH bands → none (candidates only);
+- :func:`near_dedup_pairs` (under ``near_dedup``, ``near_dedup_transitive``
+  and ``near_dedup_keep_best``): LSH bands → Jaccard;
+- :func:`cross_near_dedup_pairs` (under :func:`cross_dedup`): LSH bands
+  with cross-side buckets → Jaccard;
+- :func:`prefix_jaccard_pairs`: prefix postings → Jaccard;
+- :func:`containment_pairs_prefix`: prefix postings against full
+  postings → containment;
+- :func:`ngram_jaccard_pairs`: inverted index on shingles → Jaccard from
+  posting counts;
+- :func:`contamination_pairs`: inverted index on shingles, bench side
+  broadcast → containment from posting counts;
+- :func:`winnow_overlap_pairs`: inverted index on winnowed fingerprints →
+  shared-fingerprint count.
+
+Public entry points that spread an under-split input
+(``rebalance_undersplit``) do it once, on entry; the private cores never do.
 """
 
 from __future__ import annotations
@@ -20,7 +45,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60_sql, hash_expr
-from ..functions.text import tokens, word_shingles, word_shingles_sql
+from ..functions.text import (
+    fingerprint_from_shingles,
+    shingles_from_tokens,
+    tokens,
+    word_shingles,
+    word_shingles_sql,
+)
+from ..io import rebalance_undersplit
 from ..staging import stage, stage_unbounded
 
 
@@ -48,6 +80,83 @@ def duplicate_groups(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Groups with >1 occurrence: key + count (exact dedup census)."""
     return df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("dup_count")).where(
         F.col("dup_count") > 1
+    )
+
+
+# ---------------------------------------------------------------------------
+# the shingle-set kernel
+# ---------------------------------------------------------------------------
+def shingle_frame(
+    df: DataFrame,
+    text_col: str,
+    id_col: str | None,
+    shingle_n: int,
+    id_alias: str | None = None,
+    distinct: bool = False,
+) -> DataFrame:
+    """Per-doc ``(id, __sh)`` word-shingle arrays — the one place this
+    module turns text into shingles.
+
+    The id column is renamed to ``id_alias`` when given; ``id_col=None``
+    keeps every column of ``df`` instead. ``distinct`` explodes to one row
+    per distinct shingle (the inverted-index and prefix-filter input).
+    Tokens are a projected column of their own: inside the shingle
+    expression's higher-order lambdas an inlined token expression would be
+    re-evaluated per element (see ``functions/text.py``). No rebalance
+    here: public entry points rebalance their inputs once.
+    """
+    keep = [F.col(id_col).alias(id_alias or id_col)] if id_col else ["*"]
+    tk = df.select(*keep, tokens(F.col(text_col)).alias("__tk"))
+    sh = shingles_from_tokens(F.col("__tk"), shingle_n)
+    return tk.withColumn(
+        "__sh", F.explode(F.array_distinct(sh)) if distinct else sh
+    ).drop("__tk")
+
+
+def _distinct_sets(sh: DataFrame) -> DataFrame:
+    """``(__id, __set, __size)`` distinct-shingle sets of an ``(__id, __sh)``
+    shingle frame — the per-doc input of :func:`_verify_pairs`."""
+    return sh.select(
+        "__id", F.array_distinct(F.col("__sh")).alias("__set")
+    ).withColumn("__size", F.size("__set"))
+
+
+def _jaccard() -> Column:
+    """``|a ∩ b| / |a ∪ b|`` over the ``__common``/``__sa``/``__sb``
+    columns of a scored pair."""
+    return F.col("__common") / (F.col("__sa") + F.col("__sb") - F.col("__common"))
+
+
+def _verify_pairs(
+    cands: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    name: str,
+    score: Column,
+    threshold: float,
+) -> DataFrame:
+    """Exact verify of candidate pairs ``(id_a, id_b)``: join each side's
+    ``(__id, __set, __size)`` set, count the common shingles with one
+    ``array_intersect``, score with ``score`` (over ``__common``, ``__sa``
+    and ``__sb``: Jaccard or containment), round to 6 places and keep
+    ``name >= threshold``. Work is O(candidates · doc length), never O(n²)."""
+    a = sets_a.select(
+        F.col("__id").alias("id_a"),
+        F.col("__set").alias("__seta"),
+        F.col("__size").alias("__sa"),
+    )
+    b = sets_b.select(
+        F.col("__id").alias("id_b"),
+        F.col("__set").alias("__setb"),
+        F.col("__size").alias("__sb"),
+    )
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("__common", F.size(F.array_intersect("__seta", "__setb")))
+        .withColumn(name, F.round(score, 6))
+        .where(F.col(name) >= threshold)
+        .select("id_a", "id_b", name)
     )
 
 
@@ -130,16 +239,11 @@ def with_minhash_signature(
     i.e. on any real-scale table). Measured ~1.45× on the near-dedup
     pipeline at bench scale; NOT applied at the scan in _t because
     scan-light document queries then pay a full-text exchange for nothing."""
-    from ..functions.text import shingles_from_tokens, tokens
-    from ..io import rebalance_undersplit
-
-    df = rebalance_undersplit(df)
     return (
-        df.withColumn("__tk", tokens(F.col(text_col)))
-        .withColumn("__sh", shingles_from_tokens(F.col("__tk"), shingle_n))
+        shingle_frame(rebalance_undersplit(df), text_col, None, shingle_n)
         .withColumn("__h0", _base_hashes(F.col("__sh"), hash_fn))
         .withColumn(out_col, _sig_from_base(F.col("__h0"), num_perm))
-        .drop("__tk", "__sh", "__h0")
+        .drop("__sh", "__h0")
     )
 
 
@@ -170,6 +274,70 @@ def _band_key(sig_col: Column, band: int, rows_per_band: int) -> Column:
     )
 
 
+def _lsh_bands(
+    sh: DataFrame, id_col: str, num_perm: int, bands: int, hash_fn: str
+) -> DataFrame:
+    """``(id_col, band)`` rows: the ``bands`` LSH band keys of each
+    document's minhash signature, from a shingle frame ``(id_col, __sh)``.
+    The base-hash array and the signature are projected columns of their
+    own, so md5 runs once per shingle."""
+    if num_perm % bands != 0:
+        raise ValueError("num_perm must be divisible by bands")
+    rpb = num_perm // bands
+    return (
+        sh.withColumn("__h0", _base_hashes(F.col("__sh"), hash_fn))
+        .withColumn("__sig", _sig_from_base(F.col("__h0"), num_perm))
+        .select(
+            id_col,
+            F.explode(
+                F.array(*[_band_key(F.col("__sig"), b, rpb) for b in range(bands)])
+            ).alias("band"),
+        )
+    )
+
+
+def _band_keys_sql(sig: str, num_perm: int, bands: int) -> str:
+    """DuckDB twin of :func:`_lsh_bands`' key list: the comma-separated
+    band-key expressions over the signature list ``sig``."""
+    if num_perm % bands != 0:
+        raise ValueError("num_perm must be divisible by bands")
+    rpb = num_perm // bands
+    return ", ".join(
+        f"'{b}_' || "
+        + " || '_' || ".join(f"{sig}[{b * rpb + r + 1}]" for r in range(rpb))
+        for b in range(bands)
+    )
+
+
+def _jaccard_sql(a: str, b: str, size_a: str, size_b: str) -> str:
+    """DuckDB twin of :func:`_jaccard` over the lists ``a``/``b`` of sizes
+    ``size_a``/``size_b``, rounded to 6 places."""
+    common = f"len(list_intersect({a}, {b}))"
+    return f"round({common} / ({size_a} + {size_b} - {common}), 6)"
+
+
+def _lsh_candidates(
+    sh: DataFrame, num_perm: int, bands: int, hash_fn: str
+) -> DataFrame:
+    """Within-corpus LSH candidate pairs ``(id_a, id_b)``, id_a < id_b, of an
+    ``(__id, __sh)`` shingle frame.
+
+    Group ids per band bucket and emit in-bucket pairs — ONE pass over the
+    signature subtree (a self-join would execute it twice) and one shuffle
+    keyed by band. Bucket sizes are naturally small for near-dup workloads;
+    a pathological all-duplicates corpus concentrates in one bucket, which
+    is inherent to LSH banding (cap upstream if that is a concern)."""
+    return (
+        _lsh_bands(sh, "__id", num_perm, bands, hash_fn)
+        .groupBy("band")
+        .agg(F.array_sort(F.collect_set("__id")).alias("__ids"))
+        .where(F.size("__ids") > 1)
+        .select(F.explode(_pairs_within("__ids")).alias("__p"))
+        .select(F.col("__p.id_a"), F.col("__p.id_b"))
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -178,7 +346,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     hash_fn: str = "md5",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) whose signatures collide
     in at least one LSH band.
@@ -186,53 +353,11 @@ def minhash_lsh_pairs(
     Plan: one scan computes signatures → explode only ``bands`` small rows
     per doc (band key + id) → group ids per bucket → in-bucket pairs →
     distinct. Documents never shuffle; only (band_key, id).
-
-    ``shingles`` optionally supplies a pre-staged ``(id_col, __sh)`` frame
-    (signature-store pattern — see :func:`near_dedup_pairs`).
     """
-    from ..functions.text import shingles_from_tokens, tokens
-    from ..io import rebalance_undersplit
-
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    rpb = num_perm // bands
-    if shingles is None:
-        base = (
-            rebalance_undersplit(df)
-            .select(F.col(id_col).alias("__id"), F.col(text_col))
-            .withColumn("__tk", tokens(F.col(text_col)))
-            .select(
-                "__id",
-                shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"),
-            )
-        )
-    else:
-        base = shingles.select(F.col(id_col).alias("__id"), "__sh")
-    keyed = (
-        base.withColumn("__h0", _base_hashes(F.col("__sh"), hash_fn))
-        .withColumn("__sig", _sig_from_base(F.col("__h0"), num_perm))
-        .select(
-            "__id",
-            F.explode(
-                F.array(
-                    *[_band_key(F.col("__sig"), b, rpb) for b in range(bands)]
-                )
-            ).alias("__band"),
-        )
+    sh = shingle_frame(
+        rebalance_undersplit(df), text_col, id_col, shingle_n, id_alias="__id"
     )
-    # Group ids per band bucket and emit in-bucket pairs — ONE pass over the
-    # signature subtree (a self-join would execute it twice) and one shuffle
-    # keyed by band. Bucket sizes are naturally small for near-dup workloads;
-    # a pathological all-duplicates corpus concentrates in one bucket, which
-    # is inherent to LSH banding (cap upstream if that is a concern).
-    return (
-        keyed.groupBy("__band")
-        .agg(F.array_sort(F.collect_set("__id")).alias("__ids"))
-        .where(F.size("__ids") > 1)
-        .select(F.explode(_pairs_within("__ids")).alias("__p"))
-        .select(F.col("__p.id_a"), F.col("__p.id_b"))
-        .distinct()
-    )
+    return _lsh_candidates(sh, num_perm, bands, hash_fn)
 
 
 def _pairs_within(ids_col: str):
@@ -267,27 +392,17 @@ def ngram_jaccard_pairs(
     worst-case posting lists — at scale run AFTER minhash_lsh_pairs as the
     verification stage.
     """
-    from ..functions.text import shingles_from_tokens, tokens
-    from ..io import rebalance_undersplit
-
     # the shingle pass feeds THREE subtrees (sizes + both join sides);
     # checkpoint it so tokenize+explode runs once, spread first so the
     # per-row shingling parallelizes on single-row-group bench inputs
-    # (no-op at real scale; r12 optimization round)
-    shingled = (
-        rebalance_undersplit(
-            df.select(F.col(id_col).alias("__id"), F.col(text_col))
-        )
-        .withColumn("__tk", tokens(F.col(text_col)))
-        .select(
-            "__id",
-            F.explode(
-                F.array_distinct(shingles_from_tokens(F.col("__tk"), n))
-            ).alias("__sh"),
-        )
+    # (no-op at real scale; r12 optimization round). Per-shingle rows:
+    # reliable checkpoint (r12 VERDICT item 6).
+    docs = rebalance_undersplit(
+        df.select(F.col(id_col).alias("__id"), F.col(text_col))
     )
-    # per-shingle rows: reliable checkpoint (r12 VERDICT item 6)
-    shingled = stage_unbounded(shingled)
+    shingled = stage_unbounded(
+        shingle_frame(docs, text_col, "__id", n, distinct=True)
+    )
     sizes = shingled.groupBy("__id").agg(F.count(F.lit(1)).alias("__size"))
     l, r = shingled.alias("l"), shingled.alias("r")
     common = (
@@ -301,14 +416,7 @@ def ngram_jaccard_pairs(
     return (
         common.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__common")
-                / (F.col("__sa") + F.col("__sb") - F.col("__common")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", F.round(_jaccard(), 6))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -345,40 +453,44 @@ def ngram_jaccard_pairs_sql(
 def _df_ordered_shingle_docs(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
-    """Per-doc distinct-shingle arrays in the global (document-frequency
-    asc, shingle asc) total order, plus set size — the shared frame under
-    every prefix-filtered similarity join (:func:`prefix_jaccard_pairs`,
-    :func:`containment_pairs_prefix`).
+    """Per-doc ``(__id, __set, __size)`` distinct-shingle arrays in the
+    global (document-frequency asc, shingle asc) total order — the shared
+    frame under every prefix-filtered similarity join
+    (:func:`prefix_jaccard_pairs`, :func:`containment_pairs_prefix`).
 
     Both frames are staged: the shingle rows feed the df count and the
     df join, and the result feeds several branches of the caller, some
     of them broadcast builds whose jobs launch concurrently (measured at
     sf0.1: q112/q161 walls equal to an eager checkpoint's within
     run-to-run spread)."""
-    from ..functions.text import shingles_from_tokens, tokens
-    from ..io import rebalance_undersplit
-
-    shingled = stage(
-        rebalance_undersplit(df)
-        .select(F.col(id_col).alias("__id"), F.col(text_col))
-        .withColumn("__tk", tokens(F.col(text_col)))
-        .select(
-            "__id",
-            F.explode_outer(
-                F.array_distinct(shingles_from_tokens(F.col("__tk"), n))
-            ).alias("__sh"),
-        )
-        .where(F.col("__sh").isNotNull())
-    )
+    shingled = stage(shingle_frame(df, text_col, id_col, n, "__id", distinct=True))
     dfc = shingled.groupBy("__sh").agg(F.count(F.lit(1)).alias("__df"))
     return stage(
         shingled.join(dfc, "__sh")
         .groupBy("__id")
         .agg(
-            F.expr("transform(sort_array(collect_list(struct(__df, __sh))), x -> x.__sh)").alias("__arr"),
-            F.count(F.lit(1)).alias("__sz"),
+            F.expr("transform(sort_array(collect_list(struct(__df, __sh))), x -> x.__sh)").alias("__set"),
+            F.count(F.lit(1)).alias("__size"),
         )
     )
+
+
+def _prefix_postings(docs: DataFrame, threshold: float) -> DataFrame:
+    """``(__id, __size, __pos, __sh)`` postings of each document's prefix:
+    its first ``|s| - ceil(t·|s|) + 1`` shingles in the global order, with
+    1-based positions. ``threshold=0`` keeps every shingle (full postings)."""
+    size = F.col("__size")
+    return docs.select(
+        "__id",
+        "__size",
+        F.posexplode(
+            F.slice(
+                F.col("__set"),
+                F.lit(1),
+                (size - F.ceil(F.lit(threshold) * size) + 1).cast("int"),
+            )
+        ).alias("__p0", "__sh"),
+    ).select("__id", "__size", (F.col("__p0") + 1).alias("__pos"), "__sh")
 
 
 def prefix_jaccard_pairs(
@@ -417,18 +529,8 @@ def prefix_jaccard_pairs(
     n-grams, ``common/(|a|+|b|-common)`` rounded to 6) — pinned in
     tests/test_dedup_similarity.py.
     """
-    docs = _df_ordered_shingle_docs(df, text_col, id_col, n)
-    prefix = docs.select(
-        "__id",
-        "__sz",
-        F.posexplode(
-            F.slice(
-                F.col("__arr"),
-                F.lit(1),
-                (F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1).cast("int"),
-            )
-        ).alias("__p0", "__sh"),
-    ).select("__id", "__sz", (F.col("__p0") + 1).alias("__pos"), "__sh")
+    docs = _df_ordered_shingle_docs(rebalance_undersplit(df), text_col, id_col, n)
+    prefix = _prefix_postings(docs, threshold)
     l, r = prefix.alias("l"), prefix.alias("r")
     # positional filter (PPJoin): a shared prefix token at 1-based positions
     # (pa, pb) bounds the overlap by 1 + min(|a|-pa, |b|-pb); Jaccard >= t
@@ -436,16 +538,16 @@ def prefix_jaccard_pairs(
     # candidates die IN the posting join, before the distinct shuffle.
     t_over = threshold / (1.0 + threshold)
     ubound = F.lit(1) + F.least(
-        F.col("l.__sz") - F.col("l.__pos"), F.col("r.__sz") - F.col("r.__pos")
+        F.col("l.__size") - F.col("l.__pos"), F.col("r.__size") - F.col("r.__pos")
     )
-    alpha = F.ceil(F.lit(t_over) * (F.col("l.__sz") + F.col("r.__sz")))
+    alpha = F.ceil(F.lit(t_over) * (F.col("l.__size") + F.col("r.__size")))
     cands = (
         l.join(r, "__sh")
         .where(
             (F.col("l.__id") < F.col("r.__id"))
             & (
-                F.least(F.col("l.__sz"), F.col("r.__sz"))
-                >= F.lit(threshold) * F.greatest(F.col("l.__sz"), F.col("r.__sz"))
+                F.least(F.col("l.__size"), F.col("r.__size"))
+                >= F.lit(threshold) * F.greatest(F.col("l.__size"), F.col("r.__size"))
             )
             & (ubound >= alpha)
         )
@@ -456,32 +558,7 @@ def prefix_jaccard_pairs(
         # one core; pin the fan-out (explicit N is exempt from coalescing).
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
-    a = docs.select(
-        F.col("__id").alias("id_a"),
-        F.col("__arr").alias("__seta"),
-        F.col("__sz").alias("__sa"),
-    )
-    b = docs.select(
-        F.col("__id").alias("id_b"),
-        F.col("__arr").alias("__setb"),
-        F.col("__sz").alias("__sb"),
-    )
-    common = F.size(F.array_intersect(F.col("__seta"), F.col("__setb")))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("__common", common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__common")
-                / (F.col("__sa") + F.col("__sb") - F.col("__common")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_pairs(cands, docs, docs, "jaccard", _jaccard(), threshold)
 
 
 def prefix_jaccard_pairs_sql(
@@ -493,6 +570,7 @@ def prefix_jaccard_pairs_sql(
     Jaccard values."""
     sh = word_shingles_sql(text_col, n)
     t_over = threshold / (1.0 + threshold)
+    jac = _jaccard_sql("a.__arr", "b.__arr", "a.__sz", "b.__sz")
     return f"""
     WITH shingled AS (
         SELECT {id_col} AS __id, unnest(list_distinct({sh})) AS __sh FROM {table}
@@ -523,38 +601,17 @@ def prefix_jaccard_pairs_sql(
           AND 1 + least(l.__sz - l.__pos, r.__sz - r.__pos)
               >= ceil({t_over} * (l.__sz + r.__sz))
     )
-    SELECT id_a, id_b,
-           round(len(list_intersect(a.__arr, b.__arr))
-                 / (a.__sz + b.__sz - len(list_intersect(a.__arr, b.__arr))), 6)
-               AS jaccard
+    SELECT id_a, id_b, {jac} AS jaccard
     FROM cand
     JOIN docs a ON a.__id = id_a
     JOIN docs b ON b.__id = id_b
-    WHERE round(len(list_intersect(a.__arr, b.__arr))
-                / (a.__sz + b.__sz - len(list_intersect(a.__arr, b.__arr))), 6)
-          >= {threshold}
+    WHERE {jac} >= {threshold}
     """
 
 
 # ---------------------------------------------------------------------------
 # composed production near-dedup: LSH candidates → exact Jaccard verify
 # ---------------------------------------------------------------------------
-def shingle_frame(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int
-) -> DataFrame:
-    """Per-doc ``(id_col, __sh)`` word-shingle arrays — the shared input of
-    LSH banding and exact-Jaccard verification."""
-    from ..functions.text import shingles_from_tokens, tokens
-    from ..io import rebalance_undersplit
-
-    return (
-        rebalance_undersplit(df)
-        .select(F.col(id_col), F.col(text_col))
-        .withColumn("__tk", tokens(F.col(text_col)))
-        .select(id_col, shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"))
-    )
-
-
 def near_dedup_pairs(
     df: DataFrame,
     text_col: str,
@@ -577,53 +634,19 @@ def near_dedup_pairs(
     identical to :func:`ngram_jaccard_pairs` (distinct word n-grams,
     ``common / (|a| + |b| - common)``, rounded to 6).
 
-    The :func:`shingle_frame` of ``df`` is staged here as a reliable
-    checkpoint; its files are deleted once the returned frame and its
-    descendants are garbage-collected on the driver.
+    The banding branch and both verify sides read one unstaged
+    :func:`shingle_frame`: at sf0.1 on 4 cores a reliable checkpoint of
+    it was slower on q54, q55, q59, q65 and q77 in 7–9 of 10 alternating
+    pairs (writing and reading back the per-document shingle arrays cost
+    more than recomputing them).
     """
-    # Signature-store pattern: the banding branch and BOTH verify sides
-    # would otherwise re-tokenize the corpus (3 executions of the shingle
-    # subtree). One staged (id, shingles) frame feeds all three; the text
-    # column itself is never materialized or shuffled. Per-doc shingle
-    # arrays are corpus-sized: reliable checkpoint.
-    sh = stage_unbounded(shingle_frame(df, text_col, id_col, shingle_n))
-    cands = minhash_lsh_pairs(
-        df, text_col, id_col,
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n, hash_fn=hash_fn,
-        shingles=sh,
+    sh = shingle_frame(
+        rebalance_undersplit(df), text_col, id_col, shingle_n, id_alias="__id"
     )
-    sets_df = (
-        sh.select(
-            F.col(id_col).alias("__id"),
-            F.array_distinct(F.col("__sh")).alias("__set"),
-        )
-        .withColumn("__size", F.size("__set"))
-    )
-    a = sets_df.select(
-        F.col("__id").alias("id_a"),
-        F.col("__set").alias("__seta"),
-        F.col("__size").alias("__sa"),
-    )
-    b = sets_df.select(
-        F.col("__id").alias("id_b"),
-        F.col("__set").alias("__setb"),
-        F.col("__size").alias("__sb"),
-    )
-    common = F.size(F.array_intersect(F.col("__seta"), F.col("__setb")))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("__common", common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__common")
-                / (F.col("__sa") + F.col("__sb") - F.col("__common")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    sets = _distinct_sets(sh)
+    return _verify_pairs(
+        _lsh_candidates(sh, num_perm, bands, hash_fn),
+        sets, sets, "jaccard", _jaccard(), threshold,
     )
 
 
@@ -652,77 +675,27 @@ def near_dedup(
     return df.join(losers, on=id_col, how="left_anti")
 
 
-def cross_near_dedup_pairs(
-    incoming: DataFrame,
-    reference: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    hash_fn: str = "md5",
-    incoming_shingles: DataFrame | None = None,
-    reference_shingles: DataFrame | None = None,
+def _cross_near_pairs(
+    inc_sh: DataFrame,
+    ref_sh: DataFrame,
+    num_perm: int,
+    bands: int,
+    threshold: float,
+    hash_fn: str,
 ) -> DataFrame:
-    """Verified near-duplicate pairs ACROSS two corpora: (incoming_id,
-    reference_id, jaccard) for incoming documents whose Jaccard with some
-    reference document meets ``threshold`` — the "does this new crawl
-    overlap my training set" primitive. Same LSH-then-verify shape as
-    :func:`near_dedup_pairs`, but buckets keep the two sides apart and only
-    cross-side pairs are emitted (incoming-incoming and reference-reference
-    pairs never materialize, so a heavily self-duplicated reference corpus
-    cannot blow up the candidate set).
-
-    Ids may overlap between the two corpora; sides are tracked by a tag
-    column, never by id arithmetic.
-
-    ``incoming_shingles`` / ``reference_shingles`` optionally supply a
-    pre-staged ``(id_col, __sh)`` frame for a side (the signature-store
-    pattern): callers that also need fingerprints or verify sets of the
-    same corpus — :func:`cross_dedup` — derive everything from ONE
-    materialized shingle frame instead of re-tokenizing the corpus per
-    consumer.
-    """
-    from ..io import rebalance_undersplit
-
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-
-    incoming = rebalance_undersplit(incoming)
-    reference = rebalance_undersplit(reference)
-
-    inc_sh = (
-        incoming_shingles
-        if incoming_shingles is not None
-        else shingle_frame(incoming, text_col, id_col, shingle_n)
-    )
-    ref_sh = (
-        reference_shingles
-        if reference_shingles is not None
-        else shingle_frame(reference, text_col, id_col, shingle_n)
-    )
-
-    def banded(sh_df: DataFrame, side: str) -> DataFrame:
-        return (
-            sh_df.select(F.col(id_col).alias("__id"), "__sh")
-            .withColumn("__h0", _base_hashes(F.col("__sh"), hash_fn))
-            .withColumn("__sig", _sig_from_base(F.col("__h0"), num_perm))
-            .select(
-                "__id",
-                F.lit(side).alias("__side"),
-                F.explode(
-                    F.array(
-                        *[_band_key(F.col("__sig"), b, num_perm // bands)
-                          for b in range(bands)]
-                    )
-                ).alias("__band"),
-            )
+    """Verified cross-side pairs of two ``(__id, __sh)`` shingle frames:
+    LSH buckets keep the sides apart by a tag column (ids may overlap),
+    only incoming × reference pairs are emitted, then Jaccard verify."""
+    both = (
+        _lsh_bands(inc_sh, "__id", num_perm, bands, hash_fn)
+        .withColumn("__side", F.lit("i"))
+        .unionByName(
+            _lsh_bands(ref_sh, "__id", num_perm, bands, hash_fn)
+            .withColumn("__side", F.lit("r"))
         )
-
-    both = banded(inc_sh, "i").unionByName(banded(ref_sh, "r"))
+    )
     grouped = (
-        both.groupBy("__band")
+        both.groupBy("band")
         .agg(
             F.array_sort(
                 F.collect_set(F.when(F.col("__side") == "i", F.col("__id")))
@@ -747,31 +720,42 @@ def cross_near_dedup_pairs(
         .select(F.col("__p.id_a"), F.col("__p.id_b"))
         .distinct()
     )
-
-    def sets_of(sh_df: DataFrame, a: str, b: str, c: str) -> DataFrame:
-        return sh_df.select(
-            F.col(id_col).alias(a),
-            F.array_distinct(F.col("__sh")).alias(b),
-        ).withColumn(c, F.size(b))
-
-    sa = sets_of(inc_sh, "id_a", "__seta", "__sa")
-    sb = sets_of(ref_sh, "id_b", "__setb", "__sb")
-    common = F.size(F.array_intersect(F.col("__seta"), F.col("__setb")))
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("__common", common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__common")
-                / (F.col("__sa") + F.col("__sb") - F.col("__common")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify_pairs(
+        cands, _distinct_sets(inc_sh), _distinct_sets(ref_sh),
+        "jaccard", _jaccard(), threshold,
     )
+
+
+def cross_near_dedup_pairs(
+    incoming: DataFrame,
+    reference: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 16,
+    bands: int = 4,
+    shingle_n: int = 3,
+    threshold: float = 0.5,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """Verified near-duplicate pairs ACROSS two corpora: (incoming_id,
+    reference_id, jaccard) for incoming documents whose Jaccard with some
+    reference document meets ``threshold`` — the "does this new crawl
+    overlap my training set" primitive. Same LSH-then-verify shape as
+    :func:`near_dedup_pairs`, but buckets keep the two sides apart and only
+    cross-side pairs are emitted (incoming-incoming and reference-reference
+    pairs never materialize, so a heavily self-duplicated reference corpus
+    cannot blow up the candidate set).
+
+    Ids may overlap between the two corpora; sides are tracked by a tag
+    column, never by id arithmetic.
+    """
+    inc_sh, ref_sh = (
+        shingle_frame(
+            rebalance_undersplit(side), text_col, id_col, shingle_n, id_alias="__id"
+        )
+        for side in (incoming, reference)
+    )
+    return _cross_near_pairs(inc_sh, ref_sh, num_perm, bands, threshold, hash_fn)
 
 
 def cross_dedup(
@@ -791,58 +775,37 @@ def cross_dedup(
     with a verified cross-corpus near-duplicate are dropped. The reference
     corpus is never mutated and never shuffles whole — only its
     fingerprints, band keys and shingle sets travel."""
-    from ..functions.text import (
-        fingerprint_from_shingles,
-        shingles_from_tokens,
-        tokens,
-    )
-    from ..io import rebalance_undersplit
-
     # md5-per-shingle work on both sides — see with_minhash_signature
     incoming = rebalance_undersplit(incoming)
     reference = rebalance_undersplit(reference)
-
-    def with_fp(df: DataFrame) -> DataFrame:
-        # tokens/shingles staged as projected columns: computing the
-        # fingerprint straight from text puts the token expression inside a
-        # higher-order-function lambda, which re-evaluates it PER ELEMENT
-        # (the PLANS.md 11x pitfall — measured 12.8s -> 0.9s on this very
-        # anti-join at sf0.1)
-        return (
-            df.withColumn("__tk", tokens(F.col(text_col)))
-            .withColumn("__sh", shingles_from_tokens(F.col("__tk"), shingle_n))
-            .withColumn("__fp", fingerprint_from_shingles(F.col("__sh")))
-            .drop("__tk", "__sh")
-        )
-
-    # Signature-store pattern: the reference corpus has THREE consumers
-    # (fingerprints, band keys, verify sets). One staged
-    # shingle frame feeds all three, so the reference is tokenized once
-    # instead of three times (measured ~2x on q75 at sf0.1). The frame
-    # carries only (id, shingles) — the reference text itself still never
-    # shuffles or materializes.
+    # The reference corpus has THREE consumers (fingerprints, band keys,
+    # verify sets). One staged shingle frame feeds all three, so the
+    # reference is tokenized once instead of three times (measured ~2x on
+    # q75 at sf0.1). The frame carries only (id, shingles) — the reference
+    # text itself still never shuffles or materializes. Per-doc shingle
+    # arrays: reliable checkpoint.
     ref_sh = stage_unbounded(
-        reference.withColumn("__tk", tokens(F.col(text_col)))
-        .select(
-            id_col,
-            shingles_from_tokens(F.col("__tk"), shingle_n).alias("__sh"),
-        )
-    )  # per-doc shingle arrays: reliable checkpoint
+        shingle_frame(reference, text_col, id_col, shingle_n, id_alias="__id")
+    )
     ref_fp = ref_sh.select(
         fingerprint_from_shingles(F.col("__sh")).alias("__fp")
     ).distinct()
-    stage1 = with_fp(incoming).join(ref_fp, "__fp", "left_anti").drop("__fp")
+    stage1 = (
+        shingle_frame(incoming, text_col, None, shingle_n)
+        .withColumn("__fp", fingerprint_from_shingles(F.col("__sh")))
+        .drop("__sh")
+        .join(ref_fp, "__fp", "left_anti")
+        .drop("__fp")
+    )
     # stage1 feeds three consumers (band keys, shingle sets, the final
     # anti-join) with different prunings — without materialization the whole
     # fingerprint anti-join subtree (including the reference fingerprint
     # scan) executes three times. Reliable checkpoint: computed once here,
     # then read back; carries text, so it scales with input.
     stage1 = stage_unbounded(stage1)
-    near = cross_near_dedup_pairs(
-        stage1, reference, text_col, id_col,
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        threshold=threshold, hash_fn=hash_fn,
-        reference_shingles=ref_sh,
+    near = _cross_near_pairs(
+        shingle_frame(stage1, text_col, id_col, shingle_n, id_alias="__id"),
+        ref_sh, num_perm, bands, threshold, hash_fn,
     )
     losers = near.select(F.col("id_a").alias(id_col)).distinct()
     return stage1.join(losers, id_col, "left_anti")
@@ -860,24 +823,14 @@ def cross_dedup_sql(
 ) -> str:
     """DuckDB twin of :func:`cross_dedup` (md5 mode). ``incoming`` and
     ``reference`` are table expressions (views or parenthesized SELECTs)."""
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    rpb = num_perm // bands
-    from ..functions.text import fingerprint_sql, word_shingles_sql
+    from ..functions.text import fingerprint_sql
 
+    band_keys = _band_keys_sql("s", num_perm, bands)
     sig = minhash_signature_sql(text_col, num_perm=num_perm, shingle_n=shingle_n)
-    band_keys = ", ".join(
-        "'{b}_' || ".format(b=b)
-        + " || '_' || ".join(f"s[{b * rpb + r + 1}]" for r in range(rpb))
-        for b in range(bands)
-    )
     fp_i = fingerprint_sql(f"i.{text_col}", shingle_n)
     fp_r = fingerprint_sql(f"r.{text_col}", shingle_n)
     sh = word_shingles_sql(text_col, shingle_n)
-    jac = (
-        "round(len(list_intersect(sa.st, sb.st)) / "
-        "(len(sa.st) + len(sb.st) - len(list_intersect(sa.st, sb.st))), 6)"
-    )
+    jac = _jaccard_sql("sa.st", "sb.st", "len(sa.st)", "len(sb.st)")
     # NOT EXISTS, not NOT IN: a NULL fingerprint (doc shorter than one
     # shingle) must be KEPT, matching Spark's null-dropping anti-join.
     return f"""
@@ -923,20 +876,10 @@ def near_dedup_pairs_sql(
     threshold: float = 0.5,
 ) -> str:
     """DuckDB twin of :func:`near_dedup_pairs` (md5 mode)."""
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    rpb = num_perm // bands
+    band_keys = _band_keys_sql("s", num_perm, bands)
     sig = minhash_signature_sql(text_col, num_perm=num_perm, shingle_n=shingle_n)
-    band_keys = ", ".join(
-        "'{b}_' || ".format(b=b)
-        + " || '_' || ".join(f"s[{b * rpb + r + 1}]" for r in range(rpb))
-        for b in range(bands)
-    )
     sh = word_shingles_sql(text_col, shingle_n)
-    jac = (
-        "round(len(list_intersect(sa.st, sb.st)) / "
-        "(len(sa.st) + len(sb.st) - len(list_intersect(sa.st, sb.st))), 6)"
-    )
+    jac = _jaccard_sql("sa.st", "sb.st", "len(sa.st)", "len(sb.st)")
     return f"""
     WITH sigs AS (SELECT {id_col} AS __id, {sig} AS s FROM {table}),
     banded AS (SELECT __id, unnest([{band_keys}]) AS band FROM sigs),
@@ -1015,9 +958,6 @@ def with_simhash(
 ) -> DataFrame:
     """Staged SimHash: token hashes materialize once, then ``bits`` aggregates
     read the hash array column instead of re-hashing per bit."""
-    from ..functions.text import tokens
-    from ..io import rebalance_undersplit
-
     df = rebalance_undersplit(df)  # hash-per-token; see with_minhash_signature
 
     def tok_hash(t):
@@ -1376,7 +1316,6 @@ def embedding_neardup_lsh(
     recall/cost trade every LSH dedup makes; cf. MMDS ch.3).
     """
     from ..functions.vectors import dot, norm
-    from ..io import rebalance_undersplit
     from .similarity import _deterministic_planes, hyperplane_signature
 
     # num_tables x num_planes x D multiply-adds per row (signatures) plus
@@ -1512,22 +1451,8 @@ def contamination_pairs(
     against the broadcast bench index; only (corpus_id, bench_id) partial
     counts move in the final aggregation.
     """
-    from ..functions.text import shingles_from_tokens, tokens
-
-    def shingled(df: DataFrame, out_id: str) -> DataFrame:
-        return (
-            df.select(F.col(id_col).alias(out_id), F.col(text_col))
-            .withColumn("__tk", tokens(F.col(text_col)))
-            .select(
-                out_id,
-                F.explode(
-                    F.array_distinct(shingles_from_tokens(F.col("__tk"), n))
-                ).alias("__sh"),
-            )
-        )
-
-    c_sh = shingled(corpus, "corpus_id")
-    b_sh = shingled(bench, "bench_id")
+    c_sh = shingle_frame(corpus, text_col, id_col, n, "corpus_id", distinct=True)
+    b_sh = shingle_frame(bench, text_col, id_col, n, "bench_id", distinct=True)
     b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("__bsize"))
     common = (
         c_sh.join(F.broadcast(b_sh), on="__sh")
@@ -1859,35 +1784,19 @@ def containment_pairs_prefix(
     (b,a) can appear. Scale shape matches :func:`prefix_jaccard_pairs`:
     documents never shuffle, only ids + shingle arrays.
     """
-    docs = _df_ordered_shingle_docs(df, text_col, id_col, n)
-    alpha = F.ceil(F.lit(threshold) * F.col("l.__sz"))
-    # contained side: prefix postings only
-    pref = docs.select(
-        "__id",
-        "__sz",
-        F.posexplode(
-            F.slice(
-                F.col("__arr"),
-                F.lit(1),
-                (F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1).cast("int"),
-            )
-        ).alias("__p0", "__sh"),
-    ).select("__id", "__sz", (F.col("__p0") + 1).alias("__pos"), "__sh")
-    # container side: FULL postings with positions
-    full = docs.select(
-        "__id",
-        "__sz",
-        F.posexplode(F.col("__arr")).alias("__p0", "__sh"),
-    ).select("__id", "__sz", (F.col("__p0") + 1).alias("__pos"), "__sh")
-    l, r = pref.alias("l"), full.alias("r")
+    docs = _df_ordered_shingle_docs(rebalance_undersplit(df), text_col, id_col, n)
+    alpha = F.ceil(F.lit(threshold) * F.col("l.__size"))
+    # contained side: prefix postings; container side: FULL postings
+    l = _prefix_postings(docs, threshold).alias("l")
+    r = _prefix_postings(docs, 0.0).alias("r")
     ubound = F.lit(1) + F.least(
-        F.col("l.__sz") - F.col("l.__pos"), F.col("r.__sz") - F.col("r.__pos")
+        F.col("l.__size") - F.col("l.__pos"), F.col("r.__size") - F.col("r.__pos")
     )
     cands = (
         l.join(r, "__sh")
         .where(
             (F.col("l.__id") != F.col("r.__id"))
-            & (F.col("r.__sz") >= alpha)
+            & (F.col("r.__size") >= alpha)
             & (ubound >= alpha)
         )
         .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
@@ -1895,23 +1804,9 @@ def containment_pairs_prefix(
         # pin the verify fan-out (see prefix_jaccard_pairs)
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
-    a = docs.select(
-        F.col("__id").alias("id_a"),
-        F.col("__arr").alias("__seta"),
-        F.col("__sz").alias("__sa"),
-    )
-    b = docs.select(
-        F.col("__id").alias("id_b"), F.col("__arr").alias("__setb")
-    )
-    common = F.size(F.array_intersect(F.col("__seta"), F.col("__setb")))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "containment", F.round(common / F.col("__sa"), 6)
-        )
-        .where(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
+    return _verify_pairs(
+        cands, docs, docs, "containment", F.col("__common") / F.col("__sa"),
+        threshold,
     )
 
 
@@ -1921,8 +1816,6 @@ def containment_pairs_prefix_sql(
     """DuckDB twin of :func:`containment_pairs_prefix` — replays the
     asymmetric prefix construction (contained-side slice vs container-side
     full postings, positional + size filters) term for term."""
-    from ..functions.text import word_shingles_sql
-
     sh = word_shingles_sql(text_col, n)
     return f"""
     WITH shingled AS (
@@ -2005,7 +1898,6 @@ def winnow_overlap_pairs(
         winnow_pick_positions,
         winnow_select,
     )
-    from ..io import rebalance_undersplit
 
     fp = (
         rebalance_undersplit(df)

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.dedup import _band_key, with_minhash_signature
+from ..io import rebalance_undersplit
+from ..operators.dedup import _lsh_bands, shingle_frame
 
 BAND_STATE_SCHEMA = T.StructType([T.StructField("first_doc", T.LongType())])
 
@@ -38,17 +39,6 @@ ALERT_SCHEMA = T.StructType(
         T.StructField("dup_doc", T.LongType()),
     ]
 )
-
-
-def _banded(docs: DataFrame, text_col: str, id_col: str, num_perm: int, bands: int) -> DataFrame:
-    rpb = num_perm // bands
-    sig = with_minhash_signature(docs, text_col, num_perm=num_perm)
-    return sig.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.array(*[_band_key(F.col("__sig"), b, rpb) for b in range(bands)])
-        ).alias("band"),
-    )
 
 
 def _update_band(
@@ -96,9 +86,10 @@ def near_dup_band_alerts(
     but against the then-known first rather than the global min — alerts
     are candidates for downstream exact verification either way.
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
-    keyed = _banded(docs, text_col, id_col, num_perm, bands)
+    sh = shingle_frame(rebalance_undersplit(docs), text_col, id_col, 3)
+    keyed = _lsh_bands(sh, id_col, num_perm, bands, "md5").select(
+        F.col(id_col).alias("doc"), "band"
+    )
     if docs.isStreaming:
         return keyed.groupBy("band").applyInPandasWithState(
             _update_band,

@@ -93,3 +93,18 @@ def test_masked_plan_hides_build_ids_and_checkpoint_paths():
     assert masked_plan(ckpt) == (
         "Arguments: [a#NL], ReliableCheckpointRDD[N] at <checkpoint>, ExistingRDD"
     )
+    # where the RDD was created depends on the caller's stack
+    for site in ("<unknown>:0", "NativeMethodAccessorImpl.java:0"):
+        assert masked_plan(f"MapPartitionsRDD[7] at checkpoint at {site}, ExistingRDD") == (
+            "MapPartitionsRDD[N] at checkpoint at <callsite>, ExistingRDD"
+        )
+    # lambda variables take a JVM-wide counter; a stream's state op a runId
+    stream = (
+        "lambdafunction(NOT (lambda x_138#7 = ), lambda x_138#7, false), "
+        "state info [ checkpoint = <unknown>, runId = "
+        "da71916d-1386-445e-80e9-209704a2e46e, opId = 0, ver = 0"
+    )
+    assert masked_plan(stream) == (
+        "lambdafunction(NOT (lambda x_N#N = ), lambda x_N#N, false), "
+        "state info [ checkpoint = <unknown>, runId = N, opId = 0, ver = 0"
+    )

@@ -125,6 +125,18 @@ def test_near_dedup_pairs_subset_of_exact(docs):
     assert len(composed) / max(len(exact), 1) >= 0.8
 
 
+def test_cross_form_on_one_corpus_matches_self_form(docs):
+    """A corpus crossed with itself, kept to id_a < id_b, gives exactly the
+    self form's verified pairs: both share one LSH banding and one verify."""
+    kw = dict(num_perm=8, bands=4, shingle_n=3, threshold=0.2)
+    cross = dd.cross_near_dedup_pairs(docs, docs, "text", "doc_id", **kw)
+    got = {tuple(r) for r in cross.where("id_a < id_b").collect()}
+    want = {
+        tuple(r) for r in dd.near_dedup_pairs(docs, "text", "doc_id", **kw).collect()
+    }
+    assert want and got == want
+
+
 def test_near_dedup_removes_higher_id_of_pair(spark):
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog today"),

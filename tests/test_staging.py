@@ -108,8 +108,7 @@ def _rdd_dirs(spark) -> set[str]:
 
 # every registry query that reaches a stage_unbounded caller
 _UNBOUNDED_QUERIES = (
-    "q44 q54 q55 q59 q65 q75 q77 q93 q111 q163 q177 q183 q194 q252 q258 "
-    "q280 q289"
+    "q44 q59 q75 q93 q111 q163 q177 q183 q194 q252 q258 q280 q289"
 ).split()
 
 
@@ -145,7 +144,7 @@ _PLAIN_SESSION = textwrap.dedent(
     """
     import sys
     from pyspark.sql import SparkSession
-    from pytrousse_spark.operators.dedup import near_dedup_pairs
+    from pytrousse_spark.operators.dedup import ngram_jaccard_pairs
 
     builder = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false")
     if len(sys.argv) > 1:
@@ -157,14 +156,14 @@ _PLAIN_SESSION = textwrap.dedent(
          (3, "an entirely different sentence about nothing")],
         "doc_id long, text string",
     )
-    rows = near_dedup_pairs(docs, "text", "doc_id", threshold=0.3).collect()
+    rows = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.3).collect()
     print(spark.sparkContext.getCheckpointDir(), len(rows))
     """
 )
 
 
 def _run_plain_session(tmp_path, *args) -> str:
-    """Run near_dedup_pairs in a plain ``SparkSession.builder`` session in
+    """Run ngram_jaccard_pairs in a plain ``SparkSession.builder`` session in
     a child process; return the checkpoint dir (a local path) it used."""
     env = {
         **os.environ,

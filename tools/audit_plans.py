@@ -40,12 +40,18 @@ _DETAIL = re.compile(r"^\((?P<id>\d+)\) (?P<name>\S+)")
 # a Sort's details end "Arguments: [order], <global>, <spill threshold>"
 _GLOBAL_SORT = re.compile(r"^Arguments: .*, true, \d+$")
 # what differs between two builds of one plan: expression ids (``a#12L``,
-# ``subquery#95``, ``[id=#202]``), exchange plan ids, RDD ids and
-# checkpoint paths (Spark names their directories by UUID and ``rdd-N``)
+# ``subquery#95``, ``[id=#202]``), exchange plan ids, RDD ids and the
+# call site an RDD was created at, lambda variable names (``lambda x_12``,
+# numbered by a JVM-wide counter), a stateful streaming operator's
+# ``runId`` and checkpoint paths (Spark names their directories by UUID
+# and ``rdd-N``)
 _MASKS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(RDD\[N\] at \w+ at )\S+:\d+"), r"\1<callsite>"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"runId = [0-9a-f-]{36}"), "runId = N"),
     (
         re.compile(
             r"[^\s,\[\]]*/(?:[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}|rdd-\d+)"

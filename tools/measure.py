@@ -1,10 +1,15 @@
 """Isolated per-query measurement harness (guide §1): times each named
 query with the noop sink on a fresh session, optionally dumps
-``.explain("formatted")`` to a file.
+``.explain("formatted")`` to a file, masked by
+``audit_plans.masked_plan`` so that plans of two checkouts compare with
+``diff -r``.
 
 Usage:
     python tools/measure.py q287_hits q117_pagerank [--reps 3]
         [--plans plans/r12 --suffix before]
+
+To compare the plans of two checkouts, run each with its own ``--plans``
+directory and the same ``--suffix``, then ``diff -r`` the directories.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Prints one line per query: name, per-rep walls, and per rep the split of
@@ -34,6 +39,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from audit_plans import masked_plan  # noqa: E402
 from pytrousse_spark.operators import _probe  # noqa: E402
 from pytrousse_spark.session import get_spark  # noqa: E402
 
@@ -119,7 +125,7 @@ def main() -> None:
             with open(
                 os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w"
             ) as f:
-                f.write(buf.getvalue())
+                f.write(masked_plan(buf.getvalue()))
         walls = []
         ledger: dict[str, list] = {
             "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": [],
