@@ -2538,11 +2538,14 @@ def _sql_q116() -> str:
 def q117_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-engine PageRank over the customer↔supplier trade graph (edges =
     distinct (customer, supplier) pairs from orders⋈lineitem, both
-    directions). 8 Pregel-style iterations, each ONE edge⋈rank join + one
-    dst-keyed agg; ranks are integer micro-units (contributions = one
-    IEEE division + half-away round each) so the DuckDB oracle replays
-    the full chain to BIT-identical ranks — the q111 exact-replay pattern
-    applied to an iterative graph algorithm."""
+    directions). 8 Pregel-style iterations over edges partitioned by
+    source once: each iteration's one exchange is the node-keyed
+    contribution aggregate, the edges stay put, and building the loop
+    runs no Spark job (operators/graph.pagerank); ranks are integer
+    micro-units (contributions = one IEEE division + half-away round
+    each) so the DuckDB oracle replays the full chain to BIT-identical
+    ranks — the q111 exact-replay pattern applied to an iterative graph
+    algorithm."""
     from pytrousse_spark.operators.graph import pagerank
 
     from pytrousse_spark.io import rebalance_undersplit
@@ -8627,10 +8630,12 @@ def q287_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer→supplier purchase graph (edges = distinct pairs from
     orders⋈lineitem): hub customers buy from authoritative suppliers,
     authoritative suppliers sell to hub customers — the query-time
-    companion to q117's PageRank. 6 iterations, each half = one
-    edge-keyed join + one hash agg + a broadcast max-normalization in
-    integer micro-units; the DuckDB twin replays the chain
-    bit-for-bit (operators/graph.hits)."""
+    companion to q117's PageRank. 6 iterations over edges partitioned
+    once by source and once by destination: each half's one exchange is
+    the node-keyed aggregate, then a max-normalization in integer
+    micro-units whose scalar is one driver read (one Spark job) per
+    half; the DuckDB twin replays the chain bit-for-bit
+    (operators/graph.hits)."""
     from pytrousse_spark.operators.graph import hits
 
     from pytrousse_spark.io import rebalance_undersplit

@@ -586,7 +586,8 @@ def textrank_keywords(
     Scale: tokenize/explode is map-side; the edge list dedups with
     one shuffle bounded by distinct co-occurrences (vocabulary^2
     worst case, corpus-sublinear in practice); each PageRank
-    iteration is one |E|-bounded join + agg; top-k is
+    iteration's one exchange is a node-keyed aggregate over edges
+    partitioned once (see ``graph.pagerank``); top-k is
     TakeOrderedAndProject, never a global sort.
     """
     from pytrousse_spark.functions.text import tokens

@@ -1,11 +1,19 @@
 """Iterative graph analytics with exact cross-engine replay.
 
-PageRank (Brin & Page 1998) as a Pregel-style DataFrame loop: each
-iteration is one edge⋈rank join plus one destination-keyed aggregation —
-the standard scalable shape (shuffles bounded by edges, node state by
-nodes; no adjacency ever collects to the driver). Connected components
-(label propagation) lives in operators/dedup.py:connected_components;
-this module adds the weighted-importance side of graph profiling.
+PageRank (Brin & Page 1998) and HITS (Kleinberg 1999) run as
+Pregel-style DataFrame loops in the GraphX discipline (Malewicz et al.
+2010; Gonzalez et al. 2014): the edges are partitioned by their source
+once, the vertex state lives on the same node-keyed partitions, and each
+iteration is one :func:`_push`. Its edge⋈state join streams the edges in
+place against a hash of the state, so the one exchange per iteration is
+the node-keyed aggregate of the messages: node-sized, never edge-sized,
+and nothing is sorted or broadcast. The loops are built with AQE off
+(``_collect._no_aqe``): AQE would report the staged frames' partitioning
+as unknown and re-shuffle the edges every iteration. Built that way,
+staging runs nothing, and the chain runs in the caller's action. No
+adjacency ever collects to the driver. Connected components (label
+propagation) lives in operators/dedup.py:connected_components; this
+module adds the weighted-importance side of graph profiling.
 
 Exact replay design (the q111 trainer pattern): ranks are INTEGER
 micro-units. Per-edge contributions are ``round(rank_micro / out_deg)``
@@ -22,8 +30,51 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..staging import stage
+from ._collect import _no_aqe, bounded_first
 
 _MICRO = 1_000_000
+
+
+def _edge_frame(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """``(src, dst)`` from the caller's columns. A column already named
+    ``src`` or ``dst`` passes through unaliased: the optimizer drops an
+    ``x AS x`` alias, after which a staged frame reports its partitioning
+    on the dropped attribute, and no join would see it co-partitioned."""
+    return edges.select(
+        *(
+            F.col(c) if c == name else F.col(c).alias(name)
+            for c, name in ((src_col, "src"), (dst_col, "dst"))
+        )
+    )
+
+
+def _staged_by(df: DataFrame, key: str) -> DataFrame:
+    """``df`` staged ``repartition(N, key)``, N being the session's
+    ``spark.sql.shuffle.partitions``: the count the node-keyed aggregate
+    exchange also uses, so joining this frame with node-keyed state on
+    ``key`` re-partitions neither side. Built with AQE off, the staged
+    frame keeps this partitioning; under AQE it would report none."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return stage(df.repartition(n, key))
+
+
+def _push(edges: DataFrame, frm: str, to: str, msg: DataFrame) -> DataFrame:
+    """One co-partitioned message step: ``(node, s)`` with ``s`` the sum
+    of ``msg.m`` over the edges ``frm → to``, keyed by the ``to`` end.
+
+    ``edges`` is staged ``repartition(N, frm)`` and ``msg`` is
+    node-keyed on the same N partitions, so the join streams the edges in
+    place against a per-partition hash of the messages (``shuffle_hash``
+    on the node side: no sort of either side) and the one exchange is the
+    node-keyed aggregate's, whose reduce side is node-sized.
+    """
+    return (
+        edges.join(
+            msg.select(F.col("node").alias(frm), "m").hint("shuffle_hash"), frm
+        )
+        .groupBy(F.col(to).alias("node"))
+        .agg(F.sum("m").alias("s"))
+    )
 
 
 def pagerank(
@@ -37,56 +88,51 @@ def pagerank(
     teleport mass; duplicate edges count once — callers pre-distinct).
 
     Returns ``(node, rank_micro)`` — rank in integer micro-units, summing
-    to ~N·1e6. One staged rank frame per iteration truncates the lineage
-    (the connected_components pattern); per-iteration cost is one
-    src-keyed join + one dst-keyed aggregation, both bounded by |E|.
+    to ~N·1e6.
+
+    Cost: the edges are staged once, partitioned by source. Each
+    iteration pushes ``round(r / out_deg)`` along them (:func:`_push`)
+    and joins the sums onto the node frame on the same partitions, so
+    its one exchange is the node-keyed aggregate: a map partition ships
+    at most one row per destination node, and the edges stay put. The
+    rank frame (which carries ``out_deg``) is staged every iteration to
+    keep the plan short; built with AQE off, staging runs no job, so
+    the call runs none and the whole chain runs in the caller's action.
     """
-    e = stage(edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")))
-    nodes = stage(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    base = stage(nodes.join(deg, nodes["node"] == deg["src"], "left").select(
-        "node", F.coalesce(F.col("out_deg"), F.lit(0)).alias("out_deg")
-    ))
     teleport = int(round((1.0 - damping) * _MICRO))
-    # the rank frame carries out_deg forward so each iteration is ONE
-    # src-keyed join + ONE dst-keyed agg (no per-iteration degree lookup)
-    ranks = base.select(
-        "node", "out_deg", F.lit(_MICRO).cast("bigint").alias("r")
-    )
-    for _ in range(iters):
-        contrib = (
-            e.join(
-                # dangling nodes (out_deg 0) contribute nothing; excluding
-                # them also keeps the division ANSI-safe
-                ranks.where(F.col("out_deg") > 0).select(
-                    F.col("node").alias("src"),
-                    F.round(F.col("r") / F.col("out_deg"), 0)
-                    .cast("bigint")
-                    .alias("c"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("in_sum"))
+    with _no_aqe(edges):
+        e = _staged_by(_edge_frame(edges, src_col, dst_col), "src")
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        ranks = stage(
-            base.join(contrib, "node", "left")
-            .select(
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
+        base = stage(
+            nodes.join(deg.hint("shuffle_hash"), nodes["node"] == deg["src"], "left")
+            .select("node", F.coalesce(F.col("out_deg"), F.lit(0)).alias("out_deg"))
+        )
+        ranks = base.select("node", "out_deg", F.lit(_MICRO).cast("bigint").alias("r"))
+        for _ in range(iters):
+            # dangling nodes (out_deg 0) contribute nothing; excluding
+            # them also keeps the division ANSI-safe
+            msg = ranks.where(F.col("out_deg") > 0).select(
                 "node",
-                "out_deg",
-                (
-                    F.lit(teleport)
-                    + F.round(
-                        F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0)),
-                        0,
-                    ).cast("bigint")
-                ).alias("r"),
+                F.round(F.col("r") / F.col("out_deg"), 0).cast("bigint").alias("m"),
             )
-        )
+            ranks = stage(
+                base.join(_push(e, "src", "dst", msg).hint("shuffle_hash"), "node", "left")
+                .select(
+                    "node",
+                    "out_deg",
+                    (
+                        F.lit(teleport)
+                        + F.round(
+                            F.lit(damping) * F.coalesce(F.col("s"), F.lit(0)), 0
+                        ).cast("bigint")
+                    ).alias("r"),
+                )
+            )
     return ranks.select("node", F.col("r").alias("rank_micro"))
 
 
@@ -418,9 +464,12 @@ def k_core(
 
     Scale design: each round is one degree aggregation (shuffle
     bounded by surviving edges) + two semi-joins; lineage is cut per
-    round by staging the edge frame, the q117 PageRank iteration
-    discipline. No driver collect; the peel chain depth, not edge
-    count, bounds the round cost.
+    round by staging the edge frame. No driver collect; the peel chain
+    depth, not edge count, bounds the round cost. Unlike
+    :func:`pagerank`, the loop is planned with the caller's AQE setting:
+    the semi-joins key the edges on both ends, so no one partitioning
+    serves every round (measured no-go for an AQE-off build in
+    CHANGES.md).
 
     Returns one row ``(k, n_core_vertices, n_core_edges)``.
     """
@@ -539,7 +588,8 @@ def label_propagation(
     + one (vertex, label) count + one per-vertex arg-max window whose
     partition is a vertex's neighbor-label set (bounded by max
     degree, not |V|); lineage cut per round by staging the label
-    frame (q117 discipline). No driver collect.
+    frame. No driver collect. Planned with the caller's AQE setting,
+    like :func:`k_core`.
     """
     from pyspark.sql import Window
 
@@ -794,90 +844,54 @@ def hits(
     good hubs. Duplicate edges count once — callers pre-distinct.
 
     Arithmetic: scores live in integer micro-units; each half-iteration
-    is ONE edge-keyed join + ONE hash agg (bounded by |E|), then a
-    MAX-normalization (max-norm is a standard HITS scaling — any
-    positive rescale leaves the fixed point's direction unchanged) as
-    one broadcast scalar: ``round(raw * 1e6 / max_raw)`` — a single
-    IEEE multiply+divide+round per node, the q117 exact-replay recipe,
-    so the DuckDB twin reproduces every score bit-for-bit. One staged
-    raw frame per half-iteration truncates lineage.
+    is one :func:`_push` then a MAX-normalization (max-norm is a standard
+    HITS scaling — any positive rescale leaves the fixed point's
+    direction unchanged): ``round(raw * 1e6 / max_raw)`` — a single IEEE
+    multiply+divide+round per node, the q117 exact-replay recipe, so the
+    DuckDB twin reproduces every score bit-for-bit.
+
+    Cost: the edges are staged twice, once partitioned by source (the
+    authority half pushes along them) and once by destination (the hub
+    half), and every node-keyed frame is staged on the same partitions,
+    so a half-iteration's one exchange is the node-keyed aggregate and
+    the edges stay put. The loop is built with AQE off, like
+    :func:`pagerank`; its one Spark job per half-iteration reads the
+    ``max_raw`` scalar on the driver, and the rest of the chain runs in
+    the caller's action.
 
     Returns ``(node, hub_micro, auth_micro)`` for every node.
     """
-    e = stage(edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")))
-    nodes = stage(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    h = nodes.select("node", F.lit(_MICRO).cast("bigint").alias("h"))
-    a = nodes.select("node", F.lit(0).cast("bigint").alias("a"))
-    for _ in range(iters):
-        # the raw frame feeds BOTH the max-normalization broadcast and
-        # the normalized select; without a checkpoint the broadcast
-        # subtree re-executes the edge join + agg, doubling every half-
-        # iteration (measured r12: 21.7 -> 9.6 s median at sf0.1). The
-        # checkpointed frame is node-sized, never |E|.
-        a_raw = stage(
-            e.join(
-                h.select(F.col("node").alias("src"), "h"), "src"
+    with _no_aqe(edges):
+        by_src = _staged_by(_edge_frame(edges, src_col, dst_col), "src")
+        by_dst = _staged_by(by_src, "dst")
+        nodes = stage(
+            by_src.select(F.col("src").alias("node"))
+            .unionByName(by_src.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+
+        def scaled(raw: DataFrame) -> DataFrame:
+            # the staged raw sums feed both the max read and the scaled
+            # frame, so the push runs once
+            raw = stage(raw)
+            mx = bounded_first(raw.agg(F.max("s").alias("mx")))["mx"]
+            return stage(
+                nodes.join(raw.hint("shuffle_hash"), "node", "left").select(
+                    "node",
+                    F.coalesce(
+                        F.round(F.col("s") * F.lit(1e6) / F.lit(mx), 0).cast("bigint"),
+                        F.lit(0),
+                    ).alias("m"),
+                )
             )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("h").alias("raw"))
-        )
-        amax = a_raw.agg(F.max("raw").alias("mx"))
-        a = (
-            nodes.join(a_raw, "node", "left")
-            .crossJoin(F.broadcast(amax))
-            .select(
-                "node",
-                F.coalesce(
-                    F.round(
-                        F.col("raw") * F.lit(1e6) / F.col("mx"), 0
-                    ).cast("bigint"),
-                    F.lit(0),
-                ).alias("a"),
-            )
-            # NOT checkpointed: the normalized frame has one consumer
-            # per half-iteration (EXCEPT the final iteration's `a`,
-            # which feeds both h_raw and the closing h-a join — that
-            # one normalization re-executes twice, a deliberate trade:
-            # it is a bounded nodes-left-join + max over the
-            # checkpointed a_raw, cheaper than one more scheduled
-            # job per half-iteration; r12 ADVICE item 5), so inlining
-            # it into that consumer's job drops one scheduled job per
-            # half-iteration (12 over the run); the expensive part
-            # stays behind a_raw's checkpoint either way.
-        )
-        h_raw = stage(
-            e.join(
-                a.select(F.col("node").alias("dst"), "a"), "dst"
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("a").alias("raw"))
-        )
-        hmax = h_raw.agg(F.max("raw").alias("mx"))
-        h = (
-            nodes.join(h_raw, "node", "left")
-            .crossJoin(F.broadcast(hmax))
-            .select(
-                "node",
-                F.coalesce(
-                    F.round(
-                        F.col("raw") * F.lit(1e6) / F.col("mx"), 0
-                    ).cast("bigint"),
-                    F.lit(0),
-                ).alias("h"),
-            )
-            # NOT checkpointed — same as the authority frame above
-        )
-    return (
-        h.join(a, "node")
-        .select(
-            "node",
-            F.col("h").alias("hub_micro"),
-            F.col("a").alias("auth_micro"),
-        )
+
+        h = nodes.select("node", F.lit(_MICRO).cast("bigint").alias("m"))
+        a = nodes.select("node", F.lit(0).cast("bigint").alias("m"))
+        for _ in range(iters):
+            a = scaled(_push(by_src, "src", "dst", h))
+            h = scaled(_push(by_dst, "dst", "src", a))
+    return h.select("node", F.col("m").alias("hub_micro")).join(
+        a.select("node", F.col("m").alias("auth_micro")).hint("shuffle_hash"), "node"
     )
 
 

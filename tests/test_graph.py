@@ -266,3 +266,204 @@ def test_hits_laws_and_oracle_parity(spark):
     # pure sources have 0 authority; pure sinks have 0 hub
     assert all(got[u][1] == 0 for u in ("u1", "u2", "u3"))
     assert all(got[v][0] == 0 for v in ("v1", "v2", "v3"))
+
+
+def _loop_graph(spark):
+    """A small directed graph with a dangling node, a pure source, cycles
+    and string node ids (the q117/q287 key type)."""
+    import random
+
+    rng = random.Random(7)
+    pairs = {(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(160)}
+    pairs.add(("src_only", "n1"))
+    pairs.add(("n2", "sink_only"))
+    return spark.createDataFrame(sorted(pairs), "src string, dst string")
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_nested_no_aqe_is_reentrant_and_restores(spark):
+    """A bounded collect inside a loop region nests ``_no_aqe``: the lock
+    must be reentrant, and each exit restores the value its entry saw."""
+    import threading
+
+    from pytrousse_spark.operators import _collect
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    df = spark.range(3)
+    seen = []
+
+    def nested():
+        with _collect._no_aqe(df):
+            seen.append(spark.conf.get(key))
+            # fails fast (no hang) if the lock is not reentrant
+            assert _collect._AQE_LOCK.acquire(timeout=5)
+            _collect._AQE_LOCK.release()
+            seen.append(_collect.bounded_first(df.agg(F.max("id").alias("mx")))["mx"])
+            seen.append(spark.conf.get(key))
+
+    spark.conf.set(key, "true")
+    try:
+        t = threading.Thread(target=nested, daemon=True)
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive(), "nested _no_aqe deadlocked"
+        assert seen == ["false", 2, "false"]
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_pagerank_restores_session_conf_on_return_and_raise(spark):
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from pytrousse_spark.operators.graph import hits
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    edges = _loop_graph(spark)
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set(key, aqe)
+            pagerank(edges, "src", "dst", iters=2).collect()
+            assert spark.conf.get(key) == aqe
+            hits(edges, "src", "dst", iters=1).collect()
+            assert spark.conf.get(key) == aqe
+            with pytest.raises(AnalysisException):
+                pagerank(edges, "no_such_column", "dst")
+            assert spark.conf.get(key) == aqe
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_graph_loops_invariant_to_partitions_and_aqe(spark):
+    """PageRank and HITS rows are bit-identical whatever the caller's
+    ``spark.sql.shuffle.partitions`` and AQE setting."""
+    from pytrousse_spark.operators.graph import hits
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = [spark.conf.get(k) for k in keys]
+    edges = _loop_graph(spark)
+    results = {}
+    try:
+        for parts in ("1", "4"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], parts)
+                spark.conf.set(keys[1], aqe)
+                results[parts, aqe] = (
+                    sorted(map(tuple, pagerank(edges, "src", "dst", iters=6).collect())),
+                    sorted(map(tuple, hits(edges, "src", "dst", iters=3).collect())),
+                )
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    first = next(iter(results.values()))
+    assert len(first[0]) == len(first[1]) == 42
+    assert all(r == first for r in results.values())
+
+
+def test_graph_loops_run_no_job_per_iteration(spark):
+    """Job-count tripwire, build through ``collect()`` in one job group:
+    the PageRank chain runs in the action's one job (1 measured) and HITS
+    adds one job per half-iteration for its max scalar (2k + 1
+    measured)."""
+    from pytrousse_spark.operators.graph import hits
+
+    edges = _loop_graph(spark)
+    _, n_pr = _jobs_in_group(
+        spark, "tripwire-pagerank", lambda: pagerank(edges, "src", "dst", iters=8).collect()
+    )
+    assert n_pr <= 8
+    k = 3
+    _, n_hits = _jobs_in_group(
+        spark, "tripwire-hits", lambda: hits(edges, "src", "dst", iters=k).collect()
+    )
+    assert n_hits <= 2 * k + 2
+
+
+def _iteration_plans(spark, monkeypatch, build):
+    """The formatted AQE-off plan of every frame the loop stages, in
+    staging order (each one unstaged, reading the frames staged before)."""
+    import io
+    from contextlib import redirect_stdout
+
+    import pytrousse_spark.operators.graph as graph
+    from pytrousse_spark.operators._collect import _no_aqe
+
+    staged = []
+    real = graph.stage
+
+    def record(df):
+        staged.append(df)
+        return real(df)
+
+    monkeypatch.setattr(graph, "stage", record)
+    build()
+    monkeypatch.setattr(graph, "stage", real)
+    plans = []
+    with _no_aqe(staged[0]):
+        for df in staged:
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            plans.append(buf.getvalue())
+    return plans
+
+
+def _node_names(plan):
+    import re
+
+    return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+
+
+def _exchange_keys(plan):
+    import re
+
+    return re.findall(r"^Arguments: hashpartitioning\((\w+)#\d+, \d+\)", plan, re.M)
+
+
+def test_pagerank_iteration_plan_is_one_node_keyed_exchange(spark, monkeypatch):
+    """One PageRank iteration: the edges stream in place against the
+    rank state (hash join, no sort, no broadcast), and the only exchange
+    is the node-keyed contribution aggregate."""
+    edges = _loop_graph(spark)
+    plans = _iteration_plans(
+        spark, monkeypatch, lambda: pagerank(edges, "src", "dst", iters=2)
+    )
+    # staged: edges, base, then one rank frame per iteration
+    assert len(plans) == 4
+    names = _node_names(plans[-1])
+    assert names.count("Exchange") == 1
+    assert _exchange_keys(plans[-1]) == ["dst"]
+    assert "Sort" not in names and "BroadcastExchange" not in names
+    assert names.count("ShuffledHashJoin") == 2
+
+
+def test_hits_half_iteration_plan_is_one_node_keyed_exchange(spark, monkeypatch):
+    """One HITS half-iteration (the pushed raw sums, then their scaling):
+    one node-keyed exchange, no sort, no broadcast of vertex state."""
+    from pytrousse_spark.operators.graph import hits
+
+    edges = _loop_graph(spark)
+    plans = _iteration_plans(
+        spark, monkeypatch, lambda: hits(edges, "src", "dst", iters=2)
+    )
+    # staged: edges by src, edges by dst, nodes, then (raw, scaled) per half
+    assert len(plans) == 3 + 2 * 2 * 2
+    for (raw, scaled), key in zip(
+        [plans[-4:-2], plans[-2:]], ["dst", "src"]
+    ):
+        names = _node_names(raw) + _node_names(scaled)
+        assert names.count("Exchange") == 1
+        assert _exchange_keys(raw) == [key]
+        assert "Sort" not in names and "BroadcastExchange" not in names

@@ -19,7 +19,9 @@ staged frames, bounded collects) and ``action_s``/``action_jobs`` (the
 noop write). Jobs are counted per phase through its own Spark job group.
 ``ckpt_mb`` is the size of the session's checkpoint directory after the
 action: the files ``staging.stage_unbounded`` wrote during that rep.
-Warm-up: q04 noop once. Before every rep, outside its timer, the
+Warm-up: one untimed, unrecorded rep of each named query right before
+its timed reps, so no timed rep pays the JVM's first code generation
+for that query's expressions. Before every rep, outside its timer, the
 ``_probe`` memo and the session's cached relations are cleared (as
 ``bench.py`` does), so each rep pays for its own probes and trained
 artifacts; then the previous rep's frame is dropped and the Python and
@@ -108,11 +110,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = {**entrymod.queries(), **entrymod.bench_extras()}
 
-    # warm the JVM + parquet footers
-    entrymod.q04_filter_agg(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
     results = {}
     for name in names:
         fn = qs[name]
@@ -131,7 +128,7 @@ def main() -> None:
             "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": [],
             "ckpt_mb": [],
         }
-        for rep in range(reps):
+        for rep in ("warm", *range(reps)):
             _probe.clear()
             spark.catalog.clearCache()
             df = None
@@ -144,6 +141,8 @@ def main() -> None:
                 f"measure:{name}:{rep}:action",
                 lambda: df.write.format("noop").mode("overwrite").save(),
             )
+            if rep == "warm":
+                continue
             walls.append(round(build_s + action_s, 3))
             ledger["build_s"].append(round(build_s, 3))
             ledger["build_jobs"].append(build_jobs)
