@@ -19,7 +19,16 @@ CTE pipeline and lands on bit-identical weights.
 Scale: per iteration, one scan + one 5-value aggregate (no shuffle of
 rows at all — partial aggs combine on the driver side of the exchange);
 the feature frame is computed once and staged. T iterations =
-T scans of a cached columnar frame.
+T scans of the staged feature frame.
+
+The linear-model family shares one kernel per engine here: ``_sigma`` /
+``_SIGMA_SQL`` (the only sigmoid), ``logreg_train`` /
+``_logreg_chain_sql`` (the training and its CTE replay, which
+``cohort``'s IPW, AIPW and matching estimators reuse for their
+propensities) and the two-feature OLS steps ``_ols2_sums`` →
+``_ols2_terms`` → ``_ols2_solve`` with their ``_sql`` twins
+(``ols_two_feature``, ``ols_grouped``, ``cohort.aipw_ate``'s outcome
+models and ``timeseries.granger_lead_lag``).
 """
 
 from __future__ import annotations
@@ -96,6 +105,9 @@ def quality_features_sql(table: str, text_col: str, label_cond: str) -> str:
 
 
 def _sigma(w: list[float]) -> F.Column:
+    """The model's probability over the feature columns ``x1..x3``,
+    rounded to 6: the package's only Spark sigmoid. ``_SIGMA_SQL`` is
+    its only SQL twin."""
     z = (
         F.lit(w[0])
         + F.lit(w[1]) * F.col("x1")
@@ -103,6 +115,13 @@ def _sigma(w: list[float]) -> F.Column:
         + F.lit(w[3]) * F.col("x3")
     )
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+
+
+#: :func:`_sigma` over ``feat f CROSS JOIN w{t} w`` (weights ``a..d``)
+_SIGMA_SQL = (
+    "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
+    " + w.d * f.x3))), 6)"
+)
 
 
 def _micro(col: F.Column) -> F.Column:
@@ -115,7 +134,8 @@ def logreg_train(
     """Batch GD from w=0: per iteration one 5-value aggregate whose row
     contributions are rounded micro-units (exact integer sums), then the
     driver-side update rounds weights to 6 half-away — the identical
-    arithmetic the SQL twin's CTE chain performs."""
+    arithmetic the SQL twin's CTE chain (:func:`_logreg_chain_sql`)
+    performs."""
     from ._collect import bounded_first
 
     w = [0.0, 0.0, 0.0, 0.0]
@@ -139,6 +159,43 @@ def logreg_train(
             for j in range(4)
         ]
     return w
+
+
+def _logreg_chain_sql(feat: str, iters: int, lr: float) -> list[str]:
+    """The DuckDB twin of :func:`logreg_train` as CTEs: ``feat`` (the
+    ``(y, x1, x2, x3, …)`` SELECT), ``w0``, then per iteration ``p{t}``
+    (sigmoid), ``g{t}`` (micro-unit gradient sums) and ``w{t}`` (the
+    update); the trained weights are ``w{iters}``, columns ``a..d``.
+
+    All but ``w0`` are MATERIALIZED: ``feat`` is read once per
+    iteration (inlined, DuckDB would rescan the input T times — T
+    parquet opens and regexp passes, file-handle exhaustion at T=20;
+    the Spark side stages it), and ``w{t}`` reads ``w{t-1}`` twice
+    (through ``p{t}`` and its own update), so inlining would grow the
+    expression tree 2^T-fold."""
+    gsums = ", ".join(
+        f"CAST(sum(CAST(round(round((p.p - p.y) * {x}, 6)"
+        f" * {_MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
+        for j, x in enumerate(["1.0", "p.x1", "p.x2", "p.x3"])
+    )
+    upd = ", ".join(
+        f"round(w.{wc} - {lr} * (g.g{j} / {float(_MICRO)}) / g.n, 6) AS {wc}"
+        for j, wc in enumerate("abcd")
+    )
+    ctes = [
+        f"feat AS MATERIALIZED ({feat})",
+        "w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d)",
+    ]
+    for t in range(1, iters + 1):
+        ctes += [
+            f"p{t} AS MATERIALIZED (SELECT f.y, f.x1, f.x2, f.x3,"
+            f" {_SIGMA_SQL} AS p FROM feat f CROSS JOIN w{t - 1} w)",
+            f"g{t} AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n,"
+            f" {gsums} FROM p{t} p)",
+            f"w{t} AS MATERIALIZED"
+            f" (SELECT {upd} FROM w{t - 1} w CROSS JOIN g{t} g)",
+        ]
+    return ctes
 
 
 def logreg_quality_gate(
@@ -190,52 +247,10 @@ def logreg_quality_sql(
     T (sigmoid → micro-unit gradient agg → weight update) rounds, then
     the confusion metrics under the final weights."""
     feat = quality_features_sql(table, text_col, label_cond)
-    # MATERIALIZED: the chain references feat once per iteration; without
-    # it DuckDB inlines the scan T times (T parquet opens + T regexp
-    # passes — file-handle exhaustion at T=20). Mirrors the Spark side's
-    # staging of the feature frame.
-    ctes = [
-        f"feat AS MATERIALIZED ({feat})",
-        "w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d)",
-    ]
-    xs = ["1.0", "f.x1", "f.x2", "f.x3"]
-    for t in range(1, iters + 1):
-        prev = f"w{t - 1}"
-        sig = (
-            "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-            " + w.d * f.x3))), 6)"
-        )
-        gsums = ", ".join(
-            f"CAST(sum(CAST(round(round((p.p - p.y) * {x.replace('f.', 'p.')}, 6)"
-            f" * {_MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
-            for j, x in enumerate(xs)
-        )
-        # every per-iteration CTE is MATERIALIZED: w{t} references w{t-1}
-        # twice (through p{t}'s gradient AND its own update), so inlining
-        # would expand the chain's expression tree 2^T-fold.
-        ctes.append(
-            f"p{t} AS MATERIALIZED (SELECT f.y, f.x1, f.x2, f.x3, {sig} AS p"
-            f" FROM feat f CROSS JOIN {prev} w)"
-        )
-        ctes.append(
-            f"g{t} AS MATERIALIZED"
-            f" (SELECT CAST(count(*) AS BIGINT) AS n, {gsums} FROM p{t} p)"
-        )
-        upd = ", ".join(
-            f"round(w.{wc} - {lr} * (g.g{j} / {float(_MICRO)}) / g.n, 6) AS {wc}"
-            for j, wc in enumerate(["a", "b", "c", "d"])
-        )
-        ctes.append(
-            f"w{t} AS MATERIALIZED"
-            f" (SELECT {upd} FROM {prev} w CROSS JOIN g{t} g)"
-        )
+    ctes = _logreg_chain_sql(feat, iters, lr)
     wf = f"w{iters}"
-    sig_final = (
-        "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-        " + w.d * f.x3))), 6)"
-    )
     ctes.append(
-        f"scored AS (SELECT f.y, CASE WHEN {sig_final} >= 0.5 THEN 1 ELSE 0 END"
+        f"scored AS (SELECT f.y, CASE WHEN {_SIGMA_SQL} >= 0.5 THEN 1 ELSE 0 END"
         f" AS pred FROM feat f CROSS JOIN {wf} w)"
     )
     ctes.append(
@@ -256,6 +271,101 @@ def logreg_quality_sql(
     """
 
 
+# Two-feature OLS ``y ~ b0 + b1·x1 + b2·x2`` from one pass of sufficient
+# statistics: sums of the terms below (``s1 = Σx1``, ``s1y = Σx1·y`` …),
+# the centred cross-products ``c_ab = n·s_ab − s_a·s_b`` and Cramer's
+# rule on the 2x2 normal equations. The callers (ols_two_feature,
+# ols_grouped, cohort.aipw_ate, timeseries.granger_lead_lag) pick the
+# sums' exact type; the solve runs in doubles with one expression shape
+# per engine.
+_SUMS = ("1", "2", "y", "11", "22", "12", "1y", "2y", "yy")
+_CTERMS = ("11", "22", "12", "1y", "2y", "yy")
+
+
+def _ols2_sums(x1, x2, y, fold=F.sum, sfx: str = "", yy: bool = True):
+    """The sums ``s1 s2 sy s11 s22 s12 s1y s2y [syy]``, each through
+    ``fold``, aliased ``s{term}{sfx}``."""
+    v = {"1": x1, "2": x2, "y": y}
+    return [
+        fold(v[k] if len(k) == 1 else v[k[0]] * v[k[1]]).alias(f"s{k}{sfx}")
+        for k in _SUMS
+        if yy or k != "yy"
+    ]
+
+
+def _ols2_sums_sql(v: dict, fold, sfx: str = "", yy: bool = True) -> str:
+    """SQL twin of :func:`_ols2_sums`: ``v`` maps ``1``/``2``/``y`` to
+    column texts; ``fold(*factors)`` returns one aggregate's text."""
+    return ", ".join(
+        f"{fold(*(v[t] for t in k))} AS s{k}{sfx}"
+        for k in _SUMS
+        if yy or k != "yy"
+    )
+
+
+def _ols2_terms(sfx: str = ""):
+    """``(n, s, c)`` in doubles over the columns ``n{sfx}``,
+    ``s1{sfx}`` …: the count, the sums keyed by term and the c-terms
+    keyed ``c11 … cyy``."""
+    n = F.col(f"n{sfx}").cast("double")
+    s = {k: F.col(f"s{k}{sfx}").cast("double") for k in _SUMS}
+    return n, s, {f"c{k}": n * s[k] - s[k[0]] * s[k[1]] for k in _CTERMS}
+
+
+def _ols2_terms_sql(sfx: str = "") -> dict[str, str]:
+    """SQL twin of :func:`_ols2_terms`'s c-terms, unparenthesized."""
+    n = f"n{sfx}::DOUBLE"
+    s = {k: f"s{k}{sfx}::DOUBLE" for k in _SUMS}
+    return {f"c{k}": f"{n} * {s[k]} - {s[k[0]]} * {s[k[1]]}" for k in _CTERMS}
+
+
+def _ols2_solve(n, c: dict, s1, s2, sy, guard=None) -> dict:
+    """Cramer's rule: ``ok``, ``b1``, ``b2``, ``b0`` and ``r2``, NULL
+    where the matrix is singular (constant or collinear features) or
+    ``guard`` fails. The CASE shape is the SQL twin's, so both engines
+    emit NULL rather than Spark's non-ANSI NULL against DuckDB's IEEE
+    Inf/NaN (round-5 ADVICE)."""
+    c11, c22, c12, c1y, c2y, cyy = (c[f"c{k}"] for k in _CTERMS)
+    det = c11 * c22 - c12 * c12
+    ok = det != 0 if guard is None else (det != 0) & guard
+    b1 = F.when(ok, (c1y * c22 - c2y * c12) / det)
+    b2 = F.when(ok, (c2y * c11 - c1y * c12) / det)
+    return {
+        "ok": ok,
+        "b0": F.when(ok, (sy - b1 * s1 - b2 * s2) / n),
+        "b1": b1,
+        "b2": b2,
+        "r2": F.when(ok & (cyy > 0), (b1 * c1y + b2 * c2y) / cyy),
+    }
+
+
+def _ols2_solve_sql(c: dict, guard: str = "{det} <> 0") -> tuple:
+    """SQL twin of :func:`_ols2_solve`: the texts ``(det, when, b1,
+    b2)``; ``when`` is ``guard`` with ``{det}`` filled in."""
+    c11, c22, c12, c1y, c2y = (c[f"c{k}"] for k in _CTERMS[:5])
+    det = f"{c11} * {c22} - {c12} * {c12}"
+    when = guard.format(det=det)
+    return (
+        det,
+        when,
+        f"CASE WHEN {when} THEN ({c1y} * {c22} - {c2y} * {c12}) / ({det}) END",
+        f"CASE WHEN {when} THEN ({c2y} * {c11} - {c1y} * {c12}) / ({det}) END",
+    )
+
+
+def _ols2_dec_sums(y_col: str, x1_col: str, x2_col: str):
+    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
+    return [
+        F.count(F.lit(1)).alias("n"),
+        *_ols2_sums(dec(x1_col), dec(x2_col), dec(y_col)),
+    ]
+
+
+def _ols2_rounded(n, c: dict, s1, s2, sy) -> list:
+    fit = _ols2_solve(n, c, s1, s2, sy)
+    return [F.round(fit[k], 6).alias(k) for k in ("b0", "b1", "b2", "r2")]
+
+
 def ols_two_feature(
     df: DataFrame, y_col: str, x1_col: str, x2_col: str
 ) -> DataFrame:
@@ -268,91 +378,49 @@ def ols_two_feature(
     Exactness: all Σx, Σx², Σxy accumulate as DECIMAL (fold-order-free,
     identical in the DuckDB replay — the q130 convention); the solve and
     R² run in doubles from those exact sums. One scan, single-row
-    shuffle, any table size. Returns ``(b0, b1, b2, r2, n)`` rounded 6.
+    shuffle, any table size. Singular normal matrices (constant or
+    collinear features) give NULL coefficients, as in ols_grouped.
+    Returns ``(b0, b1, b2, r2, n)`` rounded 6.
     """
-
-    def dec(c: str):
-        return F.col(c).cast("decimal(18,4)")
-
-    y, x1, x2 = dec(y_col), dec(x1_col), dec(x2_col)
-    s = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x1).alias("s1"),
-        F.sum(x2).alias("s2"),
-        F.sum(y).alias("sy"),
-        F.sum(x1 * x1).alias("s11"),
-        F.sum(x2 * x2).alias("s22"),
-        F.sum(x1 * x2).alias("s12"),
-        F.sum(x1 * y).alias("s1y"),
-        F.sum(x2 * y).alias("s2y"),
-        F.sum(y * y).alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    d = {k: F.col(k).cast("double") for k in
-         ("s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y", "syy")}
-    c11 = n * d["s11"] - d["s1"] * d["s1"]
-    c22 = n * d["s22"] - d["s2"] * d["s2"]
-    c12 = n * d["s12"] - d["s1"] * d["s2"]
-    c1y = n * d["s1y"] - d["s1"] * d["sy"]
-    c2y = n * d["s2y"] - d["s2"] * d["sy"]
-    cyy = n * d["syy"] - d["sy"] * d["sy"]
-    det = c11 * c22 - c12 * c12
-    # singular-matrix guard (constant/collinear features): same CASE
-    # shape as ols_grouped so both engines emit NULL rather than Spark's
-    # non-ANSI NULL vs DuckDB's IEEE Inf/NaN diverging (round-5 ADVICE)
-    ok = det != 0
-    b1 = F.when(ok, (c1y * c22 - c2y * c12) / det)
-    b2 = F.when(ok, (c2y * c11 - c1y * c12) / det)
-    b0 = F.when(ok, (d["sy"] - b1 * d["s1"] - b2 * d["s2"]) / n)
-    r2 = F.when(ok & (cyy > 0), (b1 * c1y + b2 * c2y) / cyy)
-    return s.select(
-        F.round(b0, 6).alias("b0"),
-        F.round(b1, 6).alias("b1"),
-        F.round(b2, 6).alias("b2"),
-        F.round(r2, 6).alias("r2"),
-        F.col("n"),
+    n, s, c = _ols2_terms()
+    return df.agg(*_ols2_dec_sums(y_col, x1_col, x2_col)).select(
+        *_ols2_rounded(n, c, s["1"], s["2"], s["y"]), F.col("n")
     )
 
 
-def ols_two_feature_sql(
-    table: str, y_col: str, x1_col: str, x2_col: str
+def _ols2_sql(
+    table: str, y_col: str, x1_col: str, x2_col: str, group_col=None
 ) -> str:
-    """DuckDB twin of :func:`ols_two_feature`."""
-
-    def dec(c: str) -> str:
-        return f"CAST({c} AS DECIMAL(28,4))"
-
-    y, x1, x2 = dec(y_col), dec(x1_col), dec(x2_col)
+    """DuckDB twin of :func:`ols_two_feature`, or of :func:`ols_grouped`
+    with ``group_col``: identical decimal sums, guards and double
+    shapes. DECIMAL(28,4): DuckDB multiplies 18-digit decimals in int64
+    and overflows on squared prices; sums are exact either way, so
+    values still match Spark's auto-widened decimal(18,4) products."""
+    v = {
+        k: f"CAST({col} AS DECIMAL(28,4))"
+        for k, col in (("1", x1_col), ("2", x2_col), ("y", y_col))
+    }
+    grp, key, by = (
+        ("", "", "") if group_col is None
+        else (f"{group_col} AS grp, ", "grp, ", " GROUP BY 1")
+    )
+    c = _ols2_terms_sql()
+    det, _, b1, b2 = _ols2_solve_sql({k: k for k in c})
+    sums = _ols2_sums_sql(v, lambda *f: f"sum({' * '.join(f)})")
     return f"""
     WITH s AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               sum({x1}) AS s1, sum({x2}) AS s2, sum({y}) AS sy,
-               sum({x1} * {x1}) AS s11, sum({x2} * {x2}) AS s22,
-               sum({x1} * {x2}) AS s12, sum({x1} * {y}) AS s1y,
-               sum({x2} * {y}) AS s2y, sum({y} * {y}) AS syy
-        FROM {table}
+        SELECT {grp}CAST(count(*) AS BIGINT) AS n, {sums}
+        FROM {table}{by}
     ), c AS MATERIALIZED (
-        SELECT n,
-               n::DOUBLE * s11::DOUBLE - s1::DOUBLE * s1::DOUBLE AS c11,
-               n::DOUBLE * s22::DOUBLE - s2::DOUBLE * s2::DOUBLE AS c22,
-               n::DOUBLE * s12::DOUBLE - s1::DOUBLE * s2::DOUBLE AS c12,
-               n::DOUBLE * s1y::DOUBLE - s1::DOUBLE * sy::DOUBLE AS c1y,
-               n::DOUBLE * s2y::DOUBLE - s2::DOUBLE * sy::DOUBLE AS c2y,
-               n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE AS cyy,
+        SELECT {key}n, {", ".join(f"{t} AS {k}" for k, t in c.items())},
                s1::DOUBLE AS s1d, s2::DOUBLE AS s2d, sy::DOUBLE AS syd
         FROM s
     ), b AS MATERIALIZED (
-        SELECT n, c1y, c2y, cyy, s1d, s2d, syd,
-               c11 * c22 - c12 * c12 AS det,
-               CASE WHEN c11 * c22 - c12 * c12 <> 0
-                    THEN (c1y * c22 - c2y * c12) / (c11 * c22 - c12 * c12)
-               END AS b1,
-               CASE WHEN c11 * c22 - c12 * c12 <> 0
-                    THEN (c2y * c11 - c1y * c12) / (c11 * c22 - c12 * c12)
-               END AS b2
+        SELECT {key}n, c1y, c2y, cyy, s1d, s2d, syd,
+               {det} AS det, {b1} AS b1, {b2} AS b2
         FROM c
     )
-    SELECT round(CASE WHEN det <> 0
+    SELECT {key}round(CASE WHEN det <> 0
                       THEN (syd - b1 * s1d - b2 * s2d) / n::DOUBLE
                  END, 6) AS b0,
            round(b1, 6) AS b1,
@@ -362,6 +430,13 @@ def ols_two_feature_sql(
            n
     FROM b
     """
+
+
+def ols_two_feature_sql(
+    table: str, y_col: str, x1_col: str, x2_col: str
+) -> str:
+    """DuckDB twin of :func:`ols_two_feature`."""
+    return _ols2_sql(table, y_col, x1_col, x2_col)
 
 
 def chi2_feature_selection(
@@ -517,26 +592,10 @@ def ols_grouped(
     Shuffle: one (group)-keyed hash agg with map-side partials — model
     count adds zero passes.
     """
-
-    def dec(c: str):
-        return F.col(c).cast("decimal(18,4)")
-
-    y, x1, x2 = dec(y_col), dec(x1_col), dec(x2_col)
     s = df.groupBy(F.col(group_col).alias("grp")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x1).alias("s1"),
-        F.sum(x2).alias("s2"),
-        F.sum(y).alias("sy"),
-        F.sum(x1 * x1).alias("s11"),
-        F.sum(x2 * x2).alias("s22"),
-        F.sum(x1 * x2).alias("s12"),
-        F.sum(x1 * y).alias("s1y"),
-        F.sum(x2 * y).alias("s2y"),
-        F.sum(y * y).alias("syy"),
+        *_ols2_dec_sums(y_col, x1_col, x2_col)
     )
-    n = F.col("n").cast("double")
-    d = {k: F.col(k).cast("double") for k in
-         ("s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y", "syy")}
+    n, sd, c = _ols2_terms()
     # The covariance terms stage through a checkpoint barrier:
     # CollapseProject would otherwise inline each c-term into every
     # consumer (b0 embeds b1 embeds det embeds four c-terms — the
@@ -545,100 +604,25 @@ def ols_grouped(
     # cold 7s is first-query-in-session warm-up, not this projection),
     # but the checkpointed frame is groups x 11 doubles, so the barrier
     # is free and the generated code stays readable in explain output.
-    c = stage(s.select(
+    staged = stage(s.select(
         "grp",
         "n",
-        (n * d["s11"] - d["s1"] * d["s1"]).alias("c11"),
-        (n * d["s22"] - d["s2"] * d["s2"]).alias("c22"),
-        (n * d["s12"] - d["s1"] * d["s2"]).alias("c12"),
-        (n * d["s1y"] - d["s1"] * d["sy"]).alias("c1y"),
-        (n * d["s2y"] - d["s2"] * d["sy"]).alias("c2y"),
-        (n * d["syy"] - d["sy"] * d["sy"]).alias("cyy"),
-        d["s1"].alias("s1d"),
-        d["s2"].alias("s2d"),
-        d["sy"].alias("syd"),
+        *[t.alias(k) for k, t in c.items()],
+        sd["1"].alias("s1d"),
+        sd["2"].alias("s2d"),
+        sd["y"].alias("syd"),
     ))
-    det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
-    ok = det != 0
-    b1 = F.when(
-        ok,
-        (F.col("c1y") * F.col("c22") - F.col("c2y") * F.col("c12")) / det,
+    fit = _ols2_rounded(
+        n, {k: F.col(k) for k in c}, F.col("s1d"), F.col("s2d"), F.col("syd")
     )
-    b2 = F.when(
-        ok,
-        (F.col("c2y") * F.col("c11") - F.col("c1y") * F.col("c12")) / det,
-    )
-    b0 = F.when(
-        ok, (F.col("syd") - b1 * F.col("s1d") - b2 * F.col("s2d")) / n
-    )
-    r2 = F.when(
-        ok & (F.col("cyy") > 0),
-        (b1 * F.col("c1y") + b2 * F.col("c2y")) / F.col("cyy"),
-    )
-    return c.select(
-        "grp",
-        F.round(b0, 6).alias("b0"),
-        F.round(b1, 6).alias("b1"),
-        F.round(b2, 6).alias("b2"),
-        F.round(r2, 6).alias("r2"),
-        "n",
-    )
+    return staged.select("grp", *fit, "n")
 
 
 def ols_grouped_sql(
     table: str, group_col: str, y_col: str, x1_col: str, x2_col: str
 ) -> str:
-    """DuckDB twin of :func:`ols_grouped` — identical decimal sums,
-    guards and double shapes. DECIMAL(28,4): DuckDB multiplies 18-digit
-    decimals in int64 and overflows on squared prices (the q131 twin's
-    width); sums are exact either way so values still match Spark's
-    auto-widened decimal(18,4) products."""
-
-    def dec(c: str) -> str:
-        return f"CAST({c} AS DECIMAL(28,4))"
-
-    y, x1, x2 = dec(y_col), dec(x1_col), dec(x2_col)
-    return f"""
-    WITH s AS MATERIALIZED (
-        SELECT {group_col} AS grp,
-               CAST(count(*) AS BIGINT) AS n,
-               sum({x1}) AS s1, sum({x2}) AS s2, sum({y}) AS sy,
-               sum({x1} * {x1}) AS s11, sum({x2} * {x2}) AS s22,
-               sum({x1} * {x2}) AS s12, sum({x1} * {y}) AS s1y,
-               sum({x2} * {y}) AS s2y, sum({y} * {y}) AS syy
-        FROM {table} GROUP BY 1
-    ), c AS MATERIALIZED (
-        SELECT grp, n,
-               n::DOUBLE * s11::DOUBLE - s1::DOUBLE * s1::DOUBLE AS c11,
-               n::DOUBLE * s22::DOUBLE - s2::DOUBLE * s2::DOUBLE AS c22,
-               n::DOUBLE * s12::DOUBLE - s1::DOUBLE * s2::DOUBLE AS c12,
-               n::DOUBLE * s1y::DOUBLE - s1::DOUBLE * sy::DOUBLE AS c1y,
-               n::DOUBLE * s2y::DOUBLE - s2::DOUBLE * sy::DOUBLE AS c2y,
-               n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE AS cyy,
-               s1::DOUBLE AS s1d, s2::DOUBLE AS s2d, sy::DOUBLE AS syd
-        FROM s
-    ), b AS MATERIALIZED (
-        SELECT grp, n, c1y, c2y, cyy, s1d, s2d, syd,
-               c11 * c22 - c12 * c12 AS det,
-               CASE WHEN c11 * c22 - c12 * c12 <> 0
-                    THEN (c1y * c22 - c2y * c12)
-                         / (c11 * c22 - c12 * c12) END AS b1,
-               CASE WHEN c11 * c22 - c12 * c12 <> 0
-                    THEN (c2y * c11 - c1y * c12)
-                         / (c11 * c22 - c12 * c12) END AS b2
-        FROM c
-    )
-    SELECT grp,
-           round(CASE WHEN det <> 0
-                      THEN (syd - b1 * s1d - b2 * s2d) / n::DOUBLE END, 6)
-               AS b0,
-           round(b1, 6) AS b1,
-           round(b2, 6) AS b2,
-           round(CASE WHEN det <> 0 AND cyy > 0
-                      THEN (b1 * c1y + b2 * c2y) / cyy END, 6) AS r2,
-           n
-    FROM b
-    """
+    """DuckDB twin of :func:`ols_grouped`."""
+    return _ols2_sql(table, y_col, x1_col, x2_col, group_col)
 
 
 def calibration_bins(

@@ -22,6 +22,18 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h60, h60_sql
 from ..io import rebalance_undersplit
 from ..staging import stage, stage_unbounded
+from .classifier import (
+    _SIGMA_SQL,
+    _logreg_chain_sql,
+    _ols2_solve,
+    _ols2_solve_sql,
+    _ols2_sums,
+    _ols2_sums_sql,
+    _ols2_terms,
+    _ols2_terms_sql,
+    _sigma,
+    logreg_train,
+)
 
 from pytrousse_spark.functions.sqlutil import sql_quote
 
@@ -2996,6 +3008,117 @@ def cmh_test_sql(
     """
 
 
+def _r6(c: Column) -> Column:
+    return F.round(c * F.lit(1e6), 0) / F.lit(1e6)
+
+
+def _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip):
+    """The causal estimators' shared prelude: the staged feature frame
+    ``(y, x1, x2, x3 = x1*x2, __oc)`` (treatment flag, covariates,
+    integer-cent outcome; rows with a NULL input dropped), the q111
+    logistic GD propensity model trained on it, and the clipped
+    propensity Column ``e`` in ``[clip, 1-clip]``. Returns
+    ``(feat, e)``; :func:`_propensity_sql` is the SQL twin."""
+    x1d, x2d = x1.cast("double"), x2.cast("double")
+    feat = df.select(
+        treat.cast("double").alias("y"),
+        x1d.alias("x1"),
+        x2d.alias("x2"),
+        (x1d * x2d).alias("x3"),
+        F.round(F.col(outcome_col).cast("double") * 100, 0)
+        .cast("bigint")
+        .alias("__oc"),
+    ).where(
+        F.col("y").isNotNull()
+        & F.col("x1").isNotNull()
+        & F.col("x2").isNotNull()
+        & F.col("__oc").isNotNull()
+    )
+    # the single-row-group bench inputs land the whole staged frame in
+    # ONE scan partition, serializing every iterative training aggregate
+    # on one core; spread it before checkpointing (no-op at real scale).
+    # Row-sized, yet staged with `stage`: see its docstring's measurement
+    feat = stage(rebalance_undersplit(feat))
+    w = logreg_train(feat, iters=iters, lr=lr)
+    return feat, F.least(F.lit(1.0 - clip), F.greatest(F.lit(clip), _sigma(w)))
+
+
+def _propensity_sql(
+    table_expr, treat_sql, outcome_col, x1_sql, x2_sql, iters, lr, clip
+):
+    """SQL twin of :func:`_propensity_frame`: ``(ctes, wf, e)`` — the
+    ``feat`` CTE plus the full training chain, the final weights' CTE
+    name and the clipped propensity's text over ``feat f CROSS JOIN
+    {wf} w``."""
+    feat = f"""
+        SELECT CAST({treat_sql} AS DOUBLE) AS y,
+               CAST({x1_sql} AS DOUBLE) AS x1,
+               CAST({x2_sql} AS DOUBLE) AS x2,
+               CAST({x1_sql} AS DOUBLE) * CAST({x2_sql} AS DOUBLE)
+                   AS x3,
+               CAST(round(CAST({outcome_col} AS DOUBLE) * 100, 0)
+                    AS BIGINT) AS __oc
+        FROM ({table_expr})
+        WHERE {treat_sql} IS NOT NULL AND {x1_sql} IS NOT NULL
+          AND {x2_sql} IS NOT NULL AND {outcome_col} IS NOT NULL
+    """
+    e = (
+        f"least(CAST({1.0 - clip} AS DOUBLE),"
+        f" greatest(CAST({clip} AS DOUBLE), {_SIGMA_SQL}))"
+    )
+    return _logreg_chain_sql(feat, iters, lr), f"w{iters}", e
+
+
+def _naive_diff(ok: Column, s1: Column, n1: Column, s0: Column, n0: Column):
+    """The unadjusted arm-mean difference in currency units (outcome
+    sums are cents), micro-rounded; NULL unless ``ok``."""
+    mean = lambda s, n: s.cast("double") / n.cast("double")  # noqa: E731
+    diff = (mean(s1, n1) - mean(s0, n0)) / F.lit(100.0)
+    return _r6(F.when(ok, diff)).alias("naive_diff")
+
+
+def _naive_diff_sql(ok: str, s1: str, n1: str, s0: str, n0: str) -> str:
+    """SQL twin of :func:`_naive_diff`."""
+    return (
+        f"round(CASE WHEN {ok} THEN"
+        f" (CAST({s1} AS DOUBLE) / CAST({n1} AS DOUBLE)"
+        f" - CAST({s0} AS DOUBLE) / CAST({n0} AS DOUBLE))"
+        " / CAST(100 AS DOUBLE) END * 1e6, 0) / 1e6 AS naive_diff"
+    )
+
+
+def _arm_fold(t: str):
+    """The naive arm fold over a frame with treatment flag ``t`` and
+    cents ``__oc``: the aggregates ``n``, ``n_treat``, ``__s1`` and
+    ``__s0``, and the ``naive_diff`` Column over them."""
+    tc, oc = F.col(t), F.col("__oc")
+    sums = [
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(tc == 1.0, 1).otherwise(0)).cast("bigint").alias("n_treat"),
+        F.sum(F.when(tc == 1.0, oc).otherwise(0)).cast("bigint").alias("__s1"),
+        F.sum(F.when(tc == 0.0, oc).otherwise(0)).cast("bigint").alias("__s0"),
+    ]
+    n, n1 = F.col("n"), F.col("n_treat")
+    return sums, _naive_diff(
+        (n1 > 0) & (n > n1), F.col("__s1"), n1, F.col("__s0"), n - n1
+    )
+
+
+def _arm_fold_sql(t: str) -> tuple[str, str]:
+    """SQL twin of :func:`_arm_fold`: the aggregates' and the
+    ``naive_diff``'s texts."""
+    sums = f"""CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(CASE WHEN {t} = 1.0 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_treat,
+               CAST(sum(CASE WHEN {t} = 1.0 THEN __oc ELSE 0 END)
+                    AS BIGINT) AS __s1,
+               CAST(sum(CASE WHEN {t} = 0.0 THEN __oc ELSE 0 END)
+                    AS BIGINT) AS __s0"""
+    return sums, _naive_diff_sql(
+        "n_treat > 0 AND n > n_treat", "__s1", "n_treat", "__s0", "n - n_treat"
+    )
+
+
 def ipw_ate(
     df: DataFrame,
     treat: Column,
@@ -3032,43 +3155,7 @@ def ipw_ate(
     Scale: training is ``iters`` one-row aggregates (map-side
     partials, 5 values each); scoring + the ATE fold is ONE more pass.
     """
-    from pytrousse_spark.operators.classifier import logreg_train
-
-    feat = (
-        df.select(
-            treat.cast("double").alias("y"),
-            x1.cast("double").alias("x1"),
-            x2.cast("double").alias("x2"),
-            (x1.cast("double") * x2.cast("double")).alias("x3"),
-            F.round(F.col(outcome_col).cast("double") * 100, 0)
-            .cast("bigint")
-            .alias("__oc"),
-        )
-        .where(
-            F.col("y").isNotNull()
-            & F.col("x1").isNotNull()
-            & F.col("x2").isNotNull()
-            & F.col("__oc").isNotNull()
-        )
-    )
-    # the single-row-group bench inputs land the whole staged frame in
-    # ONE scan partition, serializing every iterative training aggregate
-    # on one core; spread it before checkpointing (no-op at real scale)
-    feat = stage(rebalance_undersplit(feat))
-    w = logreg_train(feat, iters=iters, lr=lr)
-    z = (
-        F.lit(w[0])
-        + F.lit(w[1]) * F.col("x1")
-        + F.lit(w[2]) * F.col("x2")
-        + F.lit(w[3]) * F.col("x3")
-    )
-    e = F.least(
-        F.lit(1.0 - clip),
-        F.greatest(
-            F.lit(clip),
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6),
-        ),
-    )
+    feat, e = _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip)
     t = F.col("y")
     yd = F.col("__oc").cast("double")
     micro = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
@@ -3082,41 +3169,17 @@ def ipw_ate(
         micro(yd * (F.lit(1.0) - t) / (F.lit(1.0) - e)).alias("__wy0"),
         micro((F.lit(1.0) - t) / (F.lit(1.0) - e)).alias("__w0"),
     )
-    agg = staged.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("__t") == 1.0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_treat"),
-        F.sum(F.when(F.col("__t") == 1.0, F.col("__oc")).otherwise(0))
-        .cast("bigint")
-        .alias("__s1"),
-        F.sum(F.when(F.col("__t") == 0.0, F.col("__oc")).otherwise(0))
-        .cast("bigint")
-        .alias("__s0"),
-        # micro terms reach ~1e15/row (cents / clipped propensity *
-        # 1e6): the fold must widen to DECIMAL(38,0) — an int64 sum
-        # overflows near 1e4 rows of extreme weights (caught by the
-        # sf0.1 bench, invisible at sf0.01)
-        F.sum(F.col("__wy1").cast("decimal(38,0)"))
+    arms, naive = _arm_fold("__t")
+    # micro terms reach ~1e15/row (cents / clipped propensity * 1e6):
+    # the fold must widen to DECIMAL(38,0) — an int64 sum overflows
+    # near 1e4 rows of extreme weights (caught by the sf0.1 bench,
+    # invisible at sf0.01)
+    agg = staged.agg(*arms, *[
+        F.sum(F.col(f"__{k}").cast("decimal(38,0)"))
         .cast("decimal(38,0)")
-        .alias("__swy1"),
-        F.sum(F.col("__w1").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("__sw1"),
-        F.sum(F.col("__wy0").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("__swy0"),
-        F.sum(F.col("__w0").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("__sw0"),
-    )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
-    n1 = F.col("n_treat").cast("double")
-    n0 = (F.col("n") - F.col("n_treat")).cast("double")
-    naive = (
-        F.col("__s1").cast("double") / n1
-        - F.col("__s0").cast("double") / n0
-    ) / F.lit(100.0)
+        .alias(f"__s{k}")
+        for k in ("wy1", "w1", "wy0", "w0")
+    ])
     ate = (
         F.col("__swy1").cast("double") / F.col("__sw1").cast("double")
         - F.col("__swy0").cast("double")
@@ -3125,10 +3188,8 @@ def ipw_ate(
     return agg.select(
         "n",
         "n_treat",
-        r6(
-            F.when((F.col("n_treat") > 0) & (F.col("n") > F.col("n_treat")), naive)
-        ).alias("naive_diff"),
-        r6(
+        naive,
+        _r6(
             F.when((F.col("__sw1") > 0) & (F.col("__sw0") > 0), ate)
         ).alias("ate"),
     )
@@ -3147,63 +3208,10 @@ def ipw_ate_sql(
     """DuckDB twin of :func:`ipw_ate` — the ENTIRE propensity training
     chain as materialized CTEs (the q111 replay pattern), then the
     identical clip/weight/fold arithmetic."""
-    from pytrousse_spark.operators.classifier import _MICRO
-
-    feat = f"""
-        SELECT CAST({treat_sql} AS DOUBLE) AS y,
-               CAST({x1_sql} AS DOUBLE) AS x1,
-               CAST({x2_sql} AS DOUBLE) AS x2,
-               CAST({x1_sql} AS DOUBLE) * CAST({x2_sql} AS DOUBLE)
-                   AS x3,
-               CAST(round(CAST({outcome_col} AS DOUBLE) * 100, 0)
-                    AS BIGINT) AS __oc
-        FROM ({table_expr})
-        WHERE {treat_sql} IS NOT NULL AND {x1_sql} IS NOT NULL
-          AND {x2_sql} IS NOT NULL AND {outcome_col} IS NOT NULL
-    """
-    ctes = [
-        f"feat AS MATERIALIZED ({feat})",
-        "w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d)",
-    ]
-    xs = ["1.0", "p.x1", "p.x2", "p.x3"]
-    for tt in range(1, iters + 1):
-        prev = f"w{tt - 1}"
-        sig = (
-            "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-            " + w.d * f.x3))), 6)"
-        )
-        gsums = ", ".join(
-            f"CAST(sum(CAST(round(round((p.p - p.y) * {x}, 6)"
-            f" * {_MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
-            for j, x in enumerate(xs)
-        )
-        ctes.append(
-            f"p{tt} AS MATERIALIZED (SELECT f.y, f.x1, f.x2, f.x3,"
-            f" {sig} AS p FROM feat f CROSS JOIN {prev} w)"
-        )
-        ctes.append(
-            f"g{tt} AS MATERIALIZED"
-            f" (SELECT CAST(count(*) AS BIGINT) AS n, {gsums}"
-            f" FROM p{tt} p)"
-        )
-        upd = ", ".join(
-            f"round(w.{wc} - {lr} * (g.g{j} / {float(_MICRO)}) / g.n,"
-            f" 6) AS {wc}"
-            for j, wc in enumerate(["a", "b", "c", "d"])
-        )
-        ctes.append(
-            f"w{tt} AS MATERIALIZED"
-            f" (SELECT {upd} FROM {prev} w CROSS JOIN g{tt} g)"
-        )
-    wf = f"w{iters}"
-    sig_final = (
-        "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-        " + w.d * f.x3))), 6)"
+    ctes, wf, e = _propensity_sql(
+        table_expr, treat_sql, outcome_col, x1_sql, x2_sql, iters, lr, clip
     )
-    e = (
-        f"least(CAST({1.0 - clip} AS DOUBLE),"
-        f" greatest(CAST({clip} AS DOUBLE), {sig_final}))"
-    )
+    arms, naive = _arm_fold_sql("__t")
     ctes.append(
         f"""scored AS (
         SELECT f.y AS __t, f.__oc,
@@ -3216,31 +3224,15 @@ def ipw_ate_sql(
                     AS BIGINT) AS __w0
         FROM feat f CROSS JOIN {wf} w)"""
     )
-    ctes.append(
-        """agg AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CASE WHEN __t = 1.0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_treat,
-               CAST(sum(CASE WHEN __t = 1.0 THEN __oc ELSE 0 END)
-                    AS BIGINT) AS __s1,
-               CAST(sum(CASE WHEN __t = 0.0 THEN __oc ELSE 0 END)
-                    AS BIGINT) AS __s0,
-               CAST(sum(CAST(__wy1 AS HUGEINT)) AS HUGEINT) AS __swy1,
-               CAST(sum(CAST(__w1 AS HUGEINT)) AS HUGEINT) AS __sw1,
-               CAST(sum(CAST(__wy0 AS HUGEINT)) AS HUGEINT) AS __swy0,
-               CAST(sum(CAST(__w0 AS HUGEINT)) AS HUGEINT) AS __sw0
-        FROM scored)"""
+    hsums = ", ".join(
+        f"CAST(sum(CAST(__{k} AS HUGEINT)) AS HUGEINT) AS __s{k}"
+        for k in ("wy1", "w1", "wy0", "w0")
     )
+    ctes.append(f"agg AS (\n        SELECT {arms}, {hsums} FROM scored)")
     body = ",\n    ".join(ctes)
     return f"""
     WITH {body}
-    SELECT n, n_treat,
-           round(CASE WHEN n_treat > 0 AND n > n_treat THEN
-                 (CAST(__s1 AS DOUBLE) / CAST(n_treat AS DOUBLE)
-                  - CAST(__s0 AS DOUBLE)
-                    / CAST(n - n_treat AS DOUBLE))
-                 / CAST(100 AS DOUBLE) END * 1e6, 0) / 1e6
-               AS naive_diff,
+    SELECT n, n_treat, {naive},
            round(CASE WHEN __sw1 > 0 AND __sw0 > 0 THEN
                  (CAST(__swy1 AS DOUBLE) / CAST(__sw1 AS DOUBLE)
                   - CAST(__swy0 AS DOUBLE) / CAST(__sw0 AS DOUBLE))
@@ -3298,43 +3290,7 @@ def propensity_matching(
 
     Returns one row: ``(n, n_treat, n_matched, naive_diff, att)``.
     """
-    from pytrousse_spark.operators.classifier import logreg_train
-
-    feat = (
-        df.select(
-            treat.cast("double").alias("y"),
-            x1.cast("double").alias("x1"),
-            x2.cast("double").alias("x2"),
-            (x1.cast("double") * x2.cast("double")).alias("x3"),
-            F.round(F.col(outcome_col).cast("double") * 100, 0)
-            .cast("bigint")
-            .alias("__oc"),
-        )
-        .where(
-            F.col("y").isNotNull()
-            & F.col("x1").isNotNull()
-            & F.col("x2").isNotNull()
-            & F.col("__oc").isNotNull()
-        )
-    )
-    # the single-row-group bench inputs land the whole staged frame in
-    # ONE scan partition, serializing every iterative training aggregate
-    # on one core; spread it before checkpointing (no-op at real scale)
-    feat = stage(rebalance_undersplit(feat))
-    w = logreg_train(feat, iters=iters, lr=lr)
-    z = (
-        F.lit(w[0])
-        + F.lit(w[1]) * F.col("x1")
-        + F.lit(w[2]) * F.col("x2")
-        + F.lit(w[3]) * F.col("x3")
-    )
-    e = F.least(
-        F.lit(1.0 - clip),
-        F.greatest(
-            F.lit(clip),
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6),
-        ),
-    )
+    feat, e = _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip)
     scored = feat.select(
         "y",
         "__oc",
@@ -3430,36 +3386,13 @@ def propensity_matching(
         .cast("bigint")
         .alias("__sum"),
     )
-    base = scored.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_treat"),
-        F.sum(F.when(F.col("y") == 1.0, F.col("__oc")).otherwise(0))
-        .cast("bigint")
-        .alias("__s1"),
-        F.sum(F.when(F.col("y") == 0.0, F.col("__oc")).otherwise(0))
-        .cast("bigint")
-        .alias("__s0"),
-    )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
-    return base.crossJoin(F.broadcast(folds)).select(
+    arms, naive = _arm_fold("y")
+    return scored.agg(*arms).crossJoin(F.broadcast(folds)).select(
         "n",
         "n_treat",
         F.coalesce(F.col("__nm"), F.lit(0)).alias("n_matched"),
-        r6(
-            F.when(
-                (F.col("n_treat") > 0) & (F.col("n") > F.col("n_treat")),
-                (
-                    F.col("__s1").cast("double")
-                    / F.col("n_treat").cast("double")
-                    - F.col("__s0").cast("double")
-                    / (F.col("n") - F.col("n_treat")).cast("double")
-                )
-                / F.lit(100.0),
-            )
-        ).alias("naive_diff"),
-        r6(
+        naive,
+        _r6(
             F.when(
                 F.col("__nm") > 0,
                 F.col("__sum").cast("double")
@@ -3484,63 +3417,10 @@ def propensity_matching_sql(
     training chain as materialized CTEs (the q226 replay pattern), then
     the identical level-quantize / two-sided as-of / nearer-wins /
     exact-fold arithmetic."""
-    from pytrousse_spark.operators.classifier import _MICRO
-
-    feat = f"""
-        SELECT CAST({treat_sql} AS DOUBLE) AS y,
-               CAST({x1_sql} AS DOUBLE) AS x1,
-               CAST({x2_sql} AS DOUBLE) AS x2,
-               CAST({x1_sql} AS DOUBLE) * CAST({x2_sql} AS DOUBLE)
-                   AS x3,
-               CAST(round(CAST({outcome_col} AS DOUBLE) * 100, 0)
-                    AS BIGINT) AS __oc
-        FROM ({table_expr})
-        WHERE {treat_sql} IS NOT NULL AND {x1_sql} IS NOT NULL
-          AND {x2_sql} IS NOT NULL AND {outcome_col} IS NOT NULL
-    """
-    ctes = [
-        f"feat AS MATERIALIZED ({feat})",
-        "w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d)",
-    ]
-    xs = ["1.0", "p.x1", "p.x2", "p.x3"]
-    for tt in range(1, iters + 1):
-        prev = f"w{tt - 1}"
-        sig = (
-            "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-            " + w.d * f.x3))), 6)"
-        )
-        gsums = ", ".join(
-            f"CAST(sum(CAST(round(round((p.p - p.y) * {x}, 6)"
-            f" * {_MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
-            for j, x in enumerate(xs)
-        )
-        ctes.append(
-            f"p{tt} AS MATERIALIZED (SELECT f.y, f.x1, f.x2, f.x3,"
-            f" {sig} AS p FROM feat f CROSS JOIN {prev} w)"
-        )
-        ctes.append(
-            f"g{tt} AS MATERIALIZED"
-            f" (SELECT CAST(count(*) AS BIGINT) AS n, {gsums}"
-            f" FROM p{tt} p)"
-        )
-        upd = ", ".join(
-            f"round(w.{wc} - {lr} * (g.g{j} / {float(_MICRO)}) / g.n,"
-            f" 6) AS {wc}"
-            for j, wc in enumerate(["a", "b", "c", "d"])
-        )
-        ctes.append(
-            f"w{tt} AS MATERIALIZED"
-            f" (SELECT {upd} FROM {prev} w CROSS JOIN g{tt} g)"
-        )
-    wf = f"w{iters}"
-    sig_final = (
-        "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-        " + w.d * f.x3))), 6)"
+    ctes, wf, e = _propensity_sql(
+        table_expr, treat_sql, outcome_col, x1_sql, x2_sql, iters, lr, clip
     )
-    e = (
-        f"least(CAST({1.0 - clip} AS DOUBLE),"
-        f" greatest(CAST({clip} AS DOUBLE), {sig_final}))"
-    )
+    arms, naive = _arm_fold_sql("y")
     cal_pred = (
         f"AND __d <= {int(round(caliper * 1e6))}"
         if caliper is not None
@@ -3610,28 +3490,12 @@ def propensity_matching_sql(
                              AS BIGINT) END) AS BIGINT) AS __sum
         FROM picked)"""
     )
-    ctes.append(
-        """base AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_treat,
-               CAST(sum(CASE WHEN y = 1.0 THEN __oc ELSE 0 END)
-                    AS BIGINT) AS __s1,
-               CAST(sum(CASE WHEN y = 0.0 THEN __oc ELSE 0 END)
-                    AS BIGINT) AS __s0
-        FROM scored)"""
-    )
+    ctes.append(f"base AS (\n        SELECT {arms} FROM scored)")
     body = ",\n    ".join(ctes)
     return f"""
     WITH {body}
     SELECT n, n_treat,
-           COALESCE(__nm, 0) AS n_matched,
-           round(CASE WHEN n_treat > 0 AND n > n_treat THEN
-                 (CAST(__s1 AS DOUBLE) / CAST(n_treat AS DOUBLE)
-                  - CAST(__s0 AS DOUBLE)
-                    / CAST(n - n_treat AS DOUBLE))
-                 / CAST(100 AS DOUBLE) END * 1e6, 0) / 1e6
-               AS naive_diff,
+           COALESCE(__nm, 0) AS n_matched, {naive},
            round(CASE WHEN __nm > 0 THEN
                  CAST(__sum AS DOUBLE)
                  / (CAST(__nm AS DOUBLE) * 1e6) END * 1e6, 0) / 1e6
@@ -3672,31 +3536,7 @@ def aipw_ate(
 
     Returns one row: ``(n, n_treat, naive_diff, ate_aipw)``.
     """
-    from pytrousse_spark.operators.classifier import logreg_train
-
-    feat = (
-        df.select(
-            treat.cast("double").alias("y"),
-            x1.cast("double").alias("x1"),
-            x2.cast("double").alias("x2"),
-            (x1.cast("double") * x2.cast("double")).alias("x3"),
-            F.round(F.col(outcome_col).cast("double") * 100, 0)
-            .cast("bigint")
-            .alias("__oc"),
-        )
-        .where(
-            F.col("y").isNotNull()
-            & F.col("x1").isNotNull()
-            & F.col("x2").isNotNull()
-            & F.col("__oc").isNotNull()
-        )
-    )
-    # the single-row-group bench inputs land the whole staged frame in
-    # ONE scan partition, serializing every iterative training aggregate
-    # on one core; spread it before checkpointing (no-op at real scale)
-    feat = stage(rebalance_undersplit(feat))
-    w = logreg_train(feat, iters=iters, lr=lr)
-
+    feat, e = _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip)
     # features enter the OLS folds as EXACT micro-unit integers (a
     # DECIMAL(.,4) cast of acctbal/1000-style 5-digit doubles hits the
     # round-half boundary where Spark HALF_UPs and DuckDB half-evens —
@@ -3714,21 +3554,12 @@ def aipw_ate(
     def arm(tv: int, suf: str):
         cond = F.col("y") == float(tv)
         cx1, cx2, cy = (
-            F.when(cond, F.col("__x1m")),
-            F.when(cond, F.col("__x2m")),
-            F.when(cond, F.col("__oc")),
+            F.when(cond, F.col(c)) for c in ("__x1m", "__x2m", "__oc")
         )
         return [
             F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")
             .alias(f"n{suf}"),
-            d38(cx1).alias(f"s1{suf}"),
-            d38(cx2).alias(f"s2{suf}"),
-            d38(cy).alias(f"sy{suf}"),
-            d38(cx1 * cx1).alias(f"s11{suf}"),
-            d38(cx2 * cx2).alias(f"s22{suf}"),
-            d38(cx1 * cx2).alias(f"s12{suf}"),
-            d38(cx1 * cy).alias(f"s1y{suf}"),
-            d38(cx2 * cy).alias(f"s2y{suf}"),
+            *_ols2_sums(cx1, cx2, cy, d38, suf, yy=False),
         ]
     stats = mfeat.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3737,44 +3568,14 @@ def aipw_ate(
     )
 
     def solve(suf: str):
-        nd = F.col(f"n{suf}").cast("double")
-        d = {
-            k: F.col(f"{k}{suf}").cast("double")
-            for k in ("s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y")
-        }
-        c11 = nd * d["s11"] - d["s1"] * d["s1"]
-        c22 = nd * d["s22"] - d["s2"] * d["s2"]
-        c12 = nd * d["s12"] - d["s1"] * d["s2"]
-        c1y = nd * d["s1y"] - d["s1"] * d["sy"]
-        c2y = nd * d["s2y"] - d["s2"] * d["sy"]
-        det = c11 * c22 - c12 * c12
-        ok = det != 0
-        b1 = F.when(ok, (c1y * c22 - c2y * c12) / det)
-        b2 = F.when(ok, (c2y * c11 - c1y * c12) / det)
-        b0 = F.when(ok, (d["sy"] - b1 * d["s1"] - b2 * d["s2"]) / nd)
+        n, s, c = _ols2_terms(suf)
+        fit = _ols2_solve(n, c, s["1"], s["2"], s["y"])
         # no rounding: the sums are exact integers, so these doubles are
         # already bit-identical across engines (b1/b2 are in cents per
         # MICRO-feature-unit — rounding to 6 would destroy them)
-        return (
-            b0.alias(f"b0{suf}"),
-            b1.alias(f"b1{suf}"),
-            b2.alias(f"b2{suf}"),
-        )
+        return [fit[b].alias(f"{b}{suf}") for b in ("b0", "b1", "b2")]
     models = stats.select(
         "n", "n_1", "sy_1", "n_0", "sy_0", *solve("_1"), *solve("_0")
-    )
-    z = (
-        F.lit(w[0])
-        + F.lit(w[1]) * F.col("x1")
-        + F.lit(w[2]) * F.col("x2")
-        + F.lit(w[3]) * F.col("x3")
-    )
-    e = F.least(
-        F.lit(1.0 - clip),
-        F.greatest(
-            F.lit(clip),
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6),
-        ),
     )
     yd = F.col("__oc").cast("double")
     t = F.col("y")
@@ -3796,11 +3597,7 @@ def aipw_ate(
         .cast("decimal(38,0)")
         .alias("__spsi"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
-    naive = (
-        F.col("sy_1").cast("double") / F.col("n_1").cast("double")
-        - F.col("sy_0").cast("double") / F.col("n_0").cast("double")
-    ) / F.lit(100.0)
+    n1, n0 = F.col("n_1"), F.col("n_0")
     ate = (
         F.col("__spsi").cast("double")
         / F.lit(1e6)
@@ -3809,11 +3606,9 @@ def aipw_ate(
     )
     return agg.select(
         "n",
-        F.col("n_1").alias("n_treat"),
-        r6(
-            F.when((F.col("n_1") > 0) & (F.col("n_0") > 0), naive)
-        ).alias("naive_diff"),
-        r6(F.when(F.col("__spsi").isNotNull(), ate)).alias("ate_aipw"),
+        n1.alias("n_treat"),
+        _naive_diff((n1 > 0) & (n0 > 0), F.col("sy_1"), n1, F.col("sy_0"), n0),
+        _r6(F.when(F.col("__spsi").isNotNull(), ate)).alias("ate_aipw"),
     )
 
 
@@ -3830,75 +3625,32 @@ def aipw_ate_sql(
     """DuckDB twin of :func:`aipw_ate` — full logistic GD replay (the
     q226 chain), per-arm DECIMAL OLS sufficient statistics, identical
     psi expression, HUGEINT psi fold."""
-    from pytrousse_spark.operators.classifier import _MICRO
-
-    feat = f"""
-        SELECT CAST({treat_sql} AS DOUBLE) AS y,
-               CAST({x1_sql} AS DOUBLE) AS x1,
-               CAST({x2_sql} AS DOUBLE) AS x2,
-               CAST({x1_sql} AS DOUBLE) * CAST({x2_sql} AS DOUBLE)
-                   AS x3,
-               CAST(round(CAST({outcome_col} AS DOUBLE) * 100, 0)
-                    AS BIGINT) AS __oc
-        FROM ({table_expr})
-        WHERE {treat_sql} IS NOT NULL AND {x1_sql} IS NOT NULL
-          AND {x2_sql} IS NOT NULL AND {outcome_col} IS NOT NULL
-    """
-    ctes = [
-        f"feat AS MATERIALIZED ({feat})",
-        "w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c, 0.0 AS d)",
-    ]
-    xs = ["1.0", "p.x1", "p.x2", "p.x3"]
-    for tt in range(1, iters + 1):
-        prev = f"w{tt - 1}"
-        sig = (
-            "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-            " + w.d * f.x3))), 6)"
-        )
-        gsums = ", ".join(
-            f"CAST(sum(CAST(round(round((p.p - p.y) * {x}, 6)"
-            f" * {_MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
-            for j, x in enumerate(xs)
-        )
-        ctes.append(
-            f"p{tt} AS MATERIALIZED (SELECT f.y, f.x1, f.x2, f.x3,"
-            f" {sig} AS p FROM feat f CROSS JOIN {prev} w)"
-        )
-        ctes.append(
-            f"g{tt} AS MATERIALIZED"
-            f" (SELECT CAST(count(*) AS BIGINT) AS n, {gsums}"
-            f" FROM p{tt} p)"
-        )
-        upd = ", ".join(
-            f"round(w.{wc} - {lr} * (g.g{j} / {float(_MICRO)}) / g.n,"
-            f" 6) AS {wc}"
-            for j, wc in enumerate(["a", "b", "c", "d"])
-        )
-        ctes.append(
-            f"w{tt} AS MATERIALIZED"
-            f" (SELECT {upd} FROM {prev} w CROSS JOIN g{tt} g)"
-        )
-    wf = f"w{iters}"
+    ctes, wf, e = _propensity_sql(
+        table_expr, treat_sql, outcome_col, x1_sql, x2_sql, iters, lr, clip
+    )
 
     def arm(tv: int, suf: str) -> str:
-        c = f"CASE WHEN y = {tv}.0 THEN"
-        h = "HUGEINT"
-        return f"""
-               CAST(sum(CASE WHEN y = {tv}.0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n{suf},
-               CAST(sum({c} CAST(__x1m AS {h}) END) AS {h}) AS s1{suf},
-               CAST(sum({c} CAST(__x2m AS {h}) END) AS {h}) AS s2{suf},
-               CAST(sum({c} CAST(__oc AS {h}) END) AS {h}) AS sy{suf},
-               CAST(sum({c} CAST(__x1m AS {h}) * __x1m END) AS {h})
-                   AS s11{suf},
-               CAST(sum({c} CAST(__x2m AS {h}) * __x2m END) AS {h})
-                   AS s22{suf},
-               CAST(sum({c} CAST(__x1m AS {h}) * __x2m END) AS {h})
-                   AS s12{suf},
-               CAST(sum({c} CAST(__x1m AS {h}) * __oc END) AS {h})
-                   AS s1y{suf},
-               CAST(sum({c} CAST(__x2m AS {h}) * __oc END) AS {h})
-                   AS s2y{suf}"""
+        def fold(a, *b):
+            prod = "".join(f" * {f}" for f in b)
+            return (
+                f"CAST(sum(CASE WHEN y = {tv}.0 THEN CAST({a} AS HUGEINT)"
+                f"{prod} END) AS HUGEINT)"
+            )
+        v = {"1": "__x1m", "2": "__x2m", "y": "__oc"}
+        return (
+            f"CAST(sum(CASE WHEN y = {tv}.0 THEN 1 ELSE 0 END)"
+            f" AS BIGINT) AS n{suf}, {_ols2_sums_sql(v, fold, suf, yy=False)}"
+        )
+
+    def solve(suf: str) -> str:
+        c = {k: f"({t})" for k, t in _ols2_terms_sql(suf).items()}
+        _, when, b1, b2 = _ols2_solve_sql(c, "({det}) <> 0")
+        s = {k: f"s{k}{suf}::DOUBLE" for k in ("1", "2", "y")}
+        b0 = (
+            f"CASE WHEN {when} THEN ({s['y']} - ({b1}) * {s['1']}"
+            f" - ({b2}) * {s['2']}) / n{suf}::DOUBLE END"
+        )
+        return f"{b0} AS b0{suf}, {b1} AS b1{suf}, {b2} AS b2{suf}"
 
     ctes.append(
         """mfeat AS MATERIALIZED (
@@ -3909,44 +3661,13 @@ def aipw_ate_sql(
     )
     ctes.append(
         f"""stats AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,{arm(1, "_1")},{arm(0, "_0")}
+        SELECT CAST(count(*) AS BIGINT) AS n, {arm(1, "_1")}, {arm(0, "_0")}
         FROM mfeat)"""
     )
-
-    def solve(suf: str) -> str:
-        nd = f"n{suf}::DOUBLE"
-        s = {
-            kk: f"{kk}{suf}::DOUBLE"
-            for kk in ("s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y")
-        }
-        c11 = f"({nd} * {s['s11']} - {s['s1']} * {s['s1']})"
-        c22 = f"({nd} * {s['s22']} - {s['s2']} * {s['s2']})"
-        c12 = f"({nd} * {s['s12']} - {s['s1']} * {s['s2']})"
-        c1y = f"({nd} * {s['s1y']} - {s['s1']} * {s['sy']})"
-        c2y = f"({nd} * {s['s2y']} - {s['s2']} * {s['sy']})"
-        det = f"({c11} * {c22} - {c12} * {c12})"
-        b1 = f"CASE WHEN {det} <> 0 THEN ({c1y} * {c22} - {c2y} * {c12}) / {det} END"
-        b2 = f"CASE WHEN {det} <> 0 THEN ({c2y} * {c11} - {c1y} * {c12}) / {det} END"
-        b0 = (
-            f"CASE WHEN {det} <> 0 THEN ({s['sy']}"
-            f" - ({b1}) * {s['s1']} - ({b2}) * {s['s2']}) / {nd} END"
-        )
-        return (
-            f"{b0} AS b0{suf}, {b1} AS b1{suf}, {b2} AS b2{suf}"
-        )
-
     ctes.append(
         f"""models AS MATERIALIZED (
         SELECT n, n_1, sy_1, n_0, sy_0, {solve("_1")}, {solve("_0")}
         FROM stats)"""
-    )
-    sig_final = (
-        "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
-        " + w.d * f.x3))), 6)"
-    )
-    e = (
-        f"least(CAST({1.0 - clip} AS DOUBLE),"
-        f" greatest(CAST({clip} AS DOUBLE), {sig_final}))"
     )
     m1 = "(m.b0_1 + m.b1_1 * CAST(f.__x1m AS DOUBLE)" \
          " + m.b2_1 * CAST(f.__x2m AS DOUBLE))"
@@ -3970,14 +3691,10 @@ def aipw_ate_sql(
         FROM scored GROUP BY 1, 2, 3, 4, 5)"""
     )
     body = ",\n    ".join(ctes)
+    naive = _naive_diff_sql("n_1 > 0 AND n_0 > 0", "sy_1", "n_1", "sy_0", "n_0")
     return f"""
     WITH {body}
-    SELECT n, n_1 AS n_treat,
-           round(CASE WHEN n_1 > 0 AND n_0 > 0 THEN
-                 (CAST(sy_1 AS DOUBLE) / CAST(n_1 AS DOUBLE)
-                  - CAST(sy_0 AS DOUBLE) / CAST(n_0 AS DOUBLE))
-                 / CAST(100 AS DOUBLE) END * 1e6, 0) / 1e6
-               AS naive_diff,
+    SELECT n, n_1 AS n_treat, {naive},
            round(CASE WHEN __spsi IS NOT NULL THEN
                  CAST(__spsi AS DOUBLE) / 1e6 / CAST(n AS DOUBLE)
                  / CAST(100 AS DOUBLE) END * 1e6, 0) / 1e6 AS ate_aipw

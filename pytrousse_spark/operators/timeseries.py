@@ -29,6 +29,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..staging import stage
+from .classifier import (
+    _ols2_solve,
+    _ols2_solve_sql,
+    _ols2_sums,
+    _ols2_sums_sql,
+    _ols2_terms,
+    _ols2_terms_sql,
+)
 
 # fixed-length units where "N <unit>" flooring is well defined in epoch
 # seconds; month/year buckets are calendar-shaped and only support N == 1
@@ -2807,31 +2815,12 @@ def granger_lead_lag(
     d38 = lambda c: F.sum(c).cast("decimal(38,0)")  # noqa: E731
     s = rows.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        d38(F.col("__y1")).alias("s1"),
-        d38(F.col("__x1")).alias("s2"),
-        d38(F.col("__yt")).alias("sy"),
-        d38(F.col("__y1") * F.col("__y1")).alias("s11"),
-        d38(F.col("__x1") * F.col("__x1")).alias("s22"),
-        d38(F.col("__y1") * F.col("__x1")).alias("s12"),
-        d38(F.col("__y1") * F.col("__yt")).alias("s1y"),
-        d38(F.col("__x1") * F.col("__yt")).alias("s2y"),
-        d38(F.col("__yt") * F.col("__yt")).alias("syy"),
+        *_ols2_sums(F.col("__y1"), F.col("__x1"), F.col("__yt"), d38),
     )
-    nd = F.col("n").cast("double")
-    d = {
-        k: F.col(k).cast("double")
-        for k in ("s1", "s2", "sy", "s11", "s22", "s12", "s1y", "s2y", "syy")
-    }
-    c11 = nd * d["s11"] - d["s1"] * d["s1"]
-    c22 = nd * d["s22"] - d["s2"] * d["s2"]
-    c12 = nd * d["s12"] - d["s1"] * d["s2"]
-    c1y = nd * d["s1y"] - d["s1"] * d["sy"]
-    c2y = nd * d["s2y"] - d["s2"] * d["sy"]
-    cyy = nd * d["syy"] - d["sy"] * d["sy"]
-    det = c11 * c22 - c12 * c12
-    ok = (det != 0) & (c11 != 0)
-    b1 = F.when(ok, (c1y * c22 - c2y * c12) / det)
-    b2 = F.when(ok, (c2y * c11 - c1y * c12) / det)
+    nd, sd, c = _ols2_terms()
+    c11, c1y, c2y, cyy = c["c11"], c["c1y"], c["c2y"], c["cyy"]
+    fit = _ols2_solve(nd, c, sd["1"], sd["2"], sd["y"], guard=c11 != 0)
+    ok, b1, b2 = fit["ok"], fit["b1"], fit["b2"]
     rss_u = cyy - b1 * c1y - b2 * c2y
     rss_r = cyy - c1y * c1y / c11
     f = F.when(
@@ -2872,6 +2861,12 @@ def granger_lead_lag_sql(
     HUGEINT folds, identical double expression chain."""
     from pytrousse_spark.operators.cohort import _phi_tail_sql
 
+    c = _ols2_terms_sql()
+    det, _, b1, b2 = _ols2_solve_sql({k: k for k in c}, "{det} <> 0 AND c11 <> 0")
+    sums = _ols2_sums_sql(
+        {"1": "__y1", "2": "__x1", "y": "__yt"},
+        lambda *f: f"CAST(sum({' * '.join(f)}) AS HUGEINT)",
+    )
     return f"""
     WITH __typed AS (
         SELECT CAST({ts_col} AS DATE) AS __d,
@@ -2907,35 +2902,14 @@ def granger_lead_lag_sql(
         FROM __piv a JOIN __piv b ON a.__i = b.__i + 1
         WHERE a.__i >= 2
     ), __s AS MATERIALIZED (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(__y1) AS HUGEINT) AS s1,
-               CAST(sum(__x1) AS HUGEINT) AS s2,
-               CAST(sum(__yt) AS HUGEINT) AS sy,
-               CAST(sum(__y1 * __y1) AS HUGEINT) AS s11,
-               CAST(sum(__x1 * __x1) AS HUGEINT) AS s22,
-               CAST(sum(__y1 * __x1) AS HUGEINT) AS s12,
-               CAST(sum(__y1 * __yt) AS HUGEINT) AS s1y,
-               CAST(sum(__x1 * __yt) AS HUGEINT) AS s2y,
-               CAST(sum(__yt * __yt) AS HUGEINT) AS syy
+        SELECT CAST(count(*) AS BIGINT) AS n, {sums}
         FROM __rows
     ), __c AS MATERIALIZED (
-        SELECT n,
-               n::DOUBLE * s11::DOUBLE - s1::DOUBLE * s1::DOUBLE AS c11,
-               n::DOUBLE * s22::DOUBLE - s2::DOUBLE * s2::DOUBLE AS c22,
-               n::DOUBLE * s12::DOUBLE - s1::DOUBLE * s2::DOUBLE AS c12,
-               n::DOUBLE * s1y::DOUBLE - s1::DOUBLE * sy::DOUBLE AS c1y,
-               n::DOUBLE * s2y::DOUBLE - s2::DOUBLE * sy::DOUBLE AS c2y,
-               n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE AS cyy
+        SELECT n, {", ".join(f"{t} AS {k}" for k, t in c.items())}
         FROM __s
     ), __b AS MATERIALIZED (
         SELECT n, c11, c1y, c2y, cyy,
-               c11 * c22 - c12 * c12 AS det,
-               CASE WHEN c11 * c22 - c12 * c12 <> 0 AND c11 <> 0
-                    THEN (c1y * c22 - c2y * c12)
-                         / (c11 * c22 - c12 * c12) END AS __b1,
-               CASE WHEN c11 * c22 - c12 * c12 <> 0 AND c11 <> 0
-                    THEN (c2y * c11 - c1y * c12)
-                         / (c11 * c22 - c12 * c12) END AS __b2
+               {det} AS det, {b1} AS __b1, {b2} AS __b2
         FROM __c
     ), __fcte AS MATERIALIZED (
         SELECT n, __b1, __b2,

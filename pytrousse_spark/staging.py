@@ -50,7 +50,12 @@ def stage(df: DataFrame) -> DataFrame:
     The blocks are not recomputable (losing an executor fails a later
     reader), which is why bounded frames stage here, plus frames whose
     values must not change on recompute, such as generated row ids
-    (``rangejoin``). Nothing
+    (``rangejoin``), and one row-sized frame kept here on measurement:
+    the causal estimators' feature frame (``cohort._propensity_frame``,
+    q226/q246/q279). As a ``stage_unbounded`` it cost one more build job
+    and was slower in 4, 5 and 5 of 5 alternating pairs
+    (``tools/measure.py --reps 3`` at sf0.1, 4 cores; medians 3.72 →
+    4.31, 3.99 → 4.76 and 3.77 → 4.42 s). Nothing
     releases them while the returned frame can still be read; the
     ContextCleaner drops them once the frame is garbage-collected on the
     driver (see ``spark.cleaner.periodicGC.interval`` in
