@@ -12,6 +12,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .hashing import h60, h60_sql
+from .rounding import micro, round_to
 
 from pytrousse_spark.functions.sqlutil import sql_quote
 from pytrousse_spark.staging import stage, stage_unbounded
@@ -137,8 +138,9 @@ def quality_score_from_tokens(col: Column, toks: Column) -> Column:
     len_score = F.least(n_tok / F.lit(20.0), F.lit(1.0))
     mean_word = F.when(n_tok > 0, n_alnum / n_tok).otherwise(F.lit(0.0))
     word_score = F.least(mean_word / F.lit(4.0), F.lit(1.0))
-    return F.round(
-        0.4 * len_score + 0.3 * alnum_ratio + 0.3 * word_score, 6
+    return round_to(
+        0.4 * len_score + 0.3 * alnum_ratio + 0.3 * word_score,
+        6,
     )
 
 
@@ -509,7 +511,7 @@ def tfidf_top_terms(df, text_col: str, id_col: str, k: int = 3):
     dft = tok.groupBy("token").agg(F.countDistinct("__id").alias("df_t"))
     scored = tf.join(dft, "token").withColumn(
         "score",
-        F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df_t")), 6),
+        round_to(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df_t")), 6),
     )
     w = Window.partitionBy("__id").orderBy(
         F.col("score").desc(), F.col("token").asc()
@@ -568,13 +570,13 @@ def repetition_stats(df, text_col: str, id_col: str, ngram: int = 2):
         .select(
             F.col("__id").alias(id_col),
             "n_tokens",
-            F.round(F.col("n_distinct") / F.col("n_tokens"), 6).alias(
+            round_to(F.col("n_distinct") / F.col("n_tokens"), 6).alias(
                 "distinct_ratio"
             ),
-            F.round(F.col("top_c") / F.col("n_tokens"), 6).alias(
+            round_to(F.col("top_c") / F.col("n_tokens"), 6).alias(
                 "top_token_share"
             ),
-            F.round(F.col("top_gc") / F.col("n_ngrams"), 6).alias(
+            round_to(F.col("top_gc") / F.col("n_ngrams"), 6).alias(
                 "top_ngram_share"
             ),
         )
@@ -632,11 +634,11 @@ def unigram_surprisal(df, text_col: str, id_col: str):
     vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c")).first()[0]
     scored = tok.join(F.broadcast(vocab), "t").withColumn(
-        "__s", F.round(-F.log(F.col("c") / F.lit(float(total))), 6)
+        "__s", round_to(-F.log(F.col("c") / F.lit(float(total))), 6)
     )
     return scored.groupBy("__id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        F.round(F.avg("__s"), 4).alias("mean_surprisal"),
+        round_to(F.avg("__s"), 4).alias("mean_surprisal"),
     ).select(F.col("__id").alias(id_col), "n_tokens", "mean_surprisal")
 
 
@@ -754,7 +756,7 @@ def duplicated_ngram_stats(
         F.col("__total").alias("total_ngrams"),
         dup.alias("dup_ngrams"),
         F.when(
-            F.col("__total") > 0, F.round(dup / F.col("__total"), 4)
+            F.col("__total") > 0, round_to(dup / F.col("__total"), 4)
         ).alias("dup_ratio"),
     )
 
@@ -952,7 +954,7 @@ def pmi_collocations(
     n_bi = bi.count()
     c1 = unigrams.select(F.col("w").alias("w1"), F.col("c").alias("__c1"))
     c2 = unigrams.select(F.col("w").alias("w2"), F.col("c").alias("__c2"))
-    pmi = F.round(
+    pmi = round_to(
         F.log(
             (F.col("pair_count") / F.lit(float(n_bi)))
             / (
@@ -1068,7 +1070,7 @@ def bigram_nll(df, text_col: str, id_col: str):
         .select(
             "w1",
             "w2",
-            F.round(F.round(term, 6) * 1e6).cast("long").alias("__r"),
+            micro(round_to(term, 6)).alias("__r"),
         )
     )
     return (
@@ -1076,7 +1078,7 @@ def bigram_nll(df, text_col: str, id_col: str):
         .groupBy("__id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(F.sum("__r") / F.lit(1e6) / F.count(F.lit(1)), 4).alias(
+            round_to(F.sum("__r") / F.lit(1e6) / F.count(F.lit(1)), 4).alias(
                 "nll"
             ),
         )
@@ -1163,14 +1165,14 @@ def zipf_fit(df, text_col: str, id_col: str, top_r: int = 1000):
         )
     )
     pts = topr.select(
-        F.round(F.log(F.col("r").cast("double")), 6).alias("lr"),
-        F.round(F.log(F.col("c").cast("double")), 6).alias("lf"),
+        round_to(F.log(F.col("r").cast("double")), 6).alias("lr"),
+        round_to(F.log(F.col("c").cast("double")), 6).alias("lf"),
         F.when(F.col("r") == 1, F.col("token")).alias("__top"),
     )
     fit = pts.agg(
-        F.round(F.regr_slope(F.col("lf"), F.col("lr")), 4).alias("slope"),
-        F.round(F.regr_intercept(F.col("lf"), F.col("lr")), 4).alias("intercept"),
-        F.round(F.regr_r2(F.col("lf"), F.col("lr")), 4).alias("r2"),
+        round_to(F.regr_slope(F.col("lf"), F.col("lr")), 4).alias("slope"),
+        round_to(F.regr_intercept(F.col("lf"), F.col("lr")), 4).alias("intercept"),
+        round_to(F.regr_r2(F.col("lf"), F.col("lr")), 4).alias("r2"),
         F.max("__top").alias("top_token"),
     )
     return fit.crossJoin(totals).select(
@@ -1273,7 +1275,7 @@ def search_docs(df, text_col: str, id_col: str, terms: list[str], k: int = 20):
         .groupBy("__id")
         .agg(
             F.count(F.lit(1)).alias("__hit"),
-            F.round(
+            round_to(
                 F.sum(
                     F.col("__tf") * F.log(F.lit(float(n_docs)) / F.col("__df"))
                 ),
@@ -1390,7 +1392,7 @@ def bm25_search(
         .join(lens, "__id")
         .crossJoin(F.broadcast(stats))
         .groupBy("__id")
-        .agg(F.round(F.sum(idf * tf_part), 6).alias("score"))
+        .agg(round_to(F.sum(idf * tf_part), 6).alias("score"))
     )
     return (
         scored.orderBy(F.col("score").desc(), F.col("__id"))
@@ -1538,7 +1540,7 @@ def dirichlet_ql_search(
         .crossJoin(F.broadcast(consts))
         .select(
             "__id",
-            F.round(
+            round_to(
                 F.coalesce(F.col("__k"), F.lit(0.0))
                 + F.coalesce(F.col("__m"), F.lit(0.0))
                 - F.coalesce(F.col("__qe"), F.lit(0)).cast("double")
@@ -1747,7 +1749,7 @@ def js_divergence(
         .groupBy("__na", "__nb", "__v")
         .agg(F.sum("__p").alias("__s"))
         .select(
-            F.round(F.col("__s") / F.lit(1e12), 6).alias("js_nats"),
+            round_to(F.col("__s") / F.lit(1e12), 6).alias("js_nats"),
             F.col("__v").cast("bigint").alias("vocab_size"),
             F.col("__na").cast("bigint").alias("n_tokens_a"),
             F.col("__nb").cast("bigint").alias("n_tokens_b"),
@@ -1837,8 +1839,7 @@ def smoothed_sampling_weights(
     base = stage(df.where(F.col(count_col) > 0).select(
         F.col(key_col).alias("key"),
         F.col(count_col).cast("bigint").alias("count"),
-        F.round(F.pow(c, F.lit(float(alpha))) * F.lit(1e6), 0)
-        .cast("bigint")
+        micro(F.pow(c, F.lit(float(alpha))))
         .alias("__m"),
     ))
     tot = base.agg(
@@ -1851,8 +1852,8 @@ def smoothed_sampling_weights(
         t.select(
             "key",
             "count",
-            F.round(weight, 6).alias("weight"),
-            F.round(weight / raw, 4).alias("uplift"),
+            round_to(weight, 6).alias("weight"),
+            round_to(weight / raw, 4).alias("uplift"),
         )
         .orderBy(F.col("weight").desc(), "key")
         .limit(k)

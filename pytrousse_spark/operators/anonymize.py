@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..dataset import Dataset
+from ..functions.rounding import round_to
 from ..operations import OpRecord
 
 #: anonymize_database.py:135 — NaN in private cols filled before hashing.
@@ -168,7 +169,7 @@ def k_anonymity_census(
             F.col("k").cast("int").alias("k"),
             "groups_below",
             "rows_below",
-            F.round(F.col("rows_below") / F.col("__nr"), 6).alias("rows_share"),
+            round_to(F.col("rows_below") / F.col("__nr"), 6).alias("rows_share"),
             F.col("__lvl").alias("anonymity_level"),
             F.col("__ng").alias("n_groups"),
             F.col("__nr").alias("n_rows"),
@@ -308,7 +309,7 @@ def l_diversity_census(
             F.col("l").cast("int").alias("l"),
             "groups_below",
             "rows_below",
-            F.round(F.col("rows_below") / F.col("__nr"), 6).alias("rows_share"),
+            round_to(F.col("rows_below") / F.col("__nr"), 6).alias("rows_share"),
             F.col("__lvl").alias("diversity_level"),
             F.col("__ng").alias("n_groups"),
             F.col("__nr").alias("n_rows"),
@@ -465,10 +466,11 @@ def t_closeness_census(
             F.col("t"),
             "groups_above",
             "rows_above",
-            F.round(
-                F.col("rows_above") / F.col("__nr"), 6
+            round_to(
+                F.col("rows_above") / F.col("__nr"),
+                6,
             ).alias("rows_share"),
-            F.round(F.col("__maxtp") / F.lit(2e12), 6).alias("max_t"),
+            round_to(F.col("__maxtp") / F.lit(2e12), 6).alias("max_t"),
             F.col("__ng").alias("n_groups"),
             F.col("__nr").alias("n_rows"),
         )
@@ -595,10 +597,7 @@ def dp_noisy_counts(
     v = u - F.lit(0.5)
     mag = -(F.lit(1.0 / epsilon)) * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(v))
     noise = F.when(v < 0, -mag).otherwise(mag)
-    noisy = (
-        F.round((F.col("__true_n").cast("double") + noise) * F.lit(1e6), 0)
-        / F.lit(1e6)
-    )
+    noisy = round_to(F.col("__true_n").cast("double") + noise, 6)
     return g.select(
         *group_cols,
         F.lit(float(epsilon)).alias("epsilon"),

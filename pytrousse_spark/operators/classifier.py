@@ -36,14 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import round_half_away
+from ..functions.rounding import MICRO, micro, round_half_away, round_to
 from ..functions.text import LANG_STOPWORDS, tokens, tokens_sql
 from ..io import rebalance_undersplit
 from ..staging import stage, stage_unbounded
 
 #: feature scaling constants (shared by both engines).
 _LEN_DIV = 100.0
-_MICRO = 1_000_000
 
 
 def _en_list_sql() -> str:
@@ -71,12 +70,14 @@ def quality_features(df: DataFrame, text_col: str, label_col: F.Column) -> DataF
     ).cast("double")
     return staged.select(
         "y",
-        F.round(n_tok / F.lit(_LEN_DIV), 6).alias("x1"),
-        F.round(
-            F.when(n_chars > 0, n_alnum / n_chars).otherwise(0.0), 6
+        round_to(n_tok / F.lit(_LEN_DIV), 6).alias("x1"),
+        round_to(
+            F.when(n_chars > 0, n_alnum / n_chars).otherwise(0.0),
+            6,
         ).alias("x2"),
-        F.round(
-            F.when(n_tok > 0, en_hits / n_tok).otherwise(0.0), 6
+        round_to(
+            F.when(n_tok > 0, en_hits / n_tok).otherwise(0.0),
+            6,
         ).alias("x3"),
     )
 
@@ -114,7 +115,7 @@ def _sigma(w: list[float]) -> F.Column:
         + F.lit(w[2]) * F.col("x2")
         + F.lit(w[3]) * F.col("x3")
     )
-    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+    return round_to(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
 
 
 #: :func:`_sigma` over ``feat f CROSS JOIN w{t} w`` (weights ``a..d``)
@@ -122,10 +123,6 @@ _SIGMA_SQL = (
     "round(1.0 / (1.0 + exp(-(w.a + w.b * f.x1 + w.c * f.x2"
     " + w.d * f.x3))), 6)"
 )
-
-
-def _micro(col: F.Column) -> F.Column:
-    return F.round(col * _MICRO).cast("long")
 
 
 def logreg_train(
@@ -145,7 +142,7 @@ def logreg_train(
         row = bounded_first(feat.agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             *[
-                F.sum(_micro(F.round((p - F.col("y")) * xs[j], 6)))
+                F.sum(micro(round_to((p - F.col("y")) * xs[j], 6)))
                 .cast("long")
                 .alias(f"g{j}")
                 for j in range(4)
@@ -154,7 +151,8 @@ def logreg_train(
         n = row["n"]
         w = [
             round_half_away(
-                w[j] - lr * (row[f"g{j}"] / _MICRO) / n, 6
+                w[j] - lr * (row[f"g{j}"] / MICRO) / n,
+                6,
             )
             for j in range(4)
         ]
@@ -175,11 +173,11 @@ def _logreg_chain_sql(feat: str, iters: int, lr: float) -> list[str]:
     expression tree 2^T-fold."""
     gsums = ", ".join(
         f"CAST(sum(CAST(round(round((p.p - p.y) * {x}, 6)"
-        f" * {_MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
+        f" * {MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
         for j, x in enumerate(["1.0", "p.x1", "p.x2", "p.x3"])
     )
     upd = ", ".join(
-        f"round(w.{wc} - {lr} * (g.g{j} / {float(_MICRO)}) / g.n, 6) AS {wc}"
+        f"round(w.{wc} - {lr} * (g.g{j} / {float(MICRO)}) / g.n, 6) AS {wc}"
         for j, wc in enumerate("abcd")
     )
     ctes = [
@@ -230,7 +228,7 @@ def logreg_quality_gate(
         "fp",
         "tn",
         "fn",
-        F.round((F.col("tp") + F.col("tn")) / F.col("n"), 4).alias(
+        round_to((F.col("tp") + F.col("tn")) / F.col("n"), 4).alias(
             "accuracy"
         ),
     )
@@ -363,7 +361,7 @@ def _ols2_dec_sums(y_col: str, x1_col: str, x2_col: str):
 
 def _ols2_rounded(n, c: dict, s1, s2, sy) -> list:
     fit = _ols2_solve(n, c, s1, s2, sy)
-    return [F.round(fit[k], 6).alias(k) for k in ("b0", "b1", "b2", "r2")]
+    return [round_to(fit[k], 6).alias(k) for k in ("b0", "b1", "b2", "r2")]
 
 
 def ols_two_feature(
@@ -505,7 +503,7 @@ def chi2_feature_selection(
             "token",
             "n_docs",
             "n_pos",
-            F.round(chi2, 4).alias("chi2"),
+            round_to(chi2, 4).alias("chi2"),
         )
         .orderBy(F.col("chi2").desc(), "token")
         .limit(top_k)
@@ -658,7 +656,7 @@ def calibration_bins(
         raise ValueError("calibration_bins: num_bins must be >= 2")
     p = F.col(prob_col).cast("double")
     y = F.col(label_col).cast("bigint")
-    pm = F.round(p * F.lit(1_000_000), 0).cast("bigint")
+    pm = micro(p)
     bin_ = F.least(
         F.floor(pm * num_bins / F.lit(1_000_000)).cast("int"),
         F.lit(num_bins - 1),
@@ -699,12 +697,13 @@ def calibration_bins(
     return dense.select(
         "bin",
         "n",
-        F.round(mean_pred, 6).alias("mean_pred"),
-        F.round(pos_rate, 6).alias("pos_rate"),
-        F.round(mean_pred - pos_rate, 6).alias("gap"),
-        F.round(F.col("__sq") / (F.col("n") * F.lit(1e12)), 6).alias("brier"),
-        F.round(
-            F.sum("__sq").over(w) / (F.sum("n").over(w) * F.lit(1e12)), 6
+        round_to(mean_pred, 6).alias("mean_pred"),
+        round_to(pos_rate, 6).alias("pos_rate"),
+        round_to(mean_pred - pos_rate, 6).alias("gap"),
+        round_to(F.col("__sq") / (F.col("n") * F.lit(1e12)), 6).alias("brier"),
+        round_to(
+            F.sum("__sq").over(w) / (F.sum("n").over(w) * F.lit(1e12)),
+            6,
         ).alias("brier_total"),
     ).orderBy("bin")
 
@@ -819,7 +818,7 @@ def auc_binned(
         n_tot.alias("n_neg"),
         F.when(
             (p_tot > 0) & (n_tot > 0),
-            F.round(
+            round_to(
                 two_numer.cast("double")
                 / (2.0 * (p_tot * n_tot).cast("double")),
                 6,
@@ -827,7 +826,7 @@ def auc_binned(
         ).alias("auc"),
         F.when(
             (p_tot > 0) & (n_tot > 0),
-            F.round(
+            round_to(
                 two_numer.cast("double")
                 / (p_tot * n_tot).cast("double") - 1.0,
                 6,
@@ -953,19 +952,20 @@ def roc_curve_binned(
     width = (F.col("__hi") - F.col("__lo")) / F.lit(float(num_bins))
     return cum.select(
         F.col("__b").cast("int").alias("bin"),
-        F.round(F.col("__lo") + F.col("__b") * width, 6).alias("score_lo"),
+        round_to(F.col("__lo") + F.col("__b") * width, 6).alias("score_lo"),
         F.col("__tp").alias("tp"),
         F.col("__fp").alias("fp"),
         F.when(
-            F.col("__P") > 0, F.round(F.col("__tp") / F.col("__P"), 6)
+            F.col("__P") > 0, round_to(F.col("__tp") / F.col("__P"), 6)
         ).alias("tpr"),
         F.when(
-            F.col("__N") > 0, F.round(F.col("__fp") / F.col("__N"), 6)
+            F.col("__N") > 0, round_to(F.col("__fp") / F.col("__N"), 6)
         ).alias("fpr"),
         F.when(
             (F.col("__tp") + F.col("__fp")) > 0,
-            F.round(
-                F.col("__tp") / (F.col("__tp") + F.col("__fp")), 6
+            round_to(
+                F.col("__tp") / (F.col("__tp") + F.col("__fp")),
+                6,
             ),
         ).alias("precision"),
     ).orderBy(F.col("bin").desc())
@@ -1093,7 +1093,7 @@ def auc_binned_grouped(
             n_tot.alias("n_neg"),
             F.when(
                 (p_tot > 0) & (n_tot > 0),
-                F.round(
+                round_to(
                     two_numer.cast("double")
                     / (2.0 * (p_tot * n_tot).cast("double")),
                     6,
@@ -1101,7 +1101,7 @@ def auc_binned_grouped(
             ).alias("auc"),
             F.when(
                 (p_tot > 0) & (n_tot > 0),
-                F.round(
+                round_to(
                     two_numer.cast("double")
                     / (p_tot * n_tot).cast("double") - 1.0,
                     6,
@@ -1272,8 +1272,8 @@ def conformal_interval(
         nn.crossJoin(F.broadcast(got))
         .agg(
             F.max("__n").alias("n"),
-            F.round(F.max("__qhat"), 6).alias("q_hat"),
-            F.round(
+            round_to(F.max("__qhat"), 6).alias("q_hat"),
+            round_to(
                 F.avg(
                     (F.col("__r") <= F.col("__qhat")).cast("double")
                 ),
@@ -1772,8 +1772,7 @@ def decision_stump(
     best = cand.select(
         F.min(
             F.struct(
-                F.round(F.col("__cost") * F.lit(1e6), 0)
-                .cast("bigint")
+                micro(F.col("__cost"))
                 .alias("__cm"),
                 F.col("__b").alias("__bb"),
                 F.col("__cn").alias("__bcn"),
@@ -1797,45 +1796,25 @@ def decision_stump(
     return out.select(
         F.col("__n").alias("n"),
         F.col("__bb").alias("split_bin"),
-        (
-            F.round(
-                (
-                    F.col("__lo")
-                    + (F.col("__bb") + 1).cast("double")
-                    * (F.col("__hi") - F.col("__lo"))
-                    / F.lit(B)
-                )
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+        round_to(
+            F.col("__lo")
+            + (F.col("__bb") + 1).cast("double")
+            * (F.col("__hi") - F.col("__lo"))
+            / F.lit(B),
+            6,
         ).alias("threshold"),
         nl.alias("n_left"),
         nr.cast("bigint").alias("n_right"),
-        (
-            F.round(pl.cast("double") / nl.cast("double") * F.lit(1e6), 0)
-            / F.lit(1e6)
-        ).alias("pos_rate_left"),
-        (
-            F.round(pr.cast("double") / nr.cast("double") * F.lit(1e6), 0)
-            / F.lit(1e6)
-        ).alias("pos_rate_right"),
+        round_to(pl.cast("double") / nl.cast("double"), 6).alias("pos_rate_left"),
+        round_to(pr.cast("double") / nr.cast("double"), 6).alias("pos_rate_right"),
         (F.col("__cm") / F.lit(1e6)).alias("gini_split"),
-        (
-            F.round(
-                F.lit(2.0)
-                * (F.col("__pos") * (F.col("__n") - F.col("__pos")))
-                .cast("double")
-                / F.col("__n").cast("double")
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+        round_to(
+            F.lit(2.0)
+            * (F.col("__pos") * (F.col("__n") - F.col("__pos"))).cast("double")
+            / F.col("__n").cast("double"),
+            6,
         ).alias("gini_root"),
-        (
-            F.round(maj / F.col("__n").cast("double") * F.lit(1e6), 0)
-            / F.lit(1e6)
-        ).alias("accuracy"),
+        round_to(maj / F.col("__n").cast("double"), 6).alias("accuracy"),
     )
 
 
@@ -2043,16 +2022,16 @@ def isotonic_calibration(
         .groupBy("__b")
         .agg(F.max("__inner").alias("__fit"))
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         binned.join(fit, binned["bin"] == fit["__b"], "inner")
         .select(
             "bin",
             "n",
-            r6(
-                F.col("__s").cast("double") / F.col("n").cast("double")
+            round_to(
+                F.col("__s").cast("double") / F.col("n").cast("double"),
+                6,
             ).alias("rate_raw"),
-            r6(F.col("__fit").cast("double") / F.lit(1e9)).alias(
+            round_to(F.col("__fit").cast("double") / F.lit(1e9), 6).alias(
                 "rate_isotonic"
             ),
         )
@@ -2193,18 +2172,17 @@ def fairness_census(
         F.col("__rneg") > 0,
         F.col("__rfp").cast("double") / F.col("__rneg").cast("double"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return j.select(
         "group",
         "n",
         F.col("__sel").alias("n_selected"),
         F.col("__pos").alias("n_positive"),
-        r6(sel).alias("selection_rate"),
-        r6(tpr).alias("tpr"),
-        r6(fpr).alias("fpr"),
-        r6(F.when(rsel > 0, sel / rsel)).alias("dp_ratio"),
-        r6(tpr - rtpr).alias("tpr_gap"),
-        r6(fpr - rfpr).alias("fpr_gap"),
+        round_to(sel, 6).alias("selection_rate"),
+        round_to(tpr, 6).alias("tpr"),
+        round_to(fpr, 6).alias("fpr"),
+        round_to(F.when(rsel > 0, sel / rsel), 6).alias("dp_ratio"),
+        round_to(tpr - rtpr, 6).alias("tpr_gap"),
+        round_to(fpr - rfpr, 6).alias("fpr_gap"),
     ).orderBy("group")
 
 
@@ -2495,7 +2473,6 @@ def ndcg_at_k(
             1.0 / F.log2(F.col("__i").cast("double") + 1.0)
         ).alias("__idcg")
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         rtotu.join(ideal, "query", "left")
         .join(hits, "query", "left")
@@ -2505,14 +2482,15 @@ def ndcg_at_k(
             F.coalesce(F.col("hits_at_k"), F.lit(0))
             .cast("bigint")
             .alias("hits_at_k"),
-            r6(F.coalesce(F.col("__dcg"), F.lit(0.0))).alias("dcg"),
-            r6(F.coalesce(F.col("__idcg"), F.lit(0.0))).alias("idcg"),
-            r6(
+            round_to(F.coalesce(F.col("__dcg"), F.lit(0.0)), 6).alias("dcg"),
+            round_to(F.coalesce(F.col("__idcg"), F.lit(0.0)), 6).alias("idcg"),
+            round_to(
                 F.when(
                     F.col("n_relevant") > 0,
                     F.coalesce(F.col("__dcg"), F.lit(0.0))
                     / F.col("__idcg"),
-                )
+                ),
+                6,
             ).alias("ndcg"),
         )
         .orderBy("query")
@@ -2610,7 +2588,7 @@ def brier_decomposition(
     if num_bins < 2:
         raise ValueError("brier_decomposition: num_bins must be >= 2")
     d38 = "decimal(38,0)"
-    pm = F.round(F.col(prob_col).cast("double") * 1e6, 0).cast("bigint")
+    pm = micro(F.col(prob_col).cast("double"))
     staged = df.where(
         F.col(prob_col).isNotNull() & F.col(label_col).isNotNull()
     ).select(
@@ -2682,16 +2660,15 @@ def brier_decomposition(
     n = F.col("n").cast("double")
     obar = F.col("__ty").cast("double") / n
     res = F.col("__so2") / n - obar * obar
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return tot.select(
         "n",
-        r6(F.col("__bri") / n).alias("brier"),
-        r6(F.col("__rel") / n).alias("reliability"),
-        r6(res).alias("resolution"),
-        r6(obar * (F.lit(1.0) - obar)).alias("uncertainty"),
-        r6(F.col("__wbv") / n).alias("within_bin_var"),
-        r6(F.col("__wbc") / n).alias("within_bin_cov"),
-        r6(obar).alias("base_rate"),
+        round_to(F.col("__bri") / n, 6).alias("brier"),
+        round_to(F.col("__rel") / n, 6).alias("reliability"),
+        round_to(res, 6).alias("resolution"),
+        round_to(obar * (F.lit(1.0) - obar), 6).alias("uncertainty"),
+        round_to(F.col("__wbv") / n, 6).alias("within_bin_var"),
+        round_to(F.col("__wbc") / n, 6).alias("within_bin_cov"),
+        round_to(obar, 6).alias("base_rate"),
     )
 
 
@@ -2834,16 +2811,15 @@ def cohens_kappa(
         + (F.col("n01") + F.col("n00")).cast("double")
         * (F.col("n10") + F.col("n00")).cast("double")
     ) / (n * n)
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return agg.select(
         "n",
         "n11",
         "n10",
         "n01",
         "n00",
-        r6(po).alias("po"),
-        r6(pe).alias("pe"),
-        r6(F.when(pe != 1.0, (po - pe) / (1.0 - pe))).alias("kappa"),
+        round_to(po, 6).alias("po"),
+        round_to(pe, 6).alias("pe"),
+        round_to(F.when(pe != 1.0, (po - pe) / (1.0 - pe)), 6).alias("kappa"),
     )
 
 
@@ -3166,13 +3142,13 @@ def mcnemar_test(
     diff = F.abs(F.col("b_discordant") - F.col("c_discordant"))
     return agg.select(
         "n",
-        F.round(F.col("__na").cast("double") / F.col("n"), 6).alias("acc_a"),
-        F.round(F.col("__nb").cast("double") / F.col("n"), 6).alias("acc_b"),
+        round_to(F.col("__na").cast("double") / F.col("n"), 6).alias("acc_a"),
+        round_to(F.col("__nb").cast("double") / F.col("n"), 6).alias("acc_b"),
         "b_discordant",
         "c_discordant",
         F.when(
             bc > 0,
-            F.round(
+            round_to(
                 F.pow(diff.cast("double") - F.lit(1.0), 2)
                 / bc.cast("double"),
                 6,
@@ -3327,8 +3303,9 @@ def split_conformal(
         .agg(
             F.max(F.lit(None).cast("bigint")).alias("__drop"),
             F.count(F.lit(1)).cast("bigint").alias("n_test"),
-            F.round(
-                F.avg((F.col("__r") <= F.col("__q")).cast("double")), 6
+            round_to(
+                F.avg((F.col("__r") <= F.col("__q")).cast("double")),
+                6,
             ).alias("coverage"),
             F.max("__q").alias("q_half_width_cents"),
         )
@@ -3508,7 +3485,7 @@ def krippendorff_alpha(
             "n_units",
             "n_ratings",
             "n_categories",
-            F.when(de > 0, F.round(F.lit(1.0) - num / de, 6)).alias("alpha"),
+            F.when(de > 0, round_to(F.lit(1.0) - num / de, 6)).alias("alpha"),
         )
     )
 
@@ -3619,7 +3596,7 @@ def cochran_q(
         *[F.col(f"__g{j}").alias(f"g{j}") for j in range(k)],
         F.when(
             den > 0,
-            F.round(
+            round_to(
                 F.lit(float(k - 1)) * num.cast("double")
                 / (F.lit(float(k)) * den.cast("double")),
                 6,
@@ -3767,15 +3744,16 @@ def mann_whitney_u(
     return agg.select(
         "n1",
         "n2",
-        F.when((n1 > 0) & (n2 > 0), F.round(u1, 6)).alias("u1"),
+        F.when((n1 > 0) & (n2 > 0), round_to(u1, 6)).alias("u1"),
         F.when(
             var > 0,
-            F.round((u1 - n1 * n2 / F.lit(2.0)) / F.sqrt(var), 6),
+            round_to((u1 - n1 * n2 / F.lit(2.0)) / F.sqrt(var), 6),
         ).alias("z"),
         F.when(
             (n1 > 0) & (n2 > 0),
-            F.round(
-                (F.col("__w") - F.col("__l")).cast("double") / (n1 * n2), 6
+            round_to(
+                (F.col("__w") - F.col("__l")).cast("double") / (n1 * n2),
+                6,
             ),
         ).alias("cliffs_delta"),
     )
@@ -3902,15 +3880,16 @@ def mann_whitney_by_group(
         F.col("__g").alias("group"),
         "n_a",
         "n_b",
-        F.when((n1 > 0) & (n2 > 0), F.round(u1, 6)).alias("u1"),
+        F.when((n1 > 0) & (n2 > 0), round_to(u1, 6)).alias("u1"),
         F.when(
             (n1 > 0) & (n2 > 0) & (var > 0),
-            F.round((u1 - n1 * n2 / F.lit(2.0)) / F.sqrt(var), 6),
+            round_to((u1 - n1 * n2 / F.lit(2.0)) / F.sqrt(var), 6),
         ).alias("z"),
         F.when(
             (n1 > 0) & (n2 > 0),
-            F.round(
-                (F.col("__w") - F.col("__l")).cast("double") / (n1 * n2), 6
+            round_to(
+                (F.col("__w") - F.col("__l")).cast("double") / (n1 * n2),
+                6,
             ),
         ).alias("cliffs_delta"),
     )
@@ -4054,11 +4033,12 @@ def wilcoxon_signed_rank(
     )
     return agg.select(
         "n",
-        F.when(F.col("n") > 0, F.round(wp, 6)).alias("w_plus"),
+        F.when(F.col("n") > 0, round_to(wp, 6)).alias("w_plus"),
         F.when(
             (F.col("n") > 0) & (var > 0),
-            F.round(
-                (wp - nn * (nn + F.lit(1.0)) / F.lit(4.0)) / F.sqrt(var), 6
+            round_to(
+                (wp - nn * (nn + F.lit(1.0)) / F.lit(4.0)) / F.sqrt(var),
+                6,
             ),
         ).alias("z"),
     )
@@ -4200,7 +4180,7 @@ def friedman_test(
         F.coalesce(F.col("n"), F.lit(0).cast("bigint")).alias("n"),
         F.when(
             (F.col("k") >= 2) & (F.col("n") > 0) & (den > 0),
-            F.round((kk - F.lit(1.0)) * num / den, 6),
+            round_to((kk - F.lit(1.0)) * num / den, 6),
         ).alias("chi2"),
     )
 
@@ -4349,7 +4329,7 @@ def brown_forsythe(
         "n",
         F.when(
             (F.col("k") >= 2) & (F.col("n") > F.col("k")) & (ssw > 0),
-            F.round((ssb / (kk - F.lit(1.0))) / (ssw / (nn - kk)), 6),
+            round_to((ssb / (kk - F.lit(1.0))) / (ssw / (nn - kk)), 6),
         ).alias("f_stat"),
     )
 
@@ -4480,11 +4460,12 @@ def anova_oneway(
         "n",
         F.when(
             (F.col("k") >= 2) & (F.col("n") > F.col("k")) & (ssw > 0),
-            F.round(
-                (ssb / (kk - F.lit(1.0))) / (ssw / (nn - kk)), 6
+            round_to(
+                (ssb / (kk - F.lit(1.0))) / (ssw / (nn - kk)),
+                6,
             ),
         ).alias("f_stat"),
-        F.when(sst > 0, F.round(ssb / sst, 6)).alias("eta_sq"),
+        F.when(sst > 0, round_to(ssb / sst, 6)).alias("eta_sq"),
     )
 
 
@@ -4614,7 +4595,7 @@ def bartlett_test(
         "n",
         F.when(
             (F.col("k") >= 2) & (F.col("__vmin") > 0),
-            F.round(
+            round_to(
                 (
                     (nn - kk) * F.log(sp2)
                     - F.col("__sl6").cast("double") / F.lit(1e6)
@@ -4750,7 +4731,7 @@ def fleiss_kappa(
         "n_categories",
         F.when(
             (F.col("n_units") > 0) & (pe < 1.0),
-            F.round((pbar - pe) / (F.lit(1.0) - pe), 6),
+            round_to((pbar - pe) / (F.lit(1.0) - pe), 6),
         ).alias("kappa"),
     )
 
@@ -4867,7 +4848,7 @@ def cochran_armitage_trend(
         "k",
         "n",
         "n_success",
-        F.when(varg > 0, F.round(num / F.sqrt(varg), 6)).alias("z_trend"),
+        F.when(varg > 0, round_to(num / F.sqrt(varg), 6)).alias("z_trend"),
     )
 
 
@@ -4962,7 +4943,7 @@ def mrr_at_k(
         "n_hit",
         F.when(
             F.col("n_queries") > 0,
-            F.round(
+            round_to(
                 F.col("__mu").cast("double")
                 / F.lit(1e6)
                 / F.col("n_queries").cast("double"),

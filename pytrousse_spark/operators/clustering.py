@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
-from ..functions.rounding import round_half_away
+from ..functions.rounding import micro, round_half_away, round_to
 from ..functions.vectors import cosine, cosine_sql, lit_doubles
 from ..io import rebalance_undersplit
 from ..staging import stage
@@ -72,7 +72,7 @@ def _assign_expr(vec_col: str, cents: list[list[float]]) -> Column:
     Pure map-side; k folds per row, no shuffle."""
     items = [
         F.struct(
-            F.round(_sqdist(vec_col, cv), 6).alias("d"),
+            round_to(_sqdist(vec_col, cv), 6).alias("d"),
             F.lit(i + 1).alias("cluster"),
         )
         for i, cv in enumerate(cents)
@@ -351,7 +351,7 @@ def semantic_dedup_pairs(
             & (F.col("__salt") == F.col("__salt_b"))
             & (F.col("id_a") < F.col("id_b")),
         )
-        .withColumn("cos", F.round(cos, 6))
+        .withColumn("cos", round_to(cos, 6))
         .where(F.col("cos") >= tau)
         .select("id_a", "id_b", "cluster", "cos")
     )
@@ -473,7 +473,7 @@ def cluster_quality(
     dim = len(cents[0])
     structs = [
         F.struct(
-            F.round(_sqdist(vec_col, c), 6).alias("d"),
+            round_to(_sqdist(vec_col, c), 6).alias("d"),
             F.lit(i + 1).alias("cidx"),
         )
         for i, c in enumerate(cents)
@@ -491,9 +491,8 @@ def cluster_quality(
     ).otherwise(F.lit(0.0))
     staged = pts.select(
         "cluster",
-        F.round(s * F.lit(1e6), 0).cast("bigint").alias("__sm"),
-        F.round(F.col("__a") * F.lit(1e6), 0)
-        .cast("bigint")
+        micro(s).alias("__sm"),
+        micro(F.col("__a"))
         .alias("__am"),
     )
     # the k-row frame feeds the sj broadcast, the rij main side and the
@@ -519,26 +518,20 @@ def cluster_quality(
     ).select(
         "__ci",
         "__cj",
-        (
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("__cvi"),
-                            F.col("__cvj"),
-                            lambda x, p: (
-                                x.cast("double") - p.cast("double")
-                            )
-                            * (x.cast("double") - p.cast("double")),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
+        round_to(
+            F.sqrt(
+                F.aggregate(
+                    F.zip_with(
+                        F.col("__cvi"),
+                        F.col("__cvj"),
+                        lambda x, p: (x.cast("double") - p.cast("double"))
+                        * (x.cast("double") - p.cast("double")),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
                 )
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+            ),
+            6,
         ).alias("__m"),
     )
     sj = per.select(
@@ -563,7 +556,7 @@ def cluster_quality(
         .where(F.col("__m") > 0)
         .groupBy("cluster")
         .agg(
-            F.round(
+            round_to(
                 F.max((F.col("__si") + F.col("__sj")) / F.col("__m")),
                 6,
             ).alias("__dbi")
@@ -572,30 +565,33 @@ def cluster_quality(
     tot = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     out = per.join(rij, "cluster", "left").select(
         "cluster",
         "n",
-        r6(
+        round_to(
             F.col("__ssm").cast("double")
             / F.col("n").cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("mean_silhouette"),
-        r6(
+        round_to(
             F.col("__sam").cast("double")
             / F.col("n").cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("intra_dist"),
-        r6(
+        round_to(
             F.sum("__ssm").over(tot).cast("double")
             / F.sum("n").over(tot).cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("silhouette"),
-        r6(
+        round_to(
             F.avg(
-                F.round(F.col("__dbi") * F.lit(1e6), 0).cast("bigint")
+                micro(F.col("__dbi"))
             ).over(tot)
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("db_index"),
     )
     return out

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
+from ..functions.rounding import micro, round_half_away, round_to
 from ..io import rebalance_undersplit
 from ..staging import stage, stage_unbounded
 from .classifier import (
@@ -88,7 +89,7 @@ def cohort_retention(
             "period_offset",
             "n_active",
             "cohort_size",
-            F.round(F.col("n_active") / F.col("cohort_size"), 6).alias(
+            round_to(F.col("n_active") / F.col("cohort_size"), 6).alias(
                 "retention"
             ),
         )
@@ -211,11 +212,11 @@ def funnel_steps(
             "n_users",
             F.when(
                 F.col("__n1") > 0,
-                F.round(F.col("n_users") / F.col("__n1"), 6),
+                round_to(F.col("n_users") / F.col("__n1"), 6),
             ).alias("pct_of_first"),
             F.when(
                 F.coalesce(F.col("__np"), F.col("n_users")) > 0,
-                F.round(
+                round_to(
                     F.col("n_users")
                     / F.coalesce(F.col("__np"), F.col("n_users")),
                     6,
@@ -434,11 +435,11 @@ def ab_test_conversion(
     return agg.select(
         "n_a",
         "conv_a",
-        F.round(p1, 6).alias("rate_a"),
+        round_to(p1, 6).alias("rate_a"),
         "n_b",
         "conv_b",
-        F.round(p2, 6).alias("rate_b"),
-        F.round(z, 6).alias("z"),
+        round_to(p2, 6).alias("rate_b"),
+        round_to(z, 6).alias("z"),
         (F.abs(z) > z_crit).alias("significant"),
     )
 
@@ -688,15 +689,6 @@ def _route_attribution(
     return "scalable" if mass > max_pair_mass else "exact"
 
 
-def _micro_units(value_col: str):
-    """``value_col`` in exact integer micro-units, as ``__vm``."""
-    return (
-        F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
-        .cast("bigint")
-        .alias("__vm")
-    )
-
-
 def _pairwise_attribution(
     purchases: "DataFrame",
     touches: "DataFrame",
@@ -723,7 +715,7 @@ def _pairwise_attribution(
         F.col(user_col).alias("__u"),
         F.col(purchase_id_col).alias("__pid"),
         F.col(purchase_ts_col).alias("__pts"),
-        _micro_units(value_col),
+        micro(F.col(value_col).cast("double")).alias("__vm"),
     )
     t = touches.select(
         F.col(user_col).alias("__u"),
@@ -758,7 +750,7 @@ def _pairwise_attribution(
         .agg(
             F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
             F.count("__tts").cast("bigint").alias("n_touches"),
-            F.round(F.sum("__cr") / F.lit(1e6), 6).alias("credit"),
+            round_to(F.sum("__cr") / F.lit(1e6), 6).alias("credit"),
         )
         .orderBy("channel")
     )
@@ -1178,7 +1170,7 @@ def _scalable_attribution_frames(
         F.col(user_col).alias("__u"),
         F.col(purchase_id_col).alias("__pid"),
         F.unix_micros(F.col(purchase_ts_col)).alias("__ptu"),
-        _micro_units(value_col),
+        micro(F.col(value_col).cast("double")).alias("__vm"),
     )
     t = touches.where(F.col(user_col).isNotNull()).select(
         F.col(user_col).alias("__u"),
@@ -1247,7 +1239,7 @@ def _channel_rollup(*frames: "DataFrame") -> "DataFrame":
         .agg(
             F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
             F.sum("__touches").cast("bigint").alias("n_touches"),
-            F.round(F.sum("__cru") / F.lit(1e6), 6).alias("credit"),
+            round_to(F.sum("__cru") / F.lit(1e6), 6).alias("credit"),
         )
         .orderBy("channel")
     )
@@ -1693,20 +1685,20 @@ def cuped_ab_test(
     return j.select(
         F.col("__arm").alias("arm"),
         F.col("__n").alias("n"),
-        (F.round(my / cents * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(my / cents, 6).alias(
             "mean_y"
         ),
-        (F.round(my_adj / cents * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(my_adj / cents, 6).alias(
             "mean_y_cuped"
         ),
-        (F.round(vy / c2 * F.lit(1e6), 0) / F.lit(1e6)).alias("var_y"),
-        (F.round(vadj / c2 * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(vy / c2, 6).alias("var_y"),
+        round_to(vadj / c2, 6).alias(
             "var_cuped"
         ),
-        (F.round(red * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(red, 6).alias(
             "var_reduction"
         ),
-        (F.round(theta * F.lit(1e6), 0) / F.lit(1e6)).alias("theta"),
+        round_to(theta, 6).alias("theta"),
     ).orderBy("arm")
 
 
@@ -1926,17 +1918,16 @@ def diff_in_diff(
     se = F.sqrt(F.col("__sec") + F.col("__set"))
     tstat = F.when(se > 0, did / se)
     cents = F.lit(100.0)
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return agg.select(
         "n_c",
         "n_t",
-        r6(F.col("__pc") / cents).alias("pre_c"),
-        r6(F.col("__qc") / cents).alias("post_c"),
-        r6(F.col("__pt") / cents).alias("pre_t"),
-        r6(F.col("__qt") / cents).alias("post_t"),
-        r6(did / cents).alias("did"),
-        r6(se / cents).alias("se"),
-        r6(tstat).alias("t_stat"),
+        round_to(F.col("__pc") / cents, 6).alias("pre_c"),
+        round_to(F.col("__qc") / cents, 6).alias("post_c"),
+        round_to(F.col("__pt") / cents, 6).alias("pre_t"),
+        round_to(F.col("__qt") / cents, 6).alias("post_t"),
+        round_to(did / cents, 6).alias("did"),
+        round_to(se / cents, 6).alias("se"),
+        round_to(tstat, 6).alias("t_stat"),
         (F.abs(tstat) > F.lit(t_crit)).alias("significant"),
     )
 
@@ -2124,15 +2115,9 @@ def rfm_segments(
         .groupBy("r_q", "f_q", "m_q")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            (
-                F.round(
-                    F.sum("mon").cast("double")
-                    / F.count(F.lit(1))
-                    / F.lit(100.0)
-                    * F.lit(1e6),
-                    0,
-                )
-                / F.lit(1e6)
+            round_to(
+                F.sum("mon").cast("double") / F.count(F.lit(1)) / F.lit(100.0),
+                6,
             ).alias("avg_monetary"),
         )
     )
@@ -2284,13 +2269,12 @@ def ab_power_mde(
         F.lit(_Z_ALPHA + _Z_BETA)
         * F.sqrt(p * (1 - p) * (1 / na + 1 / nb))
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return agg.select(
         "n_a",
         "n_b",
-        r6(p).alias("pooled_rate"),
-        r6(mde).alias("mde_abs"),
-        r6(F.when(p > 0, mde / p)).alias("mde_rel"),
+        round_to(p, 6).alias("pooled_rate"),
+        round_to(mde, 6).alias("mde_abs"),
+        round_to(F.when(p > 0, mde / p), 6).alias("mde_rel"),
     )
 
 
@@ -2482,8 +2466,8 @@ def segment_ab_bh(
         "conv_a",
         "n_b",
         "conv_b",
-        (F.round(F.col("__z") * F.lit(1e6), 0) / F.lit(1e6)).alias("z"),
-        (F.round(F.col("__p") * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(F.col("__z"), 6).alias("z"),
+        round_to(F.col("__p"), 6).alias(
             "p_value"
         ),
         F.col("__i").cast("int").alias("bh_rank"),
@@ -2705,16 +2689,15 @@ def ratio_metric_delta(
     )
     z = F.when(sed > 0, diff / sed)
     cents = F.lit(100.0)
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return agg.select(
         "n_a",
-        r6(F.col("__ra") / cents).alias("ratio_a"),
-        r6(F.col("__sea") / cents).alias("se_a"),
+        round_to(F.col("__ra") / cents, 6).alias("ratio_a"),
+        round_to(F.col("__sea") / cents, 6).alias("se_a"),
         "n_b",
-        r6(F.col("__rb") / cents).alias("ratio_b"),
-        r6(F.col("__seb") / cents).alias("se_b"),
-        r6(diff / cents).alias("diff"),
-        r6(z).alias("z"),
+        round_to(F.col("__rb") / cents, 6).alias("ratio_b"),
+        round_to(F.col("__seb") / cents, 6).alias("se_b"),
+        round_to(diff / cents, 6).alias("diff"),
+        round_to(z, 6).alias("z"),
         (F.abs(z) > F.lit(z_crit)).alias("significant"),
     )
 
@@ -2914,21 +2897,22 @@ def cmh_test(
         " / (CAST(__sv AS DOUBLE) / 1e9)"
         " ELSE CAST(0 AS DOUBLE) END)"
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return agg.select(
         "n_strata",
         "sum_a",
-        r6(F.expr(chi2_expr)).alias("chi2"),
-        r6(
+        round_to(F.expr(chi2_expr), 6).alias("chi2"),
+        round_to(
             F.lit(2.0)
-            * F.expr(_phi_tail_sql(f"sqrt({chi2_expr})"))
+            * F.expr(_phi_tail_sql(f"sqrt({chi2_expr})")),
+            6,
         ).alias("p_value"),
-        r6(
+        round_to(
             F.when(
                 F.col("__sbc") > 0,
                 F.col("__sad").cast("double")
                 / F.col("__sbc").cast("double"),
-            )
+            ),
+            6,
         ).alias("or_mh"),
     )
 
@@ -3008,10 +2992,6 @@ def cmh_test_sql(
     """
 
 
-def _r6(c: Column) -> Column:
-    return F.round(c * F.lit(1e6), 0) / F.lit(1e6)
-
-
 def _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip):
     """The causal estimators' shared prelude: the staged feature frame
     ``(y, x1, x2, x3 = x1*x2, __oc)`` (treatment flag, covariates,
@@ -3074,7 +3054,7 @@ def _naive_diff(ok: Column, s1: Column, n1: Column, s0: Column, n0: Column):
     sums are cents), micro-rounded; NULL unless ``ok``."""
     mean = lambda s, n: s.cast("double") / n.cast("double")  # noqa: E731
     diff = (mean(s1, n1) - mean(s0, n0)) / F.lit(100.0)
-    return _r6(F.when(ok, diff)).alias("naive_diff")
+    return round_to(F.when(ok, diff), 6).alias("naive_diff")
 
 
 def _naive_diff_sql(ok: str, s1: str, n1: str, s0: str, n0: str) -> str:
@@ -3158,9 +3138,6 @@ def ipw_ate(
     feat, e = _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip)
     t = F.col("y")
     yd = F.col("__oc").cast("double")
-    micro = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
-        "bigint"
-    )
     staged = feat.select(
         t.alias("__t"),
         F.col("__oc"),
@@ -3189,8 +3166,9 @@ def ipw_ate(
         "n",
         "n_treat",
         naive,
-        _r6(
-            F.when((F.col("__sw1") > 0) & (F.col("__sw0") > 0), ate)
+        round_to(
+            F.when((F.col("__sw1") > 0) & (F.col("__sw0") > 0), ate),
+            6,
         ).alias("ate"),
     )
 
@@ -3294,7 +3272,7 @@ def propensity_matching(
     scored = feat.select(
         "y",
         "__oc",
-        F.round(e * F.lit(1e6), 0).cast("bigint").alias("__em"),
+        micro(e).alias("__em"),
     )
     levels = scored.groupBy("__em", "y").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
@@ -3359,7 +3337,7 @@ def propensity_matching(
         dist.alias("__d"),
     )
     if caliper is not None:
-        cal_micro = int(round(caliper * 1e6))
+        cal_micro = int(round_half_away(caliper * 1e6))
         picked = picked.withColumn(
             "__c",
             F.when(F.col("__d") <= F.lit(cal_micro), F.col("__c")),
@@ -3392,12 +3370,13 @@ def propensity_matching(
         "n_treat",
         F.coalesce(F.col("__nm"), F.lit(0)).alias("n_matched"),
         naive,
-        _r6(
+        round_to(
             F.when(
                 F.col("__nm") > 0,
                 F.col("__sum").cast("double")
                 / (F.col("__nm").cast("double") * F.lit(1e6)),
-            )
+            ),
+            6,
         ).alias("att"),
     )
 
@@ -3422,7 +3401,7 @@ def propensity_matching_sql(
     )
     arms, naive = _arm_fold_sql("y")
     cal_pred = (
-        f"AND __d <= {int(round(caliper * 1e6))}"
+        f"AND __d <= {int(round_half_away(caliper * 1e6))}"
         if caliper is not None
         else ""
     )
@@ -3544,8 +3523,8 @@ def aipw_ate(
     # closed-form doubles are bit-identical unrounded in both engines
     mfeat = feat.select(
         "y", "x1", "x2", "x3", "__oc",
-        F.round(F.col("x1") * F.lit(1e6), 0).cast("bigint").alias("__x1m"),
-        F.round(F.col("x2") * F.lit(1e6), 0).cast("bigint").alias("__x2m"),
+        micro(F.col("x1")).alias("__x1m"),
+        micro(F.col("x2")).alias("__x2m"),
     )
 
     def d38(c):
@@ -3590,7 +3569,7 @@ def aipw_ate(
     )
     scored = mfeat.crossJoin(F.broadcast(models)).select(
         "n", "n_1", "sy_1", "n_0", "sy_0",
-        F.round(psi * F.lit(1e6), 0).cast("bigint").alias("__psi"),
+        micro(psi).alias("__psi"),
     )
     agg = scored.groupBy("n", "n_1", "sy_1", "n_0", "sy_0").agg(
         F.sum(F.col("__psi").cast("decimal(38,0)"))
@@ -3608,7 +3587,7 @@ def aipw_ate(
         "n",
         n1.alias("n_treat"),
         _naive_diff((n1 > 0) & (n0 > 0), F.col("sy_1"), n1, F.col("sy_0"), n0),
-        _r6(F.when(F.col("__spsi").isNotNull(), ate)).alias("ate_aipw"),
+        round_to(F.when(F.col("__spsi").isNotNull(), ate), 6).alias("ate_aipw"),
     )
 
 
@@ -3769,17 +3748,18 @@ def daily_rate_wilson(
         f"({zz} * sqrt({p} * (CAST(1 AS DOUBLE) - {p}) / {n}"
         f" + {zz} * {zz} / (CAST(4 AS DOUBLE) * {n} * {n})) / {denom})"
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return per.select(
         "day",
         "n_exposed",
         "n_conv",
-        r6(F.expr(p)).alias("rate"),
-        r6(
-            F.greatest(F.lit(0.0), F.expr(f"{center} - {half}"))
+        round_to(F.expr(p), 6).alias("rate"),
+        round_to(
+            F.greatest(F.lit(0.0), F.expr(f"{center} - {half}")),
+            6,
         ).alias("wilson_lo"),
-        r6(
-            F.least(F.lit(1.0), F.expr(f"{center} + {half}"))
+        round_to(
+            F.least(F.lit(1.0), F.expr(f"{center} + {half}")),
+            6,
         ).alias("wilson_hi"),
     )
 
@@ -3912,7 +3892,6 @@ def cohort_ltv_curve(
         .orderBy("period_offset")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         dense.join(cells, ["cohort", "period_offset"], "left")
         .select(
@@ -3927,13 +3906,14 @@ def cohort_ltv_curve(
             "cohort",
             "period_offset",
             "cohort_size",
-            r6(F.col("__pc").cast("double") / F.lit(100.0)).alias(
+            round_to(F.col("__pc").cast("double") / F.lit(100.0), 6).alias(
                 "period_revenue"
             ),
-            r6(
+            round_to(
                 F.sum("__pc").over(w).cast("double")
                 / F.col("cohort_size").cast("double")
-                / F.lit(100.0)
+                / F.lit(100.0),
+                6,
             ).alias("cum_ltv"),
         )
     )
@@ -4537,7 +4517,7 @@ def regression_discontinuity(
         F.when(r >= F.lit(cutoff), F.lit(1))
         .otherwise(F.lit(0))
         .alias("__side"),
-        (cents(F.col(running_col)) - F.lit(int(round(cutoff * 100))))
+        (cents(F.col(running_col)) - F.lit(int(round_half_away(cutoff * 100))))
         .alias("__x"),
         cents(F.col(outcome_col)).alias("__y"),
     )
@@ -4574,15 +4554,14 @@ def regression_discontinuity(
         F.col("__b").alias("__br"),
         F.col("__a").alias("__ar"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return left.crossJoin(F.broadcast(right)).select(
         "n_left",
         "n_right",
-        r6(F.col("__bl")).alias("slope_left"),
-        r6(F.col("__br")).alias("slope_right"),
-        r6(F.col("__al")).alias("intercept_left"),
-        r6(F.col("__ar")).alias("intercept_right"),
-        r6(F.col("__ar") - F.col("__al")).alias("effect"),
+        round_to(F.col("__bl"), 6).alias("slope_left"),
+        round_to(F.col("__br"), 6).alias("slope_right"),
+        round_to(F.col("__al"), 6).alias("intercept_left"),
+        round_to(F.col("__ar"), 6).alias("intercept_right"),
+        round_to(F.col("__ar") - F.col("__al"), 6).alias("effect"),
     )
 
 
@@ -4595,7 +4574,7 @@ def regression_discontinuity_sql(
 ) -> str:
     """DuckDB twin of :func:`regression_discontinuity` — identical
     cent staging, HUGEINT folds and closed forms."""
-    c100 = int(round(cutoff * 100))
+    c100 = int(round_half_away(cutoff * 100))
     return f"""
     WITH __staged AS (
         SELECT CASE WHEN CAST({running_col} AS DOUBLE) >= {cutoff}
@@ -4933,21 +4912,20 @@ def sequential_ab_looks(
             *[
                 x
                 for k in range(1, looks + 1)
-                for x in (F.lit(k), F.lit(round(bnd[k], 6)))
+                for x in (F.lit(k), F.lit(round_half_away(bnd[k], 6)))
             ]
         ),
         F.col("look"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return per.select(
         "look",
         "n_treat",
         "conv_treat",
         "n_ctrl",
         "conv_ctrl",
-        r6(z).alias("z"),
+        round_to(z, 6).alias("z"),
         boundary.alias("boundary"),
-        F.when(z.isNotNull(), (F.abs(r6(z)) > boundary))
+        F.when(z.isNotNull(), (F.abs(round_to(z, 6)) > boundary))
         .cast("int")
         .alias("crossed"),
     ).orderBy("look")
@@ -4966,7 +4944,7 @@ def sequential_ab_looks_sql(
     import math
 
     bvals = ", ".join(
-        f"({k}, {round(obf_c * math.sqrt(looks / k), 6)})"
+        f"({k}, {round_half_away(obf_c * math.sqrt(looks / k), 6)})"
         for k in range(1, looks + 1)
     )
     return f"""
@@ -5142,14 +5120,13 @@ def theil_index(
             F.col("__tx").cast("double") / F.col("n").cast("double")
         )
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return folds.crossJoin(F.broadcast(excluded)).select(
         "n",
         "n_excluded",
         "n_groups",
-        r6(t_all).alias("theil"),
-        r6(F.col("__betw")).alias("theil_between"),
-        r6(F.col("__with")).alias("theil_within"),
+        round_to(t_all, 6).alias("theil"),
+        round_to(F.col("__betw"), 6).alias("theil_between"),
+        round_to(F.col("__with"), 6).alias("theil_within"),
     )
 
 
@@ -5212,7 +5189,6 @@ def theil_index_sql(
            round(f.__with * 1e6, 0) / 1e6 AS theil_within
     FROM __folds f CROSS JOIN __excluded e
     """
-
 
 
 def tost_equivalence(
@@ -5303,12 +5279,12 @@ def tost_equivalence(
         .select(
             "n_a",
             "n_b",
-            F.round(ma, 6).alias("mean_a"),
-            F.round(mb, 6).alias("mean_b"),
-            F.round(diff, 6).alias("diff"),
-            F.round(se, 6).alias("se"),
-            F.round(t_lo, 6).alias("t_lower"),
-            F.round(t_up, 6).alias("t_upper"),
+            round_to(ma, 6).alias("mean_a"),
+            round_to(mb, 6).alias("mean_b"),
+            round_to(diff, 6).alias("diff"),
+            round_to(se, 6).alias("se"),
+            round_to(t_lo, 6).alias("t_lower"),
+            round_to(t_up, 6).alias("t_upper"),
             (F.least(t_lo, t_up) >= F.lit(1.645)).alias("equivalent"),
         )
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
+from ..functions.rounding import micro, round_to
 from ..staging import stage, stage_unbounded
 from . import dedup as dd
 
@@ -303,13 +304,13 @@ def heaps_law_fit(
         c.alias("points"),
         F.col("__ntot").alias("total_tokens"),
         F.col("__vtot").alias("vocab"),
-        F.when(ok, F.round(beta * F.lit(1e6), 0) / F.lit(1e6)).alias("beta"),
-        F.when(ok, F.round(F.exp(lnk) * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        F.when(ok, round_to(beta, 6)).alias("beta"),
+        F.when(ok, round_to(F.exp(lnk), 6)).alias(
             "k"
         ),
         F.when(
             ok & (dyy > 0),
-            F.round(dxy * dxy / (dxx * dyy) * F.lit(1e6), 0) / F.lit(1e6),
+            round_to(dxy * dxy / (dxx * dyy), 6),
         ).alias("r2"),
     )
 
@@ -464,22 +465,18 @@ def readability_census(
         F.col(group_col).alias("group"),
         F.when(
             n_words > 0,
-            F.round(fre * F.lit(1e6), 0).cast("bigint"),
+            micro(fre),
         ).alias("__fm"),
     )
     scored = F.when(F.col("__fm").isNotNull(), 1).otherwise(0)
     return staged.groupBy("group").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(1 - scored).cast("bigint").alias("n_unscored"),
-        (
-            F.round(
-                F.sum("__fm").cast("double")
-                / F.sum(scored).cast("double")
-                / F.lit(1e6)
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+        round_to(
+            F.sum("__fm").cast("double")
+            / F.sum(scored).cast("double")
+            / F.lit(1e6),
+            6,
         ).alias("avg_fre"),
         F.sum(
             F.when(F.col("__fm") < 50 * 1_000_000, 1).otherwise(0)
@@ -1214,14 +1211,13 @@ def vocab_richness(
         )
     )
     gt = F.when(F.col("total_tokens") > 0, f1 / n)
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return fof.select(
         "total_tokens",
         "vocab",
         "f1",
         "f2",
-        r6(chao1).alias("chao1"),
-        r6(gt).alias("gt_unseen_mass"),
+        round_to(chao1, 6).alias("chao1"),
+        round_to(gt, 6).alias("gt_unseen_mass"),
     )
 
 
@@ -1309,7 +1305,6 @@ def source_vocab_overlap(
     sizes = st.groupBy("__s").agg(
         F.count(F.lit(1)).cast("bigint").alias("__v")
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     va = F.col("vocab_a").cast("double")
     vb = F.col("vocab_b").cast("double")
     sh = F.col("shared").cast("double")
@@ -1338,7 +1333,7 @@ def source_vocab_overlap(
             "vocab_a",
             "vocab_b",
             "shared",
-            r6(sh / (va + vb - sh)).alias("jaccard"),
+            round_to(sh / (va + vb - sh), 6).alias("jaccard"),
         )
         .orderBy("source_a", "source_b")
     )
@@ -1452,12 +1447,11 @@ def log_odds_tokens(
         (yb + aw) / (nb + a0 - yb - aw)
     )
     z = d / F.sqrt(1.0 / (ya + aw) + 1.0 / (yb + aw))
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     scored = j.select(
         F.col("__tok").alias("token"),
         "count_a",
         "count_b",
-        r6(z).alias("z"),
+        round_to(z, 6).alias("z"),
     )
     return scored.orderBy(
         F.abs(F.col("z")).desc(), F.col("token").asc()

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60_sql, hash_expr
+from ..functions.rounding import micro, round_to
 from ..functions.text import (
     fingerprint_from_shingles,
     shingles_from_tokens,
@@ -154,7 +155,7 @@ def _verify_pairs(
         cands.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("__common", F.size(F.array_intersect("__seta", "__setb")))
-        .withColumn(name, F.round(score, 6))
+        .withColumn(name, round_to(score, 6))
         .where(F.col(name) >= threshold)
         .select("id_a", "id_b", name)
     )
@@ -416,7 +417,7 @@ def ngram_jaccard_pairs(
     return (
         common.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("jaccard", F.round(_jaccard(), 6))
+        .withColumn("jaccard", round_to(_jaccard(), 6))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -1162,7 +1163,7 @@ def embedding_neardup_pairs(
     )
     return (
         l.join(r, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(cos, 6))
+        .withColumn("cos", round_to(cos, 6))
         .where(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -1232,7 +1233,7 @@ def _neardup_exact_np(
 
     raw = src.mapInPandas(run, schema="id_a long, id_b long, raw double")
     return (
-        raw.withColumn("cos", F.round(F.col("raw"), 6))
+        raw.withColumn("cos", round_to(F.col("raw"), 6))
         .where(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -1371,7 +1372,7 @@ def embedding_neardup_lsh(
     return (
         cand.join(l, "id_a")
         .join(r, "id_b")
-        .withColumn("cos", F.round(cos, 6))
+        .withColumn("cos", round_to(cos, 6))
         .where(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
@@ -1462,7 +1463,7 @@ def contamination_pairs(
     return (
         common.join(F.broadcast(b_sizes), "bench_id")
         .withColumn(
-            "containment", F.round(F.col("__common") / F.col("__bsize"), 6)
+            "containment", round_to(F.col("__common") / F.col("__bsize"), 6)
         )
         .where(F.col("containment") >= min_containment)
         .select("corpus_id", "bench_id", "containment")
@@ -2062,7 +2063,6 @@ def lsh_parameter_plan(
         F.sum("__fn").cast("bigint").alias("__sfn"),
     )
     ds = 1.0 / grid_points
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     fp = F.col("__sfp").cast("double") / F.lit(1e9) * F.lit(ds)
     fn = F.col("__sfn").cast("double") / F.lit(1e9) * F.lit(ds)
     cost_n = F.col("__sfp") + F.col("__sfn")
@@ -2072,14 +2072,15 @@ def lsh_parameter_plan(
     staged2 = per.select(
         "bands",
         "rows_per_band",
-        r6(
+        round_to(
             F.pow(
                 F.lit(1.0) / F.col("bands").cast("double"),
                 F.lit(1.0) / F.col("rows_per_band").cast("double"),
-            )
+            ),
+            6,
         ).alias("s50"),
-        r6(fp).alias("fp_mass"),
-        r6(fn).alias("fn_mass"),
+        round_to(fp, 6).alias("fp_mass"),
+        round_to(fn, 6).alias("fn_mass"),
         cost_n.alias("__cost"),
     )
     return staged2.select(
@@ -2088,7 +2089,7 @@ def lsh_parameter_plan(
         "s50",
         "fp_mass",
         "fn_mass",
-        r6(F.col("__cost").cast("double") / F.lit(1e9) * F.lit(ds)).alias(
+        round_to(F.col("__cost").cast("double") / F.lit(1e9) * F.lit(ds), 6).alias(
             "cost"
         ),
         (F.row_number().over(wbest) == 1).alias("is_best"),
@@ -2216,8 +2217,7 @@ def minhash_calibration(
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .select(
-            F.round(F.col("jaccard") * 1e6, 0)
-            .cast("bigint")
+            micro(F.col("jaccard"))
             .alias("__je"),
             (matches * F.lit(unit)).cast("bigint").alias("__es"),
         )
@@ -2233,7 +2233,6 @@ def minhash_calibration(
             ).alias("__bin"),
         )
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     n = F.col("n_pairs").cast("double")
     return (
         scored.groupBy("__bin")
@@ -2245,19 +2244,19 @@ def minhash_calibration(
             F.max("__ae").cast("bigint").alias("__mae"),
         )
         .select(
-            r6(F.col("__bin").cast("double") / F.lit(float(n_bins)))
+            round_to(F.col("__bin").cast("double") / F.lit(float(n_bins)), 6)
             .alias("bin_lo"),
             "n_pairs",
-            r6(F.col("__sje").cast("double") / n / F.lit(1e6)).alias(
+            round_to(F.col("__sje").cast("double") / n / F.lit(1e6), 6).alias(
                 "mean_exact"
             ),
-            r6(F.col("__ses").cast("double") / n / F.lit(1e6)).alias(
+            round_to(F.col("__ses").cast("double") / n / F.lit(1e6), 6).alias(
                 "mean_est"
             ),
-            r6(F.col("__sae").cast("double") / n / F.lit(1e6)).alias(
+            round_to(F.col("__sae").cast("double") / n / F.lit(1e6), 6).alias(
                 "mean_abs_err"
             ),
-            r6(F.col("__mae").cast("double") / F.lit(1e6)).alias(
+            round_to(F.col("__mae").cast("double") / F.lit(1e6), 6).alias(
                 "max_abs_err"
             ),
         )

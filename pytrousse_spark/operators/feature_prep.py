@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.rounding import round_to
+
 __all__ = [
     "loo_target_encoding",
     "loo_target_encoding_sql",
@@ -30,10 +32,6 @@ __all__ = [
     "eb_rate_shrinkage",
     "eb_rate_shrinkage_sql",
 ]
-
-
-def _r6(c: Column) -> Column:
-    return F.round(c * F.lit(1e6), 0) / F.lit(1e6)
 
 
 def loo_target_encoding(
@@ -86,12 +84,13 @@ def loo_target_encoding(
             "key",
             "category",
             "y",
-            _r6(
+            round_to(
                 F.when(
                     F.col("__n") > 1,
                     (F.col("__sy") - F.col("y")).cast("double")
                     / (F.col("__n") - 1).cast("double"),
-                )
+                ),
+                6,
             ).alias("loo"),
         )
     )
@@ -202,9 +201,10 @@ def woe_iv(
         "category",
         "good",
         "bad",
-        _r6(F.col("__woe")).alias("woe"),
-        _r6(
-            F.sum("__ivn").over(tot).cast("double") / F.lit(1e9)
+        round_to(F.col("__woe"), 6).alias("woe"),
+        round_to(
+            F.sum("__ivn").over(tot).cast("double") / F.lit(1e9),
+            6,
         ).alias("iv"),
     )
 
@@ -319,20 +319,22 @@ def lift_gains(
         "band",
         "n",
         "positives",
-        _r6(rate).alias("rate"),
-        _r6(
+        round_to(rate, 6).alias("rate"),
+        round_to(
             F.when(
                 F.col("__pt") > 0,
                 (F.col("positives") * F.col("__nt")).cast("double")
                 / (F.col("n") * F.col("__pt")).cast("double"),
-            )
+            ),
+            6,
         ).alias("lift"),
-        _r6(
+        round_to(
             F.when(
                 F.col("__pt") > 0,
                 F.col("__cp").cast("double")
                 / F.col("__pt").cast("double"),
-            )
+            ),
+            6,
         ).alias("cum_gain"),
     ).orderBy(F.col("band").desc())
 
@@ -491,8 +493,8 @@ def eb_rate_shrinkage(
         "key",
         "trials",
         "successes",
-        _r6(raw).alias("raw_rate"),
-        _r6(shrunk).alias("shrunk_rate"),
+        round_to(raw, 6).alias("raw_rate"),
+        round_to(shrunk, 6).alias("shrunk_rate"),
     )
 
 
@@ -624,7 +626,6 @@ def uplift_by_band(
         F.sum("n_ctrl").over(cum).cast("bigint").alias("__cnc"),
         F.sum("pos_ctrl").over(cum).cast("bigint").alias("__cpc"),
     )
-    _r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     uplift = F.when(
         (F.col("n_treat") > 0) & (F.col("n_ctrl") > 0),
         F.col("pos_treat").cast("double") / F.col("n_treat").cast("double")
@@ -639,8 +640,8 @@ def uplift_by_band(
     )
     return staged.select(
         "band", "n_treat", "pos_treat", "n_ctrl", "pos_ctrl",
-        _r6(uplift).alias("uplift"),
-        _r6(qini).alias("qini"),
+        round_to(uplift, 6).alias("uplift"),
+        round_to(qini, 6).alias("qini"),
     ).orderBy(F.col("band").desc())
 
 

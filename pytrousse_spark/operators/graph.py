@@ -29,10 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rounding import MICRO, round_half_away, round_to
 from ..staging import stage
 from ._collect import _no_aqe, bounded_first
-
-_MICRO = 1_000_000
 
 
 def _edge_frame(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -99,7 +98,7 @@ def pagerank(
     keep the plan short; built with AQE off, staging runs no job, so
     the call runs none and the whole chain runs in the caller's action.
     """
-    teleport = int(round((1.0 - damping) * _MICRO))
+    teleport = int(round_half_away((1.0 - damping) * MICRO))
     with _no_aqe(edges):
         e = _staged_by(_edge_frame(edges, src_col, dst_col), "src")
         nodes = (
@@ -112,7 +111,7 @@ def pagerank(
             nodes.join(deg.hint("shuffle_hash"), nodes["node"] == deg["src"], "left")
             .select("node", F.coalesce(F.col("out_deg"), F.lit(0)).alias("out_deg"))
         )
-        ranks = base.select("node", "out_deg", F.lit(_MICRO).cast("bigint").alias("r"))
+        ranks = base.select("node", "out_deg", F.lit(MICRO).cast("bigint").alias("r"))
         for _ in range(iters):
             # dangling nodes (out_deg 0) contribute nothing; excluding
             # them also keeps the division ANSI-safe
@@ -148,7 +147,7 @@ def pagerank_sql(
     MATERIALIZED (the q111 lesson: iteration k is referenced by k+1's
     join twice — src lookup and dst scan — and an inlined chain
     re-evaluates iteration 1 exponentially)."""
-    teleport = int(round((1.0 - damping) * _MICRO))
+    teleport = int(round_half_away((1.0 - damping) * MICRO))
     ctes = [
         f"e AS MATERIALIZED (SELECT {src_col} AS src, {dst_col} AS dst"
         f" FROM ({edges_subquery}))",
@@ -158,7 +157,7 @@ def pagerank_sql(
         " coalesce(d.out_deg, 0) AS out_deg FROM nodes n LEFT JOIN"
         " (SELECT src, CAST(count(*) AS BIGINT) AS out_deg FROM e GROUP BY src) d"
         " ON n.node = d.src)",
-        f"r0 AS MATERIALIZED (SELECT node, CAST({_MICRO} AS BIGINT) AS r"
+        f"r0 AS MATERIALIZED (SELECT node, CAST({MICRO} AS BIGINT) AS r"
         " FROM base)",
     ]
     for t in range(1, iters + 1):
@@ -259,8 +258,9 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
             "n_triangles",
             F.when(
                 F.col("n_wedges") > 0,
-                F.round(
-                    3 * F.col("n_triangles") / F.col("n_wedges"), 6
+                round_to(
+                    3 * F.col("n_triangles") / F.col("n_wedges"),
+                    6,
                 ),
             ).otherwise(F.lit(0.0)).alias("global_clustering"),
         )
@@ -383,16 +383,10 @@ def degree_assortativity(
     return m.crossJoin(F.broadcast(nodes)).select(
         "n_nodes",
         (F.col("__m2") / F.lit(2)).cast("bigint").alias("n_edges"),
-        (
-            F.round(
-                F.col("__m2").cast("double")
-                / F.col("n_nodes")
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+        round_to(
+            F.col("__m2").cast("double") / F.col("n_nodes"), 6
         ).alias("mean_degree"),
-        (F.round(r * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(r, 6).alias(
             "assortativity"
         ),
     )
@@ -780,7 +774,7 @@ def adamic_adar(
             F.col("__x").alias("x"),
             F.col("__y").alias("y"),
             "common_neighbors",
-            F.round(F.col("__s").cast("double") / F.lit(1e9), 6).alias(
+            round_to(F.col("__s").cast("double") / F.lit(1e9), 6).alias(
                 "score"
             ),
         )
@@ -885,7 +879,7 @@ def hits(
                 )
             )
 
-        h = nodes.select("node", F.lit(_MICRO).cast("bigint").alias("m"))
+        h = nodes.select("node", F.lit(MICRO).cast("bigint").alias("m"))
         a = nodes.select("node", F.lit(0).cast("bigint").alias("m"))
         for _ in range(iters):
             a = scaled(_push(by_src, "src", "dst", h))
@@ -906,7 +900,7 @@ def hits_sql(
         f" FROM ({edges_subquery}))",
         "nodes AS MATERIALIZED (SELECT src AS node FROM e"
         " UNION SELECT dst FROM e)",
-        f"h0 AS MATERIALIZED (SELECT node, CAST({_MICRO} AS BIGINT) AS h"
+        f"h0 AS MATERIALIZED (SELECT node, CAST({MICRO} AS BIGINT) AS h"
         " FROM nodes)",
     ]
     for t in range(1, iters + 1):

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_MICRO = 1_000_000
+from ..functions.rounding import MICRO, micro, round_to
 
 
 def partial_rollup(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
@@ -31,13 +31,12 @@ def partial_rollup(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     ``(keys..., n_rows, sum_micro, min_value, max_value)``. NULL values
     are excluded (matching SQL aggregate semantics)."""
     v = F.col(value_col)
-    micro = F.round(v * _MICRO, 0).cast("bigint")
     return (
         df.where(v.isNotNull())
         .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(micro).alias("sum_micro"),
+            F.sum(micro(v)).alias("sum_micro"),
             F.min(v).alias("min_value"),
             F.max(v).alias("max_value"),
         )
@@ -65,8 +64,8 @@ def rollup_view(partials: DataFrame, keys: list[str]) -> DataFrame:
     return partials.select(
         *keys,
         "n_rows",
-        (F.col("sum_micro") / _MICRO).alias("sum_value"),
-        F.round(F.col("sum_micro") / _MICRO / F.col("n_rows"), 6).alias(
+        (F.col("sum_micro") / MICRO).alias("sum_value"),
+        round_to(F.col("sum_micro") / MICRO / F.col("n_rows"), 6).alias(
             "avg_value"
         ),
         "min_value",
@@ -81,7 +80,7 @@ def partial_rollup_sql(subquery: str, keys: list[str], value_col: str) -> str:
     return f"""
     SELECT {ks},
            CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CAST(round({value_col} * {_MICRO}, 0) AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST(round({value_col} * {MICRO}, 0) AS BIGINT)) AS BIGINT)
                AS sum_micro,
            min({value_col}) AS min_value,
            max({value_col}) AS max_value
@@ -109,8 +108,8 @@ def incremental_rollup_sql(
         GROUP BY {ks}
     )
     SELECT {ks}, n_rows,
-           sum_micro / {_MICRO} AS sum_value,
-           round(sum_micro / {_MICRO} / n_rows, 6) AS avg_value,
+           sum_micro / {MICRO} AS sum_value,
+           round(sum_micro / {MICRO} / n_rows, 6) AS avg_value,
            min_value, max_value
     FROM merged
     """

@@ -33,6 +33,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rounding import round_half_away, round_to
+
 
 def fs_link_pairs(
     left: DataFrame,
@@ -86,12 +88,12 @@ def fs_link_pairs(
     pairs = left.join(r, cond, "inner")
     score = F.lit(0.0)
     for c, m, u in compares:
-        w_agree = F.lit(round(math.log(m / u), 12))
-        w_dis = F.lit(round(math.log((1.0 - m) / (1.0 - u)), 12))
+        w_agree = F.lit(round_half_away(math.log(m / u), 12))
+        w_dis = F.lit(round_half_away(math.log((1.0 - m) / (1.0 - u)), 12))
         lc, rc = F.col(c), F.col(f"__rc_{c}")
         agree = lc.isNotNull() & rc.isNotNull() & (lc == rc)
         score = score + F.when(agree, w_agree).otherwise(w_dis)
-    score = F.round(score, 6)
+    score = round_to(score, 6)
     decision = (
         F.when(score >= upper, "link")
         .when(score <= lower, "non-link")
@@ -120,8 +122,8 @@ def fs_link_pairs_sql(
     on = " AND ".join(f"l.{c} = r.{c}" for c in block_cols)
     terms = []
     for c, m, u in compares:
-        wa = repr(round(math.log(m / u), 12))
-        wd = repr(round(math.log((1.0 - m) / (1.0 - u)), 12))
+        wa = repr(round_half_away(math.log(m / u), 12))
+        wd = repr(round_half_away(math.log((1.0 - m) / (1.0 - u)), 12))
         # CAST each weight literal to DOUBLE: DuckDB parses the decimal
         # literals as DECIMAL and would fold the score decimal-exactly,
         # diverging in type (and potentially last-ulp value) from
@@ -235,8 +237,8 @@ def fs_em_fit(
             au = sum(n * (1.0 - g) for vec, n, g in post if vec[j])
             m[j] = min(1.0 - eps, max(eps, am / wm))
             u[j] = min(1.0 - eps, max(eps, au / wu))
-        state = (round(p, 12), tuple(round(x, 12) for x in m),
-                 tuple(round(x, 12) for x in u))
+        state = (round_half_away(p, 12), tuple(round_half_away(x, 12) for x in m),
+                 tuple(round_half_away(x, 12) for x in u))
         if state == prev:
             break
         prev = state

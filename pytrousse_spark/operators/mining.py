@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..functions.rounding import round_to
 from ..staging import stage
 
 
@@ -114,11 +115,12 @@ def association_rules(
         "antecedent_count",
         "consequent_count",
         "n_baskets",
-        F.round(F.col("pair_count") / F.col("n_baskets"), 6).alias("support"),
-        F.round(
-            F.col("pair_count") / F.col("antecedent_count"), 6
+        round_to(F.col("pair_count") / F.col("n_baskets"), 6).alias("support"),
+        round_to(
+            F.col("pair_count") / F.col("antecedent_count"),
+            6,
         ).alias("confidence"),
-        F.round(
+        round_to(
             (F.col("pair_count") * F.col("n_baskets"))
             / (F.col("antecedent_count") * F.col("consequent_count")),
             6,
@@ -226,7 +228,7 @@ def event_transitions(
             "next_state",
             "n_transitions",
             "n_from",
-            F.round(F.col("n_transitions") / F.col("n_from"), 6).alias(
+            round_to(F.col("n_transitions") / F.col("n_from"), 6).alias(
                 "probability"
             ),
         )
@@ -449,19 +451,20 @@ def markov_next_event_accuracy(
     tot = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return per.select(
         "prev_state",
         "model_next",
         "n_from",
         "n_correct",
-        r6(
+        round_to(
             F.col("n_correct").cast("double")
-            / F.col("n_from").cast("double")
+            / F.col("n_from").cast("double"),
+            6,
         ).alias("accuracy"),
-        r6(
+        round_to(
             F.sum("n_correct").over(tot).cast("double")
-            / F.sum("n_from").over(tot).cast("double")
+            / F.sum("n_from").over(tot).cast("double"),
+            6,
         ).alias("overall_accuracy"),
     )
 
@@ -847,18 +850,18 @@ def markov_entropy_rate(
         F.count(F.lit(1)).cast("bigint").alias("__cells"),
     )
     nstates = pi.agg(F.count(F.lit(1)).cast("bigint").alias("n_states"))
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return nstates.crossJoin(F.broadcast(agg)).select(
         "n_states",
         "n_transitions",
-        r6(F.when(F.col("n_transitions") > 0, F.col("__H"))).alias(
+        round_to(F.when(F.col("n_transitions") > 0, F.col("__H")), 6).alias(
             "entropy_rate_bits"
         ),
-        r6(
+        round_to(
             F.when(
                 F.col("n_transitions") > 0,
                 F.pow(F.lit(2.0), F.col("__H")),
-            )
+            ),
+            6,
         ).alias("perplexity"),
     )
 

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rounding import round_half_away
+
 #: metadata struct attached next to every media column.
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -215,7 +217,7 @@ def decode_wav_meta(
                 out["channels"].append(ch)
                 out["bit_depth"].append(bits)
                 out["n_samples"].append(n_samp)
-                out["duration_ms"].append(round(n_samp * 1000.0 / rate, 3))
+                out["duration_ms"].append(round_half_away(n_samp * 1000.0 / rate, 3))
             yield pd.DataFrame(out)
 
     return df.mapInPandas(parse, schema=out_schema)

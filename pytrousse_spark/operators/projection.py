@@ -23,6 +23,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rounding import micro, round_to
 from ..functions.vectors import lit_doubles
 from ..staging import stage
 
@@ -122,11 +123,9 @@ def pca2(
 
     B = (n_bins - 1) // 2
     q = df.select(
-        F.round(F.col(x_col).cast("double") * F.lit(1e6), 0)
-        .cast("bigint")
+        micro(F.col(x_col).cast("double"))
         .alias("__x"),
-        F.round(F.col(y_col).cast("double") * F.lit(1e6), 0)
-        .cast("bigint")
+        micro(F.col(y_col).cast("double"))
         .alias("__y"),
     ).where(F.col("__x").isNotNull() & F.col("__y").isNotNull())
     xd = F.col("__x").cast("decimal(19,0)")
@@ -213,23 +212,16 @@ def pca2(
     )
     return scored.groupBy("bin", "__ux", "__uy", "__evr").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (
-            F.round(
-                F.sum("__smilli")
-                / F.lit(1e3)
-                / F.count(F.lit(1))
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+        round_to(
+            F.sum("__smilli") / F.lit(1e3) / F.count(F.lit(1)), 6
         ).alias("mean_score"),
     ).select(
         "bin",
         "n",
         "mean_score",
-        (F.round(F.col("__ux") * F.lit(1e6), 0) / F.lit(1e6)).alias("ux"),
-        (F.round(F.col("__uy") * F.lit(1e6), 0) / F.lit(1e6)).alias("uy"),
-        (F.round(F.col("__evr") * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(F.col("__ux"), 6).alias("ux"),
+        round_to(F.col("__uy"), 6).alias("uy"),
+        round_to(F.col("__evr"), 6).alias(
             "evr"
         ),
     )

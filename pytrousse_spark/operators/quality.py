@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rounding import round_to
 from ..staging import stage
 
 
@@ -86,7 +87,7 @@ def expect(
         "n_violations",
         F.when(
             F.col("n_rows") > 0,
-            F.round(F.col("n_violations") / F.col("n_rows"), 6),
+            round_to(F.col("n_violations") / F.col("n_rows"), 6),
         )
         .otherwise(F.lit(0.0))
         .alias("violation_rate"),
@@ -197,7 +198,6 @@ def unicode_census_merge(partials: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("replacement_chars"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     ch = F.col("total_chars").cast("double")
     return agg.select(
         "group",
@@ -207,18 +207,20 @@ def unicode_census_merge(partials: DataFrame) -> DataFrame:
         "nonascii_chars",
         "ctrl_chars",
         "replacement_chars",
-        r6(
+        round_to(
             F.when(
                 F.col("total_chars") > 0,
                 F.lit(1.0)
                 - F.col("nonascii_chars").cast("double") / ch,
-            )
+            ),
+            6,
         ).alias("ascii_ratio"),
-        r6(
+        round_to(
             F.when(
                 F.col("total_chars") > 0,
                 F.col("total_bytes").cast("double") / ch,
-            )
+            ),
+            6,
         ).alias("bytes_per_char"),
     ).orderBy("group")
 

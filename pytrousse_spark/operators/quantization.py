@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.rounding import round_half_away
+from ..functions.rounding import round_half_away, round_to
 from ..functions.vectors import lit_double_matrix, lit_doubles
 
 #: refuse to collect more query vectors than this for LUT precompute
@@ -116,7 +116,7 @@ def _nearest_code(sub_col: Column, book: list[tuple[int, list[float]]]) -> Colum
             lambda acc, v: acc + v,
         )
         return F.struct(
-            F.round(d2, 6).alias("d"), (i + 1).cast("int").alias("c")
+            round_to(d2, 6).alias("d"), (i + 1).cast("int").alias("c")
         )
 
     return F.element_at(F.array_sort(F.transform(cb_lit, entry)), 1)["c"]
@@ -313,7 +313,7 @@ def pq_adc_topk(
         .where(F.col("rid") != F.col("qid"))
         .groupBy("qid", "rid")
         .agg(*partials)
-        .select("qid", "rid", F.round(score, 6).alias("adc_dot"))
+        .select("qid", "rid", round_to(score, 6).alias("adc_dot"))
     )
     w_adc = Window.partitionBy("qid").orderBy(F.desc("adc_dot"), F.col("rid"))
     cand = (
@@ -329,7 +329,7 @@ def pq_adc_topk(
         .select(
             F.col("qid").alias("query_id"),
             F.col("rid").alias("neighbor_id"),
-            F.round(vdot(F.col("qv"), F.col("nv")), 6).alias("dot"),
+            round_to(vdot(F.col("qv"), F.col("nv")), 6).alias("dot"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.col("neighbor_id"))
@@ -451,7 +451,7 @@ def ivf_pq_topk(
         exploded.join(F.broadcast(lut), ["qid", "s", "code"])
         .groupBy("qid", "rid")
         .agg(*partials)
-        .select("qid", "rid", F.round(score, 6).alias("adc_dot"))
+        .select("qid", "rid", round_to(score, 6).alias("adc_dot"))
     )
     w_adc = Window.partitionBy("qid").orderBy(F.desc("adc_dot"), F.col("rid"))
     adctop = (
@@ -481,7 +481,7 @@ def ivf_pq_topk(
         .select(
             F.col("qid").alias("query_id"),
             F.col("rid").alias("neighbor_id"),
-            F.round(cos, 6).alias("cos"),
+            round_to(cos, 6).alias("cos"),
         )
         .where(F.col("cos").isNotNull())
     )
@@ -805,7 +805,7 @@ def sq8_cosine_topk(
         pairs.select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            F.round(cos, 6).alias("cos"),
+            round_to(cos, 6).alias("cos"),
         )
         .where(F.col("cos").isNotNull())
         .withColumn("rank", F.row_number().over(w))

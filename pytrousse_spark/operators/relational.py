@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rounding import round_to
+
 
 def salted_join(
     left: DataFrame,
@@ -485,19 +487,13 @@ def fk_orphan_census(
             "n_child",
             "n_null_fk",
             "n_orphan",
-            (
-                F.round(
-                    F.when(
-                        F.col("n_child") - F.col("n_null_fk") > 0,
-                        F.col("n_orphan").cast("double")
-                        / (
-                            F.col("n_child") - F.col("n_null_fk")
-                        ).cast("double"),
-                    )
-                    * F.lit(1e6),
-                    0,
-                )
-                / F.lit(1e6)
+            round_to(
+                F.when(
+                    F.col("n_child") - F.col("n_null_fk") > 0,
+                    F.col("n_orphan").cast("double")
+                    / (F.col("n_child") - F.col("n_null_fk")).cast("double"),
+                ),
+                6,
             ).alias("orphan_rate"),
         )
         outs.append(row)

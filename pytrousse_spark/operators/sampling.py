@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
+from ..functions.rounding import micro, round_half_away, round_to
 from ..staging import stage
 
 from pytrousse_spark.functions.sqlutil import sql_quote
@@ -46,7 +47,7 @@ def hash_sample(
     use :func:`hash_split`, whose bucket ranges partition the id space."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError("fraction must be in [0, 1]")
-    return df.where(_bucket(id_col, salt) < int(round(fraction * _BUCKETS)))
+    return df.where(_bucket(id_col, salt) < int(round_half_away(fraction * _BUCKETS)))
 
 
 #: 2^60 — the h60 hash space, for uniform-in-(0,1] conversion
@@ -75,7 +76,7 @@ def weighted_sample(
     u = (h60(F.concat(F.lit(f"{salt}|"), F.col(id_col).cast("string"))) + 1) / F.lit(
         _H60_SPACE_F
     )
-    key = F.round(-F.log(u) / F.col(weight_col).cast("double"), 6)
+    key = round_to(-F.log(u) / F.col(weight_col).cast("double"), 6)
     return (
         df.where(F.col(weight_col).cast("double") > 0)
         .withColumn("es_key", key)
@@ -123,7 +124,7 @@ def hash_split(
     names = list(weights)
     for name in names[:-1]:
         acc += weights[name]
-        cond = b < int(round(acc * _BUCKETS))
+        cond = b < int(round_half_away(acc * _BUCKETS))
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     expr = (
         F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
@@ -144,7 +145,7 @@ def hash_split_sql(
     names = list(weights)
     for name in names[:-1]:
         acc += weights[name]
-        parts.append(f"WHEN {b} < {int(round(acc * _BUCKETS))} THEN '{name}'")
+        parts.append(f"WHEN {b} < {int(round_half_away(acc * _BUCKETS))} THEN '{name}'")
     return f"(CASE {' '.join(parts)} ELSE '{names[-1]}' END)"
 
 
@@ -305,14 +306,14 @@ def dsir_importance(
         (F.col("c_s") + 1) / F.lit(float(s_tot + v_size))
     )
     ratio = vocab.select(
-        "t", F.round(F.round(lr, 6) * 1e6).cast("long").alias("__r")
+        "t", micro(round_to(lr, 6)).alias("__r")
     )
     return (
         tok.join(ratio, "t")
         .groupBy("__id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.round(F.sum("__r") / F.lit(1e6), 4).alias("log_weight"),
+            round_to(F.sum("__r") / F.lit(1e6), 4).alias("log_weight"),
         )
         .select(F.col("__id").alias(id_col), "n_tokens", "log_weight")
     )
@@ -508,8 +509,7 @@ def bootstrap_mean_ci(
     v = F.col(value_col)
     nn = df.where(v.isNotNull()).select(
         F.col(id_col).cast("string").alias("__id"),
-        F.round(v.cast("double") * F.lit(1_000_000), 0)
-        .cast("bigint")
+        micro(v.cast("double"))
         .alias("__vm"),
     )
     # the q87 lesson: a single-row-group source feeds ONE task, and the
@@ -573,15 +573,15 @@ def bootstrap_mean_ci(
     )
     point = nn.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.round(
+        round_to(
             F.sum("__vm").cast("double") / F.lit(1e6)
             / F.count(F.lit(1)).cast("double"),
             6,
         ).alias("mean_point"),
     )
     ci = bounds.agg(
-        F.round(F.min("__m"), 6).alias("ci_lo"),
-        F.round(F.max("__m"), 6).alias("ci_hi"),
+        round_to(F.min("__m"), 6).alias("ci_lo"),
+        round_to(F.max("__m"), 6).alias("ci_hi"),
     )
     return point.crossJoin(F.broadcast(ci)).select(
         "n_rows",
@@ -715,8 +715,7 @@ def neyman_allocation_sample(
         "__st",
         "__n",
         sd.alias("__sd"),
-        F.round(F.col("__n").cast("double") * sd * F.lit(1e6), 0)
-        .cast("bigint")
+        micro(F.col("__n").cast("double") * sd)
         .alias("__sh"),
     )
     tot = Window.rowsBetween(
@@ -807,13 +806,12 @@ def neyman_allocation_sample(
         .cast("bigint")
         .alias("id_checksum"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         alloc2.join(drawn, "__st", "left")
         .select(
             F.col("__st").alias("stratum"),
             F.col("__n").alias("n_pop"),
-            r6(F.col("__sd")).alias("sd"),
+            round_to(F.col("__sd"), 6).alias("sd"),
             F.col("__k").alias("n_alloc"),
             F.coalesce(F.col("n_sampled"), F.lit(0))
             .cast("bigint")
@@ -1013,16 +1011,16 @@ def rake_weights(
                 .alias("__w"),
             )
         )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return cells.select(
         F.col("__r").alias("row_key"),
         F.col("__c").alias("col_key"),
         F.col("__n").alias("n_sample"),
-        r6(F.col("__w").cast("double") / F.lit(1e6)).alias("weight"),
-        r6(
+        round_to(F.col("__w").cast("double") / F.lit(1e6), 6).alias("weight"),
+        round_to(
             F.col("__n").cast("double")
             * F.col("__w").cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("weighted_count"),
     ).orderBy("row_key", "col_key")
 
@@ -1123,9 +1121,7 @@ def group_jackknife(
     """
     from pyspark.sql import functions as F
 
-    vm = F.round(F.col(value_col).cast("double") * F.lit(1e6), 0).cast(
-        "bigint"
-    )
+    vm = micro(F.col(value_col).cast("double"))
     staged = df.where(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     ).select(F.col(group_col).alias("grp"), vm.alias("__vm"))
@@ -1181,24 +1177,25 @@ def group_jackknife(
         F.sum("__d2").cast("bigint").alias("__sd2"),
         F.max("__g").alias("__gg"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         dev.crossJoin(F.broadcast(var))
         .select(
             F.col("grp").alias(group_col),
             F.col("__n").alias("n_rows"),
-            r6(F.col("__tl")).alias("theta_loo"),
-            r6(F.col("__th") - F.col("__tl")).alias("influence"),
-            r6(
+            round_to(F.col("__tl"), 6).alias("theta_loo"),
+            round_to(F.col("__th") - F.col("__tl"), 6).alias("influence"),
+            round_to(
                 F.col("__g").cast("double") * F.col("__th")
-                - (F.col("__g") - F.lit(1)).cast("double") * F.col("__tl")
+                - (F.col("__g") - F.lit(1)).cast("double") * F.col("__tl"),
+                6,
             ).alias("pseudo_value"),
-            r6(
+            round_to(
                 F.sqrt(
                     (F.col("__gg") - F.lit(1)).cast("double")
                     / F.col("__gg").cast("double")
                     * (F.col("__sd2").cast("double") / F.lit(1e12))
-                )
+                ),
+                6,
             ).alias("se_jack"),
         )
         .orderBy(group_col)

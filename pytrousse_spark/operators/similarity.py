@@ -13,6 +13,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.rounding import micro, round_half_away, round_to
 from ..functions.vectors import cosine_sql, lit_double_matrix, lit_doubles
 from ..staging import stage
 
@@ -20,7 +21,7 @@ from ..staging import stage
 def _deterministic_planes(num_planes: int, dim: int, seed: int) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return [
-        [round(float(v), 6) for v in rng.standard_normal(dim)]
+        [round_half_away(float(v), 6) for v in rng.standard_normal(dim)]
         for _ in range(num_planes)
     ]
 
@@ -59,7 +60,7 @@ def cosine_topk(
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cos, 6))
+        .withColumn("cos", round_to(cos, 6))
         .where(F.col("cos").isNotNull())
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -235,7 +236,7 @@ def ann_topk_lsh(
     scored = (
         candidates.join(c_vec, "neighbor_id")
         .join(F.broadcast(q_vec), "query_id")
-        .withColumn("cos", F.round(cos, 6))
+        .withColumn("cos", round_to(cos, 6))
         .where(F.col("cos").isNotNull())
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -316,7 +317,7 @@ def _cell_rank_array(
         cn = F.element_at(cn_lit, i + 1)
         s = F.when((F.col("__n") > 0) & (cn > 0), d / (F.col("__n") * cn))
         return F.struct(
-            F.coalesce(-F.round(s, 6), F.lit(2.0)).alias("ns"),
+            F.coalesce(-round_to(s, 6), F.lit(2.0)).alias("ns"),
             (i + 1).cast("int").alias("cell"),
         )
 
@@ -390,7 +391,7 @@ def ivf_topk(
     scored = (
         c_cells.join(F.broadcast(q_cells), on="__cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cos, 6))
+        .withColumn("cos", round_to(cos, 6))
         .where(F.col("cos").isNotNull())
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -504,7 +505,7 @@ def hybrid_search_rrf(
     qv = embs.where(F.col(vec_id_col) == query_vec_id).select(
         F.col(vec_col).alias("__qv")
     )
-    cos = F.round(cosine(F.col("__qv"), F.col(vec_col)), 6)
+    cos = round_to(cosine(F.col("__qv"), F.col(vec_col)), 6)
     scored = (
         embs.crossJoin(F.broadcast(qv))
         .select(F.col(vec_id_col).alias("__id"), cos.alias("__cos"))
@@ -533,7 +534,7 @@ def hybrid_search_rrf(
             F.col("__id").alias("doc_id"),
             "kw_rank",
             "vec_rank",
-            F.round(F.col("__rrf"), 6).alias("rrf_score"),
+            round_to(F.col("__rrf"), 6).alias("rrf_score"),
         )
     )
 
@@ -633,8 +634,7 @@ def embedding_drift(
             nn.select(F.posexplode(vec_col).alias("pos", "__x"))
             .select(
                 "pos",
-                F.round(F.col("__x").cast("double") * F.lit(1e6), 0)
-                .cast("bigint")
+                micro(F.col("__x").cast("double"))
                 .alias("__xm"),
             )
             .groupBy("pos")
@@ -644,8 +644,7 @@ def embedding_drift(
             )
         )
         norm = nn.select(
-            F.round(
-                F.sqrt(
+            micro(F.sqrt(
                     F.aggregate(
                         F.transform(
                             F.col(vec_col),
@@ -655,11 +654,7 @@ def embedding_drift(
                         F.lit(0.0),
                         lambda acc, v: acc + v,
                     )
-                )
-                * F.lit(1e6),
-                0,
-            )
-            .cast("bigint")
+                ))
             .alias("__nm")
         ).agg(
             F.sum("__nm").cast("bigint").alias(f"__sn_{tag}"),
@@ -682,14 +677,11 @@ def embedding_drift(
     )
     # index-ordered folds over the bounded dim grid: nano-round each
     # per-position term so the three sums are exact integer folds
-    nano = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
-        "bigint"
-    )
     folds = cent.select(
-        nano(F.col("__mr") * F.col("__mc") / F.lit(1e6)).alias("__dot"),
-        nano(F.col("__mr") * F.col("__mr") / F.lit(1e6)).alias("__rr"),
-        nano(F.col("__mc") * F.col("__mc") / F.lit(1e6)).alias("__cc2"),
-        nano(
+        micro(F.col("__mr") * F.col("__mc") / F.lit(1e6)).alias("__dot"),
+        micro(F.col("__mr") * F.col("__mr") / F.lit(1e6)).alias("__rr"),
+        micro(F.col("__mc") * F.col("__mc") / F.lit(1e6)).alias("__cc2"),
+        micro(
             (F.col("__mr") - F.col("__mc"))
             * (F.col("__mr") - F.col("__mc"))
             / F.lit(1e6)
@@ -700,7 +692,6 @@ def embedding_drift(
         F.sum("__cc2").cast("bigint").alias("__scc"),
         F.sum("__dd").cast("bigint").alias("__sdd"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     out = (
         folds.join(F.broadcast(nr), how="cross")
         .join(F.broadcast(nc), how="cross")
@@ -712,15 +703,17 @@ def embedding_drift(
     return out.select(
         F.col("__c_r").alias("n_ref"),
         F.col("__c_c").alias("n_cur"),
-        r6(
-            F.when((F.col("__srr") > 0) & (F.col("__scc") > 0), cos)
+        round_to(
+            F.when((F.col("__srr") > 0) & (F.col("__scc") > 0), cos),
+            6,
         ).alias("centroid_cosine"),
         # __sdd carries micro^2 = 1e12 scale (the /1e6 inside the
         # fold is cancelled by nano's *1e6): distance = sqrt(sdd)/1e6
-        r6(
-            F.sqrt(F.col("__sdd").cast("double")) / F.lit(1e6)
+        round_to(
+            F.sqrt(F.col("__sdd").cast("double")) / F.lit(1e6),
+            6,
         ).alias("centroid_dist"),
-        r6(
+        round_to(
             F.when(
                 F.col("__sn_r") > 0,
                 (
@@ -731,7 +724,8 @@ def embedding_drift(
                     F.col("__sn_r").cast("double")
                     / F.col("__c_r").cast("double")
                 ),
-            )
+            ),
+            6,
         ).alias("norm_ratio"),
     )
 
@@ -841,9 +835,7 @@ def embedding_isotropy(
     """
     gcols = [group_col] if group_col else []
     nn = df.where(F.col(vec_col).isNotNull())
-    xm = F.round(F.col("__x").cast("double") * F.lit(1e6), 0).cast(
-        "bigint"
-    )
+    xm = micro(F.col("__x").cast("double"))
     x2p = F.round(
         F.col("__x").cast("double") * F.col("__x").cast("double")
         * F.lit(1e12),
@@ -879,27 +871,29 @@ def embedding_isotropy(
         F.sum(pico(mu * mu)).cast("bigint").alias("__sm2"),
         F.sum(pico(ex2)).cast("bigint").alias("__se2"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     svd = F.col("__sv").cast("double")
     out = folds.select(
         *gcols,
         "n",
         "dim",
-        r6(
+        round_to(
             F.when(
                 F.col("__sv2") > 0,
                 svd * svd / F.lit(1e12) / F.col("__sv2").cast("double"),
-            )
+            ),
+            6,
         ).alias("participation_ratio"),
-        r6(
+        round_to(
             F.when(
                 F.col("__se2") > 0,
                 F.col("__sm2").cast("double")
                 / F.col("__se2").cast("double"),
-            )
+            ),
+            6,
         ).alias("anisotropy"),
-        r6(
-            F.sqrt(F.col("__se2").cast("double") / F.lit(1e12))
+        round_to(
+            F.sqrt(F.col("__se2").cast("double") / F.lit(1e12)),
+            6,
         ).alias("rms_norm"),
     )
     return out.orderBy(*gcols) if gcols else out
@@ -1053,7 +1047,7 @@ def item_item_cf(
             F.col("__i").alias("item"),
             F.col("__j").alias("neighbor"),
             "cooc",
-            F.round(
+            round_to(
                 F.col("cooc").cast("double")
                 / F.sqrt(
                     (F.col("__n") * F.col("__nj")).cast("double")
@@ -1162,7 +1156,7 @@ def embedding_mmd_poly2(
         )
         firsts = stage(ex.groupBy("__p").agg(
             F.sum(
-                F.round(F.col("__x") * F.lit(1e6), 0).cast("bigint")
+                micro(F.col("__x"))
             ).cast("bigint").alias(f"__s_{tag}"),
             F.count(F.lit(1)).cast("bigint").alias(f"__n_{tag}"),
         ))
@@ -1256,19 +1250,19 @@ def embedding_mmd_poly2(
         )
         .agg(F.sum("__f2").cast("bigint").alias("__fro2"))
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return mu.crossJoin(F.broadcast(cov)).select(
         "n_ref",
         "n_cur",
-        r6(F.col("__mu2").cast("double") / F.lit(1e12)).alias(
+        round_to(F.col("__mu2").cast("double") / F.lit(1e12), 6).alias(
             "mean_shift2"
         ),
-        r6(F.col("__fro2").cast("double") / F.lit(1e12)).alias(
+        round_to(F.col("__fro2").cast("double") / F.lit(1e12), 6).alias(
             "cov_shift_fro2"
         ),
-        r6(
+        round_to(
             F.col("__fro2").cast("double") / F.lit(1e12)
-            + F.lit(2.0) * F.col("__mu2").cast("double") / F.lit(1e12)
+            + F.lit(2.0) * F.col("__mu2").cast("double") / F.lit(1e12),
+            6,
         ).alias("mmd2_poly2"),
     )
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.hashing import hash_expr
-from ..functions.rounding import round_half_away
+from ..functions.rounding import round_half_away, round_to
 from ..staging import stage
 
 
@@ -488,7 +488,7 @@ def hll_trailing_distinct(
         heads.join(t_int, "__day")
         .select(
             F.col("__day").alias("day"),
-            F.round(est, 2).alias("estimate"),
+            round_to(est, 2).alias("estimate"),
             "zero_registers",
         )
     )
@@ -639,8 +639,8 @@ def histogram_quantiles_grouped(
     span2 = F.when(
         F.col("__hi") == F.col("__lo"), F.lit(1.0)
     ).otherwise(F.col("__hi") - F.col("__lo"))
-    est = F.when(F.col("__hi") == F.col("__lo"), F.round("__lo", 4)).otherwise(
-        F.round(
+    est = F.when(F.col("__hi") == F.col("__lo"), round_to(F.col("__lo"), 4)).otherwise(
+        round_to(
             F.col("__lo")
             + (
                 F.col("__s.__b")
@@ -755,7 +755,7 @@ def count_min_self_join_size(
     return est.crossJoin(exact).select(
         "cm_estimate",
         "exact_f2",
-        F.round(F.col("cm_estimate") / F.col("exact_f2"), 6).alias("ratio"),
+        round_to(F.col("cm_estimate") / F.col("exact_f2"), 6).alias("ratio"),
     )
 
 
@@ -868,10 +868,10 @@ def hll_set_ops(
         F.max(F.when(F.col("lbl") == "u", F.col("__e"))).alias("__eu"),
     )
     return one.select(
-        F.round(F.col("__ea"), 2).alias("est_a"),
-        F.round(F.col("__eb"), 2).alias("est_b"),
-        F.round(F.col("__eu"), 2).alias("est_union"),
-        F.round(
+        round_to(F.col("__ea"), 2).alias("est_a"),
+        round_to(F.col("__eb"), 2).alias("est_b"),
+        round_to(F.col("__eu"), 2).alias("est_union"),
+        round_to(
             F.greatest(
                 F.lit(0.0), F.col("__ea") + F.col("__eb") - F.col("__eu")
             ),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.rounding import round_to
 from ..staging import stage
 
 
@@ -106,7 +107,7 @@ def kaplan_meier(
         "__hsum", F.sum("__hterm").over(w_asc)
     )
     surv = F.when(F.col("__anyzero") > 0, F.lit(0.0)).otherwise(
-        F.round(F.exp(F.col("__lsum").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(F.col("__lsum").cast("double") / F.lit(1e9)), 6)
     )
     return (
         out.select(
@@ -115,7 +116,7 @@ def kaplan_meier(
             "n_events",
             "n_censored",
             surv.alias("survival"),
-            F.round(F.col("__hsum").cast("double") / F.lit(1e9), 6)
+            round_to(F.col("__hsum").cast("double") / F.lit(1e9), 6)
             .alias("na_cumhazard"),
         )
         .orderBy("t")
@@ -243,7 +244,7 @@ def kaplan_meier_grouped(
         .withColumn("__hsum", F.sum("__hterm").over(w_asc))
     )
     surv = F.when(F.col("__anyzero") > 0, F.lit(0.0)).otherwise(
-        F.round(F.exp(F.col("__lsum").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(F.col("__lsum").cast("double") / F.lit(1e9)), 6)
     )
     return out.select(
         group_col,
@@ -252,7 +253,7 @@ def kaplan_meier_grouped(
         "n_events",
         "n_censored",
         surv.alias("survival"),
-        F.round(F.col("__hsum").cast("double") / F.lit(1e9), 6)
+        round_to(F.col("__hsum").cast("double") / F.lit(1e9), 6)
         .alias("na_cumhazard"),
     ).orderBy(group_col, "t")
 
@@ -359,9 +360,9 @@ def logrank_test(
         "n1",
         "n2",
         "o1",
-        F.round(e1, 6).alias("e1"),
-        F.round(v, 6).alias("v"),
-        F.round(chi2, 6).alias("chi2"),
+        round_to(e1, 6).alias("e1"),
+        round_to(v, 6).alias("v"),
+        round_to(chi2, 6).alias("chi2"),
     )
 
 
@@ -488,16 +489,10 @@ def rmst(
     return seg.agg(
         F.lit(float(tau)).alias("tau"),
         F.count(F.lit(1)).cast("bigint").alias("n_event_times"),
-        (
-            F.round(
-                (
-                    F.least(F.max("__t1"), F.lit(float(tau)))
-                    + F.sum(term) / F.lit(1e9)
-                )
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6)
+        round_to(
+            F.least(F.max("__t1"), F.lit(float(tau)))
+            + F.sum(term) / F.lit(1e9),
+            6,
         ).alias("rmst"),
     )
 
@@ -627,13 +622,13 @@ def kaplan_meier_ci(
             "t",
             "n_risk",
             "n_events",
-            F.when(dead, F.lit(0.0)).otherwise(F.round(surv, 6))
+            F.when(dead, F.lit(0.0)).otherwise(round_to(surv, 6))
             .alias("survival"),
             F.when(dead, F.lit(0.0)).otherwise(
-                F.round(F.greatest(F.lit(0.0), surv - half), 6)
+                round_to(F.greatest(F.lit(0.0), surv - half), 6)
             ).alias("ci_lo"),
             F.when(dead, F.lit(0.0)).otherwise(
-                F.round(F.least(F.lit(1.0), surv + half), 6)
+                round_to(F.least(F.lit(1.0), surv + half), 6)
             ).alias("ci_hi"),
         )
         .orderBy("t")
@@ -794,10 +789,10 @@ def aalen_johansen(
         )
     )
     s_incl = F.when(F.col("__z_i") > 0, F.lit(0.0)).otherwise(
-        F.round(F.exp(F.col("__ls_i").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(F.col("__ls_i").cast("double") / F.lit(1e9)), 6)
     )
     s_prev = F.when(F.col("__z_e") > 0, F.lit(0.0)).otherwise(
-        F.round(F.exp(F.col("__ls_e").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(F.col("__ls_e").cast("double") / F.lit(1e9)), 6)
     )
     tlevel = cum.select(
         "t",
@@ -832,7 +827,7 @@ def aalen_johansen(
             "cause",
             "n_risk",
             "n_events",
-            F.round(F.col("__cs").cast("double") / F.lit(1e9), 6).alias(
+            round_to(F.col("__cs").cast("double") / F.lit(1e9), 6).alias(
                 "cif"
             ),
             F.col("__s").alias("overall_survival"),

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.rounding import MICRO, micro, round_half_away, round_to
 from ..staging import stage
 from .classifier import (
     _ols2_solve,
@@ -186,7 +187,6 @@ def resample_gapfill_sql(
 # ---------------------------------------------------------------------------
 # exact windowed EWMA (dyadic decay) + cumulative distinct
 # ---------------------------------------------------------------------------
-_EWMA_MICRO = 1_000_000
 
 
 def ewma(
@@ -220,8 +220,7 @@ def ewma(
         .orderBy(ts_col, order_col)
         .rowsBetween(-(window - 1), 0)
     )
-    micro = F.round(F.col(value_col) * _EWMA_MICRO, 0).cast("bigint")
-    lst = F.collect_list(micro).over(w)
+    lst = F.collect_list(micro(F.col(value_col))).over(w)
     staged = df.select(
         F.col(key_col),
         F.col(ts_col),
@@ -245,7 +244,7 @@ def ewma(
         ts_col,
         order_col,
         value_col,
-        F.round(isum / wsum / F.lit(float(_EWMA_MICRO)), 6).alias("ewma"),
+        round_to(isum / wsum / F.lit(float(MICRO)), 6).alias("ewma"),
     )
 
 
@@ -263,7 +262,7 @@ def ewma_sql(
     WITH staged AS (
         SELECT {key_col}, CAST({ts_col} AS TIMESTAMP) AS {ts_col}, {order_col},
                {value_col},
-               list(CAST(round({value_col} * {_EWMA_MICRO}, 0) AS BIGINT)) OVER (
+               list(CAST(round({value_col} * {MICRO}, 0) AS BIGINT)) OVER (
                    PARTITION BY {key_col}
                    ORDER BY CAST({ts_col} AS TIMESTAMP), {order_col}
                    ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW
@@ -276,7 +275,7 @@ def ewma_sql(
                    x * ((CAST(1 AS BIGINT) << ({window} - len(__lst) + i - 1))))) AS BIGINT)
                / CAST((CAST(1 AS BIGINT) << {window}) -
                       (CAST(1 AS BIGINT) << ({window} - len(__lst))) AS BIGINT)
-               / CAST({_EWMA_MICRO} AS DOUBLE), 6) AS ewma
+               / CAST({MICRO} AS DOUBLE), 6) AS ewma
     FROM staged
     """
 
@@ -397,8 +396,8 @@ def mad_anomalies(
     return flagged.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("__is_anom").cast("bigint")).alias("n_anomalies"),
-        F.round(F.first("__med"), 6).alias("med"),
-        F.round(F.first("__mad"), 6).alias("mad"),
+        round_to(F.first("__med"), 6).alias("med"),
+        round_to(F.first("__mad"), 6).alias("mad"),
     )
 
 
@@ -464,7 +463,7 @@ def seasonal_decompose(
     if period < 2:
         raise ValueError("period must be >= 2")
     half = period // 2
-    vd = F.round(F.col(value_col), 4).cast("decimal(18,4)")
+    vd = round_to(F.col(value_col), 4).cast("decimal(18,4)")
     dn = F.datediff(
         F.col(ts_col), F.lit("1970-01-01").cast("date")
     )
@@ -504,10 +503,11 @@ def seasonal_decompose(
         .select(
             F.col("__day").alias(ts_col),
             F.col("__v").cast("double").alias(value_col),
-            F.round(trend, 6).alias("trend"),
-            F.round(seasonal, 6).alias("seasonal"),
-            F.round(
-                F.col("__v").cast("double") - trend - seasonal, 6
+            round_to(trend, 6).alias("trend"),
+            round_to(seasonal, 6).alias("seasonal"),
+            round_to(
+                F.col("__v").cast("double") - trend - seasonal,
+                6,
             ).alias("residual"),
         )
     )
@@ -666,7 +666,7 @@ def rolling_time_window(
             .orderBy(F.unix_micros(F.col(ts_col)))
             .rangeBetween(-w_us, 0)
         )
-        vu_w = F.round(F.col(value_col) * 1_000_000, 0).cast("long")
+        vu_w = micro(F.col(value_col))
         nn = df.where(F.col(ts_col).isNotNull()).withColumn("__vu", vu_w)
         nv = F.count("__vu").over(wp)
         sv = F.coalesce(F.sum("__vu").over(wp), F.lit(0))
@@ -675,7 +675,7 @@ def rolling_time_window(
             F.count(F.lit(1)).over(wp).cast("long").alias("roll_n"),
             F.when(
                 nv > 0,
-                F.round(
+                round_to(
                     (sv.cast("double") / F.lit(1000000.0))
                     / nv.cast("double"),
                     4,
@@ -688,7 +688,7 @@ def rolling_time_window(
         return out_w.unionByName(null_ts_w)
 
     tu = F.unix_micros(F.col(ts_col))
-    vu = F.round(F.col(value_col) * 1_000_000, 0).cast("long")
+    vu = micro(F.col(value_col))
     ev = (
         df.where(F.col(ts_col).isNotNull())
         .withColumn("__tu", tu)
@@ -794,7 +794,7 @@ def rolling_time_window(
     roll_s = F.col("__off_s") + F.col("__cin_s") - strict_s
     roll_avg = F.when(
         roll_nv > 0,
-        F.round(
+        round_to(
             (roll_s.cast("double") / F.lit(1000000.0))
             / roll_nv.cast("double"),
             4,
@@ -859,8 +859,8 @@ def cusum_changepoints(
     from pyspark.sql.window import Window
 
     gcols = list(group_cols or [])
-    k_micro = int(round(k * 1_000_000))
-    h_micro = int(round(h * 1_000_000))
+    k_micro = int(round_half_away(k * 1_000_000))
+    h_micro = int(round_half_away(h * 1_000_000))
     b = cusum_bucket_partials(df, ts_col, value_col, unit, gcols)
     return _cusum_from_buckets(b, gcols, k_micro, h_micro)
 
@@ -889,8 +889,7 @@ def cusum_bucket_partials(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum(
-                F.round(F.col(value_col).cast("double") * F.lit(1_000_000), 0)
-                .cast("bigint")
+                micro(F.col(value_col).cast("double"))
             ).cast("bigint").alias("__sm"),
         )
     )
@@ -950,7 +949,7 @@ def _cusum_from_buckets(
         *gcols,
         "bucket",
         "n",
-        F.round(F.col("__mm") / F.lit(1e6), 6).alias("mean_value"),
+        round_to(F.col("__mm") / F.lit(1e6), 6).alias("mean_value"),
         s_pos.alias("__sp"),
         s_neg.alias("__sn"),
     )
@@ -959,8 +958,8 @@ def _cusum_from_buckets(
         "bucket",
         "n",
         "mean_value",
-        F.round(F.col("__sp") / F.lit(1e6), 6).alias("s_pos"),
-        F.round(F.col("__sn") / F.lit(1e6), 6).alias("s_neg"),
+        round_to(F.col("__sp") / F.lit(1e6), 6).alias("s_pos"),
+        round_to(F.col("__sn") / F.lit(1e6), 6).alias("s_neg"),
         (
             (F.col("__sp") > F.lit(h_micro)) | (F.col("__sn") > F.lit(h_micro))
         ).alias("is_shift"),
@@ -980,8 +979,8 @@ def cusum_changepoints_sql(
     staging, scale-0 roundings, and the same two-stage reflected-walk
     windows."""
     gcols = list(group_cols or [])
-    km = int(round(k * 1_000_000))
-    hm = int(round(h * 1_000_000))
+    km = int(round_half_away(k * 1_000_000))
+    hm = int(round_half_away(h * 1_000_000))
     gsel = "".join(f"{c}, " for c in gcols)
     gpart = ("PARTITION BY " + ", ".join(gcols)) if gcols else ""
     return f"""
@@ -1138,13 +1137,12 @@ def seasonal_naive_backtest(
         (F.col("__str") > 0) & (F.col("n_test") > 0),
         (ste / nte) / (str_ / ntr),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return agg.select(
         "n_train",
         "n_test",
-        r6(naive_mae).alias("naive_mae"),
-        r6(seas_mae).alias("seasonal_mae"),
-        r6(mase).alias("mase"),
+        round_to(naive_mae, 6).alias("naive_mae"),
+        round_to(seas_mae, 6).alias("seasonal_mae"),
+        round_to(mase, 6).alias("mase"),
     )
 
 
@@ -1393,18 +1391,18 @@ def acf_ljung_box(
     )
     from pytrousse_spark.operators.cohort import _phi_tail_sql
 
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return staged2.select(
         "lag",
         "n",
-        r6(F.col("__r")).alias("acf"),
-        r6(F.col("__q")).alias("lb_q"),
-        r6(
+        round_to(F.col("__r"), 6).alias("acf"),
+        round_to(F.col("__q"), 6).alias("lb_q"),
+        round_to(
             F.when(
                 F.expr(wh_z) >= 0, F.expr(_phi_tail_sql(wh_z))
             ).otherwise(
                 F.lit(1.0) - F.expr(_phi_tail_sql(f"-({wh_z})"))
-            )
+            ),
+            6,
         ).alias("lb_p"),
     ).orderBy("lag")
 
@@ -1569,12 +1567,11 @@ def pettitt_test(
             F.lit(-6.0) * kk * kk / (nn * nn * nn + nn * nn)
         ),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return arg.select(
         F.col("__n").alias("n"),
         "change_day",
         F.col("__k").cast("bigint").alias("u_stat"),
-        r6(p).alias("p_value"),
+        round_to(p, 6).alias("p_value"),
     )
 
 
@@ -1755,17 +1752,17 @@ def mann_kendall(
         " / sqrt(CAST(var_s_x18 AS DOUBLE) / CAST(18 AS DOUBLE))"
         " ELSE CAST(0 AS DOUBLE) END)"
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return st.select(
         "n",
         "s_stat",
         "var_s_x18",
-        r6(F.expr(z_expr)).alias("z"),
-        r6(
+        round_to(F.expr(z_expr), 6).alias("z"),
+        round_to(
             F.lit(2.0)
-            * F.expr(_phi_tail_sql(f"abs({z_expr})"))
+            * F.expr(_phi_tail_sql(f"abs({z_expr})")),
+            6,
         ).alias("p_value"),
-        r6(F.col("__sen")).alias("sen_slope"),
+        round_to(F.col("__sen"), 6).alias("sen_slope"),
     )
 
 
@@ -1981,16 +1978,16 @@ def cross_correlation(
     dx = n * n * F.col("__sxx") - n * F.col("__sx") * F.col("__sx")
     dy = n * n * F.col("__syy") - n * F.col("__sy") * F.col("__sy")
     den = F.sqrt(dx.cast("double")) * F.sqrt(dy.cast("double"))
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         pairs.join(F.broadcast(tot), how="cross")
         .select(
             "lag",
             F.col("__n").alias("n"),
-            r6(
+            round_to(
                 F.when(
                     (dx > 0) & (dy > 0), num.cast("double") / den
-                )
+                ),
+                6,
             ).alias("ccf"),
         )
         .orderBy("lag")
@@ -2183,17 +2180,17 @@ def kruskal_wallis_dow(
         "    / (CAST(9 AS DOUBLE) * __k)))"
         " / sqrt(CAST(2 AS DOUBLE) / (CAST(9 AS DOUBLE) * __k)))"
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return staged.select(
         "n",
         "n_groups",
-        r6(F.col("__q")).alias("h_stat"),
-        r6(
+        round_to(F.col("__q"), 6).alias("h_stat"),
+        round_to(
             F.when(
                 F.expr(wh_z) >= 0, F.expr(_phi_tail_sql(wh_z))
             ).otherwise(
                 F.lit(1.0) - F.expr(_phi_tail_sql(f"-({wh_z})"))
-            )
+            ),
+            6,
         ).alias("p_value"),
     )
 
@@ -2308,18 +2305,18 @@ def ohlc_bars(
     staged = _ohlc_staged(
         df, key_col, ts_col, value_col, order_col, interval
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     toval = lambda c: c.cast("double") / F.lit(100.0)  # noqa: E731
     return staged.groupBy("key", "bucket").agg(
-        r6(toval(F.min_by("__c", F.col("__k")))).alias("open"),
-        r6(toval(F.max("__c"))).alias("high"),
-        r6(toval(F.min("__c"))).alias("low"),
-        r6(toval(F.max_by("__c", F.col("__k")))).alias("close"),
+        round_to(toval(F.min_by("__c", F.col("__k"))), 6).alias("open"),
+        round_to(toval(F.max("__c")), 6).alias("high"),
+        round_to(toval(F.min("__c")), 6).alias("low"),
+        round_to(toval(F.max_by("__c", F.col("__k"))), 6).alias("close"),
         F.count(F.lit(1)).cast("bigint").alias("n_ticks"),
-        r6(
+        round_to(
             F.sum("__c").cast("double")
             / F.count(F.lit(1)).cast("double")
-            / F.lit(100.0)
+            / F.lit(100.0),
+            6,
         ).alias("vwap"),
     )
 
@@ -2443,20 +2440,20 @@ def ohlc_merge_partials(partials: DataFrame) -> DataFrame:
         F.sum("__n").cast("bigint").alias("__n"),
         F.sum("__s").cast("bigint").alias("__s"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     toval = lambda c: c.cast("double") / F.lit(100.0)  # noqa: E731
     return merged.select(
         "key",
         "bucket",
-        r6(toval(F.col("__oc"))).alias("open"),
-        r6(toval(F.col("__hi"))).alias("high"),
-        r6(toval(F.col("__lo"))).alias("low"),
-        r6(toval(F.col("__cc"))).alias("close"),
+        round_to(toval(F.col("__oc")), 6).alias("open"),
+        round_to(toval(F.col("__hi")), 6).alias("high"),
+        round_to(toval(F.col("__lo")), 6).alias("low"),
+        round_to(toval(F.col("__cc")), 6).alias("close"),
         F.col("__n").alias("n_ticks"),
-        r6(
+        round_to(
             F.col("__s").cast("double")
             / F.col("__n").cast("double")
-            / F.lit(100.0)
+            / F.lit(100.0),
+            6,
         ).alias("vwap"),
     )
 
@@ -2494,15 +2491,15 @@ def seasonal_strength(
         "__d", (F.col("__c").cast("double") / F.lit(100.0)).alias("__val")
     )
     dec = seasonal_decompose(daily, "__d", "__val", period)
-    micro = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
+    micro38 = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
         "decimal(38,0)"
     )
     ok = dec.where(
         F.col("trend").isNotNull() & F.col("residual").isNotNull()
     ).select(
-        micro(F.col("residual")).alias("__r"),
-        micro(F.col("seasonal") + F.col("residual")).alias("__sr"),
-        micro(F.col("trend") + F.col("residual")).alias("__tr"),
+        micro38(F.col("residual")).alias("__r"),
+        micro38(F.col("seasonal") + F.col("residual")).alias("__sr"),
+        micro38(F.col("trend") + F.col("residual")).alias("__tr"),
     )
     def moments(col, pre):
         # distinct prefixes: __s{r} vs __ss{r} collide for pre 'sr'
@@ -2526,7 +2523,6 @@ def seasonal_strength(
             n * F.col(f"__sq_{pre}")
             - F.col(f"__sum_{pre}") * F.col(f"__sum_{pre}")
         ).cast("double")
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     fs = F.greatest(
         F.lit(0.0), F.lit(1.0) - var("r") / var("sr")
     )
@@ -2535,8 +2531,8 @@ def seasonal_strength(
     )
     return agg.select(
         "n",
-        r6(F.when(var("sr") > 0, fs)).alias("f_seasonal"),
-        r6(F.when(var("tr") > 0, ft)).alias("f_trend"),
+        round_to(F.when(var("sr") > 0, fs), 6).alias("f_seasonal"),
+        round_to(F.when(var("tr") > 0, ft), 6).alias("f_trend"),
     )
 
 
@@ -2842,10 +2838,10 @@ def granger_lead_lag(
     )
     return staged.select(
         "n",
-        F.round(F.col("__b1"), 6).alias("b_own"),
-        F.round(F.col("__b2"), 6).alias("b_cross"),
-        F.round(F.col("__f"), 6).alias("f_stat"),
-        F.round(p, 6).alias("p_normal"),
+        round_to(F.col("__b1"), 6).alias("b_own"),
+        round_to(F.col("__b2"), 6).alias("b_cross"),
+        round_to(F.col("__f"), 6).alias("f_stat"),
+        round_to(p, 6).alias("p_normal"),
     )
 
 
@@ -2999,15 +2995,17 @@ def poisson_rate_ratio(
     p = F.lit(2.0) * F.expr(_phi_tail_sql("abs(__z)"))
     return staged.select(
         "n1", "days1", "n2", "days2",
-        F.round(F.exp(F.col("__lrr")), 6).alias("rate_ratio"),
-        F.round(
-            F.exp(F.col("__lrr") - F.lit(1.96) * F.col("__se")), 6
+        round_to(F.exp(F.col("__lrr")), 6).alias("rate_ratio"),
+        round_to(
+            F.exp(F.col("__lrr") - F.lit(1.96) * F.col("__se")),
+            6,
         ).alias("ci_lo"),
-        F.round(
-            F.exp(F.col("__lrr") + F.lit(1.96) * F.col("__se")), 6
+        round_to(
+            F.exp(F.col("__lrr") + F.lit(1.96) * F.col("__se")),
+            6,
         ).alias("ci_hi"),
-        F.round(F.col("__z"), 6).alias("z"),
-        F.round(F.least(F.lit(1.0), p), 6).alias("p_normal"),
+        round_to(F.col("__z"), 6).alias("z"),
+        round_to(F.least(F.lit(1.0), p), 6).alias("p_normal"),
     )
 
 
@@ -3159,20 +3157,21 @@ def burstiness_census(
     sccd = F.col("__scc").cast("double")
     cmu = scd / ndd
     cvar = (ndd * sccd - scd * scd) / (ndd * ndd)
-    _r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return j.select(
         F.col("__k").alias(key_col),
         "n_gaps",
-        _r6(
-            F.when(F.col("n_gaps") >= 2, sgd / ngd / F.lit(1e6))
+        round_to(
+            F.when(F.col("n_gaps") >= 2, sgd / ngd / F.lit(1e6)),
+            6,
         ).alias("mean_gap_s"),
-        _r6(
+        round_to(
             F.when(
                 (F.col("n_gaps") >= 2) & (sig + mu > 0),
                 (sig - mu) / (sig + mu),
-            )
+            ),
+            6,
         ).alias("burstiness"),
-        _r6(F.when(cmu > 0, cvar / cmu)).alias("fano_daily"),
+        round_to(F.when(cmu > 0, cvar / cmu), 6).alias("fano_daily"),
     )
 
 
@@ -3563,14 +3562,13 @@ def theil_sen_trend(
             F.col("__med").alias("__icept"),
         )
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         med_r.crossJoin(F.broadcast(med_s))
         .select(
             "n_days",
             F.col("__npairs").alias("n_pairs"),
-            r6(F.col("__slope")).alias("slope"),
-            r6(F.col("__icept")).alias("intercept"),
+            round_to(F.col("__slope"), 6).alias("slope"),
+            round_to(F.col("__icept"), 6).alias("intercept"),
         )
     )
 
@@ -3716,14 +3714,13 @@ def repeated_median_trend(
             F.col("__med").alias("__icept"),
         )
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return (
         med_r.crossJoin(F.broadcast(med_s))
         .select(
             "n_days",
             F.col("__npairs").alias("n_pairs"),
-            r6(F.col("__slope")).alias("slope"),
-            r6(F.col("__icept")).alias("intercept"),
+            round_to(F.col("__slope"), 6).alias("slope"),
+            round_to(F.col("__icept"), 6).alias("intercept"),
         )
     )
 
@@ -4002,11 +3999,10 @@ def distance_correlation(
             )
         ),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return j.select(
         F.col("__n").alias("n_days"),
-        r6(pearson).alias("pearson_r"),
-        r6(dcor).alias("dcor"),
+        round_to(pearson, 6).alias("pearson_r"),
+        round_to(dcor, 6).alias("dcor"),
     )
 
 
@@ -4284,14 +4280,13 @@ def huber_trend(
         )
         it = bounded_first(solve(folds(weighted.where(F.col("__wm") > 0))))
         a, b = it["__a"], it["__b"]
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     spark = df.sparkSession
     return spark.range(1).select(
         F.lit(int(ols["__n"] or 0)).cast("bigint").alias("n_days"),
-        r6(_dlit(ols["__b"])).alias("ols_slope"),
-        r6(_dlit(ols["__a"])).alias("ols_intercept"),
-        r6(_dlit(b)).alias("huber_slope"),
-        r6(_dlit(a)).alias("huber_intercept"),
+        round_to(_dlit(ols["__b"]), 6).alias("ols_slope"),
+        round_to(_dlit(ols["__a"]), 6).alias("ols_intercept"),
+        round_to(_dlit(b), 6).alias("huber_slope"),
+        round_to(_dlit(a), 6).alias("huber_intercept"),
     )
 
 
@@ -4474,13 +4469,12 @@ def gumbel_block_maxima(
 
         return mu - beta * F.lit(math.log(-math.log(1.0 - 1.0 / T)))
 
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return fold.select(
         "n_blocks",
-        r6(F.when(gate, mu)).alias("mu"),
-        r6(F.when(gate, beta)).alias("beta"),
-        r6(F.when(gate, rl(10.0))).alias("rl_10"),
-        r6(F.when(gate, rl(52.0))).alias("rl_52"),
+        round_to(F.when(gate, mu), 6).alias("mu"),
+        round_to(F.when(gate, beta), 6).alias("beta"),
+        round_to(F.when(gate, rl(10.0)), 6).alias("rl_10"),
+        round_to(F.when(gate, rl(52.0)), 6).alias("rl_52"),
     )
 
 
@@ -4623,7 +4617,7 @@ def durbin_watson(
         "n",
         "n_diffs",
         F.when(
-            den > 0, F.round(F.col("__num").cast("double") / den, 6)
+            den > 0, round_to(F.col("__num").cast("double") / den, 6)
         ).alias("dw"),
     )
 

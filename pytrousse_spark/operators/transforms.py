@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..dataset import Dataset
 from .base import FeatureOperation
+from ..functions.rounding import round_to
 from ..staging import stage
 
 #: Collect-guard: encoders refuse to materialize vocabularies larger than
@@ -281,7 +282,7 @@ def percent_rank_transform(
     nn = df.where(v.isNotNull())
     w = Window.partitionBy(group_col).orderBy(value_col)
     ranked = nn.withColumn(
-        out_col, F.round(F.percent_rank().over(w), 6)
+        out_col, round_to(F.percent_rank().over(w), 6)
     )
     nulls = df.where(v.isNull()).withColumn(
         out_col, F.lit(None).cast("double")
@@ -380,7 +381,7 @@ def percent_rank_transform_approx(
     )
     pct = F.when(
         (F.col("__n") <= 1) | (F.col("__hi") == F.col("__lo")), F.lit(0.0)
-    ).otherwise(F.round(less / (F.col("__n") - 1), 6))
+    ).otherwise(round_to(less / (F.col("__n") - 1), 6))
     ranked = joined.withColumn(out_col, pct).drop(
         "__lo", "__hi", "__n", "__b", "__c", "__below"
     )
@@ -570,15 +571,12 @@ def quantile_normalize(
         F.col("__glo"),
         F.least(F.col("__ghi"), F.coalesce(interp, F.col("__glo"))),
     )
-    # EXPLICIT scaled-multiply rounding in both engines: Spark's
-    # round(x, 6) is decimal-exact (BigDecimal of the double) while
-    # DuckDB's multiplies by 1e6 first — on a knife edge (x*1e6 landing
-    # exactly on .5 through float error) they disagree (measured: one
-    # row in 6000 at sf0.001). round(x*1e6, 0)/1e6 written out makes
-    # both engines round the SAME binary double, which provably agrees.
+    # round_to, not Spark's round(x, 6): that one rounds the double's
+    # decimal string, DuckDB the scaled double, and on a knife edge they
+    # disagree (measured: one row in 6000 at sf0.001)
     qn = F.when(
         v.isNull() | F.col("__qr").isNull(), F.lit(None).cast("double")
-    ).otherwise(F.round(clamped * F.lit(1e6), 0) / F.lit(1e6))
+    ).otherwise(round_to(clamped, 6))
     return joined.withColumn(out_col, qn).drop(
         "__qr", "__glo", "__ghi", "__gn", "__gb", "__cum_lo", "__cum_hi"
     )

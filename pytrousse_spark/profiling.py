@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions.rounding import micro, round_to
 from .operators._prefix import (
     PooledLevels,
     both_sides,
@@ -461,7 +462,7 @@ def correlation_matrix(df, cols: list[str]) -> "DataFrame":
             vb = n * sbb - sb * sb
             corr = F.when(
                 (va > 0) & (vb > 0),
-                F.round((n * sab - sa * sb) / F.sqrt(va * vb), 6),
+                round_to((n * sab - sa * sb) / F.sqrt(va * vb), 6),
             )
             pieces.append(
                 one.select(
@@ -596,7 +597,7 @@ def psi_drift(
         j.select("feature", "__nr", "__nc", nano.alias("__nano"))
         .groupBy("feature")
         .agg(
-            F.round(F.sum("__nano") / F.lit(1e9), 6).alias("psi"),
+            round_to(F.sum("__nano") / F.lit(1e9), 6).alias("psi"),
             F.max("__nr").alias("n_ref"),
             F.max("__nc").alias("n_cur"),
         )
@@ -731,10 +732,10 @@ def contingency_chi2(df: "DataFrame", col_a: str, col_b: str) -> "DataFrame":
     ).cast("double")
     v = F.when(denom > 0, F.sqrt(chi2 / denom))
     return total.select(
-        F.round(chi2, 6).alias("chi2"),
+        round_to(chi2, 6).alias("chi2"),
         dof.alias("dof"),
         F.col("__n").cast("bigint").alias("n"),
-        F.round(v, 6).alias("cramers_v"),
+        round_to(v, 6).alias("cramers_v"),
     )
 
 
@@ -819,7 +820,7 @@ def gini_sketch(
     v = F.col(value_col)
     base = df.where(v.isNotNull()).select(
         v.cast("double").alias("__v"),
-        F.round(v, 4).cast("decimal(28,4)").alias("__vd"),
+        round_to(v, 4).cast("decimal(28,4)").alias("__vd"),
     )
     rng = base.agg(
         F.min(F.when(F.col("__v") > 0, F.col("__v"))).alias("__lo"),
@@ -882,9 +883,9 @@ def gini_sketch(
         F.count(F.lit(1)).alias("bins_used"),
     )
     return out.select(
-        F.round(1.0 - F.col("__s") / F.lit(1e9), 6).alias("gini"),
+        round_to(1.0 - F.col("__s") / F.lit(1e9), 6).alias("gini"),
         F.col("__n").cast("bigint").alias("n"),
-        F.round(F.col("__tot").cast("double"), 4).alias("total"),
+        round_to(F.col("__tot").cast("double"), 4).alias("total"),
         F.col("bins_used").cast("bigint").alias("bins_used"),
     )
 
@@ -992,9 +993,9 @@ def benford_test(df: "DataFrame", value_col: str) -> "DataFrame":
     staged = j.select(
         "digit",
         F.col("__c").cast("bigint").alias("n"),
-        F.round(observed, 6).alias("observed"),
-        F.round(expected, 6).alias("expected"),
-        F.round(part, 4).alias("chi2_part"),
+        round_to(observed, 6).alias("observed"),
+        round_to(expected, 6).alias("expected"),
+        round_to(part, 4).alias("chi2_part"),
         F.round(part * F.lit(1e9), 0).cast("bigint").alias("__nano"),
     )
     w = Window.rowsBetween(
@@ -1006,7 +1007,7 @@ def benford_test(df: "DataFrame", value_col: str) -> "DataFrame":
         "observed",
         "expected",
         "chi2_part",
-        F.round(F.sum("__nano").over(w) / F.lit(1e9), 4).alias(
+        round_to(F.sum("__nano").over(w) / F.lit(1e9), 4).alias(
             "chi2_total"
         ),
     ).orderBy("digit")
@@ -1097,8 +1098,8 @@ def entropy_profile(df: "DataFrame", cols: list[str]) -> "DataFrame":
         "feature",
         F.col("__n").cast("bigint").alias("n"),
         F.col("n_distinct").cast("bigint").alias("n_distinct"),
-        F.round(h, 6).alias("entropy_nats"),
-        F.round(
+        round_to(h, 6).alias("entropy_nats"),
+        round_to(
             F.when(
                 F.col("n_distinct") > 1,
                 h / F.log(F.col("n_distinct").cast("double")),
@@ -1209,11 +1210,12 @@ def hill_tail_index(df: "DataFrame", value_col: str, k: int = 100) -> "DataFrame
         "__m",
     ).agg(
         F.lit(k).cast("int").alias("k"),
-        F.round(F.min("__thr"), 6).alias("x_threshold"),
-        F.round(
-            keff / (F.sum("__t") / F.lit(1e9)), 6
+        round_to(F.min("__thr"), 6).alias("x_threshold"),
+        round_to(
+            keff / (F.sum("__t") / F.lit(1e9)),
+            6,
         ).alias("alpha"),
-        F.round(
+        round_to(
             keff / (F.sum("__t") / F.lit(1e9)) / F.sqrt(keff),
             6,
         ).alias("se"),
@@ -1407,10 +1409,10 @@ def ks_two_sample(
     return d.select(
         "n_a",
         "n_b",
-        (F.round(F.col("__d") * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        round_to(F.col("__d"), 6).alias(
             "d_stat"
         ),
-        (F.round(p * F.lit(1e6), 0) / F.lit(1e6)).alias("p_value"),
+        round_to(p, 6).alias("p_value"),
         (p < F.lit(alpha)).alias("reject"),
     )
 
@@ -1432,10 +1434,6 @@ def _counts() -> tuple[Column, Column]:
         F.coalesce(F.col("n_a"), F.lit(0).cast("bigint")).alias("n_a"),
         F.coalesce(F.col("n_b"), F.lit(0).cast("bigint")).alias("n_b"),
     )
-
-
-def _round6(c: Column) -> Column:
-    return F.round(c * F.lit(1e6), 0) / F.lit(1e6)
 
 
 def _level_step() -> Column:
@@ -1609,7 +1607,7 @@ def cramer_von_mises(
     t = _cvm_stat("__t12")
     return agg.select(
         *_counts(),
-        F.when(both_sides(), F.round(t, 6)).alias("t_stat"),
+        F.when(both_sides(), round_to(t, 6)).alias("t_stat"),
         F.when(both_sides(), t > F.lit(float(crit))).alias("reject"),
     )
 
@@ -1646,7 +1644,7 @@ def wasserstein_1d(
     p = pooled_levels(df_a, df_b, value_col, adjacency=True)
     return _step_integral(p, _w1_term(), "__w6").select(
         *_counts(),
-        F.when(both_sides(), F.round(_micro("__w6"), 6)).alias("w1"),
+        F.when(both_sides(), round_to(_micro("__w6"), 6)).alias("w1"),
     )
 
 
@@ -1734,7 +1732,7 @@ def wasserstein_1d_by_group(
         F.col("__g").alias("group"),
         "n_a",
         "n_b",
-        F.when(both_sides(), F.round(_micro("__w6"), 6)).alias("w1"),
+        F.when(both_sides(), round_to(_micro("__w6"), 6)).alias("w1"),
     )
 
 
@@ -1794,8 +1792,8 @@ def kuiper_two_sample(
     both = both_sides()
     return agg.select(
         *_counts(),
-        F.when(both, _round6(v)).alias("v_stat"),
-        F.when(both, _round6(p)).alias("p_value"),
+        F.when(both, round_to(v, 6)).alias("v_stat"),
+        F.when(both, round_to(p, 6)).alias("p_value"),
         F.when(both, p < F.lit(float(alpha))).alias("reject"),
     )
 
@@ -1918,7 +1916,7 @@ def anderson_darling_2s(
     return agg.select(
         *_counts(),
         F.when(
-            both_sides() & (F.col("__any") == 1), F.round(_ad_stat("__t12"), 6)
+            both_sides() & (F.col("__any") == 1), round_to(_ad_stat("__t12"), 6)
         ).alias("a2"),
     )
 
@@ -2051,15 +2049,15 @@ def drift_by_group(
         F.col("__g").alias("group"),
         "n_a",
         "n_b",
-        F.when(both, _round6(F.col("__ks"))).alias("ks_d"),
-        F.when(both, _round6(F.col("__dp") + F.col("__dm"))).alias(
+        F.when(both, round_to(F.col("__ks"), 6)).alias("ks_d"),
+        F.when(both, round_to(F.col("__dp") + F.col("__dm"), 6)).alias(
             "kuiper_v"
         ),
-        F.when(both, F.round(_cvm_stat("__t12"), 6)).alias("cvm_t"),
-        F.when(both & (F.col("__anyden") == 1), F.round(_ad_stat("__a12"), 6))
+        F.when(both, round_to(_cvm_stat("__t12"), 6)).alias("cvm_t"),
+        F.when(both & (F.col("__anyden") == 1), round_to(_ad_stat("__a12"), 6))
         .alias("ad_a2"),
-        F.when(both, F.round(_micro("__w6"), 6)).alias("w1"),
-        F.when(both, F.round(_micro("__e6"), 6)).alias("energy"),
+        F.when(both, round_to(_micro("__w6"), 6)).alias("w1"),
+        F.when(both, round_to(_micro("__e6"), 6)).alias("energy"),
     )
 
 
@@ -2199,9 +2197,9 @@ def energy_distance(
     na, nb = _n_ab()
     return _step_integral(p, _energy_term(), "__e6").select(
         *_counts(),
-        F.when(both_sides(), F.round(energy, 6)).alias("energy"),
+        F.when(both_sides(), round_to(energy, 6)).alias("energy"),
         F.when(
-            both_sides(), F.round(na * nb / (na + nb) * energy, 6)
+            both_sides(), round_to(na * nb / (na + nb) * energy, 6)
         ).alias("t_stat"),
     )
 
@@ -2574,10 +2572,10 @@ def categorical_association(
         F.col("__n").alias("n"),
         F.col("__r").alias("r"),
         F.col("__c").alias("c"),
-        (F.round(chi2 * F.lit(1e6), 0) / F.lit(1e6)).alias("chi2"),
-        (F.round(v * F.lit(1e6), 0) / F.lit(1e6)).alias("cramers_v"),
-        (F.round(mi * F.lit(1e6), 0) / F.lit(1e6)).alias("mi_nats"),
-        (F.round(nmi * F.lit(1e6), 0) / F.lit(1e6)).alias("nmi"),
+        round_to(chi2, 6).alias("chi2"),
+        round_to(v, 6).alias("cramers_v"),
+        round_to(mi, 6).alias("mi_nats"),
+        round_to(nmi, 6).alias("nmi"),
     )
 
 
@@ -2768,15 +2766,13 @@ def mann_whitney_u(
         F.when(ok, F.col("__u2").cast("double") / F.lit(2.0)).alias("u"),
         F.when(
             ok,
-            F.round(
+            round_to(
                 F.col("__u2").cast("double")
-                / (F.lit(2.0) * (n1 * n2).cast("double"))
-                * F.lit(1e6),
-                0,
-            )
-            / F.lit(1e6),
+                / (F.lit(2.0) * (n1 * n2).cast("double")),
+                6,
+            ),
         ).alias("cles"),
-        F.when(ok & (var > 0), F.round(z * F.lit(1e6), 0) / F.lit(1e6)).alias(
+        F.when(ok & (var > 0), round_to(z, 6)).alias(
             "z"
         ),
         F.when(ok & (var > 0), z).alias("__zraw"),
@@ -2788,8 +2784,8 @@ def mann_whitney_u(
         "u",
         "cles",
         "z",
-        (F.round(p * F.lit(1e6), 0) / F.lit(1e6)).alias("p_value"),
-        (F.round(p * F.lit(1e6), 0) / F.lit(1e6) < F.lit(float(alpha))).alias(
+        round_to(p, 6).alias("p_value"),
+        (round_to(p, 6) < F.lit(float(alpha))).alias(
             "reject"
         ),
     )
@@ -2916,9 +2912,6 @@ def winsorized_group_stats(
         ).alias("__qhi"),
     )
     v = F.col(col).cast("double")
-    micro = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
-        "bigint"
-    )
     staged = (
         df.where(v.isNotNull())
         .join(F.broadcast(cuts), group_col)
@@ -2936,26 +2929,28 @@ def winsorized_group_stats(
             ).alias("__trm"),
         )
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     kept = F.sum(
         F.when(F.col("__trm").isNotNull(), 1).otherwise(0)
     ).cast("bigint")
     return staged.groupBy("group").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        r6(
+        round_to(
             F.sum("__raw").cast("double")
             / F.count(F.lit(1)).cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("mean_raw"),
-        r6(
+        round_to(
             F.sum("__win").cast("double")
             / F.count(F.lit(1)).cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("mean_winsor"),
-        r6(
+        round_to(
             F.sum("__trm").cast("double")
             / kept.cast("double")
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("mean_trim"),
         (F.count(F.lit(1)).cast("bigint") - kept).alias("n_trimmed"),
     )
@@ -3122,7 +3117,6 @@ def kendall_tau_b(
         " * (CAST(2 AS DOUBLE) * CAST(__nn AS DOUBLE)"
         "    + CAST(5 AS DOUBLE)) / CAST(2 AS DOUBLE)))"
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     staged = st.select(
         n.cast("bigint").alias("n"),
         F.col("__conc").cast("bigint").alias("concordant"),
@@ -3135,11 +3129,12 @@ def kendall_tau_b(
         "n",
         "concordant",
         "discordant",
-        r6(F.col("__tb")).alias("tau_b"),
-        r6(F.expr(z_expr)).alias("z"),
-        r6(
+        round_to(F.col("__tb"), 6).alias("tau_b"),
+        round_to(F.expr(z_expr), 6).alias("z"),
+        round_to(
             F.lit(2.0)
-            * F.expr(_phi_tail_sql(f"abs({z_expr})"))
+            * F.expr(_phi_tail_sql(f"abs({z_expr})")),
+            6,
         ).alias("p_value"),
     )
 
@@ -3258,12 +3253,12 @@ def spearman_approx(
     rxy = percent_rank_transform_approx(
         rx, "__grp", "__vy", out_col="__ry", num_bins=num_bins
     )
-    micro = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
+    micro38 = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
         "decimal(38,0)"
     )
     staged = rxy.select(
-        micro(F.col("__rx")).alias("__x"),
-        micro(F.col("__ry")).alias("__y"),
+        micro38(F.col("__rx")).alias("__x"),
+        micro38(F.col("__ry")).alias("__y"),
     )
     mom = staged.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("__n"),
@@ -3284,11 +3279,11 @@ def spearman_approx(
     dx = n * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     dy = n * F.col("__syy") - F.col("__sy") * F.col("__sy")
     den = F.sqrt(dx.cast("double")) * F.sqrt(dy.cast("double"))
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     return mom.select(
         n.cast("bigint").alias("n"),
-        r6(
-            F.when((dx > 0) & (dy > 0), num.cast("double") / den)
+        round_to(
+            F.when((dx > 0) & (dy > 0), num.cast("double") / den),
+            6,
         ).alias("spearman"),
     )
 
@@ -3451,7 +3446,6 @@ def numeric_mutual_information(
         F.sum("__hx").cast("bigint").alias("__shx"),
         F.sum("__hy").cast("bigint").alias("__shy"),
     )
-    r6 = lambda c: F.round(c * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     mi = F.col("__smi").cast("double") / F.lit(1e9)
     hmin = F.least(F.col("__shx"), F.col("__shy")).cast("double") / F.lit(
         1e9
@@ -3459,11 +3453,12 @@ def numeric_mutual_information(
     return agg.select(
         F.col("__n").alias("n"),
         "n_cells",
-        r6(mi).alias("mi"),
-        r6(
+        round_to(mi, 6).alias("mi"),
+        round_to(
             F.when(
                 F.least(F.col("__shx"), F.col("__shy")) > 0, mi / hmin
-            )
+            ),
+            6,
         ).alias("nmi"),
     )
 
@@ -3636,7 +3631,6 @@ def wasserstein1_binned(
     agg = staged.groupBy("__nr", "__nc", "__lo", "__hi").agg(
         F.sum(diff).cast("decimal(38,0)").alias("__sd")
     )
-    r6 = lambda x: F.round(x * F.lit(1e6), 0) / F.lit(1e6)  # noqa: E731
     w1 = (
         F.col("__sd").cast("double")
         / (F.col("__nr") * F.col("__nc")).cast("double")
@@ -3646,15 +3640,16 @@ def wasserstein1_binned(
     return agg.select(
         F.col("__nr").cast("bigint").alias("n_ref"),
         F.col("__nc").cast("bigint").alias("n_cur"),
-        r6(F.col("__lo")).alias("lo"),
-        r6(F.col("__hi")).alias("hi"),
-        r6(
+        round_to(F.col("__lo"), 6).alias("lo"),
+        round_to(F.col("__hi"), 6).alias("hi"),
+        round_to(
             F.when(
                 (F.col("__nr") > 0)
                 & (F.col("__nc") > 0)
                 & (F.col("__hi") > F.col("__lo")),
                 w1,
-            ).otherwise(F.lit(0.0))
+            ).otherwise(F.lit(0.0)),
+            6,
         ).alias("w1"),
     )
 

@@ -12,6 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rounding import round_half_away, round_to
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -65,7 +68,7 @@ def windowed_event_counts(
         src.groupBy(F.window("ts", window_duration).alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+            round_to(F.sum("value"), 4).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -150,7 +153,7 @@ def enrich_events_stream(events: DataFrame, user_dim: DataFrame) -> DataFrame:
     joined = events.join(F.broadcast(user_dim), "user_id")
     return joined.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
+        round_to(F.sum("value"), 4).alias("sum_value"),
     )
 
 
@@ -217,7 +220,7 @@ def view_purchase_stream_join(
     p = purchases.select(
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
-        F.round(F.col("value"), 4).alias("p_val"),
+        round_to(F.col("value"), 4).alias("p_val"),
     )
     if v.isStreaming:
         v = v.withWatermark("v_ts", watermark)
@@ -306,7 +309,10 @@ def cusum_from_partials(
         )
     )
     return _cusum_from_buckets(
-        merged, gcols, int(round(k * 1_000_000)), int(round(h * 1_000_000))
+        merged,
+        gcols,
+        int(round_half_away(k * 1_000_000)),
+        int(round_half_away(h * 1_000_000)),
     )
 
 

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from ..functions.rounding import round_half_away, round_to
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_events", T.LongType()),
@@ -52,7 +54,7 @@ def _update_user_state(
         {
             "user_id": [user_id],
             "n_events": [n],
-            "sum_value": [round(s, 4)],
+            "sum_value": [round_half_away(s, 4)],
             "max_value": [mx if mx != float("-inf") else None],
         }
     )
@@ -70,7 +72,7 @@ def running_user_stats(events: DataFrame) -> DataFrame:
 
         return events.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+            round_to(F.sum("value"), 4).alias("sum_value"),
             F.max("value").alias("max_value"),
         )
     return (

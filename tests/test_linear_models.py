@@ -63,11 +63,27 @@ def _cols():
 _SQL_COLS = ("SELECT * FROM obs", "treated", "y", "x1", "x2")
 
 
+# x whose first gradient term (0.5 - 1)·x (p = 0.5 at w = 0) is an exact
+# 7-decimal tie that its double lands just inside: Spark's F.round(·, 6)
+# rounds it away from zero, DuckDB's round toward it
+_TIE_X = (0.064103, 0.062507, 0.062509, 0.062521, 0.062523, 0.062535)
+
+
+def _ties(spark, n=120):
+    """Treated units on tie-prone covariates: x1 from ``_TIE_X`` and
+    x2 = 1, so x3 = x1*x2 sits on the ties too."""
+    rows = [
+        (int(i % 4 != 0), 100.0 + (i % 7), _TIE_X[i % len(_TIE_X)], 1.0)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "treated int, y double, x1 double, x2 double")
+
+
 def test_ipw_matches_sql_twin(spark):
-    df = _observational(spark)
-    got = ipw_ate(df, *_cols(), iters=5, lr=4.0)
-    assert got.first()["n"] == 400
-    assert_df_matches_sql(got, _duck(df, "obs"), ipw_ate_sql(*_SQL_COLS, iters=5, lr=4.0))
+    for df in (_observational(spark), _ties(spark)):
+        got = ipw_ate(df, *_cols(), iters=5, lr=4.0)
+        assert got.first()["n"] == df.count()
+        assert_df_matches_sql(got, _duck(df, "obs"), ipw_ate_sql(*_SQL_COLS, iters=5, lr=4.0))
 
 
 def test_aipw_matches_sql_twin(spark):
@@ -144,17 +160,36 @@ def test_ols_grouped_singular_group_matches_sql_twin(spark):
 
 @pytest.mark.parametrize("iters", [0, 1, 3])
 def test_logreg_train_equals_sql_chain_weights(spark, iters):
-    rows = [
+    """On a mixed frame, and on y = 1 with x3 on ``_TIE_X``, where every
+    row's first x3 gradient term is a decimal tie."""
+    mixed = [
         (float(i % 3 == 0), round((i % 17) / 10.0, 6), round((i % 5) / 4.0, 6), round((i % 9) / 8.0, 6))
         for i in range(120)
     ]
-    df = spark.createDataFrame(rows, "y double, x1 double, x2 double, x3 double")
-    w = logreg_train(df, iters=iters, lr=3.0)
-    ctes = ",\n".join(_logreg_chain_sql("SELECT y, x1, x2, x3 FROM ft", iters, 3.0))
-    sql = f"WITH {ctes} SELECT a, b, c, d FROM w{iters}"
-    assert list(_duck(df, "ft").sql(sql).fetchone()) == w
-    if iters:
-        assert any(w)
+    ties = [(1.0, (i % 5) / 4.0, (i % 3) / 2.0, _TIE_X[i % len(_TIE_X)]) for i in range(120)]
+    for rows in (mixed, ties):
+        df = spark.createDataFrame(rows, "y double, x1 double, x2 double, x3 double")
+        w = logreg_train(df, iters=iters, lr=3.0)
+        ctes = ",\n".join(_logreg_chain_sql("SELECT y, x1, x2, x3 FROM ft", iters, 3.0))
+        sql = f"WITH {ctes} SELECT a, b, c, d FROM w{iters}"
+        assert list(_duck(df, "ft").sql(sql).fetchone()) == w
+        if iters:
+            assert any(w)
+
+
+@pytest.mark.parametrize("seed", [5, 209, 2115284381])
+def test_q111_matches_oracle_on_perfbench_seeds(spark, tmp_path, seed):
+    """The perfbench corpus seeds on which q111's Spark weights once
+    drifted from its DuckDB replay by 1–3e-6: a tie in the first
+    gradient term that the two engines' round(·, 6) broke differently."""
+    import __spark_entry__ as entrymod
+    from perfbench.gen import generate
+
+    generate("corpus", seed, str(tmp_path), "bench")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    got = entrymod.queries()["q111_logreg_quality"](spark, str(tmp_path))
+    assert_df_matches_sql(got, con, entrymod.oracle_sql()["q111_logreg_quality"])
 
 
 # --- tripwire: one sigmoid and one Cramer numerator per engine ---------

@@ -90,6 +90,41 @@ def test_stateful_running_stats_stream_vs_batch(spark, tmp_path_factory):
         assert got[u][2] == pytest.approx(expect[u][2])
 
 
+def test_stateful_running_stats_stream_equals_batch_on_ties(spark, tmp_path_factory):
+    """One-event users whose value is a 4-decimal tie (exact in binary,
+    like 0.03125, or just inside it, like 0.00015): the stream's driver
+    round and the batch twin's Spark round give the same sum_value."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    values = [0.03125, -0.03125, 0.00015, 1.00005, 2.50005, 0.12345, 7.0]
+    d = tmp_path_factory.mktemp("ties")
+    ts = dt.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(values)), pa.int64()),
+            "ts": pa.array([ts] * len(values), pa.timestamp("us")),
+            "user_id": pa.array(range(1, len(values) + 1), pa.int64()),
+            "event_type": ["view"] * len(values),
+            "value": values,
+            "props": pa.array([None] * len(values), pa.string()),
+        }),
+        d / "part-000.parquet",
+    )
+    stats = running_user_stats(read_events_stream(spark, str(d)))
+    run_stream_to_memory(stats, "user_stats_ties", timeout_sec=180, output_mode="update")
+    got = {tuple(r) for r in spark.sql("SELECT * FROM user_stats_ties").collect()}
+    batch = spark.read.parquet(str(d))
+    expect = {
+        (r["user_id"], r["n_events"], r["sum_value"], r["max_value"])
+        for r in running_user_stats(batch).collect()
+    }
+    assert got == expect
+    assert (1, 1, 0.0313, 0.03125) in got
+
+
 def test_zorder_key_known_values(spark):
     from pyspark.sql import functions as F
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -149,6 +150,33 @@ def test_wav_roundtrip_and_python_wave_agrees(spark):
             assert g["bit_depth"] == w.getsampwidth() * 8
             assert g["n_samples"] == w.getnframes() * 1  # frames == samples/ch
             assert g["n_samples"] == w.getnframes()
+
+
+def test_wav_duration_rounds_like_duckdb(spark):
+    """duration_ms on WAVs built with stdlib ``wave`` equals DuckDB's
+    ``round(n_samples * 1000.0 / rate, 3)`` (the q69 twin's text), also
+    on exact ties: one mono sample at 16 kHz is 0.0625 ms -> 0.063."""
+    import io
+    import wave
+
+    from pytrousse_spark.operators.multimodal import decode_wav_meta
+
+    cases = [(1, 1, 16000), (5, 1, 16000), (3, 2, 16000), (7, 1, 8000), (11, 2, 44100)]
+    rows = []
+    for did, (frames, ch, rate) in enumerate(cases):
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(ch)
+            w.setsampwidth(2)
+            w.setframerate(rate)
+            w.writeframes(b"\x01\x00" * frames * ch)
+        rows.append((did, bytearray(buf.getvalue())))
+    df = spark.createDataFrame(rows, "doc_id long, media binary")
+    got = {r["doc_id"]: r["duration_ms"] for r in decode_wav_meta(df).collect()}
+    for did, (frames, _ch, rate) in enumerate(cases):
+        duck = duckdb.sql(f"SELECT round({frames} * 1000.0 / {rate}, 3)").fetchone()[0]
+        assert got[did] == duck, (frames, rate)
+    assert got[0] == 0.063
 
 
 def test_wav_decoder_rejects_garbage(spark):

@@ -6,10 +6,14 @@ query with the noop sink on a fresh session, optionally dumps
 
 Usage:
     python tools/measure.py q287_hits q117_pagerank [--reps 3]
-        [--plans plans/r12 --suffix before]
+        [--plans plans/r12 --suffix before] [--rows rows/before]
 
 To compare the plans of two checkouts, run each with its own ``--plans``
 directory and the same ``--suffix``, then ``diff -r`` the directories.
+``--rows DIR`` writes ``DIR/<query>.txt`` per query: its output schema
+(``simpleString``), row count and the SHA-256 of its sorted rows, so
+"same schema and rows as the parent" is one ``diff -r`` as well. With no
+query named, every registry query runs; ``--reps 0`` skips the timing.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Prints one line per query: name, per-rep walls, and per rep the split of
@@ -32,6 +36,7 @@ checkpoint files (at most 120 s), so no rep counts an earlier rep's.
 from __future__ import annotations
 
 import gc
+import hashlib
 import io
 import json
 import os
@@ -87,10 +92,18 @@ def _drain_checkpoints(spark) -> None:
         time.sleep(0.25)
 
 
+def rows_digest(df) -> str:
+    """Schema, row count and SHA-256 of the sorted row reprs of ``df``."""
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+    return f"{df.schema.simpleString()}\nrows {len(rows)}\nsha256 {digest}\n"
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     reps = 3
     plans_dir = None
+    rows_dir = None
     suffix = "before"
     names = []
     i = 0
@@ -100,6 +113,8 @@ def main() -> None:
             reps = int(args[i + 1]); i += 2
         elif a == "--plans":
             plans_dir = args[i + 1]; i += 2
+        elif a == "--rows":
+            rows_dir = args[i + 1]; i += 2
         elif a == "--suffix":
             suffix = args[i + 1]; i += 2
         else:
@@ -109,6 +124,7 @@ def main() -> None:
     spark = get_spark(app_name="pytrousse-measure")
     spark.sparkContext.setLogLevel("ERROR")
     qs = {**entrymod.queries(), **entrymod.bench_extras()}
+    names = names or list(entrymod.queries())
 
     results = {}
     for name in names:
@@ -123,6 +139,12 @@ def main() -> None:
                 os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w"
             ) as f:
                 f.write(masked_plan(buf.getvalue()))
+        if rows_dir:
+            os.makedirs(rows_dir, exist_ok=True)
+            with open(os.path.join(rows_dir, f"{name}.txt"), "w") as f:
+                f.write(rows_digest(fn(spark, sf_dir)))
+        if not reps:
+            continue
         walls = []
         ledger: dict[str, list] = {
             "build_s": [], "build_jobs": [], "action_s": [], "action_jobs": [],
