@@ -24,9 +24,26 @@ both engines; driver-side rounds whose result a SQL twin replays (k-means
 centroid literals, PQ codebooks, gradient updates) use
 :func:`round_half_away`.
 
-Micro-units (:data:`MICRO`, :func:`micro`) are the package's exact
-integer form of a 6-decimal value: integer sums of them do not depend on
-the order the engine adds rows in.
+Fixed point (:func:`to_fixed`, :func:`from_fixed`) is the package's
+exact form of a double: ``round(x * 10^k)`` as an integer, whose sums do
+not depend on the order the engine adds rows in, and one division by
+10^k back to a double. The scale says how many decimals a term keeps:
+
+* 10^2, cents, for money (every price and value column);
+* 10^6, micro-units, for outputs reported to 6 decimals;
+* 10^9, 10^12 and 10^15 for intermediate folds (logs, entropies,
+  squared deviations, products of two scaled terms) whose terms need
+  more digits than the 6 the result keeps;
+* a few one-off units: 10^3 and 10^4 for a score or an effect that
+  keeps 3 or 4 decimals, 10^8 (micro-cents) and 10^18 (a 10^9 term
+  squared) for folds whose unit is the product of two of the above.
+
+``wide=True`` casts to ``DECIMAL(38,0)`` instead of ``BIGINT``, for sums
+that can pass 2^63 (squares and products of scaled terms): the DuckDB
+twins carry those as ``HUGEINT``, so a BIGINT sum would overflow where
+the twin does not. :data:`SCALE` holds these scales as exact integers
+for the driver-side arithmetic and SQL twin text that must agree with
+the Spark side.
 """
 
 from __future__ import annotations
@@ -36,8 +53,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Scale of the integer micro-unit form of a value.
-MICRO = 1_000_000
+#: 10^k for each fixed-point scale k the package uses (see above).
+SCALE = {k: 10 ** k for k in (2, 3, 4, 6, 8, 9, 12, 15, 18)}
 
 
 def round_half_away(x: float, ndigits: int = 0) -> float:
@@ -58,7 +75,20 @@ def round_to(col: Column, k: int) -> Column:
     return F.round(col * scale, 0) / scale
 
 
-def micro(col: Column) -> Column:
-    """``col`` (a double) in integer micro-units:
-    ``CAST(round(col * 1e6) AS BIGINT)``."""
-    return F.round(col * F.lit(float(MICRO)), 0).cast("bigint")
+def to_fixed(col: Column, k: int, wide: bool = False) -> Column:
+    """``col`` as an exact integer at scale 10^k:
+    ``CAST(round(col * 10^k) AS BIGINT)``, or ``DECIMAL(38,0)`` (the
+    twin's ``HUGEINT``) when ``wide``. The scale is an integer literal, so
+    the product keeps ``col``'s own type, as the twins' ``v * 100`` does;
+    for a double ``col`` Spark folds it to the same double constant. A
+    column of another type that should scale in double arithmetic is
+    cast to double first."""
+    return F.round(col * F.lit(SCALE[k]), 0).cast(
+        "decimal(38,0)" if wide else "bigint"
+    )
+
+
+def from_fixed(col: Column, k: int) -> Column:
+    """A scale-10^k integer (or a fold of them) back as a double:
+    ``CAST(col AS DOUBLE) / 10^k``."""
+    return col.cast("double") / F.lit(float(SCALE[k]))

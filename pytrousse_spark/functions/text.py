@@ -12,7 +12,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .hashing import h60, h60_sql
-from .rounding import micro, round_to
+from .rounding import from_fixed, round_to, to_fixed
 
 from pytrousse_spark.functions.sqlutil import sql_quote
 from pytrousse_spark.staging import stage, stage_unbounded
@@ -1070,7 +1070,7 @@ def bigram_nll(df, text_col: str, id_col: str):
         .select(
             "w1",
             "w2",
-            micro(round_to(term, 6)).alias("__r"),
+            to_fixed(round_to(term, 6), 6).alias("__r"),
         )
     )
     return (
@@ -1078,7 +1078,7 @@ def bigram_nll(df, text_col: str, id_col: str):
         .groupBy("__id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            round_to(F.sum("__r") / F.lit(1e6) / F.count(F.lit(1)), 4).alias(
+            round_to(from_fixed(F.sum("__r"), 6) / F.count(F.lit(1)), 4).alias(
                 "nll"
             ),
         )
@@ -1743,13 +1743,13 @@ def js_divergence(
         F.when(p > 0, 0.5 * p * F.log(p / m)).otherwise(F.lit(0.0))
         + F.when(q > 0, 0.5 * q * F.log(q / m)).otherwise(F.lit(0.0))
     )
-    pico = F.round(term * F.lit(1e12), 0).cast("bigint")
+    pico = to_fixed(term, 12)
     return (
         t.select(pico.alias("__p"), "__na", "__nb", "__v")
         .groupBy("__na", "__nb", "__v")
         .agg(F.sum("__p").alias("__s"))
         .select(
-            round_to(F.col("__s") / F.lit(1e12), 6).alias("js_nats"),
+            round_to(from_fixed(F.col("__s"), 12), 6).alias("js_nats"),
             F.col("__v").cast("bigint").alias("vocab_size"),
             F.col("__na").cast("bigint").alias("n_tokens_a"),
             F.col("__nb").cast("bigint").alias("n_tokens_b"),
@@ -1839,8 +1839,7 @@ def smoothed_sampling_weights(
     base = stage(df.where(F.col(count_col) > 0).select(
         F.col(key_col).alias("key"),
         F.col(count_col).cast("bigint").alias("count"),
-        micro(F.pow(c, F.lit(float(alpha))))
-        .alias("__m"),
+        to_fixed(F.pow(c, F.lit(float(alpha))), 6).alias("__m"),
     ))
     tot = base.agg(
         F.sum("__m").alias("__tm"), F.sum("count").alias("__tc")

@@ -54,6 +54,7 @@ from typing import NamedTuple, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.rounding import to_fixed
 from ..staging import stage
 
 #: levels per bucket = 2^20 — the single-sort-task budget used across
@@ -418,7 +419,7 @@ def pooled_levels(
     :func:`exclusive_prefix_sums`, neither of which stages again. The
     totals aggregate the staged frame directly.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    cents = to_fixed(F.col(value_col).cast("double"), 2)
     keep = F.col(value_col).isNotNull()
     key = []
     if group_col is not None:

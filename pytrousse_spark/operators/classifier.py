@@ -36,7 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import MICRO, micro, round_half_away, round_to
+from ..functions.rounding import (
+    SCALE,
+    from_fixed,
+    round_half_away,
+    round_to,
+    to_fixed,
+)
 from ..functions.text import LANG_STOPWORDS, tokens, tokens_sql
 from ..io import rebalance_undersplit
 from ..staging import stage, stage_unbounded
@@ -142,7 +148,7 @@ def logreg_train(
         row = bounded_first(feat.agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             *[
-                F.sum(micro(round_to((p - F.col("y")) * xs[j], 6)))
+                F.sum(to_fixed(round_to((p - F.col("y")) * xs[j], 6), 6))
                 .cast("long")
                 .alias(f"g{j}")
                 for j in range(4)
@@ -151,7 +157,7 @@ def logreg_train(
         n = row["n"]
         w = [
             round_half_away(
-                w[j] - lr * (row[f"g{j}"] / MICRO) / n,
+                w[j] - lr * (row[f"g{j}"] / SCALE[6]) / n,
                 6,
             )
             for j in range(4)
@@ -173,11 +179,11 @@ def _logreg_chain_sql(feat: str, iters: int, lr: float) -> list[str]:
     expression tree 2^T-fold."""
     gsums = ", ".join(
         f"CAST(sum(CAST(round(round((p.p - p.y) * {x}, 6)"
-        f" * {MICRO}) AS BIGINT)) AS BIGINT) AS g{j}"
+        f" * {SCALE[6]}) AS BIGINT)) AS BIGINT) AS g{j}"
         for j, x in enumerate(["1.0", "p.x1", "p.x2", "p.x3"])
     )
     upd = ", ".join(
-        f"round(w.{wc} - {lr} * (g.g{j} / {float(MICRO)}) / g.n, 6) AS {wc}"
+        f"round(w.{wc} - {lr} * (g.g{j} / {float(SCALE[6])}) / g.n, 6) AS {wc}"
         for j, wc in enumerate("abcd")
     )
     ctes = [
@@ -656,7 +662,7 @@ def calibration_bins(
         raise ValueError("calibration_bins: num_bins must be >= 2")
     p = F.col(prob_col).cast("double")
     y = F.col(label_col).cast("bigint")
-    pm = micro(p)
+    pm = to_fixed(p, 6)
     bin_ = F.least(
         F.floor(pm * num_bins / F.lit(1_000_000)).cast("int"),
         F.lit(num_bins - 1),
@@ -1440,26 +1446,20 @@ def naive_bayes_confusion(
         .select(
             "__y",
             "__nc",
-            F.round(
+            to_fixed(
                 F.log(
                     F.col("__docs").cast("double")
                     / F.col("__dt").cast("double")
-                )
-                * F.lit(1e9),
-                0,
-            )
-            .cast("bigint")
-            .alias("__prior_nano"),
-            F.round(
+                ),
+                9,
+            ).alias("__prior_nano"),
+            to_fixed(
                 F.log(
                     F.lit(a).cast("double")
                     / (F.col("__nc") + F.col("__v")).cast("double")
-                )
-                * F.lit(1e9),
-                0,
-            )
-            .cast("bigint")
-            .alias("__w0_nano"),
+                ),
+                9,
+            ).alias("__w0_nano"),
         )
     )
     pair_w = (
@@ -1469,14 +1469,13 @@ def naive_bayes_confusion(
             "__y",
             "__tok",
             (
-                F.round(
+                to_fixed(
                     F.log(
                         (F.col("__nct") + F.lit(a)).cast("double")
                         / (F.col("__nc") + F.col("__v")).cast("double")
-                    )
-                    * F.lit(1e9),
-                    0,
-                ).cast("bigint")
+                    ),
+                    9,
+                )
                 - F.col("__w0_nano")
             ).alias("__wadj_nano"),
         )
@@ -1540,21 +1539,14 @@ def naive_bayes_confusion(
             F.col("__y").alias("actual"),
             F.col("__pred").alias("predicted"),
             "n",
-            F.round(
+            round_to(
                 F.sum(
                     F.when(F.col("__y") == F.col("__pred"), F.col("n"))
                     .otherwise(F.lit(0))
                 ).over(wall)
-                / F.sum("n").over(wall).cast("double")
-                * F.lit(1e6),
-                0,
-            ).alias("__accm"),
-        )
-        .select(
-            "actual",
-            "predicted",
-            "n",
-            (F.col("__accm") / F.lit(1e6)).alias("accuracy"),
+                / F.sum("n").over(wall).cast("double"),
+                6,
+            ).alias("accuracy"),
         )
         .orderBy("actual", "predicted")
     )
@@ -1772,8 +1764,7 @@ def decision_stump(
     best = cand.select(
         F.min(
             F.struct(
-                micro(F.col("__cost"))
-                .alias("__cm"),
+                to_fixed(F.col("__cost"), 6).alias("__cm"),
                 F.col("__b").alias("__bb"),
                 F.col("__cn").alias("__bcn"),
                 F.col("__cp").alias("__bcp"),
@@ -1807,7 +1798,7 @@ def decision_stump(
         nr.cast("bigint").alias("n_right"),
         round_to(pl.cast("double") / nl.cast("double"), 6).alias("pos_rate_left"),
         round_to(pr.cast("double") / nr.cast("double"), 6).alias("pos_rate_right"),
-        (F.col("__cm") / F.lit(1e6)).alias("gini_split"),
+        from_fixed(F.col("__cm"), 6).alias("gini_split"),
         round_to(
             F.lit(2.0)
             * (F.col("__pos") * (F.col("__n") - F.col("__pos"))).cast("double")
@@ -1996,14 +1987,11 @@ def isotonic_calibration(
     ).select(
         "__bi",
         "__bj",
-        F.round(
+        to_fixed(
             (F.col("__shi") - F.col("__slo")).cast("double")
-            / (F.col("__whi") - F.col("__wlo")).cast("double")
-            * F.lit(1e9),
-            0,
-        )
-        .cast("bigint")
-        .alias("__avg"),
+            / (F.col("__whi") - F.col("__wlo")).cast("double"),
+            9,
+        ).alias("__avg"),
     )
     # inner(i, b) = min over j >= b of avg(i, j): suffix min per i
     wsuf = (
@@ -2031,7 +2019,7 @@ def isotonic_calibration(
                 F.col("__s").cast("double") / F.col("n").cast("double"),
                 6,
             ).alias("rate_raw"),
-            round_to(F.col("__fit").cast("double") / F.lit(1e9), 6).alias(
+            round_to(from_fixed(F.col("__fit"), 9), 6).alias(
                 "rate_isotonic"
             ),
         )
@@ -2273,9 +2261,7 @@ def optimal_threshold(
     Returns one row ``(threshold_cents, n_selected, tp, fp, utility,
     n_pos, n_neg)``; empty input yields no row.
     """
-    cents = F.round(F.col(score_col).cast("double") * 100, 0).cast(
-        "bigint"
-    )
+    cents = to_fixed(F.col(score_col).cast("double"), 2)
     staged = df.where(F.col(score_col).isNotNull()).select(
         cents.alias("__s"), label.cast("int").alias("__y")
     )
@@ -2588,7 +2574,7 @@ def brier_decomposition(
     if num_bins < 2:
         raise ValueError("brier_decomposition: num_bins must be >= 2")
     d38 = "decimal(38,0)"
-    pm = micro(F.col(prob_col).cast("double"))
+    pm = to_fixed(F.col(prob_col).cast("double"), 6)
     staged = df.where(
         F.col(prob_col).isNotNull() & F.col(label_col).isNotNull()
     ).select(
@@ -2604,7 +2590,7 @@ def brier_decomposition(
         F.sum("__pm").cast(d38).alias("__sp"),
         F.sum(
             F.col("__pm").cast(d38) * F.col("__pm").cast(d38)
-        ).cast(d38).alias("__spp"),
+        ).alias("__spp"),
         F.sum("__y").cast("bigint").alias("__sy"),
         F.sum(F.col("__pm") * F.col("__y")).cast(d38).alias("__spy"),
     )
@@ -2619,43 +2605,42 @@ def brier_decomposition(
         "__spy",
         (nb * (pbar - obar_b) * (pbar - obar_b)).alias("__reln"),
         (
-            F.col("__spp").cast("double") / F.lit(1e12)
+            from_fixed(F.col("__spp"), 12)
             - F.lit(2.0)
             * F.col("__spy").cast("double")
             / F.lit(1e6)
             + F.col("__sy").cast("double")
         ).alias("__brin"),
         (
-            F.col("__spp").cast("double") / F.lit(1e12)
+            from_fixed(F.col("__spp"), 12)
             - nb * pbar * pbar
         ).alias("__wbvn"),
         (
-            F.col("__spy").cast("double") / F.lit(1e6)
+            from_fixed(F.col("__spy"), 6)
             - nb * pbar * obar_b
         ).alias("__wbcn"),
         obar_b.alias("__ob"),
     )
-    nano = lambda c: F.round(c * F.lit(1e9), 0).cast(  # noqa: E731
-        "decimal(38,0)"
-    )
     tot = cells.select(
         "__n",
         "__sy",
-        nano(F.col("__reln")).alias("__reln"),
-        nano(F.col("__brin")).alias("__brin"),
-        nano(F.col("__wbvn")).alias("__wbvn"),
-        nano(F.col("__wbcn")).alias("__wbcn"),
-        nano(
-            F.col("__n").cast("double") * F.col("__ob") * F.col("__ob")
+        to_fixed(F.col("__reln"), 9, wide=True).alias("__reln"),
+        to_fixed(F.col("__brin"), 9, wide=True).alias("__brin"),
+        to_fixed(F.col("__wbvn"), 9, wide=True).alias("__wbvn"),
+        to_fixed(F.col("__wbcn"), 9, wide=True).alias("__wbcn"),
+        to_fixed(
+            F.col("__n").cast("double") * F.col("__ob") * F.col("__ob"),
+            9,
+            wide=True,
         ).alias("__so2n"),
     ).agg(
         F.sum("__n").cast("bigint").alias("n"),
         F.sum("__sy").cast("bigint").alias("__ty"),
-        (F.sum("__reln").cast("double") / F.lit(1e9)).alias("__rel"),
-        (F.sum("__brin").cast("double") / F.lit(1e9)).alias("__bri"),
-        (F.sum("__wbvn").cast("double") / F.lit(1e9)).alias("__wbv"),
-        (F.sum("__wbcn").cast("double") / F.lit(1e9)).alias("__wbc"),
-        (F.sum("__so2n").cast("double") / F.lit(1e9)).alias("__so2"),
+        from_fixed(F.sum("__reln"), 9).alias("__rel"),
+        from_fixed(F.sum("__brin"), 9).alias("__bri"),
+        from_fixed(F.sum("__wbvn"), 9).alias("__wbv"),
+        from_fixed(F.sum("__wbcn"), 9).alias("__wbc"),
+        from_fixed(F.sum("__so2n"), 9).alias("__so2"),
     )
     n = F.col("n").cast("double")
     obar = F.col("__ty").cast("double") / n
@@ -3225,7 +3210,7 @@ def split_conformal(
     Returns one row ``(n_train, n_cal, n_test, q_half_width_cents,
     coverage)``.
     """
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    cents = to_fixed(F.col(value_col).cast("double"), 2)
     base = (
         df.where(
             F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
@@ -3688,7 +3673,7 @@ def mann_whitney_u(
     Returns one row ``(n1, n2, u1, z, cliffs_delta)`` — z and delta
     NULL when a group is empty or the variance is 0 (all values tied).
     """
-    y = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    y = to_fixed(F.col(value_col).cast("double"), 2)
     base = df.where(
         F.col(value_col).isNotNull()
         & F.col(group_col).isin([g1, g2])
@@ -3722,12 +3707,10 @@ def mann_whitney_u(
     agg = lv2.agg(
         F.sum("__c1").cast("bigint").alias("n1"),
         F.sum("__c2").cast("bigint").alias("n2"),
-        F.sum(c1d * F.col("__b2").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__w"),
-        F.sum(c2d * F.col("__b1").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__l"),
-        F.sum(c1d * c2d).cast("decimal(38,0)").alias("__t"),
-        F.sum(td * td * td - td).cast("decimal(38,0)").alias("__tt"),
+        F.sum(c1d * F.col("__b2").cast("decimal(38,0)")).alias("__w"),
+        F.sum(c2d * F.col("__b1").cast("decimal(38,0)")).alias("__l"),
+        F.sum(c1d * c2d).alias("__t"),
+        F.sum(td * td * td - td).alias("__tt"),
     )
     n1, n2 = F.col("n1").cast("double"), F.col("n2").cast("double")
     nn = n1 + n2
@@ -3857,12 +3840,10 @@ def mann_whitney_by_group(
     agg = lv2.groupBy("__g").agg(
         F.sum("__c1").cast("bigint").alias("n_a"),
         F.sum("__c2").cast("bigint").alias("n_b"),
-        F.sum(c1d * F.col("__below___c2").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__w"),
-        F.sum(c2d * F.col("__below___c1").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__l"),
-        F.sum(c1d * c2d).cast("decimal(38,0)").alias("__t"),
-        F.sum(td * td * td - td).cast("decimal(38,0)").alias("__tt"),
+        F.sum(c1d * F.col("__below___c2").cast("decimal(38,0)")).alias("__w"),
+        F.sum(c2d * F.col("__below___c1").cast("decimal(38,0)")).alias("__l"),
+        F.sum(c1d * c2d).alias("__t"),
+        F.sum(td * td * td - td).alias("__tt"),
     )
     n1, n2 = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     nn = n1 + n2
@@ -3991,10 +3972,9 @@ def wilcoxon_signed_rank(
     with a single level still has positive variance unless n = 0, but
     the guard mirrors the twin exactly).
     """
-    d = (
-        F.round(F.col(x_col).cast("double") * 100, 0)
-        - F.round(F.col(y_col).cast("double") * 100, 0)
-    ).cast("bigint")
+    d = to_fixed(F.col(x_col).cast("double"), 2) - to_fixed(
+        F.col(y_col).cast("double"), 2
+    )
     base = (
         df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
         .select(d.alias("__d"))
@@ -4022,8 +4002,8 @@ def wilcoxon_signed_rank(
             * (
                 F.lit(2) * F.col("__below___t") + F.col("__t") + F.lit(1)
             ).cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__w2"),
-        F.sum(td * td * td - td).cast("decimal(38,0)").alias("__tt"),
+        ).alias("__w2"),
+        F.sum(td * td * td - td).alias("__tt"),
     )
     nn = F.col("n").cast("double")
     wp = F.col("__w2").cast("double") / F.lit(2.0)
@@ -4121,9 +4101,7 @@ def friedman_test(
     ).select(
         F.col(subject_col).alias("__s"),
         F.col(treatment_col).alias("__tr"),
-        F.round(F.col(value_col).cast("double") * 100, 0)
-        .cast("bigint")
-        .alias("__y"),
+        to_fixed(F.col(value_col).cast("double"), 2).alias("__y"),
     )
     kdf = base.agg(
         F.countDistinct("__tr").cast("bigint").alias("__k")
@@ -4151,7 +4129,7 @@ def friedman_test(
         F.sum(
             F.col("__r2").cast("decimal(38,0)")
             * F.col("__r2").cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__q"),
+        ).alias("__q"),
         F.count(F.lit(1)).cast("bigint").alias("__n"),
     )
     agg = byt.agg(
@@ -4160,9 +4138,9 @@ def friedman_test(
         F.sum(
             F.col("__rj2").cast("decimal(38,0)")
             * F.col("__rj2").cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__sj"),
+        ).alias("__sj"),
         F.sum("__rj2").cast("bigint").alias("__st"),
-        F.sum("__q").cast("decimal(38,0)").alias("__a4"),
+        F.sum("__q").alias("__a4"),
     )
     kk = F.col("k").cast("double")
     nn = F.col("n").cast("double")
@@ -4265,7 +4243,7 @@ def brown_forsythe(
     Returns one row ``(k, n, f_stat)`` — NULL F when k < 2, N <= k, or
     within-group deviation SS is 0.
     """
-    y = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    y = to_fixed(F.col(value_col).cast("double"), 2)
     base = df.where(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(F.col(group_col).alias("__g"), y.alias("__y"))
@@ -4302,22 +4280,23 @@ def brown_forsythe(
         F.sum(
             F.col("__z").cast("decimal(38,0)")
             * F.col("__z").cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__q"),
+        ).alias("__q"),
     )
     agg = g.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("__n").cast("bigint").alias("n"),
         F.sum("__s").cast("bigint").alias("__st"),
-        F.sum("__q").cast("decimal(38,0)").alias("__qt"),
+        F.sum("__q").alias("__qt"),
         F.sum(
-            F.round(
+            to_fixed(
                 F.col("__s").cast("double") * F.col("__s").cast("double")
-                / F.col("__n").cast("double") * F.lit(1e6),
-                0,
-            ).cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__sb6"),
+                / F.col("__n").cast("double"),
+                6,
+                wide=True,
+            )
+        ).alias("__sb6"),
     )
-    sb = F.col("__sb6").cast("double") / F.lit(1e6)
+    sb = from_fixed(F.col("__sb6"), 6)
     ssb = sb - (
         F.col("__st").cast("double") * F.col("__st").cast("double")
         / F.col("n").cast("double")
@@ -4415,7 +4394,7 @@ def anova_oneway(
     Returns one row ``(k, n, f_stat, eta_sq)`` — NULL F when k < 2,
     N <= k, or SSW = 0 (all groups constant).
     """
-    y = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    y = to_fixed(F.col(value_col).cast("double"), 2)
     g = (
         df.where(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
         .select(F.col(group_col).alias("__g"), y.alias("__y"))
@@ -4426,23 +4405,24 @@ def anova_oneway(
             F.sum(
                 F.col("__y").cast("decimal(38,0)")
                 * F.col("__y").cast("decimal(38,0)")
-            ).cast("decimal(38,0)").alias("__q"),
+            ).alias("__q"),
         )
     )
     agg = g.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("__n").cast("bigint").alias("n"),
         F.sum("__s").cast("bigint").alias("__st"),
-        F.sum("__q").cast("decimal(38,0)").alias("__qt"),
+        F.sum("__q").alias("__qt"),
         F.sum(
-            F.round(
+            to_fixed(
                 F.col("__s").cast("double") * F.col("__s").cast("double")
-                / F.col("__n").cast("double") * F.lit(1e6),
-                0,
-            ).cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__sb6"),
+                / F.col("__n").cast("double"),
+                6,
+                wide=True,
+            )
+        ).alias("__sb6"),
     )
-    sb = F.col("__sb6").cast("double") / F.lit(1e6)
+    sb = from_fixed(F.col("__sb6"), 6)
     ssb = sb - (
         F.col("__st").cast("double") * F.col("__st").cast("double")
         / F.col("n").cast("double")
@@ -4544,7 +4524,7 @@ def bartlett_test(
 
     Returns one row ``(k, n, chi2)`` over the INCLUDED groups.
     """
-    y = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    y = to_fixed(F.col(value_col).cast("double"), 2)
     g = (
         df.where(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
         .select(F.col(group_col).alias("__g"), y.alias("__y"))
@@ -4555,7 +4535,7 @@ def bartlett_test(
             F.sum(
                 F.col("__y").cast("decimal(38,0)")
                 * F.col("__y").cast("decimal(38,0)")
-            ).cast("decimal(38,0)").alias("__q"),
+            ).alias("__q"),
         )
         .where(F.col("__n") >= 2)
     )
@@ -4568,26 +4548,23 @@ def bartlett_test(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("__n").cast("bigint").alias("n"),
         F.sum(
-            F.round((nd - F.lit(1.0)) * v * F.lit(1e6), 0)
-            .cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__sw6"),
+            to_fixed((nd - F.lit(1.0)) * v, 6, wide=True)
+        ).alias("__sw6"),
         F.sum(
             F.when(
                 v > 0,
-                F.round(
-                    (nd - F.lit(1.0)) * F.log(v) * F.lit(1e6), 0
-                ).cast("decimal(38,0)"),
+                to_fixed((nd - F.lit(1.0)) * F.log(v), 6, wide=True),
             )
-        ).cast("decimal(38,0)").alias("__sl6"),
+        ).alias("__sl6"),
         F.min(v).alias("__vmin"),
         F.sum(
             F.round(F.lit(1e12) / (nd - F.lit(1.0)), 0).cast("bigint")
         ).cast("bigint").alias("__ih12"),
     )
     kk, nn = F.col("k").cast("double"), F.col("n").cast("double")
-    sp2 = F.col("__sw6").cast("double") / F.lit(1e6) / (nn - kk)
+    sp2 = from_fixed(F.col("__sw6"), 6) / (nn - kk)
     c = F.lit(1.0) + (
-        F.col("__ih12").cast("double") / F.lit(1e12)
+        from_fixed(F.col("__ih12"), 12)
         - F.lit(1.0) / (nn - kk)
     ) / (F.lit(3.0) * (kk - F.lit(1.0)))
     return agg.select(
@@ -4598,7 +4575,7 @@ def bartlett_test(
             round_to(
                 (
                     (nn - kk) * F.log(sp2)
-                    - F.col("__sl6").cast("double") / F.lit(1e6)
+                    - from_fixed(F.col("__sl6"), 6)
                 )
                 / c,
                 6,
@@ -4713,7 +4690,7 @@ def fleiss_kappa(
     )
     cj = F.col("__cj").cast("decimal(38,0)")
     mg = cat.agg(
-        F.sum(cj * cj).cast("decimal(38,0)").alias("__m2"),
+        F.sum(cj * cj).alias("__m2"),
         F.count(F.lit(1)).cast("bigint").alias("n_categories"),
     )
     agg = sq.crossJoin(F.broadcast(uq)).crossJoin(F.broadcast(mg))
@@ -4825,12 +4802,9 @@ def cochran_armitage_trend(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("__n").cast("bigint").alias("n"),
         F.sum("__rr").cast("bigint").alias("n_success"),
-        F.sum(sd * F.col("__rr").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__sr"),
-        F.sum(sd * F.col("__n").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__sn"),
-        F.sum(sd * sd * F.col("__n").cast("decimal(38,0)"))
-        .cast("decimal(38,0)").alias("__ssn"),
+        F.sum(sd * F.col("__rr").cast("decimal(38,0)")).alias("__sr"),
+        F.sum(sd * F.col("__n").cast("decimal(38,0)")).alias("__sn"),
+        F.sum(sd * sd * F.col("__n").cast("decimal(38,0)")).alias("__ssn"),
     )
     nn = F.col("n").cast("double")
     pbar = F.col("n_success").cast("double") / nn
@@ -4944,8 +4918,7 @@ def mrr_at_k(
         F.when(
             F.col("n_queries") > 0,
             round_to(
-                F.col("__mu").cast("double")
-                / F.lit(1e6)
+                from_fixed(F.col("__mu"), 6)
                 / F.col("n_queries").cast("double"),
                 6,
             ),

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
-from ..functions.rounding import micro, round_half_away, round_to
+from ..functions.rounding import from_fixed, round_half_away, round_to, to_fixed
 from ..functions.vectors import cosine, cosine_sql, lit_doubles
 from ..io import rebalance_undersplit
 from ..staging import stage
@@ -491,9 +491,8 @@ def cluster_quality(
     ).otherwise(F.lit(0.0))
     staged = pts.select(
         "cluster",
-        micro(s).alias("__sm"),
-        micro(F.col("__a"))
-        .alias("__am"),
+        to_fixed(s, 6).alias("__sm"),
+        to_fixed(F.col("__a"), 6).alias("__am"),
     )
     # the k-row frame feeds the sj broadcast, the rij main side and the
     # final join — checkpoint it so the full-corpus distance pass runs
@@ -587,10 +586,7 @@ def cluster_quality(
             6,
         ).alias("silhouette"),
         round_to(
-            F.avg(
-                micro(F.col("__dbi"))
-            ).over(tot)
-            / F.lit(1e6),
+            from_fixed(F.avg(to_fixed(F.col("__dbi"), 6)).over(tot), 6),
             6,
         ).alias("db_index"),
     )

@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
-from ..functions.rounding import micro, round_half_away, round_to
+from ..functions.rounding import (
+    SCALE,
+    from_fixed,
+    round_half_away,
+    round_to,
+    to_fixed,
+)
 from ..io import rebalance_undersplit
 from ..staging import stage, stage_unbounded
 from .classifier import (
@@ -715,7 +721,7 @@ def _pairwise_attribution(
         F.col(user_col).alias("__u"),
         F.col(purchase_id_col).alias("__pid"),
         F.col(purchase_ts_col).alias("__pts"),
-        micro(F.col(value_col).cast("double")).alias("__vm"),
+        to_fixed(F.col(value_col).cast("double"), 6).alias("__vm"),
     )
     t = touches.select(
         F.col(user_col).alias("__u"),
@@ -750,7 +756,7 @@ def _pairwise_attribution(
         .agg(
             F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
             F.count("__tts").cast("bigint").alias("n_touches"),
-            round_to(F.sum("__cr") / F.lit(1e6), 6).alias("credit"),
+            round_to(from_fixed(F.sum("__cr"), 6), 6).alias("credit"),
         )
         .orderBy("channel")
     )
@@ -1170,7 +1176,7 @@ def _scalable_attribution_frames(
         F.col(user_col).alias("__u"),
         F.col(purchase_id_col).alias("__pid"),
         F.unix_micros(F.col(purchase_ts_col)).alias("__ptu"),
-        micro(F.col(value_col).cast("double")).alias("__vm"),
+        to_fixed(F.col(value_col).cast("double"), 6).alias("__vm"),
     )
     t = touches.where(F.col(user_col).isNotNull()).select(
         F.col(user_col).alias("__u"),
@@ -1239,7 +1245,7 @@ def _channel_rollup(*frames: "DataFrame") -> "DataFrame":
         .agg(
             F.countDistinct("__pid").cast("bigint").alias("n_conversions"),
             F.sum("__touches").cast("bigint").alias("n_touches"),
-            round_to(F.sum("__cru") / F.lit(1e6), 6).alias("credit"),
+            round_to(from_fixed(F.sum("__cru"), 6), 6).alias("credit"),
         )
         .orderBy("channel")
     )
@@ -1611,7 +1617,7 @@ def cuped_ab_test(
                     F.when(
                         (F.col(type_col) == metric_event)
                         & (F.col(ts_col) < F.lit(split_ts)),
-                        F.round(F.col(value_col) * 100, 0).cast("long"),
+                        to_fixed(F.col(value_col), 2),
                     )
                 ),
                 F.lit(0),
@@ -1621,7 +1627,7 @@ def cuped_ab_test(
                     F.when(
                         (F.col(type_col) == metric_event)
                         & (F.col(ts_col) >= F.lit(split_ts)),
-                        F.round(F.col(value_col) * 100, 0).cast("long"),
+                        to_fixed(F.col(value_col), 2),
                     )
                 ),
                 F.lit(0),
@@ -1645,16 +1651,16 @@ def cuped_ab_test(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum(xd).cast("decimal(38,0)").alias("__sx"),
         F.sum(yd).cast("decimal(38,0)").alias("__sy"),
-        F.sum(xd * xd).cast("decimal(38,0)").alias("__sxx"),
-        F.sum(xd * yd).cast("decimal(38,0)").alias("__sxy"),
-        F.sum(yd * yd).cast("decimal(38,0)").alias("__syy"),
+        F.sum(xd * xd).alias("__sxx"),
+        F.sum(xd * yd).alias("__sxy"),
+        F.sum(yd * yd).alias("__syy"),
     )
     g = moments.agg(
         F.sum("__n").cast("bigint").alias("__gn"),
-        F.sum("__sx").cast("decimal(38,0)").alias("__gsx"),
-        F.sum("__sy").cast("decimal(38,0)").alias("__gsy"),
-        F.sum("__sxx").cast("decimal(38,0)").alias("__gsxx"),
-        F.sum("__sxy").cast("decimal(38,0)").alias("__gsxy"),
+        F.sum("__sx").alias("__gsx"),
+        F.sum("__sy").alias("__gsy"),
+        F.sum("__sxx").alias("__gsxx"),
+        F.sum("__sxy").alias("__gsxy"),
     )
     j = moments.crossJoin(F.broadcast(g))
     gn = F.col("__gn").cast("double")
@@ -1844,7 +1850,7 @@ def diff_in_diff(
                     F.when(
                         (F.col(type_col) == metric_event)
                         & (F.col(ts_col) < F.lit(split_ts)),
-                        F.round(F.col(value_col) * 100, 0).cast("long"),
+                        to_fixed(F.col(value_col), 2),
                     )
                 ),
                 F.lit(0),
@@ -1854,7 +1860,7 @@ def diff_in_diff(
                     F.when(
                         (F.col(type_col) == metric_event)
                         & (F.col(ts_col) >= F.lit(split_ts)),
-                        F.round(F.col(value_col) * 100, 0).cast("long"),
+                        to_fixed(F.col(value_col), 2),
                     )
                 ),
                 F.lit(0),
@@ -1878,8 +1884,8 @@ def diff_in_diff(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum(xd).cast("decimal(38,0)").alias("__sx"),
         F.sum(yd).cast("decimal(38,0)").alias("__sy"),
-        F.sum(xd * xd).cast("decimal(38,0)").alias("__sxx"),
-        F.sum(yd * yd).cast("decimal(38,0)").alias("__syy"),
+        F.sum(xd * xd).alias("__sxx"),
+        F.sum(yd * yd).alias("__syy"),
     )
     n = F.col("__n").cast("double")
     sx = F.col("__sx").cast("double")
@@ -2063,7 +2069,7 @@ def rfm_segments(
             F.max(F.col(ts_col)).alias("__lp"),
             F.count(F.lit(1)).cast("bigint").alias("freq"),
             F.sum(
-                F.round(F.col(value_col) * 100, 0).cast("long")
+                to_fixed(F.col(value_col), 2)
             )
             .cast("bigint")
             .alias("mon"),
@@ -2614,9 +2620,7 @@ def ratio_metric_delta(
                 F.sum(
                     F.when(
                         F.col(type_col) == num_event,
-                        F.round(F.col(num_value_col) * 100, 0).cast(
-                            "long"
-                        ),
+                        to_fixed(F.col(num_value_col), 2),
                     )
                 ),
                 F.lit(0),
@@ -2648,9 +2652,9 @@ def ratio_metric_delta(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum(xd).cast("decimal(38,0)").alias("__sx"),
         F.sum(yd).cast("decimal(38,0)").alias("__sy"),
-        F.sum(xd * xd).cast("decimal(38,0)").alias("__sxx"),
-        F.sum(xd * yd).cast("decimal(38,0)").alias("__sxy"),
-        F.sum(yd * yd).cast("decimal(38,0)").alias("__syy"),
+        F.sum(xd * xd).alias("__sxx"),
+        F.sum(xd * yd).alias("__sxy"),
+        F.sum(yd * yd).alias("__syy"),
     )
     n = F.col("__n").cast("double")
     sx = F.col("__sx").cast("double")
@@ -2852,30 +2856,32 @@ def cmh_test(
     m1 = F.col("__a") + F.col("__c")
     m0 = F.col("__b") + F.col("__d")
     n = n1 + n0
-    nano = lambda c: F.round(c * F.lit(1e9), 0).cast("bigint")  # noqa: E731
     terms = per.select(
         "__a",
         F.when(
-            n >= 2, nano((n1 * m1).cast("double") / n.cast("double"))
+            n >= 2, to_fixed((n1 * m1).cast("double") / n.cast("double"), 9)
         )
         .otherwise(F.lit(0))
         .alias("__e"),
         F.when(
             n >= 2,
-            nano(
+            to_fixed(
                 (n1 * n0 * m1 * m0).cast("double")
-                / (n * n * (n - 1)).cast("double")
+                / (n * n * (n - 1)).cast("double"),
+                9,
             ),
         )
         .otherwise(F.lit(0))
         .alias("__v"),
-        nano(
+        to_fixed(
             (F.col("__a") * F.col("__d")).cast("double")
-            / n.cast("double")
+            / n.cast("double"),
+            9,
         ).alias("__ad"),
-        nano(
+        to_fixed(
             (F.col("__b") * F.col("__c")).cast("double")
-            / n.cast("double")
+            / n.cast("double"),
+            9,
         ).alias("__bc"),
     )
     agg = terms.agg(
@@ -3005,9 +3011,7 @@ def _propensity_frame(df, treat, outcome_col, x1, x2, iters, lr, clip):
         x1d.alias("x1"),
         x2d.alias("x2"),
         (x1d * x2d).alias("x3"),
-        F.round(F.col(outcome_col).cast("double") * 100, 0)
-        .cast("bigint")
-        .alias("__oc"),
+        to_fixed(F.col(outcome_col).cast("double"), 2).alias("__oc"),
     ).where(
         F.col("y").isNotNull()
         & F.col("x1").isNotNull()
@@ -3141,10 +3145,10 @@ def ipw_ate(
     staged = feat.select(
         t.alias("__t"),
         F.col("__oc"),
-        micro(yd * t / e).alias("__wy1"),
-        micro(t / e).alias("__w1"),
-        micro(yd * (F.lit(1.0) - t) / (F.lit(1.0) - e)).alias("__wy0"),
-        micro((F.lit(1.0) - t) / (F.lit(1.0) - e)).alias("__w0"),
+        to_fixed(yd * t / e, 6).alias("__wy1"),
+        to_fixed(t / e, 6).alias("__w1"),
+        to_fixed(yd * (F.lit(1.0) - t) / (F.lit(1.0) - e), 6).alias("__wy0"),
+        to_fixed((F.lit(1.0) - t) / (F.lit(1.0) - e), 6).alias("__w0"),
     )
     arms, naive = _arm_fold("__t")
     # micro terms reach ~1e15/row (cents / clipped propensity * 1e6):
@@ -3152,9 +3156,7 @@ def ipw_ate(
     # near 1e4 rows of extreme weights (caught by the sf0.1 bench,
     # invisible at sf0.01)
     agg = staged.agg(*arms, *[
-        F.sum(F.col(f"__{k}").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias(f"__s{k}")
+        F.sum(F.col(f"__{k}").cast("decimal(38,0)")).alias(f"__s{k}")
         for k in ("wy1", "w1", "wy0", "w0")
     ])
     ate = (
@@ -3272,7 +3274,7 @@ def propensity_matching(
     scored = feat.select(
         "y",
         "__oc",
-        micro(e).alias("__em"),
+        to_fixed(e, 6).alias("__em"),
     )
     levels = scored.groupBy("__em", "y").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
@@ -3342,16 +3344,15 @@ def propensity_matching(
             "__c",
             F.when(F.col("__d") <= F.lit(cal_micro), F.col("__c")),
         )
-    contrib = F.round(
+    contrib = to_fixed(
         (
             F.col("__st").cast("double") / F.col("__nt").cast("double")
             - F.col("__c.sc").cast("double")
             / F.col("__c.nc").cast("double")
         )
-        * F.col("__nt").cast("double")
-        * F.lit(1e4),
-        0,
-    ).cast("bigint")
+        * F.col("__nt").cast("double"),
+        4,
+    )
     folds = picked.agg(
         F.sum(
             F.when(F.col("__c").isNotNull(), F.col("__nt")).otherwise(
@@ -3523,12 +3524,12 @@ def aipw_ate(
     # closed-form doubles are bit-identical unrounded in both engines
     mfeat = feat.select(
         "y", "x1", "x2", "x3", "__oc",
-        micro(F.col("x1")).alias("__x1m"),
-        micro(F.col("x2")).alias("__x2m"),
+        to_fixed(F.col("x1"), 6).alias("__x1m"),
+        to_fixed(F.col("x2"), 6).alias("__x2m"),
     )
 
     def d38(c):
-        return F.sum(c.cast("decimal(38,0)")).cast("decimal(38,0)")
+        return F.sum(c.cast("decimal(38,0)"))
 
     def arm(tv: int, suf: str):
         cond = F.col("y") == float(tv)
@@ -3569,17 +3570,14 @@ def aipw_ate(
     )
     scored = mfeat.crossJoin(F.broadcast(models)).select(
         "n", "n_1", "sy_1", "n_0", "sy_0",
-        micro(psi).alias("__psi"),
+        to_fixed(psi, 6).alias("__psi"),
     )
     agg = scored.groupBy("n", "n_1", "sy_1", "n_0", "sy_0").agg(
-        F.sum(F.col("__psi").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("__spsi"),
+        F.sum(F.col("__psi").cast("decimal(38,0)")).alias("__spsi"),
     )
     n1, n0 = F.col("n_1"), F.col("n_0")
     ate = (
-        F.col("__spsi").cast("double")
-        / F.lit(1e6)
+        from_fixed(F.col("__spsi"), 6)
         / F.col("n").cast("double")
         / F.lit(100.0)
     )
@@ -3852,9 +3850,7 @@ def cohort_ltv_curve(
             F.date_trunc(period, F.col(ts_col))
             .cast("date")
             .alias("__bucket"),
-            F.round(F.col(value_col).cast("double") * 100, 0)
-            .cast("bigint")
-            .alias("__c"),
+            to_fixed(F.col(value_col).cast("double"), 2).alias("__c"),
         )
         .groupBy("__u", "__bucket")
         .agg(F.sum("__c").alias("__c"))
@@ -3906,7 +3902,7 @@ def cohort_ltv_curve(
             "cohort",
             "period_offset",
             "cohort_size",
-            round_to(F.col("__pc").cast("double") / F.lit(100.0), 6).alias(
+            round_to(from_fixed(F.col("__pc"), 2), 6).alias(
                 "period_revenue"
             ),
             round_to(
@@ -4092,8 +4088,6 @@ def _markov_paths(
     return trans.withColumn("out", F.sum("cnt").over(w_out))
 
 
-_MARKOV_NANO = 1_000_000_000
-
 
 def markov_attribution(
     df: DataFrame,
@@ -4154,7 +4148,7 @@ def markov_attribution(
                     if b == removed:
                         val = 0
                     elif b == "CONV":
-                        val = _MARKOV_NANO
+                        val = SCALE[9]
                     elif b == "DROP":
                         val = 0
                     else:
@@ -4199,7 +4193,7 @@ def markov_attribution_sql(
         SELECT v.var, t.src AS state,
                CAST(sum(CAST(t.cnt AS HUGEINT) * (CASE
                        WHEN t.dst = v.var THEN 0
-                       WHEN t.dst = 'CONV' THEN {_MARKOV_NANO}
+                       WHEN t.dst = 'CONV' THEN {SCALE[9]}
                        WHEN t.dst = 'DROP' THEN 0
                        ELSE coalesce(pv.val, 0) END))
                     // min(t.out) AS BIGINT) AS val
@@ -4505,9 +4499,6 @@ def regression_discontinuity(
     intercept_left, intercept_right, effect)``, round-6.
     """
     d38 = "decimal(38,0)"
-    cents = lambda c: F.round(  # noqa: E731
-        c.cast("double") * 100, 0
-    ).cast("bigint")
     r = F.col(running_col).cast("double")
     staged = df.where(
         (r >= F.lit(cutoff - bandwidth))
@@ -4517,18 +4508,20 @@ def regression_discontinuity(
         F.when(r >= F.lit(cutoff), F.lit(1))
         .otherwise(F.lit(0))
         .alias("__side"),
-        (cents(F.col(running_col)) - F.lit(int(round_half_away(cutoff * 100))))
-        .alias("__x"),
-        cents(F.col(outcome_col)).alias("__y"),
+        (
+            to_fixed(F.col(running_col).cast("double"), 2)
+            - F.lit(int(round_half_away(cutoff * 100)))
+        ).alias("__x"),
+        to_fixed(F.col(outcome_col).cast("double"), 2).alias("__y"),
     )
     x = F.col("__x").cast(d38)
     y = F.col("__y").cast(d38)
     per = staged.groupBy("__side").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
-        F.sum(x).cast(d38).alias("__sx"),
-        F.sum(x * x).cast(d38).alias("__sxx"),
-        F.sum(y).cast(d38).alias("__sy"),
-        F.sum(x * y).cast(d38).alias("__sxy"),
+        F.sum(x).alias("__sx"),
+        F.sum(x * x).alias("__sxx"),
+        F.sum(y).alias("__sy"),
+        F.sum(x * y).alias("__sxy"),
     )
     n = F.col("__n").cast("double")
     sx = F.col("__sx").cast("double")
@@ -4669,9 +4662,7 @@ def quantile_treatment_effects(
     Returns ``(decile, n_treat, n_ctrl, q_treat, q_ctrl, qte)``
     in cents, ordered by decile; arms with no rows yield no output.
     """
-    cents = F.round(F.col(outcome_col).cast("double") * 100, 0).cast(
-        "bigint"
-    )
+    cents = to_fixed(F.col(outcome_col).cast("double"), 2)
     staged = df.where(F.col(outcome_col).isNotNull()).select(
         treat.cast("int").alias("__t"), cents.alias("__c")
     )
@@ -5058,9 +5049,7 @@ def theil_index(
     theil_within)``, round-6; NULL indices when no positive rows.
     """
     d38 = "decimal(38,0)"
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast(
-        "bigint"
-    )
+    cents = to_fixed(F.col(value_col).cast("double"), 2)
     staged = df.select(
         F.col(group_col).alias("__g"), cents.alias("__x")
     )
@@ -5068,24 +5057,24 @@ def theil_index(
         F.col("__x").isNull() | (F.col("__x") <= 0)
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_excluded"))
     pos = staged.where(F.col("__x") > 0)
-    xlx = F.round(
+    xlx = to_fixed(
         F.col("__x").cast("double")
-        * F.log(F.col("__x").cast("double"))
-        * F.lit(1e12),
-        0,
-    ).cast(d38)
+        * F.log(F.col("__x").cast("double")),
+        12,
+        wide=True,
+    )
     # groups-bounded; feeds the total fold AND the decomposition join —
     # checkpoint so the fact-side agg runs once
     per = stage(pos.groupBy("__g").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum("__x").cast(d38).alias("__sx"),
-        F.sum(xlx).cast(d38).alias("__sxl"),
+        F.sum(xlx).alias("__sxl"),
     ))
     tot = per.agg(
         F.sum("__n").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-        F.sum("__sx").cast(d38).alias("__tx"),
-        F.sum("__sxl").cast(d38).alias("__txl"),
+        F.sum("__sx").alias("__tx"),
+        F.sum("__sxl").alias("__txl"),
     )
     # T = [sum x ln x]/X - ln(X/N); T_g likewise per group
     j = per.crossJoin(F.broadcast(tot))
@@ -5096,25 +5085,24 @@ def theil_index(
     mu_g = xg / ng
     mu = xt / nt
     t_g = (
-        F.col("__sxl").cast("double") / F.lit(1e12) / xg
+        from_fixed(F.col("__sxl"), 12) / xg
         - F.log(mu_g)
     )
     betw_term = (xg / xt) * F.log(mu_g / mu)
     with_term = (xg / xt) * t_g
-    nano = lambda c: F.round(c * F.lit(1e9), 0).cast(d38)  # noqa: E731
     folds = j.select(
         "n",
         "n_groups",
         "__tx",
         "__txl",
-        nano(betw_term).alias("__bt"),
-        nano(with_term).alias("__wt"),
+        to_fixed(betw_term, 9, wide=True).alias("__bt"),
+        to_fixed(with_term, 9, wide=True).alias("__wt"),
     ).groupBy("n", "n_groups", "__tx", "__txl").agg(
-        (F.sum("__bt").cast("double") / F.lit(1e9)).alias("__betw"),
-        (F.sum("__wt").cast("double") / F.lit(1e9)).alias("__with"),
+        from_fixed(F.sum("__bt"), 9).alias("__betw"),
+        from_fixed(F.sum("__wt"), 9).alias("__with"),
     )
     t_all = (
-        F.col("__txl").cast("double") / F.lit(1e12)
+        from_fixed(F.col("__txl"), 12)
         / F.col("__tx").cast("double")
         - F.log(
             F.col("__tx").cast("double") / F.col("n").cast("double")
@@ -5232,7 +5220,7 @@ def tost_equivalence(
         h60(F.concat(F.lit(f"{salt}|"), F.col(user_col).cast("string")))
         % 2
     ).alias("__arm")
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    cents = to_fixed(F.col(value_col).cast("double"), 2)
     per_user = (
         df.where(F.col(user_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(F.col(user_col).alias("__u"))

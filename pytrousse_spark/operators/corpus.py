@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
-from ..functions.rounding import micro, round_to
+from ..functions.rounding import round_to, to_fixed
 from ..staging import stage, stage_unbounded
 from . import dedup as dd
 
@@ -266,21 +266,17 @@ def heaps_law_fit(
         )
         .where((F.col("__n") > 0) & (F.col("__v") > 0))
     )
-    x = F.round(F.log(F.col("__n").cast("double")) * F.lit(1e9), 0).cast(
-        "decimal(38,0)"
-    )
-    y = F.round(F.log(F.col("__v").cast("double")) * F.lit(1e9), 0).cast(
-        "decimal(38,0)"
-    )
+    x = to_fixed(F.log(F.col("__n").cast("double")), 9, wide=True)
+    y = to_fixed(F.log(F.col("__v").cast("double")), 9, wide=True)
     fold = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("__c"),
         F.max("__n").cast("bigint").alias("__ntot"),
         F.max("__v").cast("bigint").alias("__vtot"),
-        F.sum(x).cast("decimal(38,0)").alias("__sx"),
-        F.sum(y).cast("decimal(38,0)").alias("__sy"),
-        F.sum(x * y).cast("decimal(38,0)").alias("__sxy"),
-        F.sum(x * x).cast("decimal(38,0)").alias("__sxx"),
-        F.sum(y * y).cast("decimal(38,0)").alias("__syy"),
+        F.sum(x).alias("__sx"),
+        F.sum(y).alias("__sy"),
+        F.sum(x * y).alias("__sxy"),
+        F.sum(x * x).alias("__sxx"),
+        F.sum(y * y).alias("__syy"),
     )
     c = F.col("__c")
     dxx = (
@@ -465,7 +461,7 @@ def readability_census(
         F.col(group_col).alias("group"),
         F.when(
             n_words > 0,
-            micro(fre),
+            to_fixed(fre, 6),
         ).alias("__fm"),
     )
     scored = F.when(F.col("__fm").isNotNull(), 1).otherwise(0)

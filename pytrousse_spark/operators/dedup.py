@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60_sql, hash_expr
-from ..functions.rounding import micro, round_to
+from ..functions.rounding import from_fixed, round_to, to_fixed
 from ..functions.text import (
     fingerprint_from_shingles,
     shingles_from_tokens,
@@ -2035,9 +2035,6 @@ def lsh_parameter_plan(
         - F.pow(s, F.col("rows_per_band").cast("double")),
         F.col("bands").cast("double"),
     )
-    nano = lambda c: F.round(c * F.lit(1e9), 0).cast(  # noqa: E731
-        "bigint"
-    )
     # trapezoid weights: 1/2 at the ends, 1 inside; ds = 1/grid
     wgt = F.when(
         (F.col("__i") == 0) | (F.col("__i") == grid_points),
@@ -2046,16 +2043,18 @@ def lsh_parameter_plan(
     staged = cfg.crossJoin(F.broadcast(pts)).select(
         "bands",
         "rows_per_band",
-        nano(
+        to_fixed(
             F.when(s < F.lit(float(threshold)), prob * wgt).otherwise(
                 F.lit(0.0)
-            )
+            ),
+            9,
         ).alias("__fp"),
-        nano(
+        to_fixed(
             F.when(
                 s >= F.lit(float(threshold)),
                 (F.lit(1.0) - prob) * wgt,
-            ).otherwise(F.lit(0.0))
+            ).otherwise(F.lit(0.0)),
+            9,
         ).alias("__fn"),
     )
     per = staged.groupBy("bands", "rows_per_band").agg(
@@ -2063,8 +2062,8 @@ def lsh_parameter_plan(
         F.sum("__fn").cast("bigint").alias("__sfn"),
     )
     ds = 1.0 / grid_points
-    fp = F.col("__sfp").cast("double") / F.lit(1e9) * F.lit(ds)
-    fn = F.col("__sfn").cast("double") / F.lit(1e9) * F.lit(ds)
+    fp = from_fixed(F.col("__sfp"), 9) * F.lit(ds)
+    fn = from_fixed(F.col("__sfn"), 9) * F.lit(ds)
     cost_n = F.col("__sfp") + F.col("__sfn")
     wbest = Window.orderBy(
         F.col("__cost").asc(), F.col("bands").desc()
@@ -2089,7 +2088,7 @@ def lsh_parameter_plan(
         "s50",
         "fp_mass",
         "fn_mass",
-        round_to(F.col("__cost").cast("double") / F.lit(1e9) * F.lit(ds), 6).alias(
+        round_to(from_fixed(F.col("__cost"), 9) * F.lit(ds), 6).alias(
             "cost"
         ),
         (F.row_number().over(wbest) == 1).alias("is_best"),
@@ -2217,8 +2216,7 @@ def minhash_calibration(
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .select(
-            micro(F.col("jaccard"))
-            .alias("__je"),
+            to_fixed(F.col("jaccard"), 6).alias("__je"),
             (matches * F.lit(unit)).cast("bigint").alias("__es"),
         )
         .select(
@@ -2256,7 +2254,7 @@ def minhash_calibration(
             round_to(F.col("__sae").cast("double") / n / F.lit(1e6), 6).alias(
                 "mean_abs_err"
             ),
-            round_to(F.col("__mae").cast("double") / F.lit(1e6), 6).alias(
+            round_to(from_fixed(F.col("__mae"), 6), 6).alias(
                 "max_abs_err"
             ),
         )

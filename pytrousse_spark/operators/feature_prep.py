@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import round_to
+from ..functions.rounding import from_fixed, round_to, to_fixed
 
 __all__ = [
     "loo_target_encoding",
@@ -195,7 +195,7 @@ def woe_iv(
         "good",
         "bad",
         woe.alias("__woe"),
-        F.round(ivt * F.lit(1e9), 0).cast("bigint").alias("__ivn"),
+        to_fixed(ivt, 9).alias("__ivn"),
     )
     return with_terms.select(
         "category",
@@ -203,7 +203,7 @@ def woe_iv(
         "bad",
         round_to(F.col("__woe"), 6).alias("woe"),
         round_to(
-            F.sum("__ivn").over(tot).cast("double") / F.lit(1e9),
+            from_fixed(F.sum("__ivn").over(tot), 9),
             6,
         ).alias("iv"),
     )
@@ -446,12 +446,11 @@ def eb_rate_shrinkage(
         .where(F.col("trials") > 0)
         .withColumn(
             "__pn",
-            F.round(
+            to_fixed(
                 F.col("successes").cast("double")
-                / F.col("trials").cast("double")
-                * F.lit(1e9),
-                0,
-            ).cast("bigint"),
+                / F.col("trials").cast("double"),
+                9,
+            ),
         )
     )
     mom = per.agg(
@@ -461,14 +460,13 @@ def eb_rate_shrinkage(
             F.col("__pn").cast("decimal(38,0)")
             * F.col("__pn").cast("decimal(38,0)")
         )
-        .cast("decimal(38,0)")
         .alias("__spp"),
     )
     k = F.col("__k").cast("double")
-    m = F.col("__sp").cast("double") / F.lit(1e9) / k
+    m = from_fixed(F.col("__sp"), 9) / k
     # population variance of the nano rates: E[p^2] - m^2
     v = (
-        F.col("__spp").cast("double") / F.lit(1e18) / k
+        from_fixed(F.col("__spp"), 18) / k
         - m * m
     )
     c = m * (F.lit(1.0) - m) / v - F.lit(1.0)

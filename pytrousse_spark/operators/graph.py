@@ -29,7 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.rounding import MICRO, round_half_away, round_to
+from ..functions.rounding import (
+    SCALE,
+    from_fixed,
+    round_half_away,
+    round_to,
+    to_fixed,
+)
 from ..staging import stage
 from ._collect import _no_aqe, bounded_first
 
@@ -98,7 +104,7 @@ def pagerank(
     keep the plan short; built with AQE off, staging runs no job, so
     the call runs none and the whole chain runs in the caller's action.
     """
-    teleport = int(round_half_away((1.0 - damping) * MICRO))
+    teleport = int(round_half_away((1.0 - damping) * SCALE[6]))
     with _no_aqe(edges):
         e = _staged_by(_edge_frame(edges, src_col, dst_col), "src")
         nodes = (
@@ -111,7 +117,7 @@ def pagerank(
             nodes.join(deg.hint("shuffle_hash"), nodes["node"] == deg["src"], "left")
             .select("node", F.coalesce(F.col("out_deg"), F.lit(0)).alias("out_deg"))
         )
-        ranks = base.select("node", "out_deg", F.lit(MICRO).cast("bigint").alias("r"))
+        ranks = base.select("node", "out_deg", F.lit(SCALE[6]).cast("bigint").alias("r"))
         for _ in range(iters):
             # dangling nodes (out_deg 0) contribute nothing; excluding
             # them also keeps the division ANSI-safe
@@ -147,7 +153,7 @@ def pagerank_sql(
     MATERIALIZED (the q111 lesson: iteration k is referenced by k+1's
     join twice — src lookup and dst scan — and an inlined chain
     re-evaluates iteration 1 exponentially)."""
-    teleport = int(round_half_away((1.0 - damping) * MICRO))
+    teleport = int(round_half_away((1.0 - damping) * SCALE[6]))
     ctes = [
         f"e AS MATERIALIZED (SELECT {src_col} AS src, {dst_col} AS dst"
         f" FROM ({edges_subquery}))",
@@ -157,7 +163,7 @@ def pagerank_sql(
         " coalesce(d.out_deg, 0) AS out_deg FROM nodes n LEFT JOIN"
         " (SELECT src, CAST(count(*) AS BIGINT) AS out_deg FROM e GROUP BY src) d"
         " ON n.node = d.src)",
-        f"r0 AS MATERIALIZED (SELECT node, CAST({MICRO} AS BIGINT) AS r"
+        f"r0 AS MATERIALIZED (SELECT node, CAST({SCALE[6]} AS BIGINT) AS r"
         " FROM base)",
     ]
     for t in range(1, iters + 1):
@@ -366,8 +372,8 @@ def degree_assortativity(
     m = j.agg(
         F.count(F.lit(1)).cast("bigint").alias("__m2"),
         F.sum(dj).cast("decimal(38,0)").alias("__sj"),
-        F.sum(dj * dk).cast("decimal(38,0)").alias("__sjk"),
-        F.sum(dj * dj).cast("decimal(38,0)").alias("__sjj"),
+        F.sum(dj * dk).alias("__sjk"),
+        F.sum(dj * dj).alias("__sjj"),
     )
     nodes = deg.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
@@ -744,11 +750,9 @@ def adamic_adar(
         .select(
             "__z",
             "__n",
-            F.round(
-                F.lit(1.0) / F.log(F.col("__d").cast("double"))
-                * F.lit(1e9),
-                0,
-            ).cast("bigint").alias("__t"),
+            to_fixed(
+                F.lit(1.0) / F.log(F.col("__d").cast("double")), 9
+            ).alias("__t"),
         )
     )
     left = apex.select("__z", F.col("__n").alias("__x"), "__t")
@@ -774,7 +778,7 @@ def adamic_adar(
             F.col("__x").alias("x"),
             F.col("__y").alias("y"),
             "common_neighbors",
-            round_to(F.col("__s").cast("double") / F.lit(1e9), 6).alias(
+            round_to(from_fixed(F.col("__s"), 9), 6).alias(
                 "score"
             ),
         )
@@ -879,7 +883,7 @@ def hits(
                 )
             )
 
-        h = nodes.select("node", F.lit(MICRO).cast("bigint").alias("m"))
+        h = nodes.select("node", F.lit(SCALE[6]).cast("bigint").alias("m"))
         a = nodes.select("node", F.lit(0).cast("bigint").alias("m"))
         for _ in range(iters):
             a = scaled(_push(by_src, "src", "dst", h))
@@ -900,7 +904,7 @@ def hits_sql(
         f" FROM ({edges_subquery}))",
         "nodes AS MATERIALIZED (SELECT src AS node FROM e"
         " UNION SELECT dst FROM e)",
-        f"h0 AS MATERIALIZED (SELECT node, CAST({MICRO} AS BIGINT) AS h"
+        f"h0 AS MATERIALIZED (SELECT node, CAST({SCALE[6]} AS BIGINT) AS h"
         " FROM nodes)",
     ]
     for t in range(1, iters + 1):

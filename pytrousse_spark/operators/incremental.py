@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.rounding import MICRO, micro, round_to
+from ..functions.rounding import SCALE, from_fixed, round_to, to_fixed
 
 
 def partial_rollup(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
@@ -36,7 +36,7 @@ def partial_rollup(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
         .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(micro(v)).alias("sum_micro"),
+            F.sum(to_fixed(v.cast("double"), 6)).alias("sum_micro"),
             F.min(v).alias("min_value"),
             F.max(v).alias("max_value"),
         )
@@ -64,8 +64,8 @@ def rollup_view(partials: DataFrame, keys: list[str]) -> DataFrame:
     return partials.select(
         *keys,
         "n_rows",
-        (F.col("sum_micro") / MICRO).alias("sum_value"),
-        round_to(F.col("sum_micro") / MICRO / F.col("n_rows"), 6).alias(
+        from_fixed(F.col("sum_micro"), 6).alias("sum_value"),
+        round_to(from_fixed(F.col("sum_micro"), 6) / F.col("n_rows"), 6).alias(
             "avg_value"
         ),
         "min_value",
@@ -80,7 +80,7 @@ def partial_rollup_sql(subquery: str, keys: list[str], value_col: str) -> str:
     return f"""
     SELECT {ks},
            CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CAST(round({value_col} * {MICRO}, 0) AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST(round({value_col} * {SCALE[6]}, 0) AS BIGINT)) AS BIGINT)
                AS sum_micro,
            min({value_col}) AS min_value,
            max({value_col}) AS max_value
@@ -108,8 +108,8 @@ def incremental_rollup_sql(
         GROUP BY {ks}
     )
     SELECT {ks}, n_rows,
-           sum_micro / {MICRO} AS sum_value,
-           round(sum_micro / {MICRO} / n_rows, 6) AS avg_value,
+           sum_micro / {SCALE[6]} AS sum_value,
+           round(sum_micro / {SCALE[6]} / n_rows, 6) AS avg_value,
            min_value, max_value
     FROM merged
     """

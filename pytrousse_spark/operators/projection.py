@@ -23,7 +23,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.rounding import micro, round_to
+from ..functions.rounding import from_fixed, round_to, to_fixed
 from ..functions.vectors import lit_doubles
 from ..staging import stage
 
@@ -123,10 +123,8 @@ def pca2(
 
     B = (n_bins - 1) // 2
     q = df.select(
-        micro(F.col(x_col).cast("double"))
-        .alias("__x"),
-        micro(F.col(y_col).cast("double"))
-        .alias("__y"),
+        to_fixed(F.col(x_col).cast("double"), 6).alias("__x"),
+        to_fixed(F.col(y_col).cast("double"), 6).alias("__y"),
     ).where(F.col("__x").isNotNull() & F.col("__y").isNotNull())
     xd = F.col("__x").cast("decimal(19,0)")
     yd = F.col("__y").cast("decimal(19,0)")
@@ -134,9 +132,9 @@ def pca2(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.sum(xd).cast("decimal(38,0)").alias("__sx"),
         F.sum(yd).cast("decimal(38,0)").alias("__sy"),
-        F.sum(xd * xd).cast("decimal(38,0)").alias("__sxx"),
-        F.sum(xd * yd).cast("decimal(38,0)").alias("__sxy"),
-        F.sum(yd * yd).cast("decimal(38,0)").alias("__syy"),
+        F.sum(xd * xd).alias("__sxx"),
+        F.sum(xd * yd).alias("__sxy"),
+        F.sum(yd * yd).alias("__syy"),
     )
     n = F.col("__n").cast("double")
     sx = F.col("__sx").cast("double")
@@ -195,17 +193,14 @@ def pca2(
             )
         )
         .alias("bin"),
-        F.round(
-            (
+        to_fixed(
+            from_fixed(
                 (F.col("__x") - F.col("__mx")) * F.col("__ux")
-                + (F.col("__y") - F.col("__my")) * F.col("__uy")
-            )
-            / F.lit(1e6)
-            * F.lit(1e3),
-            0,
-        )
-        .cast("bigint")
-        .alias("__smilli"),
+                + (F.col("__y") - F.col("__my")) * F.col("__uy"),
+                6,
+            ),
+            3,
+        ).alias("__smilli"),
         "__ux",
         "__uy",
         "__evr",
@@ -213,7 +208,7 @@ def pca2(
     return scored.groupBy("bin", "__ux", "__uy", "__evr").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         round_to(
-            F.sum("__smilli") / F.lit(1e3) / F.count(F.lit(1)), 6
+            from_fixed(F.sum("__smilli"), 3) / F.count(F.lit(1)), 6
         ).alias("mean_score"),
     ).select(
         "bin",

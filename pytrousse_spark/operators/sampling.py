@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
-from ..functions.rounding import micro, round_half_away, round_to
+from ..functions.rounding import from_fixed, round_half_away, round_to, to_fixed
 from ..staging import stage
 
 from pytrousse_spark.functions.sqlutil import sql_quote
@@ -306,14 +306,14 @@ def dsir_importance(
         (F.col("c_s") + 1) / F.lit(float(s_tot + v_size))
     )
     ratio = vocab.select(
-        "t", micro(round_to(lr, 6)).alias("__r")
+        "t", to_fixed(round_to(lr, 6), 6).alias("__r")
     )
     return (
         tok.join(ratio, "t")
         .groupBy("__id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            round_to(F.sum("__r") / F.lit(1e6), 4).alias("log_weight"),
+            round_to(from_fixed(F.sum("__r"), 6), 4).alias("log_weight"),
         )
         .select(F.col("__id").alias(id_col), "n_tokens", "log_weight")
     )
@@ -509,8 +509,7 @@ def bootstrap_mean_ci(
     v = F.col(value_col)
     nn = df.where(v.isNotNull()).select(
         F.col(id_col).cast("string").alias("__id"),
-        micro(v.cast("double"))
-        .alias("__vm"),
+        to_fixed(v.cast("double"), 6).alias("__vm"),
     )
     # the q87 lesson: a single-row-group source feeds ONE task, and the
     # R-fold explode + per-(row, rep) hash then runs on one core until
@@ -556,8 +555,7 @@ def bootstrap_mean_ci(
         "__r",
         F.when(
             F.col("__n") > 0,
-            F.col("__s").cast("double")
-            / F.lit(1e6)
+            from_fixed(F.col("__s"), 6)
             / F.col("__n").cast("double"),
         ).alias("__m"),
     ).where(F.col("__m").isNotNull())
@@ -574,7 +572,7 @@ def bootstrap_mean_ci(
     point = nn.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         round_to(
-            F.sum("__vm").cast("double") / F.lit(1e6)
+            from_fixed(F.sum("__vm"), 6)
             / F.count(F.lit(1)).cast("double"),
             6,
         ).alias("mean_point"),
@@ -686,37 +684,34 @@ def neyman_allocation_sample(
     """
     from pyspark.sql import Window
 
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast(
-        "decimal(38,0)"
-    )
+    cents = to_fixed(F.col(value_col).cast("double"), 2, wide=True)
     stats = (
         df.where(F.col(value_col).isNotNull())
         .select(F.col(stratum_col).alias("__st"), cents.alias("__c"))
         .groupBy("__st")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("__n"),
-            F.sum("__c").cast("decimal(38,0)").alias("__s"),
-            F.sum(F.col("__c") * F.col("__c"))
-            .cast("decimal(38,0)")
-            .alias("__ss"),
+            F.sum("__c").alias("__s"),
+            F.sum(F.col("__c") * F.col("__c")).alias("__ss"),
         )
     )
     nn = F.col("__n").cast("decimal(38,0)")
     var_num = nn * F.col("__ss") - F.col("__s") * F.col("__s")
     sd = F.when(
         F.col("__n") > 1,
-        F.sqrt(
-            var_num.cast("double")
-            / (nn * (nn - 1)).cast("double")
-        )
-        / F.lit(100.0),
+        from_fixed(
+            F.sqrt(
+                var_num.cast("double")
+                / (nn * (nn - 1)).cast("double")
+            ),
+            2,
+        ),
     ).otherwise(F.lit(0.0))
     shares = stats.select(
         "__st",
         "__n",
         sd.alias("__sd"),
-        micro(F.col("__n").cast("double") * sd)
-        .alias("__sh"),
+        to_fixed(F.col("__n").cast("double") * sd, 6).alias("__sh"),
     )
     tot = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -1015,7 +1010,7 @@ def rake_weights(
         F.col("__r").alias("row_key"),
         F.col("__c").alias("col_key"),
         F.col("__n").alias("n_sample"),
-        round_to(F.col("__w").cast("double") / F.lit(1e6), 6).alias("weight"),
+        round_to(from_fixed(F.col("__w"), 6), 6).alias("weight"),
         round_to(
             F.col("__n").cast("double")
             * F.col("__w").cast("double")
@@ -1121,7 +1116,7 @@ def group_jackknife(
     """
     from pyspark.sql import functions as F
 
-    vm = micro(F.col(value_col).cast("double"))
+    vm = to_fixed(F.col(value_col).cast("double"), 6)
     staged = df.where(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     ).select(F.col(group_col).alias("grp"), vm.alias("__vm"))
@@ -1156,7 +1151,7 @@ def group_jackknife(
     # fold-order-free mean of the G leave-one-out estimates: each is
     # nano-rounded once, summed as integers, divided by G
     loo = loo.withColumn(
-        "__tln", F.round(F.col("__tl") * F.lit(1e9), 0).cast("bigint")
+        "__tln", to_fixed(F.col("__tl"), 9)
     )
     mean_loo = loo.agg(
         (
@@ -1166,12 +1161,11 @@ def group_jackknife(
     )
     dev = loo.crossJoin(F.broadcast(mean_loo)).withColumn(
         "__d2",
-        F.round(
+        to_fixed(
             (F.col("__tl") - F.col("__tbar"))
-            * (F.col("__tl") - F.col("__tbar"))
-            * F.lit(1e12),
-            0,
-        ).cast("bigint"),
+            * (F.col("__tl") - F.col("__tbar")),
+            12,
+        ),
     )
     var = dev.agg(
         F.sum("__d2").cast("bigint").alias("__sd2"),
@@ -1193,7 +1187,7 @@ def group_jackknife(
                 F.sqrt(
                     (F.col("__gg") - F.lit(1)).cast("double")
                     / F.col("__gg").cast("double")
-                    * (F.col("__sd2").cast("double") / F.lit(1e12))
+                    * from_fixed(F.col("__sd2"), 12)
                 ),
                 6,
             ).alias("se_jack"),

@@ -13,7 +13,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import micro, round_half_away, round_to
+from ..functions.rounding import from_fixed, round_half_away, round_to, to_fixed
 from ..functions.vectors import cosine_sql, lit_double_matrix, lit_doubles
 from ..staging import stage
 
@@ -634,8 +634,7 @@ def embedding_drift(
             nn.select(F.posexplode(vec_col).alias("pos", "__x"))
             .select(
                 "pos",
-                micro(F.col("__x").cast("double"))
-                .alias("__xm"),
+                to_fixed(F.col("__x").cast("double"), 6).alias("__xm"),
             )
             .groupBy("pos")
             .agg(
@@ -644,7 +643,8 @@ def embedding_drift(
             )
         )
         norm = nn.select(
-            micro(F.sqrt(
+            to_fixed(
+                F.sqrt(
                     F.aggregate(
                         F.transform(
                             F.col(vec_col),
@@ -654,8 +654,9 @@ def embedding_drift(
                         F.lit(0.0),
                         lambda acc, v: acc + v,
                     )
-                ))
-            .alias("__nm")
+                ),
+                6,
+            ).alias("__nm")
         ).agg(
             F.sum("__nm").cast("bigint").alias(f"__sn_{tag}"),
             F.count(F.lit(1)).cast("bigint").alias(f"__c_{tag}"),
@@ -678,13 +679,14 @@ def embedding_drift(
     # index-ordered folds over the bounded dim grid: nano-round each
     # per-position term so the three sums are exact integer folds
     folds = cent.select(
-        micro(F.col("__mr") * F.col("__mc") / F.lit(1e6)).alias("__dot"),
-        micro(F.col("__mr") * F.col("__mr") / F.lit(1e6)).alias("__rr"),
-        micro(F.col("__mc") * F.col("__mc") / F.lit(1e6)).alias("__cc2"),
-        micro(
+        to_fixed(F.col("__mr") * F.col("__mc") / F.lit(1e6), 6).alias("__dot"),
+        to_fixed(F.col("__mr") * F.col("__mr") / F.lit(1e6), 6).alias("__rr"),
+        to_fixed(F.col("__mc") * F.col("__mc") / F.lit(1e6), 6).alias("__cc2"),
+        to_fixed(
             (F.col("__mr") - F.col("__mc"))
             * (F.col("__mr") - F.col("__mc"))
-            / F.lit(1e6)
+            / F.lit(1e6),
+            6,
         ).alias("__dd"),
     ).agg(
         F.sum("__dot").cast("bigint").alias("__sdot"),
@@ -710,7 +712,7 @@ def embedding_drift(
         # __sdd carries micro^2 = 1e12 scale (the /1e6 inside the
         # fold is cancelled by nano's *1e6): distance = sqrt(sdd)/1e6
         round_to(
-            F.sqrt(F.col("__sdd").cast("double")) / F.lit(1e6),
+            from_fixed(F.sqrt(F.col("__sdd").cast("double")), 6),
             6,
         ).alias("centroid_dist"),
         round_to(
@@ -835,12 +837,12 @@ def embedding_isotropy(
     """
     gcols = [group_col] if group_col else []
     nn = df.where(F.col(vec_col).isNotNull())
-    xm = micro(F.col("__x").cast("double"))
-    x2p = F.round(
-        F.col("__x").cast("double") * F.col("__x").cast("double")
-        * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
+    xm = to_fixed(F.col("__x").cast("double"), 6)
+    x2p = to_fixed(
+        F.col("__x").cast("double") * F.col("__x").cast("double"),
+        12,
+        wide=True,
+    )
     comp = (
         nn.select(
             *gcols, F.posexplode(vec_col).alias("pos", "__x")
@@ -850,7 +852,7 @@ def embedding_isotropy(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("__n"),
             F.sum("__xm").cast("bigint").alias("__s"),
-            F.sum("__x2").cast("decimal(38,0)").alias("__q"),
+            F.sum("__x2").alias("__q"),
         )
     )
     mu = F.col("__s").cast("double") / (
@@ -860,16 +862,13 @@ def embedding_isotropy(
         F.col("__n").cast("double") * F.lit(1e12)
     )
     var = ex2 - mu * mu
-    pico = lambda c: F.round(c * F.lit(1e12), 0).cast(  # noqa: E731
-        "bigint"
-    )
     folds = comp.groupBy(*gcols).agg(
         F.max("__n").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("dim"),
-        F.sum(pico(var)).cast("bigint").alias("__sv"),
-        F.sum(pico(var * var)).cast("bigint").alias("__sv2"),
-        F.sum(pico(mu * mu)).cast("bigint").alias("__sm2"),
-        F.sum(pico(ex2)).cast("bigint").alias("__se2"),
+        F.sum(to_fixed(var, 12)).cast("bigint").alias("__sv"),
+        F.sum(to_fixed(var * var, 12)).cast("bigint").alias("__sv2"),
+        F.sum(to_fixed(mu * mu, 12)).cast("bigint").alias("__sm2"),
+        F.sum(to_fixed(ex2, 12)).cast("bigint").alias("__se2"),
     )
     svd = F.col("__sv").cast("double")
     out = folds.select(
@@ -892,7 +891,7 @@ def embedding_isotropy(
             6,
         ).alias("anisotropy"),
         round_to(
-            F.sqrt(F.col("__se2").cast("double") / F.lit(1e12)),
+            F.sqrt(from_fixed(F.col("__se2"), 12)),
             6,
         ).alias("rms_norm"),
     )
@@ -1156,7 +1155,7 @@ def embedding_mmd_poly2(
         )
         firsts = stage(ex.groupBy("__p").agg(
             F.sum(
-                micro(F.col("__x"))
+                to_fixed(F.col("__x"), 6)
             ).cast("bigint").alias(f"__s_{tag}"),
             F.count(F.lit(1)).cast("bigint").alias(f"__n_{tag}"),
         ))
@@ -1185,36 +1184,31 @@ def embedding_mmd_poly2(
             .select(
                 "__p",
                 "__q",
-                F.round(
-                    F.col("__x") * F.col("__y").cast("double") * F.lit(1e12),
-                    0,
-                )
-                .cast("decimal(38,0)")
-                .alias("__xy"),
+                to_fixed(
+                    F.col("__x") * F.col("__y").cast("double"), 12, wide=True
+                ).alias("__xy"),
             )
         )
         seconds = stage(
             cells.groupBy("__p", "__q")
-            .agg(F.sum("__xy").cast("decimal(38,0)").alias(f"__m_{tag}"))
+            .agg(F.sum("__xy").alias(f"__m_{tag}"))
         )
         return firsts, seconds
 
     fr, sr = moments(ref, "r")
     fc, sc = moments(cur, "c")
-    pico = lambda c: F.round(c * F.lit(1e12), 0).cast(  # noqa: E731
-        "bigint"
-    )
     mu = (
         fr.join(fc, "__p")
         .select(
-            pico(
+            to_fixed(
                 (
                     F.col("__s_r").cast("double")
                     / (F.col("__n_r").cast("double") * F.lit(1e6))
                     - F.col("__s_c").cast("double")
                     / (F.col("__n_c").cast("double") * F.lit(1e6))
                 )
-                ** F.lit(2)
+                ** F.lit(2),
+                12,
             ).alias("__d2"),
             F.col("__n_r").alias("__nr"),
             F.col("__n_c").alias("__nc"),
@@ -1234,14 +1228,15 @@ def embedding_mmd_poly2(
         .crossJoin(F.broadcast(mu.select("n_ref", "n_cur")))
         .select(
             (
-                pico(
+                to_fixed(
                     (
                         F.col("__m_r").cast("double")
                         / (F.col("n_ref").cast("double") * F.lit(1e12))
                         - F.col("__m_c").cast("double")
                         / (F.col("n_cur").cast("double") * F.lit(1e12))
                     )
-                    ** F.lit(2)
+                    ** F.lit(2),
+                    12,
                 )
                 * F.when(F.col("__p") == F.col("__q"), F.lit(1)).otherwise(
                     F.lit(2)
@@ -1253,14 +1248,14 @@ def embedding_mmd_poly2(
     return mu.crossJoin(F.broadcast(cov)).select(
         "n_ref",
         "n_cur",
-        round_to(F.col("__mu2").cast("double") / F.lit(1e12), 6).alias(
+        round_to(from_fixed(F.col("__mu2"), 12), 6).alias(
             "mean_shift2"
         ),
-        round_to(F.col("__fro2").cast("double") / F.lit(1e12), 6).alias(
+        round_to(from_fixed(F.col("__fro2"), 12), 6).alias(
             "cov_shift_fro2"
         ),
         round_to(
-            F.col("__fro2").cast("double") / F.lit(1e12)
+            from_fixed(F.col("__fro2"), 12)
             + F.lit(2.0) * F.col("__mu2").cast("double") / F.lit(1e12),
             6,
         ).alias("mmd2_poly2"),

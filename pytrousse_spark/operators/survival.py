@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.rounding import round_to
+from ..functions.rounding import from_fixed, round_to, to_fixed
 from ..staging import stage
 
 
@@ -75,14 +75,13 @@ def kaplan_meier(
         F.sum(F.col("n_events") + F.col("n_censored")).over(w_desc),
     )
     ev = risk.where(F.col("n_events") > 0)
-    term = F.round(
+    term = to_fixed(
         F.log(
             F.lit(1.0)
             - F.col("n_events").cast("double") / F.col("n_risk").cast("double")
-        )
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     w_asc = (
         Window.orderBy(F.col("t").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -90,12 +89,11 @@ def kaplan_meier(
     # d == n (everyone at risk dies at t): ln(0) = -inf; the curve hits
     # exactly 0 from there on — use a NULL term and carry a hit-zero flag
     hit_zero = F.col("n_events") == F.col("n_risk")
-    haz_term = F.round(
+    haz_term = to_fixed(
         F.col("n_events").cast("double")
-        / F.col("n_risk").cast("double")
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
+        / F.col("n_risk").cast("double"),
+        9,
+    )
     staged = ev.withColumn(
         "__term", F.when(~hit_zero, term)
     ).withColumn("__zero", hit_zero.cast("int")).withColumn(
@@ -107,7 +105,7 @@ def kaplan_meier(
         "__hsum", F.sum("__hterm").over(w_asc)
     )
     surv = F.when(F.col("__anyzero") > 0, F.lit(0.0)).otherwise(
-        round_to(F.exp(F.col("__lsum").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(from_fixed(F.col("__lsum"), 9)), 6)
     )
     return (
         out.select(
@@ -116,7 +114,7 @@ def kaplan_meier(
             "n_events",
             "n_censored",
             surv.alias("survival"),
-            round_to(F.col("__hsum").cast("double") / F.lit(1e9), 6)
+            round_to(from_fixed(F.col("__hsum"), 9), 6)
             .alias("na_cumhazard"),
         )
         .orderBy("t")
@@ -212,22 +210,20 @@ def kaplan_meier_grouped(
         F.sum(F.col("n_events") + F.col("n_censored")).over(w_desc),
     )
     ev = risk.where(F.col("n_events") > 0)
-    term = F.round(
+    term = to_fixed(
         F.log(
             F.lit(1.0)
             - F.col("n_events").cast("double")
             / F.col("n_risk").cast("double")
-        )
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     hit_zero = F.col("n_events") == F.col("n_risk")
-    haz_term = F.round(
+    haz_term = to_fixed(
         F.col("n_events").cast("double")
-        / F.col("n_risk").cast("double")
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
+        / F.col("n_risk").cast("double"),
+        9,
+    )
     w_asc = (
         Window.partitionBy(group_col)
         .orderBy(F.col("t").asc())
@@ -244,7 +240,7 @@ def kaplan_meier_grouped(
         .withColumn("__hsum", F.sum("__hterm").over(w_asc))
     )
     surv = F.when(F.col("__anyzero") > 0, F.lit(0.0)).otherwise(
-        round_to(F.exp(F.col("__lsum").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(from_fixed(F.col("__lsum"), 9)), 6)
     )
     return out.select(
         group_col,
@@ -253,7 +249,7 @@ def kaplan_meier_grouped(
         "n_events",
         "n_censored",
         surv.alias("survival"),
-        round_to(F.col("__hsum").cast("double") / F.lit(1e9), 6)
+        round_to(from_fixed(F.col("__hsum"), 9), 6)
         .alias("na_cumhazard"),
     ).orderBy(group_col, "t")
 
@@ -350,8 +346,8 @@ def logrank_test(
         F.max("__n1").cast("bigint").alias("n1"),
         F.max("__n2").cast("bigint").alias("n2"),
     )
-    e1 = F.col("__e1n").cast("double") / F.lit(1e9)
-    v = F.col("__vn").cast("double") / F.lit(1e9)
+    e1 = from_fixed(F.col("__e1n"), 9)
+    v = from_fixed(F.col("__vn"), 9)
     chi2 = F.when(
         F.col("__vn") > 0,
         (F.col("o1").cast("double") - e1) * (F.col("o1").cast("double") - e1) / v,
@@ -484,14 +480,14 @@ def rmst(
     )
     term = F.when(
         F.col("t") < tau,
-        F.round(F.col("survival") * dt * F.lit(1e9), 0).cast("bigint"),
+        to_fixed(F.col("survival") * dt, 9),
     ).otherwise(F.lit(0))
     return seg.agg(
         F.lit(float(tau)).alias("tau"),
         F.count(F.lit(1)).cast("bigint").alias("n_event_times"),
         round_to(
             F.least(F.max("__t1"), F.lit(float(tau)))
-            + F.sum(term) / F.lit(1e9),
+            + from_fixed(F.sum(term), 9),
             6,
         ).alias("rmst"),
     )
@@ -574,24 +570,22 @@ def kaplan_meier_ci(
     )
     ev = risk.where(F.col("n_events") > 0)
     hit_zero = F.col("n_events") == F.col("n_risk")
-    term = F.round(
+    term = to_fixed(
         F.log(
             F.lit(1.0)
             - F.col("n_events").cast("double")
             / F.col("n_risk").cast("double")
-        )
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
-    gw = F.round(
+        ),
+        9,
+    )
+    gw = to_fixed(
         F.col("n_events").cast("double")
         / (
             F.col("n_risk").cast("double")
             * (F.col("n_risk") - F.col("n_events")).cast("double")
-        )
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     staged = (
         ev.withColumn("__term", F.when(~hit_zero, term))
         .withColumn("__gw", F.when(~hit_zero, gw))
@@ -610,11 +604,11 @@ def kaplan_meier_ci(
         )
         .withColumn("__anyzero", F.sum("__zero").over(w_asc))
     )
-    surv = F.exp(F.col("__lsum").cast("double") / F.lit(1e9))
+    surv = F.exp(from_fixed(F.col("__lsum"), 9))
     half = (
         F.lit(z)
         * surv
-        * F.sqrt(F.col("__gsum").cast("double") / F.lit(1e9))
+        * F.sqrt(from_fixed(F.col("__gsum"), 9))
     )
     dead = F.col("__anyzero") > 0
     return (
@@ -756,15 +750,14 @@ def aalen_johansen(
     )
     ev = risk.where(F.col("__dtot") > 0)
     hit_zero = F.col("__dtot") == F.col("n_risk")
-    term = F.round(
+    term = to_fixed(
         F.log(
             F.lit(1.0)
             - F.col("__dtot").cast("double")
             / F.col("n_risk").cast("double")
-        )
-        * F.lit(1e9),
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     staged = ev.withColumn(
         "__term", F.when(~hit_zero, term)
     ).withColumn("__zero", hit_zero.cast("int"))
@@ -789,10 +782,10 @@ def aalen_johansen(
         )
     )
     s_incl = F.when(F.col("__z_i") > 0, F.lit(0.0)).otherwise(
-        round_to(F.exp(F.col("__ls_i").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(from_fixed(F.col("__ls_i"), 9)), 6)
     )
     s_prev = F.when(F.col("__z_e") > 0, F.lit(0.0)).otherwise(
-        round_to(F.exp(F.col("__ls_e").cast("double") / F.lit(1e9)), 6)
+        round_to(F.exp(from_fixed(F.col("__ls_e"), 9)), 6)
     )
     tlevel = cum.select(
         "t",
@@ -807,13 +800,12 @@ def aalen_johansen(
     )
     joined = bycause.join(tlevel, "t").withColumn(
         "__ct",
-        F.round(
+        to_fixed(
             F.col("__sp")
             * F.col("n_events").cast("double")
-            / F.col("n_risk").cast("double")
-            * F.lit(1e9),
-            0,
-        ).cast("bigint"),
+            / F.col("n_risk").cast("double"),
+            9,
+        ),
     )
     w_cause = (
         Window.partitionBy("cause")
@@ -827,7 +819,7 @@ def aalen_johansen(
             "cause",
             "n_risk",
             "n_events",
-            round_to(F.col("__cs").cast("double") / F.lit(1e9), 6).alias(
+            round_to(from_fixed(F.col("__cs"), 9), 6).alias(
                 "cif"
             ),
             F.col("__s").alias("overall_survival"),

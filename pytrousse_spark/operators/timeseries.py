@@ -28,7 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import MICRO, micro, round_half_away, round_to
+from ..functions.rounding import (
+    SCALE,
+    from_fixed,
+    round_half_away,
+    round_to,
+    to_fixed,
+)
 from ..staging import stage
 from .classifier import (
     _ols2_solve,
@@ -220,7 +226,7 @@ def ewma(
         .orderBy(ts_col, order_col)
         .rowsBetween(-(window - 1), 0)
     )
-    lst = F.collect_list(micro(F.col(value_col))).over(w)
+    lst = F.collect_list(to_fixed(F.col(value_col).cast("double"), 6)).over(w)
     staged = df.select(
         F.col(key_col),
         F.col(ts_col),
@@ -244,7 +250,7 @@ def ewma(
         ts_col,
         order_col,
         value_col,
-        round_to(isum / wsum / F.lit(float(MICRO)), 6).alias("ewma"),
+        round_to(isum / wsum / F.lit(float(SCALE[6])), 6).alias("ewma"),
     )
 
 
@@ -262,7 +268,7 @@ def ewma_sql(
     WITH staged AS (
         SELECT {key_col}, CAST({ts_col} AS TIMESTAMP) AS {ts_col}, {order_col},
                {value_col},
-               list(CAST(round({value_col} * {MICRO}, 0) AS BIGINT)) OVER (
+               list(CAST(round({value_col} * {SCALE[6]}, 0) AS BIGINT)) OVER (
                    PARTITION BY {key_col}
                    ORDER BY CAST({ts_col} AS TIMESTAMP), {order_col}
                    ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW
@@ -275,7 +281,7 @@ def ewma_sql(
                    x * ((CAST(1 AS BIGINT) << ({window} - len(__lst) + i - 1))))) AS BIGINT)
                / CAST((CAST(1 AS BIGINT) << {window}) -
                       (CAST(1 AS BIGINT) << ({window} - len(__lst))) AS BIGINT)
-               / CAST({MICRO} AS DOUBLE), 6) AS ewma
+               / CAST({SCALE[6]} AS DOUBLE), 6) AS ewma
     FROM staged
     """
 
@@ -666,7 +672,7 @@ def rolling_time_window(
             .orderBy(F.unix_micros(F.col(ts_col)))
             .rangeBetween(-w_us, 0)
         )
-        vu_w = micro(F.col(value_col))
+        vu_w = to_fixed(F.col(value_col).cast("double"), 6)
         nn = df.where(F.col(ts_col).isNotNull()).withColumn("__vu", vu_w)
         nv = F.count("__vu").over(wp)
         sv = F.coalesce(F.sum("__vu").over(wp), F.lit(0))
@@ -676,7 +682,7 @@ def rolling_time_window(
             F.when(
                 nv > 0,
                 round_to(
-                    (sv.cast("double") / F.lit(1000000.0))
+                    from_fixed(sv, 6)
                     / nv.cast("double"),
                     4,
                 ),
@@ -688,7 +694,7 @@ def rolling_time_window(
         return out_w.unionByName(null_ts_w)
 
     tu = F.unix_micros(F.col(ts_col))
-    vu = micro(F.col(value_col))
+    vu = to_fixed(F.col(value_col).cast("double"), 6)
     ev = (
         df.where(F.col(ts_col).isNotNull())
         .withColumn("__tu", tu)
@@ -795,7 +801,7 @@ def rolling_time_window(
     roll_avg = F.when(
         roll_nv > 0,
         round_to(
-            (roll_s.cast("double") / F.lit(1000000.0))
+            from_fixed(roll_s, 6)
             / roll_nv.cast("double"),
             4,
         ),
@@ -889,7 +895,7 @@ def cusum_bucket_partials(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum(
-                micro(F.col(value_col).cast("double"))
+                to_fixed(F.col(value_col).cast("double"), 6)
             ).cast("bigint").alias("__sm"),
         )
     )
@@ -949,7 +955,7 @@ def _cusum_from_buckets(
         *gcols,
         "bucket",
         "n",
-        round_to(F.col("__mm") / F.lit(1e6), 6).alias("mean_value"),
+        round_to(from_fixed(F.col("__mm"), 6), 6).alias("mean_value"),
         s_pos.alias("__sp"),
         s_neg.alias("__sn"),
     )
@@ -958,8 +964,8 @@ def _cusum_from_buckets(
         "bucket",
         "n",
         "mean_value",
-        round_to(F.col("__sp") / F.lit(1e6), 6).alias("s_pos"),
-        round_to(F.col("__sn") / F.lit(1e6), 6).alias("s_neg"),
+        round_to(from_fixed(F.col("__sp"), 6), 6).alias("s_pos"),
+        round_to(from_fixed(F.col("__sn"), 6), 6).alias("s_neg"),
         (
             (F.col("__sp") > F.lit(h_micro)) | (F.col("__sn") > F.lit(h_micro))
         ).alias("is_shift"),
@@ -1061,9 +1067,7 @@ def seasonal_naive_backtest(
     daily = (
         df.select(
             F.to_date(F.col(ts_col)).alias("__d"),
-            F.round(F.col(value_col).cast("double") * 100, 0)
-            .cast("bigint")
-            .alias("__c"),
+            to_fixed(F.col(value_col).cast("double"), 2).alias("__c"),
         )
         .where(F.col("__d").isNotNull())
         .groupBy("__d")
@@ -1213,9 +1217,7 @@ def _daily_cents(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     daily = stage(
         df.select(
             F.to_date(F.col(ts_col)).alias("__d"),
-            F.round(F.col(value_col).cast("double") * 100, 0)
-            .cast("bigint")
-            .alias("__c"),
+            to_fixed(F.col(value_col).cast("double"), 2).alias("__c"),
         )
         .where(F.col("__d").isNotNull())
         .groupBy("__d")
@@ -1310,10 +1312,8 @@ def acf_ljung_box(
     )
     tot = dense.agg(
         F.count("*").cast("bigint").alias("__n"),
-        F.sum("__c").cast("decimal(38,0)").alias("__s"),
-        F.sum(F.col("__c") * F.col("__c"))
-        .cast("decimal(38,0)")
-        .alias("__ss"),
+        F.sum("__c").alias("__s"),
+        F.sum(F.col("__c") * F.col("__c")).alias("__ss"),
     )
     lags = dense.sparkSession.range(1, max_lag + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -1333,11 +1333,9 @@ def acf_ljung_box(
         )
         .groupBy("lag")
         .agg(
-            F.sum(F.col("__c") * F.col("__ck"))
-            .cast("decimal(38,0)")
-            .alias("__p"),
-            F.sum("__c").cast("decimal(38,0)").alias("__h"),
-            F.sum("__ck").cast("decimal(38,0)").alias("__t"),
+            F.sum(F.col("__c") * F.col("__ck")).alias("__p"),
+            F.sum("__c").alias("__h"),
+            F.sum("__ck").alias("__t"),
         )
     )
     n = F.col("__n").cast("decimal(38,0)")
@@ -1360,20 +1358,16 @@ def acf_ljung_box(
         F.col("__n").alias("n"),
         r.alias("__r"),
         # femto-unit Ljung-Box term: r^2 / (n - k), fold-order-free
-        F.round(
-            r * r / (F.col("__n") - F.col("lag")).cast("double")
-            * F.lit(1e15),
-            0,
-        )
-        .cast("bigint")
-        .alias("__lbt"),
+        to_fixed(
+            r * r / (F.col("__n") - F.col("lag")).cast("double"), 15
+        ).alias("__lbt"),
     )
     wcum = Window.orderBy("lag").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     nn = F.col("n").cast("double")
     q = nn * (nn + F.lit(2.0)) * (
-        F.sum("__lbt").over(wcum).cast("double") / F.lit(1e15)
+        from_fixed(F.sum("__lbt").over(wcum), 15)
     )
     staged2 = per_lag.select(
         "lag",
@@ -1886,9 +1880,7 @@ def cross_correlation(
         F.when(F.col(type_col) == type_x, F.lit("x"))
         .otherwise(F.lit("y"))
         .alias("__t"),
-        F.round(F.col(value_col).cast("double") * 100, 0)
-        .cast("bigint")
-        .alias("__c"),
+        to_fixed(F.col(value_col).cast("double"), 2).alias("__c"),
     )
     # days x 2 rows; feeds the range scalar AND both pivot joins —
     # checkpoint so the raw agg runs once per call
@@ -1935,14 +1927,10 @@ def cross_correlation(
     )
     tot = piv.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
-        F.sum("__x").cast("decimal(38,0)").alias("__sx"),
-        F.sum("__y").cast("decimal(38,0)").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__x"))
-        .cast("decimal(38,0)")
-        .alias("__sxx"),
-        F.sum(F.col("__y") * F.col("__y"))
-        .cast("decimal(38,0)")
-        .alias("__syy"),
+        F.sum("__x").alias("__sx"),
+        F.sum("__y").alias("__sy"),
+        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
+        F.sum(F.col("__y") * F.col("__y")).alias("__syy"),
     )
     lags = piv.sparkSession.range(
         -max_lag, max_lag + 1
@@ -1960,11 +1948,9 @@ def cross_correlation(
         )
         .groupBy("lag")
         .agg(
-            F.sum(F.col("__x") * F.col("__yk"))
-            .cast("decimal(38,0)")
-            .alias("__p"),
-            F.sum("__x").cast("decimal(38,0)").alias("__h"),
-            F.sum("__yk").cast("decimal(38,0)").alias("__t"),
+            F.sum(F.col("__x") * F.col("__yk")).alias("__p"),
+            F.sum("__x").alias("__h"),
+            F.sum("__yk").alias("__t"),
         )
     )
     n = F.col("__n").cast("decimal(38,0)")
@@ -2130,14 +2116,11 @@ def kruskal_wallis_dow(
     )
     # nano-rounded R_g^2 / n_g = (s2/2)^2 / ng = s2^2 / (4 ng)
     terms = per_g.select(
-        F.round(
+        to_fixed(
             (F.col("__s2") * F.col("__s2")).cast("double")
-            / (F.lit(4) * F.col("__ng")).cast("double")
-            * F.lit(1e9),
-            0,
-        )
-        .cast("bigint")
-        .alias("__t"),
+            / (F.lit(4) * F.col("__ng")).cast("double"),
+            9,
+        ).alias("__t"),
         "__ng",
     )
     ties = (
@@ -2161,7 +2144,7 @@ def kruskal_wallis_dow(
     h = (
         F.lit(12.0)
         / (nn * (nn + F.lit(1.0)))
-        * (F.col("__rsum").cast("double") / F.lit(1e9))
+        * from_fixed(F.col("__rsum"), 9)
         - F.lit(3.0) * (nn + F.lit(1.0))
     )
     corr = F.lit(1.0) - F.col("__tiefold").cast("double") / (
@@ -2305,12 +2288,11 @@ def ohlc_bars(
     staged = _ohlc_staged(
         df, key_col, ts_col, value_col, order_col, interval
     )
-    toval = lambda c: c.cast("double") / F.lit(100.0)  # noqa: E731
     return staged.groupBy("key", "bucket").agg(
-        round_to(toval(F.min_by("__c", F.col("__k"))), 6).alias("open"),
-        round_to(toval(F.max("__c")), 6).alias("high"),
-        round_to(toval(F.min("__c")), 6).alias("low"),
-        round_to(toval(F.max_by("__c", F.col("__k"))), 6).alias("close"),
+        round_to(from_fixed(F.min_by("__c", F.col("__k")), 2), 6).alias("open"),
+        round_to(from_fixed(F.max("__c"), 2), 6).alias("high"),
+        round_to(from_fixed(F.min("__c"), 2), 6).alias("low"),
+        round_to(from_fixed(F.max_by("__c", F.col("__k")), 2), 6).alias("close"),
         F.count(F.lit(1)).cast("bigint").alias("n_ticks"),
         round_to(
             F.sum("__c").cast("double")
@@ -2383,9 +2365,7 @@ def _ohlc_staged(
         )
         * F.lit(step)
     )
-    cents = F.round(F.col(value_col).cast("double") * 100, 0).cast(
-        "bigint"
-    )
+    cents = to_fixed(F.col(value_col).cast("double"), 2)
     ordk = F.format_string(
         "%020d|%020d",
         F.unix_micros(F.col(ts_col)),
@@ -2440,14 +2420,13 @@ def ohlc_merge_partials(partials: DataFrame) -> DataFrame:
         F.sum("__n").cast("bigint").alias("__n"),
         F.sum("__s").cast("bigint").alias("__s"),
     )
-    toval = lambda c: c.cast("double") / F.lit(100.0)  # noqa: E731
     return merged.select(
         "key",
         "bucket",
-        round_to(toval(F.col("__oc")), 6).alias("open"),
-        round_to(toval(F.col("__hi")), 6).alias("high"),
-        round_to(toval(F.col("__lo")), 6).alias("low"),
-        round_to(toval(F.col("__cc")), 6).alias("close"),
+        round_to(from_fixed(F.col("__oc"), 2), 6).alias("open"),
+        round_to(from_fixed(F.col("__hi"), 2), 6).alias("high"),
+        round_to(from_fixed(F.col("__lo"), 2), 6).alias("low"),
+        round_to(from_fixed(F.col("__cc"), 2), 6).alias("close"),
         F.col("__n").alias("n_ticks"),
         round_to(
             F.col("__s").cast("double")
@@ -2488,28 +2467,21 @@ def seasonal_strength(
     calendar-bounded; the strength fold is one pass over the spine.
     """
     daily = _daily_cents(df, ts_col, value_col).select(
-        "__d", (F.col("__c").cast("double") / F.lit(100.0)).alias("__val")
+        "__d", from_fixed(F.col("__c"), 2).alias("__val")
     )
     dec = seasonal_decompose(daily, "__d", "__val", period)
-    micro38 = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
-        "decimal(38,0)"
-    )
     ok = dec.where(
         F.col("trend").isNotNull() & F.col("residual").isNotNull()
     ).select(
-        micro38(F.col("residual")).alias("__r"),
-        micro38(F.col("seasonal") + F.col("residual")).alias("__sr"),
-        micro38(F.col("trend") + F.col("residual")).alias("__tr"),
+        to_fixed(F.col("residual"), 6, wide=True).alias("__r"),
+        to_fixed(F.col("seasonal") + F.col("residual"), 6, wide=True).alias("__sr"),
+        to_fixed(F.col("trend") + F.col("residual"), 6, wide=True).alias("__tr"),
     )
     def moments(col, pre):
         # distinct prefixes: __s{r} vs __ss{r} collide for pre 'sr'
         return [
-            F.sum(F.col(col))
-            .cast("decimal(38,0)")
-            .alias(f"__sum_{pre}"),
-            F.sum(F.col(col) * F.col(col))
-            .cast("decimal(38,0)")
-            .alias(f"__sq_{pre}"),
+            F.sum(F.col(col)).alias(f"__sum_{pre}"),
+            F.sum(F.col(col) * F.col(col)).alias(f"__sq_{pre}"),
         ]
     agg = ok.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -2760,9 +2732,7 @@ def granger_lead_lag(
         F.when(F.col(type_col) == type_x, F.lit("x"))
         .otherwise(F.lit("y"))
         .alias("__t"),
-        F.round(F.col(value_col).cast("double") * 100, 0)
-        .cast("bigint")
-        .alias("__c"),
+        to_fixed(F.col(value_col).cast("double"), 2).alias("__c"),
     )
     daily = typed.groupBy("__d", "__t").agg(F.sum("__c").alias("__c"))
     rng = daily.agg(F.min("__d").alias("__lo"), F.max("__d").alias("__hi"))
@@ -2808,10 +2778,9 @@ def granger_lead_lag(
         F.col("__x").alias("__x1"),
     )
     rows = cur.join(prev, "__i")
-    d38 = lambda c: F.sum(c).cast("decimal(38,0)")  # noqa: E731
     s = rows.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        *_ols2_sums(F.col("__y1"), F.col("__x1"), F.col("__yt"), d38),
+        *_ols2_sums(F.col("__y1"), F.col("__x1"), F.col("__yt")),
     )
     nd, sd, c = _ols2_terms()
     c11, c1y, c2y, cyy = c["c11"], c["c1y"], c["c2y"], c["cyy"]
@@ -3114,9 +3083,7 @@ def burstiness_census(
         (F.col("__first") - F.lag("__last").over(w_days)).alias("__g"),
     ).where(F.col("__g").isNotNull())
     gaps = within.unionByName(boundary)
-    d38 = lambda c: F.sum(c.cast("decimal(38,0)")).cast(  # noqa: E731
-        "decimal(38,0)"
-    )
+    d38 = lambda c: F.sum(c.cast("decimal(38,0)"))  # noqa: E731
     gstats = gaps.groupBy("__k").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_gaps"),
         d38(F.col("__g")).alias("__sg"),
@@ -3398,7 +3365,7 @@ def gesd_outliers(
                     "value_cents"
                 ),
                 F.lit(n).cast("bigint").alias("n_remaining"),
-                (F.round(F.lit(pre), 0) / F.lit(1e6)).alias("r_stat"),
+                from_fixed(F.round(F.lit(pre), 0), 6).alias("r_stat"),
             )
         )
         remaining = remaining.where(F.col("__d") != F.lit(row["day"]))
@@ -3842,9 +3809,7 @@ def distance_correlation(
         F.when(F.col(type_col) == type_x, F.lit("x"))
         .otherwise(F.lit("y"))
         .alias("__t"),
-        F.round(F.col(value_col).cast("double") * 100, 0)
-        .cast("bigint")
-        .alias("__c"),
+        to_fixed(F.col(value_col).cast("double"), 2).alias("__c"),
     )
     # days x 2 rows; feeds the range scalar AND both pivot joins —
     # checkpoint so the raw agg runs once per call
@@ -3921,13 +3886,13 @@ def distance_correlation(
         F.abs(F.col("__ya") - F.col("__yb")).alias("__b"),
     )
     rows = pairs.groupBy("__ia").agg(
-        F.sum("__a").cast(d38).alias("__ra"),
-        F.sum("__b").cast(d38).alias("__rb"),
+        F.sum("__a").alias("__ra"),
+        F.sum("__b").alias("__rb"),
     )
     grand = rows.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
-        F.sum("__ra").cast(d38).alias("__ga"),
-        F.sum("__rb").cast(d38).alias("__gb"),
+        F.sum("__ra").alias("__ga"),
+        F.sum("__rb").alias("__gb"),
     )
     ri = rows.select(
         F.col("__ia").alias("__ri_i"),
@@ -3962,17 +3927,17 @@ def distance_correlation(
         at.alias("__at"),
         bt.alias("__bt"),
     ).groupBy("__n").agg(
-        F.sum(F.col("__at") * F.col("__bt")).cast(d38).alias("__sxy"),
-        F.sum(F.col("__at") * F.col("__at")).cast(d38).alias("__sxx"),
-        F.sum(F.col("__bt") * F.col("__bt")).cast(d38).alias("__syy"),
+        F.sum(F.col("__at") * F.col("__bt")).alias("__sxy"),
+        F.sum(F.col("__at") * F.col("__at")).alias("__sxx"),
+        F.sum(F.col("__bt") * F.col("__bt")).alias("__syy"),
     )
     mom = piv.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
-        F.sum("__x").cast(d38).alias("__sx"),
-        F.sum("__y").cast(d38).alias("__sy"),
-        F.sum(F.col("__x") * F.col("__x")).cast(d38).alias("__pxx"),
-        F.sum(F.col("__y") * F.col("__y")).cast(d38).alias("__pyy"),
-        F.sum(F.col("__x") * F.col("__y")).cast(d38).alias("__pxy"),
+        F.sum("__x").alias("__sx"),
+        F.sum("__y").alias("__sy"),
+        F.sum(F.col("__x") * F.col("__x")).alias("__pxx"),
+        F.sum(F.col("__y") * F.col("__y")).alias("__pyy"),
+        F.sum(F.col("__x") * F.col("__y")).alias("__pxy"),
     )
     j = folds.join(F.broadcast(mom), "__n")
     nd = F.col("__n").cast("double")
@@ -4186,11 +4151,11 @@ def huber_trend(
         y_ = F.col("__c").cast(d38)
         return weighted.agg(
             F.count(F.lit(1)).cast("bigint").alias("__n"),
-            F.sum(wm).cast(d38).alias("__sw"),
-            F.sum(wm * i_).cast(d38).alias("__swx"),
-            F.sum(wm * i_ * i_).cast(d38).alias("__swxx"),
-            F.sum(wm * y_).cast(d38).alias("__swy"),
-            F.sum(wm * i_ * y_).cast(d38).alias("__swxy"),
+            F.sum(wm).alias("__sw"),
+            F.sum(wm * i_).alias("__swx"),
+            F.sum(wm * i_ * i_).alias("__swxx"),
+            F.sum(wm * y_).alias("__swy"),
+            F.sum(wm * i_ * y_).alias("__swxy"),
         )
 
     def solve(fd: DataFrame) -> DataFrame:
@@ -4454,7 +4419,6 @@ def gumbel_block_maxima(
             F.col("__j").cast("decimal(38,0)")
             * F.col("__m").cast("decimal(38,0)")
         )
-        .cast("decimal(38,0)")
         .alias("__b1"),
     )
     n = F.col("n_blocks").cast("double")
@@ -4587,7 +4551,7 @@ def durbin_watson(
     Returns one row ``(n, n_diffs, dw)`` — dw NULL when the value
     variance is 0.
     """
-    y = F.round(F.col(value_col).cast("double") * 100, 0).cast("bigint")
+    y = to_fixed(F.col(value_col).cast("double"), 2)
     order = [F.col(ts_col)] + (
         [F.col(tiebreak_col)] if tiebreak_col else []
     )
@@ -4602,12 +4566,12 @@ def durbin_watson(
     agg = lagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.count("__p").cast("bigint").alias("n_diffs"),
-        F.sum(d * d).cast("decimal(38,0)").alias("__num"),
+        F.sum(d * d).alias("__num"),
         F.sum("__y").cast("bigint").alias("__s"),
         F.sum(
             F.col("__y").cast("decimal(38,0)")
             * F.col("__y").cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__q"),
+        ).alias("__q"),
     )
     nn = F.col("n").cast("double")
     den = F.col("__q").cast("double") - (

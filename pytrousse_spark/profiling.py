@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .functions.rounding import micro, round_to
+from .functions.rounding import from_fixed, round_to, to_fixed
 from .operators._prefix import (
     PooledLevels,
     both_sides,
@@ -592,12 +592,12 @@ def psi_drift(
     p = F.greatest(F.col("__cr") / F.col("__nr"), F.lit(eps))
     q = F.greatest(F.col("__cc") / F.col("__nc"), F.lit(eps))
     contrib = (p - q) * F.log(p / q)
-    nano = F.round(contrib * F.lit(1e9), 0).cast("bigint")
+    nano = to_fixed(contrib, 9)
     out = (
         j.select("feature", "__nr", "__nc", nano.alias("__nano"))
         .groupBy("feature")
         .agg(
-            round_to(F.sum("__nano") / F.lit(1e9), 6).alias("psi"),
+            round_to(from_fixed(F.sum("__nano"), 9), 6).alias("psi"),
             F.max("__nr").alias("n_ref"),
             F.max("__nc").alias("n_cur"),
         )
@@ -718,14 +718,14 @@ def contingency_chi2(df: "DataFrame", col_a: str, col_b: str) -> "DataFrame":
     e = (F.col("__ra") * F.col("__cb")).cast("double") / F.col("__n")
     o = F.col("__o").cast("double")
     contrib = (o - e) * (o - e) / e
-    nano = F.round(contrib * F.lit(1e9), 0).cast("bigint")
+    nano = to_fixed(contrib, 9)
     total = (
         grid.crossJoin(F.broadcast(nn))
         .select(nano.alias("__nano"), "__n", "__r", "__c")
         .groupBy("__n", "__r", "__c")
         .agg(F.sum("__nano").alias("__s"))
     )
-    chi2 = F.col("__s") / F.lit(1e9)
+    chi2 = from_fixed(F.col("__s"), 9)
     dof = ((F.col("__r") - 1) * (F.col("__c") - 1)).cast("bigint")
     denom = F.col("__n").cast("double") * F.least(
         F.col("__r") - 1, F.col("__c") - 1
@@ -875,7 +875,7 @@ def gini_sketch(
         F.col("__tot"),
     )
     term = (F.col("__p1") - F.col("__p0")) * (F.col("__l0") + F.col("__l1"))
-    nano = F.round(term * F.lit(1e9), 0).cast("bigint")
+    nano = to_fixed(term, 9)
     out = cum.select(
         nano.alias("__nano"), "__n", "__tot"
     ).groupBy("__n", "__tot").agg(
@@ -883,7 +883,7 @@ def gini_sketch(
         F.count(F.lit(1)).alias("bins_used"),
     )
     return out.select(
-        round_to(1.0 - F.col("__s") / F.lit(1e9), 6).alias("gini"),
+        round_to(1.0 - from_fixed(F.col("__s"), 9), 6).alias("gini"),
         F.col("__n").cast("bigint").alias("n"),
         round_to(F.col("__tot").cast("double"), 4).alias("total"),
         F.col("bins_used").cast("bigint").alias("bins_used"),
@@ -996,7 +996,7 @@ def benford_test(df: "DataFrame", value_col: str) -> "DataFrame":
         round_to(observed, 6).alias("observed"),
         round_to(expected, 6).alias("expected"),
         round_to(part, 4).alias("chi2_part"),
-        F.round(part * F.lit(1e9), 0).cast("bigint").alias("__nano"),
+        to_fixed(part, 9).alias("__nano"),
     )
     w = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -1007,7 +1007,7 @@ def benford_test(df: "DataFrame", value_col: str) -> "DataFrame":
         "observed",
         "expected",
         "chi2_part",
-        round_to(F.sum("__nano").over(w) / F.lit(1e9), 4).alias(
+        round_to(from_fixed(F.sum("__nano").over(w), 9), 4).alias(
             "chi2_total"
         ),
     ).orderBy("digit")
@@ -1087,13 +1087,13 @@ def entropy_profile(df: "DataFrame", cols: list[str]) -> "DataFrame":
     )
     j = counts.join(F.broadcast(tot), "feature")
     p = F.col("__c").cast("double") / F.col("__n")
-    nano = F.round(-p * F.log(p) * F.lit(1e9), 0).cast("bigint")
+    nano = to_fixed(-p * F.log(p), 9)
     ent = (
         j.select("feature", nano.alias("__nano"), "__n", "n_distinct")
         .groupBy("feature", "__n", "n_distinct")
         .agg(F.sum("__nano").alias("__s"))
     )
-    h = F.col("__s") / F.lit(1e9)
+    h = from_fixed(F.col("__s"), 9)
     return ent.select(
         "feature",
         F.col("__n").cast("bigint").alias("n"),
@@ -1203,20 +1203,18 @@ def hill_tail_index(df: "DataFrame", value_col: str, k: int = 100) -> "DataFrame
     # engines regardless of which tied rows the top-(k+1) kept
     keff = (F.max("__m") - F.lit(1)).cast("double")
     return ranked.select(
-        F.round(
-            (F.log("__x") - F.log("__thr")) * F.lit(1e9), 0
-        ).cast("bigint").alias("__t"),
+        to_fixed(F.log("__x") - F.log("__thr"), 9).alias("__t"),
         "__thr",
         "__m",
     ).agg(
         F.lit(k).cast("int").alias("k"),
         round_to(F.min("__thr"), 6).alias("x_threshold"),
         round_to(
-            keff / (F.sum("__t") / F.lit(1e9)),
+            keff / from_fixed(F.sum("__t"), 9),
             6,
         ).alias("alpha"),
         round_to(
-            keff / (F.sum("__t") / F.lit(1e9)) / F.sqrt(keff),
+            keff / from_fixed(F.sum("__t"), 9) / F.sqrt(keff),
             6,
         ).alias("se"),
     )
@@ -1387,13 +1385,12 @@ def ks_two_sample(
         F.sequence(F.lit(1), F.lit(100)),
         F.lit(0).cast("bigint"),
         lambda acc, j: acc
-        + F.round(
+        + to_fixed(
             F.when(j % 2 == 1, F.lit(1.0))
             .otherwise(F.lit(-1.0))
-            * F.exp(F.lit(-2.0) * (j * lam) * (j * lam))
-            * F.lit(1e9),
-            0,
-        ).cast("bigint"),
+            * F.exp(F.lit(-2.0) * (j * lam) * (j * lam)),
+            9,
+        ),
     )
     # the truncated alternating series only converges for lambda away
     # from 0 (at lambda=0 the 100 even-count +/-1 terms cancel to 0,
@@ -1445,10 +1442,11 @@ def _level_step() -> Column:
 def _cvm_term() -> Column:
     """Cramér-von Mises: ``(c_a + c_b) * d^2`` in pico-units."""
     d = ecdf_gap()
-    return F.round(
-        (F.col("__c1") + F.col("__c2")).cast("double") * d * d * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
+    return to_fixed(
+        (F.col("__c1") + F.col("__c2")).cast("double") * d * d,
+        12,
+        wide=True,
+    )
 
 
 def _cvm_stat(fold: str) -> Column:
@@ -1489,11 +1487,11 @@ def _ad_terms() -> tuple[Column, Column]:
         - na * d2,
     ).otherwise(F.lit(0.0))
     den = d2 * (F.lit(2.0) * nn - d2) - nn * t
-    term = F.round(
-        F.when(den > 0, t / nn * q * q / den).otherwise(F.lit(0.0))
-        * F.lit(1e12),
-        0,
-    ).cast("decimal(38,0)")
+    term = to_fixed(
+        F.when(den > 0, t / nn * q * q / den).otherwise(F.lit(0.0)),
+        12,
+        wide=True,
+    )
     return term, F.when(den > 0, F.lit(1)).otherwise(F.lit(0))
 
 
@@ -1517,23 +1515,19 @@ def _kuiper_folds() -> tuple[Column, Column]:
 
 def _w1_term() -> Column:
     """Wasserstein-1: ``|d| * step`` in micro-cents."""
-    return F.round(
-        F.abs(ecdf_gap()) * _level_step() * F.lit(1e6), 0
-    ).cast("decimal(38,0)")
+    return to_fixed(F.abs(ecdf_gap()) * _level_step(), 6, wide=True)
 
 
 def _energy_term() -> Column:
     """Energy distance: ``2 * d^2 * step`` in micro-cents."""
     d = ecdf_gap()
-    return F.round(
-        F.lit(2.0) * d * d * _level_step() * F.lit(1e6), 0
-    ).cast("decimal(38,0)")
+    return to_fixed(F.lit(2.0) * d * d * _level_step(), 6, wide=True)
 
 
-def _micro(fold: str) -> Column:
+def _fold_value(fold: str) -> Column:
     """A micro-cent fold in value units; 0 when no level has a
     successor (a single distinct level)."""
-    return F.coalesce(F.col(fold).cast("double"), F.lit(0.0)) / F.lit(1e8)
+    return from_fixed(F.coalesce(F.col(fold), F.lit(0.0)), 8)
 
 
 def _pooled_fold(
@@ -1560,7 +1554,7 @@ def _step_integral(
         p.with_totals()
         .where(F.col("__next").isNotNull())
         .groupBy(*(["__g"] if p.grouped else []))
-        .agg(F.sum(term).cast("decimal(38,0)").alias(fold))
+        .agg(F.sum(term).alias(fold))
     )
     if p.grouped:
         return p.totals.join(f, "__g", "left")
@@ -1602,7 +1596,7 @@ def cramer_von_mises(
         df_a,
         df_b,
         value_col,
-        F.sum(_cvm_term()).cast("decimal(38,0)").alias("__t12"),
+        F.sum(_cvm_term()).alias("__t12"),
     )
     t = _cvm_stat("__t12")
     return agg.select(
@@ -1644,7 +1638,7 @@ def wasserstein_1d(
     p = pooled_levels(df_a, df_b, value_col, adjacency=True)
     return _step_integral(p, _w1_term(), "__w6").select(
         *_counts(),
-        F.when(both_sides(), round_to(_micro("__w6"), 6)).alias("w1"),
+        F.when(both_sides(), round_to(_fold_value("__w6"), 6)).alias("w1"),
     )
 
 
@@ -1732,7 +1726,7 @@ def wasserstein_1d_by_group(
         F.col("__g").alias("group"),
         "n_a",
         "n_b",
-        F.when(both_sides(), round_to(_micro("__w6"), 6)).alias("w1"),
+        F.when(both_sides(), round_to(_fold_value("__w6"), 6)).alias("w1"),
     )
 
 
@@ -1776,12 +1770,11 @@ def kuiper_two_sample(
         F.sequence(F.lit(1), F.lit(100)),
         F.lit(0).cast("bigint"),
         lambda acc, j: acc
-        + F.round(
+        + to_fixed(
             (F.lit(4.0) * (j * lam) * (j * lam) - F.lit(1.0))
-            * F.exp(F.lit(-2.0) * (j * lam) * (j * lam))
-            * F.lit(1e9),
-            0,
-        ).cast("bigint"),
+            * F.exp(F.lit(-2.0) * (j * lam) * (j * lam)),
+            9,
+        ),
     )
     p = F.when(lam < F.lit(0.4), F.lit(1.0)).otherwise(
         F.least(
@@ -1911,7 +1904,7 @@ def anderson_darling_2s(
         df_b,
         value_col,
         F.max(den_pos).alias("__any"),
-        F.sum(term).cast("decimal(38,0)").alias("__t12"),
+        F.sum(term).alias("__t12"),
     )
     return agg.select(
         *_counts(),
@@ -2035,13 +2028,11 @@ def drift_by_group(
         .agg(
             F.max(F.abs(d)).alias("__ks"),
             *_kuiper_folds(),
-            F.sum(_cvm_term()).cast("decimal(38,0)").alias("__t12"),
+            F.sum(_cvm_term()).alias("__t12"),
             F.max(ad_den_pos).alias("__anyden"),
-            F.sum(ad_term).cast("decimal(38,0)").alias("__a12"),
-            F.sum(F.when(has_next, _w1_term()))
-            .cast("decimal(38,0)").alias("__w6"),
-            F.sum(F.when(has_next, _energy_term()))
-            .cast("decimal(38,0)").alias("__e6"),
+            F.sum(ad_term).alias("__a12"),
+            F.sum(F.when(has_next, _w1_term())).alias("__w6"),
+            F.sum(F.when(has_next, _energy_term())).alias("__e6"),
         )
     )
     both = both_sides()
@@ -2056,8 +2047,8 @@ def drift_by_group(
         F.when(both, round_to(_cvm_stat("__t12"), 6)).alias("cvm_t"),
         F.when(both & (F.col("__anyden") == 1), round_to(_ad_stat("__a12"), 6))
         .alias("ad_a2"),
-        F.when(both, round_to(_micro("__w6"), 6)).alias("w1"),
-        F.when(both, round_to(_micro("__e6"), 6)).alias("energy"),
+        F.when(both, round_to(_fold_value("__w6"), 6)).alias("w1"),
+        F.when(both, round_to(_fold_value("__e6"), 6)).alias("energy"),
     )
 
 
@@ -2193,7 +2184,7 @@ def energy_distance(
     reads exactly 2*|a-b|.
     """
     p = pooled_levels(df_a, df_b, value_col, adjacency=True)
-    energy = _micro("__e6")
+    energy = _fold_value("__e6")
     na, nb = _n_ab()
     return _step_integral(p, _energy_term(), "__e6").select(
         *_counts(),
@@ -2526,12 +2517,8 @@ def categorical_association(
         .join(F.broadcast(margy), F.col("__y").eqNullSafe(F.col("__my")))
         .crossJoin(F.broadcast(tot))
     )
-    s_nano = F.round(nd * nd / (nxd * nyd) * F.lit(1e9), 0).cast(
-        "bigint"
-    )
-    mi_nano = F.round(
-        (nd / nnd) * F.log(nd * nnd / (nxd * nyd)) * F.lit(1e9), 0
-    ).cast("bigint")
+    s_nano = to_fixed(nd * nd / (nxd * nyd), 9)
+    mi_nano = to_fixed((nd / nnd) * F.log(nd * nnd / (nxd * nyd)), 9)
     folded = j.groupBy("__n", "__r", "__c").agg(
         F.sum(s_nano).alias("__s"), F.sum(mi_nano).alias("__mi")
     )
@@ -2541,9 +2528,7 @@ def categorical_association(
         return (
             marg.crossJoin(F.broadcast(tot.select("__n")))
             .select(
-                F.round(-p * F.log(p) * F.lit(1e9), 0)
-                .cast("bigint")
-                .alias("__t")
+                to_fixed(-p * F.log(p), 9).alias("__t")
             )
             .agg(F.sum("__t").alias("__h"))
         )
@@ -2551,10 +2536,10 @@ def categorical_association(
     hx = _h(margx, "__nx").withColumnRenamed("__h", "__hx")
     hy = _h(margy, "__ny").withColumnRenamed("__h", "__hy")
     out = folded.crossJoin(F.broadcast(hx)).crossJoin(F.broadcast(hy))
-    s = F.col("__s") / F.lit(1e9)
-    mi = F.col("__mi") / F.lit(1e9)
-    hxv = F.col("__hx") / F.lit(1e9)
-    hyv = F.col("__hy") / F.lit(1e9)
+    s = from_fixed(F.col("__s"), 9)
+    mi = from_fixed(F.col("__mi"), 9)
+    hxv = from_fixed(F.col("__hx"), 9)
+    hyv = from_fixed(F.col("__hy"), 9)
     chi2 = nnd * (s - F.lit(1.0))
     mindim = F.least(F.col("__r"), F.col("__c")).cast("double")
     v = F.when(
@@ -2742,7 +2727,7 @@ def mann_whitney_u(
         F.sum(F.col("__na") * (2 * F.col("__bbelow") + F.col("__nb")))
         .cast("bigint")
         .alias("__u2"),
-        F.sum(t * t * t - t).cast("decimal(38,0)").alias("__tt"),
+        F.sum(t * t * t - t).alias("__tt"),
     )
     n1 = F.col("__n1")
     n2 = F.col("__n2")
@@ -2917,15 +2902,16 @@ def winsorized_group_stats(
         .join(F.broadcast(cuts), group_col)
         .select(
             F.col(group_col).alias("group"),
-            micro(v).alias("__raw"),
-            micro(
+            to_fixed(v, 6).alias("__raw"),
+            to_fixed(
                 F.least(
                     F.greatest(v, F.col("__qlo")), F.col("__qhi")
-                )
+                ),
+                6,
             ).alias("__win"),
             F.when(
                 (v >= F.col("__qlo")) & (v <= F.col("__qhi")),
-                micro(v),
+                to_fixed(v, 6),
             ).alias("__trm"),
         )
     )
@@ -3074,7 +3060,6 @@ def kendall_tau_b(
                     F.col("__ca") * F.col("__cb"),
                 ).otherwise(F.lit(0).cast("decimal(38,0)"))
             )
-            .cast("decimal(38,0)")
             .alias("__conc"),
             F.sum(
                 F.when(
@@ -3082,7 +3067,6 @@ def kendall_tau_b(
                     F.col("__ca") * F.col("__cb"),
                 ).otherwise(F.lit(0).cast("decimal(38,0)"))
             )
-            .cast("decimal(38,0)")
             .alias("__disc"),
         )
     )
@@ -3090,10 +3074,8 @@ def kendall_tau_b(
         cells.groupBy(key)
         .agg(F.sum("__c").cast("decimal(38,0)").alias("__t"))
         .agg(
-            F.sum(F.col("__t") * (F.col("__t") - 1))
-            .cast("decimal(38,0)")
-            .alias("__tt"),
-            F.sum("__t").cast("decimal(38,0)").alias("__n"),
+            F.sum(F.col("__t") * (F.col("__t") - 1)).alias("__tt"),
+            F.sum("__t").alias("__n"),
         )
     )
     tx = tiefold("__x").select(
@@ -3253,26 +3235,17 @@ def spearman_approx(
     rxy = percent_rank_transform_approx(
         rx, "__grp", "__vy", out_col="__ry", num_bins=num_bins
     )
-    micro38 = lambda c: F.round(c * F.lit(1e6), 0).cast(  # noqa: E731
-        "decimal(38,0)"
-    )
     staged = rxy.select(
-        micro38(F.col("__rx")).alias("__x"),
-        micro38(F.col("__ry")).alias("__y"),
+        to_fixed(F.col("__rx"), 6, wide=True).alias("__x"),
+        to_fixed(F.col("__ry"), 6, wide=True).alias("__y"),
     )
     mom = staged.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("__n"),
-        F.sum("__x").cast("decimal(38,0)").alias("__sx"),
-        F.sum("__y").cast("decimal(38,0)").alias("__sy"),
-        F.sum(F.col("__x") * F.col("__x"))
-        .cast("decimal(38,0)")
-        .alias("__sxx"),
-        F.sum(F.col("__y") * F.col("__y"))
-        .cast("decimal(38,0)")
-        .alias("__syy"),
-        F.sum(F.col("__x") * F.col("__y"))
-        .cast("decimal(38,0)")
-        .alias("__sxy"),
+        F.sum("__x").alias("__sx"),
+        F.sum("__y").alias("__sy"),
+        F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
+        F.sum(F.col("__y") * F.col("__y")).alias("__syy"),
+        F.sum(F.col("__x") * F.col("__y")).alias("__sxy"),
     )
     n = F.col("__n")
     num = n * F.col("__sxy") - F.col("__sx") * F.col("__sy")
@@ -3409,32 +3382,26 @@ def numeric_mutual_information(
         F.sum("__c").over(wy).cast("bigint").alias("__k"),
         F.sum("__c").over(tot).cast("bigint").alias("__n"),
     )
-    nano = lambda c: F.round(c * F.lit(1e9), 0).cast(  # noqa: E731
-        "bigint"
-    )
     cd = F.col("__c").cast("double")
     nd = F.col("__n").cast("double")
     # products widen to DECIMAL(38)/HUGEINT before the double cast —
     # c*n and r*k exceed int64 once n passes ~3e9 rows
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    mi_term = nano(
+    mi_term = to_fixed(
         cd
         / nd
         * F.log(
             (dec(F.col("__c")) * dec(F.col("__n"))).cast("double")
             / (dec(F.col("__r")) * dec(F.col("__k"))).cast("double")
-        )
+        ),
+        9,
     )
     # marginal entropy terms de-duplicated: charge each cell its
     # share so one pass suffices: H(X) = -sum_i r_i/n ln(r_i/n)
     # = -sum_cells c/r * (r/n ln(r/n))... simpler: sum over cells of
     # (c/n) * ln(n/r) — each cell contributes its own mass
-    hx_term = nano(
-        cd / nd * F.log(nd / F.col("__r").cast("double"))
-    )
-    hy_term = nano(
-        cd / nd * F.log(nd / F.col("__k").cast("double"))
-    )
+    hx_term = to_fixed(cd / nd * F.log(nd / F.col("__r").cast("double")), 9)
+    hy_term = to_fixed(cd / nd * F.log(nd / F.col("__k").cast("double")), 9)
     agg = staged.select(
         "__n",
         mi_term.alias("__mi"),
@@ -3446,10 +3413,8 @@ def numeric_mutual_information(
         F.sum("__hx").cast("bigint").alias("__shx"),
         F.sum("__hy").cast("bigint").alias("__shy"),
     )
-    mi = F.col("__smi").cast("double") / F.lit(1e9)
-    hmin = F.least(F.col("__shx"), F.col("__shy")).cast("double") / F.lit(
-        1e9
-    )
+    mi = from_fixed(F.col("__smi"), 9)
+    hmin = from_fixed(F.least(F.col("__shx"), F.col("__shy")), 9)
     return agg.select(
         F.col("__n").alias("n"),
         "n_cells",
@@ -3629,7 +3594,7 @@ def wasserstein1_binned(
         F.col("__pr") * F.col("__nc") - F.col("__pc") * F.col("__nr")
     )
     agg = staged.groupBy("__nr", "__nc", "__lo", "__hi").agg(
-        F.sum(diff).cast("decimal(38,0)").alias("__sd")
+        F.sum(diff).alias("__sd")
     )
     w1 = (
         F.col("__sd").cast("double")

@@ -1182,10 +1182,23 @@ def _records_read(spark, group: str) -> int:
     store = sc._jsc.sc().statusStore()
     total = 0
     for jid in sc.statusTracker().getJobIdsForGroup(group):
+        skipped, dropped = 0, []
         for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            # once the store holds spark.ui.retainedStages stages it drops
+            # skipped ones first, so late in a long session a job's
+            # skipped stages may be gone; the job record still counts them
+            if sc.statusTracker().getStageInfo(sid) is None:
+                dropped.append(sid)
+                continue
             st = store.lastStageAttempt(sid)
-            if st.status().toString() != "SKIPPED":
+            if st.status().toString() == "SKIPPED":
+                skipped += 1
+            else:
                 total += st.inputRecords()
+        assert skipped + len(dropped) == store.job(jid).numSkippedStages(), (
+            f"job {jid}: stages {dropped} dropped from the status store "
+            "were not all skipped, so their input records are unknown"
+        )
     return total
 
 

@@ -12,7 +12,8 @@ To compare the plans of two checkouts, run each with its own ``--plans``
 directory and the same ``--suffix``, then ``diff -r`` the directories.
 ``--rows DIR`` writes ``DIR/<query>.txt`` per query: its output schema
 (``simpleString``), row count and the SHA-256 of its sorted rows, so
-"same schema and rows as the parent" is one ``diff -r`` as well. With no
+"same schema and rows as the parent" is one ``diff -r`` as well. With both
+flags each query's frame is built once: explained, then digested. With no
 query named, every registry query runs; ``--reps 0`` skips the timing.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -129,9 +130,9 @@ def main() -> None:
     results = {}
     for name in names:
         fn = qs[name]
+        df = fn(spark, sf_dir) if plans_dir or rows_dir else None
         if plans_dir:
             os.makedirs(plans_dir, exist_ok=True)
-            df = fn(spark, sf_dir)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
@@ -142,7 +143,7 @@ def main() -> None:
         if rows_dir:
             os.makedirs(rows_dir, exist_ok=True)
             with open(os.path.join(rows_dir, f"{name}.txt"), "w") as f:
-                f.write(rows_digest(fn(spark, sf_dir)))
+                f.write(rows_digest(df))
         if not reps:
             continue
         walls = []
